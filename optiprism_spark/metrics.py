@@ -488,3 +488,48 @@ def quality_gate_failures_total() -> Counter:
         "optiprism_quality_gate_failures_total",
         "declared-battery constraint failures per ingest batch",
         ("constraint",))
+
+
+def codegen_compiles_total() -> Counter:
+    """Classes Spark's code generator compiled in this process's JVM
+    (CodegenMetrics). Distinct plans need new classes; a steady rise
+    per maintenance tick or per repeated request means the
+    generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+    session.py) is smaller than the working set and thrashing. On a
+    cluster this is the driver JVM's count, not the executors'."""
+    return REGISTRY.counter(
+        "optiprism_codegen_compiles_total",
+        "generated classes compiled by the driver JVM")
+
+
+def codegen_compile_seconds() -> Counter:
+    """Cumulative time the driver JVM spent compiling generated
+    classes (CodeGenerator's compile-time total) — CPU that neither
+    serving nor ingest gets."""
+    return REGISTRY.counter(
+        "optiprism_codegen_compile_seconds",
+        "time spent compiling generated classes")
+
+
+_CODEGEN_LOCK = threading.Lock()
+
+
+def sync_codegen(spark) -> None:
+    """Advance the two codegen counters to the JVM's running totals —
+    called at scrape time. The JVM totals only grow, so the counters
+    stay monotone; after ``REGISTRY.reset()`` they restart from the
+    totals. A dead JVM leaves them where they were."""
+    from py4j.protocol import Py4JError
+
+    try:
+        jvm = spark._jvm
+        n = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME().getCount()
+        ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+            .CodeGenerator.compileTime()
+    except Py4JError:
+        return
+    with _CODEGEN_LOCK:
+        for counter, total in ((codegen_compiles_total(), float(n)),
+                               (codegen_compile_seconds(), ns / 1e9)):
+            counter.inc(max(0.0, total - counter.value()))

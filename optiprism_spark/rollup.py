@@ -61,7 +61,12 @@ from .dsl import (
 )
 from .exprs import event_expression, multi_and, property_expression
 from .operators.aggregates import BUCKET_COL, DECIMAL_T, _query_alias, bucket_col
-from .schema import EVENT_NAME_COL, EVENT_TIME_COL, EVENT_USER_COL
+from .schema import (
+    EVENT_NAME_COL,
+    EVENT_TIME_COL,
+    EVENT_USER_COL,
+    overwrite_partitions,
+)
 
 ROLLUP_DT_COL = "dt"
 USERS_HLL_COL = "users_hll"
@@ -349,15 +354,7 @@ class RollupStore:
         # touches the store (read happened at checkpoint time), and the
         # maintenance loop's mark_applied idempotence re-runs the merge
         merged = merged.repartition(ROLLUP_DT_COL).localCheckpoint()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(ROLLUP_DT_COL).parquet(self.path)
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        overwrite_partitions(merged, ROLLUP_DT_COL, self.path)
         mark_applied()
         return len(days)
 
@@ -391,21 +388,8 @@ class RollupStore:
                 r[0] for r in batch.select(ROLLUP_DT_COL).distinct().collect()
             }
             if fresh:
-                prev = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", None)
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
-                    batch.repartition(ROLLUP_DT_COL).write.mode(
-                        "overwrite"
-                    ).partitionBy(ROLLUP_DT_COL).parquet(self.path)
-                finally:
-                    if prev is not None:
-                        spark.conf.set(
-                            "spark.sql.sources.partitionOverwriteMode", prev)
-                    else:
-                        spark.conf.unset(
-                            "spark.sql.sources.partitionOverwriteMode")
+                overwrite_partitions(batch.repartition(ROLLUP_DT_COL),
+                                     ROLLUP_DT_COL, self.path)
             import shutil
 
             for d in day_list:

@@ -207,11 +207,9 @@ def memo_parquet(spark: SparkSession, path: str) -> DataFrame:
     The key is the SESSION OBJECT, not the applicationId: stores are
     read inside foreachBatch micro-batches, which run on a CLONED
     session — a frame memoized under the main session would execute
-    (and, worse, write) under the main session's confs, so a
-    maintenance merge's partitionOverwriteMode=dynamic set on the
-    clone would silently not apply and the overwrite would wipe the
-    unmerged partitions. Session-scoped keys make the clone take one
-    fresh read instead. Keys are namespaced apart from load_table's
+    (and, worse, write) under the main session's confs, not the
+    clone's. Session-scoped keys make the clone take one fresh read
+    instead. Keys are namespaced apart from load_table's
     (raw read here vs nanos→µs-transformed frame there — see
     _memo_key)."""
     key = _memo_key(spark, path, "raw")
@@ -225,6 +223,23 @@ def memo_parquet(spark: SparkSession, path: str) -> DataFrame:
             _TABLE_PLANS.clear()
         _TABLE_PLANS[key] = df
     return df
+
+
+def overwrite_partitions(df: DataFrame, partition_col: str,
+                         path: str) -> None:
+    """Write ``df`` to the parquet store at ``path``, partitioned by
+    ``partition_col``, replacing only the partitions ``df`` holds rows
+    for (a dynamic partition overwrite) — the fold/recompute write of
+    every dt-partitioned store.
+
+    The mode rides on this one writer, never on the session-wide
+    ``spark.sql.sources.partitionOverwriteMode``: flipping the session
+    conf races with every other writer of the session, which could
+    inherit ``dynamic`` (a static rebuild that leaves stale partitions
+    standing) or lose it (a fold that wipes the unmerged partitions)."""
+    (df.write.mode("overwrite")
+       .option("partitionOverwriteMode", "dynamic")
+       .partitionBy(partition_col).parquet(path))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

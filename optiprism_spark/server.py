@@ -433,7 +433,7 @@ class App:
         #: search surface cannot pay at 100 TB
         self.ivf_store = ivf_store
         #: optional (dt, user)-grain activity store
-        #: (userday.UserDayStore), maintained via maintain_user_day;
+        #: (userday.UserDayStore), maintained by the maintain() tick;
         #: /queries/rfm and /queries/growth route through it when the
         #: request is expressible (user_day_supports) — the standing
         #: dashboard surfaces stop rescanning raw events
@@ -963,12 +963,12 @@ class App:
         dependency-safe order:
 
         1. ``gate_quality``   — declared batteries over the event batch
-        2. ``maintain_rollups`` — app-level + catalog-declared rollups
-        3. ``maintain_user_day`` — the (dt, user) engagement store
-        4. KMV day-sketch store — audience cardinality sketches
-        5. ``maintain_ann_indexes`` — declared + app-level ANN stores
+        2. the store folds, in parallel (``_fold_stores``):
+           app-level + catalog-declared rollups, the (dt, user)
+           engagement store and the KMV audience day sketches
+        3. ``maintain_ann_indexes`` — declared + app-level ANN stores
            (also finishes orphaned ``building`` rows — crash recovery)
-        6. ``sweep_sessions`` — TTL expiry + Session End injection
+        4. ``sweep_sessions`` — TTL expiry + Session End injection
 
         Replay safety is per store: user-day honours the
         (stream_id, batch_id) ledger, rollup/KMV updates are
@@ -986,23 +986,15 @@ class App:
             if out["quality_failures"]:
                 metrics.maintenance_store_advanced_total().inc(
                     store="quality_gate")
-            out["rollup_stores"] = self.maintain_rollups(
-                new_events, pid=pid)
+            out.update(self._fold_stores(new_events, pid, stream_id,
+                                         batch_id))
+            adv = metrics.maintenance_store_advanced_total()
             if out["rollup_stores"]:
-                metrics.maintenance_store_advanced_total().inc(
-                    out["rollup_stores"], store="rollup")
-            out["user_day_days"] = self.maintain_user_day(
-                new_events, stream_id=stream_id, batch_id=batch_id)
+                adv.inc(out["rollup_stores"], store="rollup")
             if out["user_day_days"]:
-                metrics.maintenance_store_advanced_total().inc(
-                    store="user_day")
-            if self.kmv_store is not None and self.kmv_store.exists():
-                out["kmv_days"] = self.kmv_store.update(
-                    self.spark, new_events)
-                if out["kmv_days"]:
-                    self._data_version += 1
-                    metrics.maintenance_store_advanced_total().inc(
-                        store="kmv")
+                adv.inc(store="user_day")
+            if out["kmv_days"]:
+                adv.inc(store="kmv")
         if new_embeddings is not None:
             out["ann_stores"] = self.maintain_ann_indexes(
                 new_embeddings, pid=pid, stream_id=stream_id,
@@ -1016,14 +1008,60 @@ class App:
                 store="sessions")
         return out
 
-    def maintain_rollups(self, new_events, pid: int = 0) -> int:
-        """Advance every declared rollup store (and the app-level one)
-        with an append batch — the hook the maintenance loop calls at
-        the same moment it folds the batch into the lake (≙ passing
-        rollup_store= to compact_appends_into_bucketed, extended to
-        catalog-declared stores; without this, routed queries serve
-        the pre-ingest build forever while raw-path queries see fresh
-        rows). Returns the number of stores advanced."""
+    def _fold_stores(self, new_events, pid, stream_id, batch_id) -> dict:
+        """Fold one event batch into the rollup, user-day and KMV
+        stores in parallel, one thread per store: the folds read the
+        same batch and write disjoint directories, and each is a chain
+        of small Spark jobs (touched-day collect, merge checkpoint,
+        partition overwrite) that leaves most cores idle when the folds
+        run one after another. The threads are
+        ``InheritableThread``s, so the tick's job group and scheduler
+        pool carry over. Every fold is joined before the first error
+        (in store order) is re-raised. ``_data_version`` is bumped
+        once, here, after the joins: a ``+=`` per fold thread could
+        lose an update, and a result cached between two folds would
+        then survive the second. Returns {summary key: count}."""
+        from pyspark import InheritableThread
+
+        folds = {"rollup_stores": lambda: self._fold_rollups(
+            new_events, pid)}
+        uds, kmv = self.user_day_store, self.kmv_store
+        if uds is not None and uds.exists():
+            folds["user_day_days"] = lambda: uds.update(
+                self.spark, new_events, stream_id=stream_id,
+                batch_id=batch_id)
+        if kmv is not None and kmv.exists():
+            folds["kmv_days"] = lambda: kmv.update(self.spark, new_events)
+        done: dict = {}
+        errors: dict = {}
+
+        def run(key, fold):
+            try:
+                done[key] = fold()
+            except BaseException as e:  # re-raised by the caller
+                errors[key] = e
+
+        threads = [InheritableThread(target=run, args=(key, fold),
+                                     name=f"maintain-{key}")
+                   for key, fold in folds.items()]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        counts = {key: done.get(key, 0) for key in folds}
+        # a failed fold may have rewritten partitions before raising
+        if errors or any(counts.values()):
+            self._rollup_cache.pop(pid, None)
+            self._data_version += 1
+        for key in folds:
+            if key in errors:
+                raise errors[key]
+        return counts
+
+    def _fold_rollups(self, new_events, pid: int) -> int:
+        """Advance every declared rollup store of ``pid`` and the
+        app-level one with an append batch; no data-version bump.
+        Returns the number of stores advanced."""
         stores = self._declared_rollup_stores(pid)
         if self.rollup_store is not None:
             stores.append(self.rollup_store)
@@ -1032,6 +1070,17 @@ class App:
             if s.exists():
                 s.update(self.spark, new_events)
                 n += 1
+        return n
+
+    def maintain_rollups(self, new_events, pid: int = 0) -> int:
+        """Advance every declared rollup store (and the app-level one)
+        with an append batch — the hook the maintenance loop calls at
+        the same moment it folds the batch into the lake (≙ passing
+        rollup_store= to compact_appends_into_bucketed, extended to
+        catalog-declared stores; without this, routed queries serve
+        the pre-ingest build forever while raw-path queries see fresh
+        rows). Returns the number of stores advanced."""
+        n = self._fold_rollups(new_events, pid)
         if n:
             # not refresh_tables(): the events cache is still valid
             # (the lake fold that accompanies this batch invalidates
@@ -1241,20 +1290,6 @@ class App:
             out = self.maintain_ivf(new_embeddings, stream_id=stream_id,
                                     batch_id=batch_id)
             n += 1 if (out["appended"] or out["retrained"]) else 0
-        if n:
-            self._data_version += 1
-        return n
-
-    def maintain_user_day(self, new_events, stream_id=None,
-                          batch_id=None) -> int:
-        """Advance the user-day activity store with an append batch —
-        the engagement twin of `maintain_rollups`, called at the same
-        lake-fold moment. Returns days touched (0 = no store / replay
-        / empty batch)."""
-        if self.user_day_store is None or not self.user_day_store.exists():
-            return 0
-        n = self.user_day_store.update(
-            self.spark, new_events, stream_id=stream_id, batch_id=batch_id)
         if n:
             self._data_version += 1
         return n
@@ -3216,6 +3251,7 @@ class App:
             # text exposition, outside auth — the reference serves its
             # recorder from the server binary the same way (src/cmd);
             # scrapers are perimeter-controlled, not bearer clients
+            metrics.sync_codegen(self.spark)
             body = metrics.REGISTRY.render().encode()
             start_response(_STATUS[200], [
                 ("Content-Type", "text/plain; version=0.0.4; charset=utf-8"),

@@ -94,6 +94,16 @@ def get_spark(
         # to DuckDB's naive timestamps.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Generated-class cache (static; Spark default 100) sized to
+        # the working set. Distinct classes measured on local[4]:
+        # 200 over a perfbench ingest_fold run (track batches,
+        # maintenance ticks, count reads), 263 over a dashboard_routed
+        # run, 1,902 over all 194 registry queries at sf0.01
+        # (metaspace +59 MB, ~32 KB per class). At 100 the cache
+        # thrashed: an ingest_fold window (4 ticks, 12 reads) compiled
+        # 537 classes, against 4 at 4096 — a tick now compiles ~1, the
+        # class carrying its batch's event-id literal.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
     )
     # last-wins overrides (e.g. skew_check enables the UI so it can

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.audience import kmv_day_sketches, kmv_merge
-from ..schema import EVENT_TIME_COL, EVENT_USER_COL
+from ..schema import EVENT_TIME_COL, EVENT_USER_COL, overwrite_partitions
 
 
 class KmvDayStore:
@@ -58,22 +58,13 @@ class KmvDayStore:
 
         return memo_parquet(spark, self.path)
 
-    def _write_days(self, spark: SparkSession, days_df: DataFrame,
-                    first: bool) -> None:
+    def _write_days(self, days_df: DataFrame, first: bool) -> None:
         # localCheckpoint: the merged frame reads from the path the
         # overwrite below replaces (same idiom as RollupStore)
         out = days_df.repartition("day")
         if not first:
             out = out.localCheckpoint()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("day").parquet(self.path)
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        overwrite_partitions(out, "day", self.path)
 
     def update(self, spark: SparkSession, batch: DataFrame) -> int:
         """Fold a batch of raw events in: sketch the batch at day
@@ -89,12 +80,12 @@ class KmvDayStore:
             if not days:
                 return 0
             if not self.exists():
-                self._write_days(spark, days_df, first=True)
+                self._write_days(days_df, first=True)
                 return len(days)
             existing = self.read(spark).filter(F.col("day").isin(days))
             merged = kmv_merge(
                 existing.unionByName(days_df), ["day", "dim"], self.k)
-            self._write_days(spark, merged, first=False)
+            self._write_days(merged, first=False)
             return len(days)
         finally:
             days_df.unpersist()
@@ -122,7 +113,7 @@ class KmvDayStore:
             have = {r[0].isoformat()
                     for r in fresh.select("day").distinct().collect()}
             if have:
-                self._write_days(spark, fresh, first=False)
+                self._write_days(fresh, first=False)
             for gone in set(day_list) - have:
                 shutil.rmtree(os.path.join(self.path, f"day={gone}"),
                               ignore_errors=True)

@@ -46,7 +46,12 @@ from .dsl import EventRef, PropFilter, PropKind, QueryTime, TimeIntervalUnit
 from .exprs import event_expression, multi_and
 from .operators.aggregates import DECIMAL_T, bucket_col
 from .rollup import ROLLUP_DT_COL, _day_aligned, _rollup_filter
-from .schema import EVENT_NAME_COL, EVENT_TIME_COL, EVENT_USER_COL
+from .schema import (
+    EVENT_NAME_COL,
+    EVENT_TIME_COL,
+    EVENT_USER_COL,
+    overwrite_partitions,
+)
 
 N_EVENTS_COL = "n_events"
 VALUE_SUM_COL = "value_sum"
@@ -183,20 +188,7 @@ class UserDayStore:
                 F.col(ROLLUP_DT_COL).isin(days))
             merged = merge_user_day([existing, batch], self.spec)
             out = merged.repartition(ROLLUP_DT_COL).localCheckpoint()
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", None)
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                out.write.mode("overwrite").partitionBy(
-                    ROLLUP_DT_COL).parquet(self.path)
-            finally:
-                if prev is not None:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev)
-                else:
-                    spark.conf.unset(
-                        "spark.sql.sources.partitionOverwriteMode")
+            overwrite_partitions(out, ROLLUP_DT_COL, self.path)
             mark_applied()
             return len(days)
         finally:

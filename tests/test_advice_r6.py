@@ -176,21 +176,35 @@ def test_ensure_io_confs_warns_on_every_explicit_conflict(spark):
 
 def test_legacy_refresh_token_without_typ_still_refreshes():
     import time
+    from unittest import mock
 
     cat = Catalog()
     key = "k" * 32
     pair = auth_mod.sign_up(cat, {"email": "a@b.c", "password": "pw"}, key)
     acct_id = auth_mod.parse_token(pair["accessToken"], key)["accountId"]
-    legacy = auth_mod.make_token(
-        {"exp": int(time.time()) + 3600, "accountId": acct_id}, key)
-    fresh = auth_mod.refresh(cat, {"refreshToken": legacy}, key)
-    assert "accessToken" in fresh and "refreshToken" in fresh
-    # an access token (organizationId claim) still cannot refresh
-    with pytest.raises(auth_mod.AuthError):
-        auth_mod.refresh(cat, {"refreshToken": pair["accessToken"]}, key)
-    # nor can an explicit non-refresh typ
-    bad = auth_mod.make_token(
-        {"exp": int(time.time()) + 3600, "accountId": acct_id,
-         "typ": "access"}, key)
-    with pytest.raises(auth_mod.AuthError):
-        auth_mod.refresh(cat, {"refreshToken": bad}, key)
+    # pin the legacy grace window open relative to NOW (the real
+    # deadline is a fixed date, so an exp of now + 1 h falls after it
+    # once that date has passed)
+    now = int(time.time())
+    deadline = now + 7200
+    with mock.patch.object(auth_mod, "_LEGACY_TYP_DEADLINE", deadline):
+        legacy = auth_mod.make_token(
+            {"exp": now + 3600, "accountId": acct_id}, key)
+        fresh = auth_mod.refresh(cat, {"refreshToken": legacy}, key)
+        assert "accessToken" in fresh and "refreshToken" in fresh
+        # a typ-less token whose exp is past the deadline is no legacy
+        # token and cannot refresh
+        late = auth_mod.make_token(
+            {"exp": deadline + 10, "accountId": acct_id}, key)
+        with pytest.raises(auth_mod.AuthError):
+            auth_mod.refresh(cat, {"refreshToken": late}, key)
+        # an access token (organizationId claim) still cannot refresh
+        with pytest.raises(auth_mod.AuthError):
+            auth_mod.refresh(cat, {"refreshToken": pair["accessToken"]},
+                             key)
+        # nor can an explicit non-refresh typ
+        bad = auth_mod.make_token(
+            {"exp": now + 3600, "accountId": acct_id, "typ": "access"},
+            key)
+        with pytest.raises(auth_mod.AuthError):
+            auth_mod.refresh(cat, {"refreshToken": bad}, key)

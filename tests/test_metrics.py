@@ -101,6 +101,36 @@ def test_metrics_route_is_outside_auth(spark):
     assert st == 200  # no bearer needed; scrape perimeter-controlled
 
 
+def _scraped(text: str, name: str) -> float:
+    (line,) = [ln for ln in text.splitlines() if ln.startswith(name + " ")]
+    return float(line.split()[1])
+
+
+def test_codegen_series_track_the_jvm(spark):
+    """/metrics exports Spark's generated-class compile count and
+    compile time, read from the JVM at scrape time: a new plan shape
+    moves both, and the count equals CodegenMetrics' own."""
+    import time
+
+    app = make_app(spark, SF_DIR)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    st, _, text = call(app, "GET", "/metrics", raw=True)
+    assert st == 200
+    assert "# TYPE optiprism_codegen_compiles_total counter" in text
+    n0 = _scraped(text, "optiprism_codegen_compiles_total")
+    s0 = _scraped(text, "optiprism_codegen_compile_seconds")
+    assert n0 == codegen.METRIC_COMPILATION_TIME().getCount()
+    assert n0 > 0 and s0 > 0  # the session already ran queries
+
+    # a literal no earlier plan carried forces a fresh class
+    lit = time.time_ns() % 1_000_000_007
+    spark.range(4).selectExpr(f"id * {lit} + 1 AS x").collect()
+    st, _, text = call(app, "GET", "/metrics", raw=True)
+    n1 = _scraped(text, "optiprism_codegen_compiles_total")
+    assert n1 > n0 and n1 == codegen.METRIC_COMPILATION_TIME().getCount()
+    assert _scraped(text, "optiprism_codegen_compile_seconds") > s0
+
+
 def test_flush_and_recovery_series(spark, tmp_path):
     wal_dir = str(tmp_path / "wal")
     app = make_app(spark, SF_DIR, wal_dir=wal_dir)
