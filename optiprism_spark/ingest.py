@@ -473,7 +473,6 @@ def compact_appends_into_bucketed(
     bucket_col: str = EVENT_USER_COL,
     sort_cols: Sequence[str] = (EVENT_USER_COL, EVENT_TIME_COL, EVENT_ID_COL),
     clear_appends: bool = True,
-    rollup_store=None,
 ) -> int:
     """Fold date-partitioned appends into the bucketed table — the
     maintenance loop that keeps ``funnel_attempts(assume_partitioned=
@@ -500,6 +499,10 @@ def compact_appends_into_bucketed(
     neither folded nor deleted, so no row is ever lost or folded
     twice across repeated cycles (the reference merger likewise only
     merges the parts it selected, table.rs compactor loop).
+
+    The fold moves rows between lake layouts only; the materialized
+    stores (rollup, user-day, KMV) advance in ``server.App.maintain``,
+    which the maintenance tick calls with the same batch.
 
     Returns the number of appended rows folded in.
     """
@@ -541,16 +544,6 @@ def compact_appends_into_bucketed(
                     _json.dump({"staging": staging, "files": part_files}, f)
             spark.sql(f"DROP TABLE {table_name}")
             spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
-        if rollup_store is not None:
-            # advance the day-grain pre-aggregate with EXACTLY the
-            # folded snapshot (rollup.RollupStore.update — partition-
-            # pruned merge, bytes ∝ batch's day span). On a
-            # transactional lake this overwrite and the table swap
-            # above are one commit; here a crash in between leaves the
-            # rollup one batch behind — always repairable via
-            # rollup_store.rebuild(spark, spark.table(table_name)),
-            # which the maintenance loop can run on recovery.
-            rollup_store.update(spark, appends)
     finally:
         appends.unpersist()
     metrics.store_compactions_total().inc()
@@ -751,20 +744,17 @@ class TieredCompactionPolicy:
         table_name: str,
         appends_path: str,
         tiers_path: str,
-        rollup_store=None,
         **kw,
     ) -> dict:
         """One maintenance tick: minor fold if L0 trips, then major
-        fold if L1 trips. The rollup advances at the MAJOR fold (when
-        rows reach the queryable base — compact_appends_into_bucketed
-        owns that moment and the tiers dir is a valid source listing
-        for it, same manifest/recovery protocol)."""
+        fold if L1 trips (compact_appends_into_bucketed over the tiers
+        dir — same manifest/recovery protocol)."""
         minor = major = 0
         if self.l0.should_compact(appends_path):
             minor = minor_compact_appends(spark, appends_path, tiers_path)
         if self.should_major(tiers_path):
             major = compact_appends_into_bucketed(
-                spark, table_name, tiers_path, rollup_store=rollup_store, **kw
+                spark, table_name, tiers_path, **kw
             )
             # the fold deleted the tier PARQUET files; drop the now
             # data-less tier dirs (their _SUCCESS markers would

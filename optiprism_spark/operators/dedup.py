@@ -442,86 +442,12 @@ def simhash(
     )
 
 
-def _star_contract(
-    sym: DataFrame, _cut, max_iters: int
-) -> "DataFrame | None":
-    """Large-star/small-star contraction [Kiveris et al., CIKM'14 —
-    public]: alternate two edge rewrites until the edge set is a
-    forest of stars (every node linked directly to its component
-    minimum). Diameter contracts GEOMETRICALLY per round, so chains
-    that cost min-label propagation O(diameter) rounds finish in
-    O(log diameter) — each round is 2 passes of (per-node min +
-    join back), the same shuffle primitives as one label round.
-
-    ``sym``: symmetric deduped edge frame (u, v). Returns the (node,
-    component) frame over sym's full node set — nodes whose only
-    edges were self-loops come back self-labeled, matching the label-
-    propagation path. Returns None if ``max_iters`` rounds did not
-    converge."""
-    nodes = sym.select("u").distinct()
-    edges = sym.filter(F.col("u") != F.col("v"))
-    for _ in range(max_iters):
-        # large-star: every neighbor v > u links to m = min(N(u)∪{u})
-        mins = edges.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            edges.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        sym2 = _cut(
-            large.union(large.select(F.col("v").alias("u"),
-                                     F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over larger-to-smaller edges: every smaller
-        # neighbor (and u itself) links to the minimum
-        directed = sym2.filter(F.col("v") < F.col("u"))
-        mins2 = directed.groupBy("u").agg(F.min("v").alias("m"))
-        small = directed.join(mins2, "u").select(
-            F.col("v").alias("a"), F.col("m").alias("b")
-        ).union(mins2.select(F.col("u").alias("a"),
-                             F.col("m").alias("b")))
-        nxt = _cut(
-            small.filter(F.col("a") != F.col("b"))
-            .select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .union(small.filter(F.col("a") != F.col("b"))
-                   .select(F.col("b").alias("u"), F.col("a").alias("v")))
-            .distinct()
-        )
-        # converged when NEITHER pass changed the edge set (the
-        # paper's termination condition; at that point E is a union
-        # of stars centered on component minima). Counts first (the
-        # frames are checkpointed, so counting is cheap), anti-join
-        # probes only on count match.
-        if (nxt.count() == sym2.count() == edges.count()
-                and nxt.join(sym2, ["u", "v"], "left_anti")
-                .limit(1).count() == 0
-                and sym2.join(edges, ["u", "v"], "left_anti")
-                .limit(1).count() == 0):
-            comp = nxt.filter(F.col("v") < F.col("u")).groupBy("u").agg(
-                F.min("v").alias("component"))
-            # star roots (component minima) and self-loop-only nodes
-            # label themselves
-            rest = nodes.join(
-                comp.select("u"), "u", "left_anti").distinct()
-            return (
-                comp.select(F.col("u").alias("node"), "component")
-                .union(rest.select(F.col("u").alias("node"),
-                                   F.col("u").alias("component")))
-            )
-        edges = nxt
-    return None
-
-
 def connected_components(
     pairs: DataFrame,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iters: int = 25,
     checkpoint_dir: str = None,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over an undirected edge list →
     (node, component), where component = min node id in the component.
@@ -543,15 +469,6 @@ def connected_components(
     label-sum fingerprint would crash or silently no-op on strings
     under ANSI casts).
 
-    ``algorithm``: ``"label"`` (default) is min-label propagation —
-    2 shuffles per round, rounds = diameter, the right shape for
-    near-dup graphs (cliques + short bridges, measured 2-4 rounds).
-    ``"star"`` is large-star/small-star contraction (`_star_contract`)
-    — ~4 shuffles per round but the diameter contracts geometrically,
-    so long-chain graphs (web graphs, transitive bridges) finish in
-    O(log diameter) rounds where label propagation needs O(diameter);
-    outputs are identical (component = min id).
-
     Fault tolerance: ``checkpoint_dir=None`` cuts lineage with
     ``localCheckpoint`` — blocks live on executors with NO recompute
     path, so losing one executor in a late round kills the job. Fine
@@ -569,20 +486,11 @@ def connected_components(
             return df.localCheckpoint(eager=True)
         return df.checkpoint(eager=True)
 
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be label|star, got {algorithm!r}")
     sym = _cut(
         pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(pairs.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
         .distinct()
     )
-    if algorithm == "star":
-        out = _star_contract(sym, _cut, max_iters)
-        if out is None:
-            raise RuntimeError(
-                f"connected_components(star) did not converge in "
-                f"{max_iters} rounds — raise max_iters")
-        return out
     labels = _cut(
         sym.select(F.col("u").alias("node"))
         .distinct()

@@ -60,9 +60,9 @@ from ..exprs import event_spec_expression, full_filter, multi_or, prop_col
 from ..schema import EVENT_ID_COL, EVENT_TIME_COL, EVENT_USER_COL
 
 # Session count-mode boundaries derive from the ONE engine-wide gap
-# constant (streaming/sessionize.py) — the same definition the batch
-# sessionizer, the Session Begin synthesizer and the streaming state
-# machine use; two session definitions in one engine would drift.
+# constant (streaming/sessionize.py) — the same definition the
+# sessionizer and the Session Begin synthesizer use; two session
+# definitions in one engine would drift.
 from ..streaming.sessionize import SESSION_GAP_US
 
 

@@ -40,8 +40,8 @@ per-batch cost follows the batch. Retraining happens only when
 build-time population and the appended rows crosses a declared
 threshold — the corpus has actually moved, so the inverted lists are
 going stale. ``maintain()`` packages append + drift-check + optional
-retrain as one tick, the same shape as the server's maintain_rollups
-/ gate_quality hooks.
+retrain as one tick; the server's maintenance tick (App.maintain →
+maintain_ann_indexes / maintain_ivf) is its only caller.
 
 Query routing: `similarity.cosine_topk_ivf` and
 `similarity.embedding_near_pairs_ivf` accept ``store=`` and read the

@@ -16,10 +16,9 @@ production design the reference lacks:
 - ``RollupStore``: the rollup persisted as dt-partitioned parquet with
   **incremental maintenance**: an append batch is day-aggregated and
   merged into only the affected dt partitions (partition-pruned read,
-  dynamic-partition-overwrite write). Hooked into the ingest
-  compaction loop (ingest.compact_appends_into_bucketed(rollup_store=))
-  so the fold moment that already owns the append snapshot also
-  advances the rollup. On a production lake the per-partition swap is
+  dynamic-partition-overwrite write). Advanced by the server's
+  maintenance tick (server.App.maintain), which folds each ingest
+  batch into every rollup store. On a production lake the per-partition swap is
   a transactional commit (Delta/Iceberg ``replaceWhere``); the plan
   shape (one shuffle on (dt, dims), writes proportional to affected
   days — not history) is identical.
@@ -299,14 +298,13 @@ class RollupStore:
     ) -> int:
         """Merge an append batch into the store; returns #days touched.
 
-        ``stream_id``/``batch_id``: replay guard for streaming
-        maintenance (foreachBatch re-delivers the last uncommitted
-        batch after a checkpoint restart; merging it twice would
-        double-count). Applied ids are recorded in a ledger AFTER the
-        partition overwrite — a crash between the two reapplies one
-        batch, which ``rebuild`` repairs; on a transactional lake the
-        overwrite and the ledger write are one commit (the standard
-        idempotent-foreachBatch pattern)."""
+        ``stream_id``/``batch_id``: replay guard for the maintenance
+        tick (a scheduler that restarts re-delivers the last
+        uncommitted batch; merging it twice would double-count).
+        Applied ids are recorded in a ledger AFTER the partition
+        overwrite — a crash between the two reapplies one batch, which
+        ``rebuild`` repairs; on a transactional lake the overwrite and
+        the ledger write are one commit."""
         if stream_id is not None and batch_id is not None:
             if self._applied().get(stream_id, -1) >= batch_id:
                 return 0

@@ -146,8 +146,9 @@ def _memo_key(spark: SparkSession, path: str, ns: str) -> "tuple | None":
                 return None
             fingerprint += (entries,)
         # session-scoped (not applicationId-scoped): a frame memoized
-        # under the main session must not execute under a
-        # foreachBatch clone with different session confs
+        # under one session must not execute under another session of
+        # the same application (spark.newSession(), a cloned session)
+        # with different session confs
         return (ns, spark, os.path.realpath(path), fingerprint)
     except Exception:
         return None  # unstattable path / stopped context
@@ -204,14 +205,13 @@ def memo_parquet(spark: SparkSession, path: str) -> DataFrame:
     per-call footer/schema round-trip is what a real catalog does —
     it was ~0.1 s of driver time per store read per query.
 
-    The key is the SESSION OBJECT, not the applicationId: stores are
-    read inside foreachBatch micro-batches, which run on a CLONED
-    session — a frame memoized under the main session would execute
-    (and, worse, write) under the main session's confs, not the
-    clone's. Session-scoped keys make the clone take one fresh read
-    instead. Keys are namespaced apart from load_table's
-    (raw read here vs nanos→µs-transformed frame there — see
-    _memo_key)."""
+    The key is the SESSION OBJECT, not the applicationId: one
+    application may run several sessions (``spark.newSession()``, a
+    cloned session) — a frame memoized under one would execute (and,
+    worse, write) under its confs, not the caller's. Session-scoped
+    keys make another session take one fresh read instead. Keys are
+    namespaced apart from load_table's (raw read here vs
+    nanos→µs-transformed frame there — see _memo_key)."""
     key = _memo_key(spark, path, "raw")
     if key is not None:
         hit = _TABLE_PLANS.get(key)

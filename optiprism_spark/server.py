@@ -59,9 +59,9 @@ journal (see ``wal``) so acked events survive a crash, mirroring the
 reference write path WAL → memtable (storage/src/db.rs:214-265) — and
 exposes the buffered batch as a DataFrame through the same UA/GeoIP
 enrichment used for bulk ingest; a production deployment fronts many
-stateless receivers that append to object storage / a log, consumed
-by the Structured Streaming pipeline (streaming/), so the facade
-process never becomes the write path's bottleneck.
+stateless receivers that append to object storage / a log, folded
+in by the maintenance tick (``App.maintain``), so the facade process
+never becomes the write path's bottleneck.
 
 The app is framework-free WSGI: serve it with stdlib ``wsgiref`` (see
 ``serve``) or any production WSGI server unchanged.
@@ -420,14 +420,15 @@ class App:
         # optional day-grain pre-aggregate (rollup.RollupStore):
         # segmentation requests that are rollup-expressible are served
         # from it (run_event_segmentation routes per event-query);
-        # maintained by the ingest compaction loop
+        # maintained by the maintain() tick
         self.rollup_store = rollup_store
         #: optional audience KMV day-sketch store
-        #: (streaming.audience.KmvDayStore), maintained like the
-        #: rollup; enables `sketched: true` on /queries/audience venn
+        #: (streaming.audience.KmvDayStore), maintained by the
+        #: maintain() tick; enables `sketched: true` on
+        #: /queries/audience venn
         self.kmv_store = kmv_store
         #: optional durable ANN index (operators.ivf_store.IvfStore),
-        #: maintained via maintain_ivf (append + drift-triggered
+        #: maintained by the maintain() tick (append + drift-triggered
         #: retrain); enables `indexed: true` on /queries/similarity —
         #: the per-call quantizer build is the one cost a standing
         #: search surface cannot pay at 100 TB
@@ -970,13 +971,15 @@ class App:
            (also finishes orphaned ``building`` rows — crash recovery)
         4. ``sweep_sessions`` — TTL expiry + Session End injection
 
-        Replay safety is per store: user-day honours the
-        (stream_id, batch_id) ledger, rollup/KMV updates are
-        idempotent merges at day grain, ANN appends ride the IvfStore
-        ledger. Each advance is counted into
+        This tick is the only path that advances the rollup, user-day,
+        KMV and ANN stores. Replay safety is per store: the rollup and
+        user-day stores honour the (stream_id, batch_id) ledger (their
+        counts are additive, so a re-delivered batch would otherwise
+        count twice), the KMV merge is a set union and so idempotent,
+        ANN appends ride the IvfStore ledger. Without ids a batch is
+        always applied. Each advance is counted into
         optiprism_maintenance_store_advanced_total — the 'which tier
-        went stale' dashboard. Individual hooks stay public for
-        granular schedules. Returns a summary dict."""
+        went stale' dashboard. Returns a summary dict."""
         out = {"quality_failures": [], "rollup_stores": 0,
                "user_day_days": 0, "kmv_days": 0, "ann_stores": 0,
                "sessions_ended": 0}
@@ -1024,7 +1027,7 @@ class App:
         from pyspark import InheritableThread
 
         folds = {"rollup_stores": lambda: self._fold_rollups(
-            new_events, pid)}
+            new_events, pid, stream_id, batch_id)}
         uds, kmv = self.user_day_store, self.kmv_store
         if uds is not None and uds.exists():
             folds["user_day_days"] = lambda: uds.update(
@@ -1058,39 +1061,21 @@ class App:
                 raise errors[key]
         return counts
 
-    def _fold_rollups(self, new_events, pid: int) -> int:
+    def _fold_rollups(self, new_events, pid: int, stream_id,
+                      batch_id) -> int:
         """Advance every declared rollup store of ``pid`` and the
-        app-level one with an append batch; no data-version bump.
-        Returns the number of stores advanced."""
+        app-level one with an append batch; ``stream_id``/``batch_id``
+        ride each store's replay ledger. No data-version bump. Returns
+        the number of stores advanced."""
         stores = self._declared_rollup_stores(pid)
         if self.rollup_store is not None:
             stores.append(self.rollup_store)
         n = 0
         for s in stores:
             if s.exists():
-                s.update(self.spark, new_events)
+                s.update(self.spark, new_events, stream_id=stream_id,
+                         batch_id=batch_id)
                 n += 1
-        return n
-
-    def maintain_rollups(self, new_events, pid: int = 0) -> int:
-        """Advance every declared rollup store (and the app-level one)
-        with an append batch — the hook the maintenance loop calls at
-        the same moment it folds the batch into the lake (≙ passing
-        rollup_store= to compact_appends_into_bucketed, extended to
-        catalog-declared stores; without this, routed queries serve
-        the pre-ingest build forever while raw-path queries see fresh
-        rows). Returns the number of stores advanced."""
-        n = self._fold_rollups(new_events, pid)
-        if n:
-            # not refresh_tables(): the events cache is still valid
-            # (the lake fold that accompanies this batch invalidates
-            # it itself via commit_checkpoint → refresh_tables), but
-            # the result cache MUST drop — it is keyed on
-            # _data_version, and without the bump an identical routed
-            # query inside the TTL replays the pre-maintenance
-            # response (r7 red test)
-            self._rollup_cache.pop(pid, None)
-            self._data_version += 1
         return n
 
     # ------------------------------------------- declared ANN indexes
@@ -1258,7 +1243,7 @@ class App:
     def maintain_ann_indexes(self, new_embeddings, pid: int = 0,
                              stream_id=None, batch_id=None) -> int:
         """Advance every DECLARED index (and the app-level one) with
-        an embedding batch — the similarity twin of maintain_rollups:
+        an embedding batch — step 3 of the ``maintain`` tick:
         append against each frozen quantizer, retrain only on the
         index's declared drift threshold. ``stream_id``/``batch_id``
         ride each store's replay ledger so a re-delivered batch
@@ -1296,8 +1281,8 @@ class App:
 
     def maintain_ivf(self, new_embeddings, drift_threshold: float = 0.02,
                      stream_id=None, batch_id=None) -> dict:
-        """Advance the durable ANN index with an embedding batch —
-        the maintenance-loop twin of `maintain_rollups`: appends are
+        """Advance the app-level ANN index with an embedding batch
+        (``maintain_ann_indexes`` calls it each tick): appends are
         assigned against the frozen quantizer (cost follows the
         batch), and a retrain fires only when the appended
         population's centroid drift (operators/drift.py) crosses the
@@ -1401,9 +1386,9 @@ class App:
 
     def gate_quality(self, new_events, pid: int = 0) -> list[dict]:
         """Run the project's DECLARED quality batteries over an ingest
-        batch — the maintenance-loop twin of `maintain_rollups`,
-        called at the same moment a batch folds into the lake. Returns
-        the failing constraint rows (each also counted into
+        batch — step 1 of the ``maintain`` tick, called at the same
+        moment a batch folds into the lake. Returns the failing
+        constraint rows (each also counted into
         optiprism_quality_gate_failures_total, the 'vendor broke the
         feed' alarm); no declared batteries → no-op, no scan. The
         collect is bounded by the number of FAILING constraints (≤
@@ -3347,7 +3332,7 @@ class App:
             cache = self._result_cache if qtype else None
             ckey = None
             # snapshot the version BEFORE the handler runs: if a
-            # concurrent write (maintain_rollups, ingest — the server
+            # concurrent write (maintain, ingest — the server
             # is threaded, no request lock) bumps it mid-execution,
             # the result computed against pre-bump data must be cached
             # under the pre-bump version so the next get() at the new

@@ -13,20 +13,18 @@ session.
 
 The TTL derives from the ONE engine-wide gap constant
 (streaming/sessionize.SESSION_GAP_US) — the same definition the batch
-sessionizer, the Session Begin synthesizer, the funnel's Session count
-mode and the streaming state machine use.
+sessionizer, the Session Begin synthesizer and the funnel's Session
+count mode use.
 
 This store is the reference's mechanism; the repo's default remains
-gap-detection at read/stream time (streaming/sessionize.
+gap-detection at read time (streaming/sessionize.
 synthesize_session_begin), which produces the same rows without
 write-path state. The store exists for deployments that want the
 events table to carry Session Begin rows physically (so downstream
 consumers never re-derive them). Scale note: state is one (user_id,
 last_ts) pair per ACTIVE user per receiver — the same footprint as
 the reference's RocksDB namespace; a fleet of stateless receivers
-shards it by user via sticky routing, or substitutes the streaming
-state store (streaming/stateful.py), which holds identical state
-distributed.
+shards it by user via sticky routing.
 """
 
 from __future__ import annotations

@@ -1,14 +1,16 @@
-"""Streaming maintenance for the audience KMV day sketches — the
+"""Incrementally maintained audience KMV day sketches — the
 production path behind operators/audience.py's set algebra: sketches
 are maintained once per day-grain as events land, and any window's
 distinct/overlap/Venn question is then a fold over stored rows, never
 a raw scan (the same economics as the rollup store, rollup.py).
+``server.App.maintain`` folds each ingest batch in through
+``KmvDayStore.update``.
 
 Idempotence WITHOUT a batch ledger: a KMV sketch is the set of the K
 smallest distinct hashes, so merging the same rows twice is a no-op
 by construction (set union), unlike the rollup's additive counts
-which need the (stream_id, batch_id) ledger to survive foreachBatch
-re-delivery. Restart/replay safety therefore falls out of the math.
+which need the (stream_id, batch_id) ledger to survive a re-delivered
+batch. Replay safety therefore falls out of the math.
 
 Erasure: like HLL, a hash can't be subtracted from a sketch —
 ``recompute_days`` re-builds exactly the affected dt partitions from
@@ -18,10 +20,9 @@ the post-rewrite lake (the RollupStore.recompute_days contract).
 from __future__ import annotations
 
 import os
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.audience import kmv_day_sketches, kmv_merge
 from ..schema import EVENT_TIME_COL, EVENT_USER_COL, overwrite_partitions
@@ -121,29 +122,3 @@ class KmvDayStore:
         finally:
             fresh.unpersist()
 
-
-def streaming_kmv_maintenance(
-    spark: SparkSession,
-    schema,
-    source_dir: str,
-    store: KmvDayStore,
-    checkpoint_dir: str,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Keep a KmvDayStore fresh from parquet files landing under
-    ``source_dir`` — same deployment shape as
-    streaming_rollup_maintenance; no ledger needed (see module
-    docstring)."""
-
-    def fold(batch_df, batch_id: int) -> None:
-        store.update(batch_df.sparkSession, batch_df)
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fold)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,19 +1,20 @@
-"""Sessionization + ingestion — batch and Structured Streaming.
+"""Sessionization and date-partitioned ingest.
 
 The reference detects new sessions at ingest time and injects a
 `Session Begin` event (ingester/src/destinations/local/track.rs:44-52,
 EVENT_SESSION_BEGIN common/src/types.rs:70-71); its funnel declares a
 Session count unit but leaves it unimplemented. Here:
 
-- batch: lag-gap sessionization (window functions) assigning a
-  session_id per (user, 30-min-gap run) and synthesizing the
-  `Session Begin` rows — read-path equivalent of the reference's
-  write-path injection.
-- streaming: the same semantics as a Structured Streaming
-  `session_window` aggregation with a watermark for late data —
-  strictly more than the reference supports (SURVEY §2.12).
+- lag-gap sessionization (window functions) assigning a session_id
+  per (user, 30-min-gap run) and synthesizing the `Session Begin`
+  rows — read-path equivalent of the reference's write-path
+  injection.
 - ingest: date-partitioned append writer — the events table layout
   that makes time-range queries partition-pruned at 100 TB.
+
+``SESSION_GAP_US`` is the one engine-wide gap constant: the funnel's
+Session count mode and the ingest-time session store
+(sessions.SessionStore) read it from here.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..schema import EVENT_ID_COL, EVENT_NAME_COL, EVENT_TIME_COL, EVENT_USER_COL
 
-SESSION_GAP = "30 minutes"
 SESSION_GAP_US = 30 * 60 * 1_000_000
 EVENT_SESSION_BEGIN = "Session Begin"  # reference common/src/types.rs:70-71
 EVENT_SESSION_END = "Session End"
@@ -80,27 +80,6 @@ def synthesize_session_begin(events: DataFrame, gap_us: int = SESSION_GAP_US) ->
         .withColumn(EVENT_ID_COL, -F.col(EVENT_ID_COL) - F.lit(1))
     )
     return events.unionByName(starts)
-
-
-def streaming_session_counts(spark, schema, source_dir: str, gap: str = SESSION_GAP):
-    """Structured Streaming sessionization: session_window + watermark.
-    Returns the streaming DataFrame; callers attach a sink
-    (memory sink + processAllAvailable for tests)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        stream.withWatermark(EVENT_TIME_COL, "1 hour")
-        .groupBy(
-            F.session_window(F.col(EVENT_TIME_COL), gap).alias("session"),
-            F.col(EVENT_USER_COL),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            EVENT_USER_COL,
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "n_events",
-        )
-    )
 
 
 def append_events(df: DataFrame, path: str, mode: str = "append") -> None:

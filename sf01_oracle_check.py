@@ -65,10 +65,11 @@ CORE = [
 #: builder's own 10×-scale check every round (r14 verdict task 3).
 ROTATE_N = 24
 
-#: per-round record of what this gate checked (mirror of the driver
-#: gate's DRIVER_CHECKED_ROUNDS) — extend each round from the previous
-#: SF01_ORACLE_r{N}.json's keys. Pre-r11 members seeded from the r9/r10
-#: gates are folded into round 10's entry.
+#: per-round record of what this gate checked — extend each round from
+#: the previous SF01_ORACLE_r{N}.json's keys (the driver gate's
+#: registry.DRIVER_CHECKED_ROUNDS is instead read from the committed
+#: CORRECTNESS_r{N}.json files). Pre-r11 members seeded from the
+#: r9/r10 gates are folded into round 10's entry.
 SF01_CHECKED_ROUNDS: dict[int, frozenset[str]] = {
     10: frozenset({
         "alert_purchase_count_daily", "asm_pack_sequences",

@@ -74,78 +74,6 @@ def test_anomaly_flags_partitioned_baselines(spark):
     assert not any(v for (g, d), v in out.items() if d < 7)
 
 
-def test_streaming_rollup_alerts_end_to_end(spark, tmp_path):
-    """Streaming fold + alert channel: a planted spike day raises
-    exactly one alert row; replays and later batches do not re-raise
-    it; the rollup itself matches the batch fold."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import functions as F
-
-    from optiprism_spark.rollup import RollupSpec, RollupStore, build_rollup
-    from optiprism_spark.schema import load_table
-    from optiprism_spark.streaming.alerts import streaming_rollup_alerts
-
-    def mk(day, n, ev, base_id):
-        return [(base_id + i, dt.datetime(2024, 1, day, 10, 0, 0), 1 + i % 7,
-                 ev, 0.0, "{}") for i in range(n)]
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    # near-steady 20-22/day for 6 days (a perfectly flat baseline has
-    # zero variance and by design yields no z), then a 400-event
-    # spike on day 7
-    batch1 = [r for d in range(1, 7)
-              for r in mk(d, 20 + d % 3, "view", d * 1000)]
-    batch2 = mk(7, 400, "view", 50_000)
-
-    src = str(tmp_path / "landing"); os.makedirs(src)
-    ckpt = str(tmp_path / "ckpt")
-    log = str(tmp_path / "alerts")
-    store = RollupStore(str(tmp_path / "rollup"), RollupSpec())
-
-    def run():
-        q = streaming_rollup_alerts(
-            spark, spark.createDataFrame([], schema).schema, src, store,
-            ckpt, log, z_threshold=3.0, min_periods=3)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode(
-        "append").parquet(src)
-    run()
-    assert spark.read.parquet(log).count() == 0
-
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append").parquet(src)
-    run()
-    alerts = spark.read.parquet(log).collect()
-    assert len(alerts) == 1
-    a = alerts[0]
-    assert (a["event_type"], a["bucket"], a["n"]) == (
-        "view", dt.date(2024, 1, 7), 400)
-    assert a["z_score"] > 3
-
-    # a later quiet batch re-reads the whole store but must not
-    # re-raise the existing alert
-    spark.createDataFrame(mk(8, 20, "view", 90_000), schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    assert spark.read.parquet(log).count() == 1
-
-    # store content identical to a one-shot batch fold
-    full = spark.createDataFrame(batch1 + batch2 + mk(8, 20, "view", 90_000),
-                                 schema)
-    want = build_rollup(full, RollupSpec())
-    got = store.read(spark)
-    cols = ["dt", "event_type", "events_count"]
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, want.select(cols).collect()))
-
-
 def test_robust_anomaly_hand_computed(spark):
     """Hampel flags on a hand-computed series: interpolated median of
     [9,10,10,11,12,100] is 10.5; deviations [0.5,0.5,1.5,0.5,1.5,89.5]

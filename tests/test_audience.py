@@ -358,52 +358,6 @@ def test_kmv_store_recompute_days_after_erasure(spark, tmp_path):
     assert len(left[0].kmv) == 7  # users 1..7
 
 
-def test_streaming_kmv_maintenance_end_to_end(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from optiprism_spark.streaming.audience import (
-        KmvDayStore,
-        streaming_kmv_maintenance,
-    )
-
-    src = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    store = KmvDayStore(str(tmp_path / "kmv"), k=256)
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ])
-
-    def run():
-        q = streaming_kmv_maintenance(
-            spark, schema, src, store, ckpt, trigger_once=True)
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-
-    spark.createDataFrame(
-        _kmv_rows(2, range(50)) + _kmv_rows(2, range(30), "purchase"),
-        schema).coalesce(1).write.mode("append").parquet(src)
-    run()
-    spark.createDataFrame(
-        _kmv_rows(3, range(40, 90)), schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-
-    got = audience_venn_from_day_sketches(
-        store.read(spark), "signup", "purchase", 256).first()
-    # signup: 0..49 day2 + 40..89 day3 = 90; purchase 0..29 all shared
-    assert (got.users_a, got.users_b, got.both) == (90.0, 30.0, 30.0)
-
-    snap = sorted((r.day.isoformat(), r.dim, tuple(r.kmv))
-                  for r in store.read(spark).collect())
-    run()  # no new files -> no change
-    assert sorted((r.day.isoformat(), r.dim, tuple(r.kmv))
-                  for r in store.read(spark).collect()) == snap
-
-
 def test_mixture_sample_exact_budget_edges(spark):
     from optiprism_spark.operators.assembly import mixture_sample_exact
 

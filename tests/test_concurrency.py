@@ -119,13 +119,13 @@ def test_accept_backlog_sized_for_bursts(server):
 
 
 def test_result_cache_never_serves_pre_maintenance_data(spark, tmp_path):
-    """Fuzz the result-cache version seam (r7 bug: maintain_rollups
-    advanced stores without bumping _data_version, so the TTL cache
-    replayed pre-maintenance responses): 4 query threads hammer one
-    routed request while a maintenance thread applies epochs of 10
-    March purchases each; every response must reflect AT LEAST the
-    epochs completed before its request started — a cached replay of
-    an older epoch is exactly the bug."""
+    """Fuzz the result-cache version seam (r7 bug: the rollup
+    maintenance hook advanced stores without bumping _data_version,
+    so the TTL cache replayed pre-maintenance responses): 4 query
+    threads hammer one routed request while a maintenance thread
+    applies epochs of 10 March purchases each; every response must
+    reflect AT LEAST the epochs completed before its request started
+    — a cached replay of an older epoch is exactly the bug."""
     from pyspark.sql import functions as F
 
     from optiprism_spark.schema import load_table
@@ -180,7 +180,7 @@ def test_result_cache_never_serves_pre_maintenance_data(spark, tmp_path):
             batch = proto.withColumn(
                 "ts", F.lit(f"2024-03-0{e} 12:00:00").cast("timestamp"))
             try:
-                assert app.maintain_rollups(batch, pid=1) == 1
+                assert app.maintain(batch, pid=1)["rollup_stores"] == 1
             except Exception as exc:  # pragma: no cover
                 errors.append(repr(exc))
                 break
@@ -212,8 +212,8 @@ def test_result_cache_put_uses_pre_execution_version_snapshot(spark):
     _data_version before invoking the handler and puts under that
     snapshot — putting under the post-bump current version would
     bless a pre-bump result for the new version and replay stale data
-    for the TTL window (the same staleness class as the r7
-    maintain_rollups bug, reached through the request/write race)."""
+    for the TTL window (the same staleness class as the r7 rollup
+    maintenance bug, reached through the request/write race)."""
     from optiprism_spark import metrics
 
     app = make_app(spark, SF_DIR)

@@ -120,56 +120,6 @@ def test_categorical_drift_detects_dropped_category(spark):
     assert rows["c"]["psi_contrib"] > 1.0  # way past the 0.25 alarm
 
 
-def test_streaming_drift_alerts_end_to_end(spark, tmp_path):
-    """Drift watchdog: a same-mix batch raises nothing; a shifted
-    batch raises exactly one alert; a replayed/quiet pass re-raises
-    nothing (per-batch overwrite + anti-join idempotence)."""
-    import os
-
-    from optiprism_spark.streaming.alerts import streaming_drift_alerts
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    import datetime as dt
-
-    def mk(ev, n, base_id):
-        return [(base_id + i, dt.datetime(2024, 1, 2, 10, 0, 0), i % 9,
-                 ev, 0.0, "{}") for i in range(n)]
-
-    baseline = spark.createDataFrame(
-        mk("a", 300, 0) + mk("b", 300, 1000) + mk("c", 300, 2000), schema)
-    src = str(tmp_path / "landing"); os.makedirs(src)
-    state = str(tmp_path / "state")
-    log = str(tmp_path / "alerts")
-
-    def run():
-        q = streaming_drift_alerts(
-            spark, spark.createDataFrame([], schema).schema, src, baseline,
-            str(tmp_path / "ckpt"), state, log, threshold=0.25)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # batch 1: same mix → PSI ~0, no alert
-    spark.createDataFrame(
-        mk("a", 100, 10_000) + mk("b", 100, 11_000) + mk("c", 100, 12_000),
-        schema).coalesce(1).write.mode("append").parquet(src)
-    run()
-    assert not os.path.isdir(log) or spark.read.parquet(log).count() == 0
-
-    # batch 2: the mix collapses to one event type → alert
-    spark.createDataFrame(mk("a", 3000, 20_000), schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    alerts = spark.read.parquet(log).collect()
-    assert len(alerts) == 1 and alerts[0]["psi"] >= 0.25
-
-    # quiet re-run: nothing new lands, log unchanged
-    run()
-    assert spark.read.parquet(log).count() == 1
-
-
 # -------------------------------------------------- r12: serving + rollup
 
 _JAN_B = {"type": "between", "from": "2024-01-01T00:00:00",
@@ -313,68 +263,6 @@ def test_rollup_psi_fold_shape(spark):
     assert "Window" not in plan, plan
     assert plan.lower().count("generate") <= 1  # the stack unpivot
     assert out.count() == len(_EDGES) + 1
-
-
-def test_drift_watchdog_rebaseline(spark, tmp_path):
-    """The operator action after an ACCEPTED shift: alert fires on
-    the new mix, rebaseline accepts it, subsequent same-new-mix
-    batches stay quiet (the r11 frozen-baseline alarm loop), a RE-
-    shift from the new baseline alerts again, and replays stay
-    idempotent throughout — all without touching the checkpoint."""
-    import datetime as dt
-    import os
-
-    from optiprism_spark.streaming.alerts import (
-        rebaseline_drift_alerts, streaming_drift_alerts)
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-    def mk(ev, n, base_id):
-        return [(base_id + i, dt.datetime(2024, 1, 2, 10, 0, 0), i % 9,
-                 ev, 0.0, "{}") for i in range(n)]
-
-    baseline = spark.createDataFrame(
-        mk("a", 300, 0) + mk("b", 300, 1000) + mk("c", 300, 2000), schema)
-    src = str(tmp_path / "landing"); os.makedirs(src)
-    state = str(tmp_path / "state")
-    log = str(tmp_path / "alerts")
-
-    def run():
-        q = streaming_drift_alerts(
-            spark, spark.createDataFrame([], schema).schema, src, baseline,
-            str(tmp_path / "ckpt"), state, log, threshold=0.25)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # the mix legitimately collapses to one event type → alert fires
-    spark.createDataFrame(mk("a", 3000, 20_000), schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    assert spark.read.parquet(log).count() == 1
-    # without rebaseline the alarm would ring on EVERY next batch of
-    # the accepted mix; the operator accepts what was observed
-    marker = rebaseline_drift_alerts(spark, state)
-    assert marker["from_batch"] >= 0
-
-    spark.createDataFrame(mk("a", 500, 40_000), schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    assert spark.read.parquet(log).count() == 1  # quiet: mix accepted
-
-    # replay idempotence survives the marker flip
-    run()
-    assert spark.read.parquet(log).count() == 1
-
-    # drifting away from the NEW baseline alerts again
-    spark.createDataFrame(mk("z", 3000, 60_000), schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    alerts = {r["batch_id"]: r["psi"] for r in
-              spark.read.parquet(log).collect()}
-    assert len(alerts) == 2
 
 
 # --------------------------------------------- r12: equi-depth PSI bins

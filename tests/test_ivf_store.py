@@ -229,57 +229,6 @@ def test_probe_pairs_matches_full_rebuild(spark, tmp_path):
     assert st.assignment(spark).filter("appended").count() == 0
 
 
-def test_streaming_ivf_maintenance(spark, tmp_path):
-    """The maintenance stream folds embedding micro-batches into the
-    index with replay-safe ledgering; checkpoint recovery does not
-    double-append."""
-    import os
-
-    from optiprism_spark.streaming.similarity import (
-        streaming_ivf_maintenance)
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    schema = "vec_id long, embedding array<float>"
-
-    st = IvfStore(str(tmp_path / "stream_ivf"))
-    st.rebuild(spark, load_table(spark, SF, "embeddings"), n_centroids=8)
-    n0 = st.info()["count"]
-
-    def run():
-        q = streaming_ivf_maintenance(
-            spark, schema, src, st, ckpt,
-            drift_threshold=2.0,  # never retrain: ledger is the test
-            trigger_once=True)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    spark.createDataFrame(
-        [(70_000 + i, [1.0 + i] * 64) for i in range(5)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    assert st.info()["count"] == n0 + 5
-    assert st.assignment(spark).filter("appended").count() == 5
-
-    # replay: wipe the checkpoint so batch 0 re-delivers — the store
-    # ledger must no-op it
-    import shutil
-
-    shutil.rmtree(ckpt)
-    run()
-    assert st.info()["count"] == n0 + 5
-
-    # a genuinely new batch advances
-    spark.createDataFrame(
-        [(80_000, [2.0] * 64)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    assert st.info()["count"] == n0 + 6
-
-
 def test_ann_index_ddl_plane(spark, tmp_path):
     """Declared per-project ANN indexes: POST /schema/ann-indexes
     builds a durable IvfStore; /queries/similarity serves it via

@@ -1,9 +1,10 @@
-"""Unified maintenance orchestrator (server.App.maintain, r15
-verdict task 6): ONE tick advances every declared store exactly
-once, replay-safe, with per-store advance metrics. The individual
-hooks (maintain_rollups / maintain_ivf /
-maintain_ann_indexes / gate_quality / sweep_sessions) stay public
-for granular schedules — this file pins the orchestrated path.
+"""Unified maintenance orchestrator (server.App.maintain): ONE tick
+advances every declared store exactly once, replay-safe, with
+per-store advance metrics. It is the only path that advances the
+rollup, user-day, KMV and ANN stores; the hooks it calls
+(maintain_ivf / maintain_ann_indexes / gate_quality / sweep_sessions)
+stay public for granular schedules — this file pins the orchestrated
+path.
 """
 
 from __future__ import annotations
@@ -95,14 +96,17 @@ def test_unified_tick_advances_every_store_once(spark, tmp_path):
     # stores no-op, merge-idempotent stores keep identical data
     ud_snap = sorted(
         tuple(r) for r in userday.read(spark).collect())
+    rollup_snap = sorted(str(tuple(r)) for r in rollup.read(spark).collect())
     out2 = app.maintain(batch, emb_batch, stream_id="tick", batch_id=1)
     assert out2["user_day_days"] == 0  # ledger no-op
     assert ivf.info()["count"] == ivf_count_before + 3  # ledger no-op
     assert sorted(tuple(r) for r in userday.read(spark).collect()) == \
         ud_snap
-    # rollup/KMV merges are idempotent at day grain: counts unchanged
-    # (rollup day rows for the batch's day fold to the same values)
-    assert out2["rollup_stores"] == 1  # touched, but a no-op merge
+    # the rollup's counts are additive: only its ledger keeps the
+    # replayed batch from counting twice
+    assert out2["rollup_stores"] == 1  # visited, but a ledger no-op
+    assert sorted(str(tuple(r)) for r in rollup.read(spark).collect()) \
+        == rollup_snap
 
 
 def test_unified_tick_reports_quality_failures(spark, tmp_path):

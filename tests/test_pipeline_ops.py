@@ -619,7 +619,6 @@ def test_lsh_incremental_randomized_equivalence(spark, seed):
     assert got == want, (seed, cutoff, sorted(got ^ want))
 
 
-
 def test_connected_components_string_ids(spark):
     """Min-label propagation must work for STRING doc ids: the old
     label-sum convergence fingerprint crashed (ANSI cast) or silently
@@ -943,59 +942,3 @@ def test_curriculum_phases_semantics(spark):
 
     with pytest.raises(ValueError):
         curriculum_phases(df, "s", n_phases=1)
-
-
-def test_connected_components_star_matches_label(spark):
-    """r17: large-star/small-star contraction must produce the exact
-    (node, component=min id) frame min-label propagation does, on
-    shapes that stress it: chains, cliques, bridged cliques, star-
-    already graphs, string ids."""
-    import random
-
-    from optiprism_spark.operators.dedup import connected_components
-
-    cases = [
-        [(2, 3), (1, 2), (7, 8)],                        # chain + island
-        [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6)],  # two cliques
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)],        # pure chain
-        [(10, 1), (10, 2), (10, 3)],                     # star, big center
-        [(1, 1), (2, 3)],                                # self-loop noise
-    ]
-    rng = random.Random(7)
-    for _ in range(3):  # random graphs, modest size
-        n = 40
-        cases.append([(rng.randrange(n), rng.randrange(n))
-                      for _ in range(45)])
-    for pairs in cases:
-        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-        want = {(r.node, r.component)
-                for r in connected_components(df).collect()}
-        got = {(r.node, r.component)
-               for r in connected_components(
-                   df, algorithm="star").collect()}
-        assert got == want, pairs
-
-    # string node ids
-    df = spark.createDataFrame(
-        [("b", "c"), ("a", "b"), ("x", "y")], "doc_a string, doc_b string")
-    want = {(r.node, r.component) for r in connected_components(df).collect()}
-    got = {(r.node, r.component)
-           for r in connected_components(df, algorithm="star").collect()}
-    assert got == want
-
-
-def test_connected_components_star_contracts_chains_faster(spark):
-    """The round-count claim: a 24-node chain has diameter 23, so
-    label propagation cannot converge in 8 rounds while star
-    contraction (geometric diameter shrink) finishes comfortably."""
-    import pytest
-
-    from optiprism_spark.operators.dedup import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(23)], "doc_a long, doc_b long")
-    out = connected_components(chain, max_iters=8, algorithm="star")
-    assert {r.component for r in out.collect()} == {0}
-    assert out.count() == 24
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iters=8, algorithm="label")

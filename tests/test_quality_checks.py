@@ -237,51 +237,6 @@ def test_validate_by_groups_and_composes_with_robust_alerts(spark):
     assert plan.count("LogicalRDD") == 1
 
 
-def test_streaming_quality_gate(spark, tmp_path):
-    """Each micro-batch is a delivery: verdict rows land per batch,
-    failures are the alert feed, replay never double-writes."""
-    import os
-
-    from optiprism_spark.streaming.alerts import streaming_quality_gate
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    log = str(tmp_path / "metrics")
-    os.makedirs(src)
-    schema = "id long, email string"
-
-    def run():
-        q = streaming_quality_gate(
-            spark, schema, src,
-            [Q.completeness("email"), Q.row_count_between(2)],
-            ckpt, log, trigger_once=True)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # delivery 1: clean
-    spark.createDataFrame([(1, "a@x"), (2, "b@x")], schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    rows = spark.read.parquet(log).collect()
-    assert len(rows) == 2 and all(r["passed"] for r in rows)
-
-    # delivery 2: half the emails missing + undersized
-    spark.createDataFrame([(3, None)], schema).coalesce(
-        1).write.mode("append").parquet(src)
-    run()
-    hist = spark.read.parquet(log)
-    assert hist.count() == 4
-    failed = {(r["batch_id"], r["constraint"]) for r in
-              hist.filter(~hist["passed"]).collect()}
-    assert failed == {(1, "completeness(email)"), (1, "row_count")}
-
-    # quiet replay: nothing new, no duplicate verdicts
-    run()
-    assert spark.read.parquet(log).count() == 4
-
-
 def test_declared_quality_batteries(spark):
     """schema/quality-checks DDL: declared batteries run as the
     standing gate when /queries/quality has no inline constraints;
@@ -362,8 +317,8 @@ def test_route_rejects_malformed_shapes_as_400(spark):
 
 
 def test_gate_quality_maintenance_hook(spark):
-    """App.gate_quality: the maintenance-loop twin of
-    maintain_rollups — declared batteries judge each ingest batch,
+    """App.gate_quality, step 1 of the maintenance tick — declared
+    batteries judge each ingest batch,
     failures land in the quality-gate metric; no declarations = no-op."""
     from optiprism_spark import metrics
     from optiprism_spark.server import make_app
@@ -486,102 +441,3 @@ def test_put_quality_check_validates_merged_row(spark):
     assert st == 200
     names = {c["name"]: c["data"] for c in res["columns"]}
     assert names["constraint"] == ["completeness(user_id)"]
-
-
-def test_streaming_gate_log_partitioned_by_batch(spark, tmp_path):
-    """The verdict log is partitioned by batch_id so the replay
-    anti-join probe prunes to one directory instead of scanning the
-    whole delivery history (r13 advice)."""
-    import os
-
-    from optiprism_spark.streaming.alerts import streaming_quality_gate
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = "id long, email string"
-
-    def run():
-        q = streaming_quality_gate(
-            spark, schema, src, [Q.completeness("email")],
-            str(tmp_path / "ckpt"), str(tmp_path / "metrics"),
-            trigger_once=True)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    spark.createDataFrame([(1, "a@x")], schema).coalesce(1).write.mode(
-        "append").parquet(src)
-    run()
-    spark.createDataFrame([(2, None)], schema).coalesce(1).write.mode(
-        "append").parquet(src)
-    run()
-    parts = sorted(d for d in os.listdir(tmp_path / "metrics")
-                   if d.startswith("batch_id="))
-    assert parts == ["batch_id=0", "batch_id=1"]
-    hist = spark.read.parquet(str(tmp_path / "metrics"))
-    assert hist.count() == 2
-    # replay stays idempotent through the pruned probe
-    run()
-    assert spark.read.parquet(str(tmp_path / "metrics")).count() == 2
-
-
-def test_streaming_quality_gate_legacy_log_layout(spark, tmp_path):
-    """A metrics_dir written by the pre-partitioned gate format (flat
-    part-*.parquet at the root, batch_id as a data column) still
-    dedups replays: a re-delivered pre-upgrade batch anti-joins
-    against the legacy rows, and read_quality_log unions both layouts
-    unambiguously (r14 advice)."""
-    import os
-    import shutil
-
-    from optiprism_spark.streaming.alerts import (
-        read_quality_log, streaming_quality_gate)
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    log = str(tmp_path / "metrics")
-    os.makedirs(src)
-    schema = "id long, email string"
-    battery = [Q.completeness("email"), Q.row_count_between(1)]
-
-    def run():
-        q = streaming_quality_gate(
-            spark, schema, src, battery, ckpt, log, trigger_once=True)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # delivery 1 under the NEW format, then rewrite its verdicts as
-    # the LEGACY layout: flat files at the root, batch_id a column
-    spark.createDataFrame([(1, "a@x")], schema).coalesce(1).write.mode(
-        "append").parquet(src)
-    run()
-    legacy_rows = read_quality_log(spark, log)
-    assert legacy_rows.count() == 2
-    tmp_flat = str(tmp_path / "flat")
-    legacy_rows.coalesce(1).write.parquet(tmp_flat)
-    shutil.rmtree(log)
-    os.makedirs(log)
-    for f in os.listdir(tmp_flat):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(tmp_flat, f), os.path.join(log, f))
-
-    # force re-delivery of batch 0 by dropping the checkpoint: the
-    # legacy-aware probe must suppress the double-write
-    shutil.rmtree(ckpt)
-    run()
-    assert read_quality_log(spark, log).count() == 2
-
-    # a genuinely new delivery appends under the partitioned layout;
-    # the union reader sees both vintages
-    spark.createDataFrame([(2, None)], schema).coalesce(1).write.mode(
-        "append").parquet(src)
-    run()
-    hist = read_quality_log(spark, log)
-    assert hist.count() == 4
-    assert {r["batch_id"] for r in hist.collect()} == {0, 1}
-    # and the mixed directory has both layouts on disk
-    assert any(f.endswith(".parquet") for f in os.listdir(log))
-    assert any(f.startswith("batch_id=") for f in os.listdir(log))

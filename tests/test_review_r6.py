@@ -251,32 +251,3 @@ def test_compaction_recovery_protocol(spark, tmp_path):
     _recover_compaction(spark, "rec_t", appends)
     assert not os.path.exists(part)
     spark.sql("DROP TABLE rec_t")
-
-
-def test_streaming_funnel_survives_null_timestamp(spark, tmp_path):
-    import datetime as dtm
-    import os
-
-    from optiprism_spark.streaming.funnel import streaming_funnel_counts
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    rows = [
-        (1, dtm.datetime(2024, 1, 1, 10, 0), 1, "signup", 1.0, "{}"),
-        (2, None, 1, "view", 1.0, "{}"),        # malformed: null ts
-        (3, dtm.datetime(2024, 1, 1, 10, 1), 1, "view", 1.0, "{}"),
-    ]
-    src = os.path.join(str(tmp_path), "nullts")
-    os.makedirs(src)
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-    out = streaming_funnel_counts(
-        spark, spark.createDataFrame([], schema).schema, src,
-        step_names=["signup", "view"], window_ms=600000)
-    q = (out.writeStream.outputMode("update")
-         .format("memory").queryName("nullts_q").start())
-    try:
-        q.processAllAvailable()  # must not die on the NaN row
-        got = spark.sql("SELECT * FROM nullts_q").collect()
-    finally:
-        q.stop()
-    assert len(got) == 1 and got[0].completed_total == 1

@@ -301,33 +301,6 @@ def test_store_update_prunes_to_affected_partitions(spark, events, tmp_path):
     assert rewritten == {f"{ROLLUP_DT_COL}=2024-01-10"}
 
 
-def test_compaction_hook_advances_rollup(spark, events, tmp_path):
-    """append → fold (compact_appends_into_bucketed(rollup_store=)) →
-    rollup ≡ recompute from the post-fold table."""
-    from optiprism_spark.ingest import compact_appends_into_bucketed, write_events_bucketed
-
-    from .conftest import drop_table_clean
-
-    tbl = "events_rollup_hook_test"
-    drop_table_clean(spark, tbl)
-    cut = F.col("ts") < F.lit("2024-01-20 00:00:00").cast("timestamp")
-    base, fresh = events.filter(cut), events.filter(~cut)
-    write_events_bucketed(base, tbl, n_buckets=4)
-    appends = str(tmp_path / "appends")
-    fresh.write.parquet(appends, mode="overwrite")
-    store = RollupStore(str(tmp_path / "rollup"), SPEC)
-    store.rebuild(spark, spark.table(tbl))
-    n = compact_appends_into_bucketed(
-        spark, tbl, appends, n_buckets=4, rollup_store=store
-    )
-    assert n == fresh.count()
-    got = store.read(spark)
-    want = build_rollup(spark.table(tbl), SPEC)
-    assert _metric_rows(got) == _metric_rows(want)
-    assert _estimates(got) == _estimates(want)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
 def test_http_endpoint_routes_through_rollup(spark, tmp_path):
     """The serving path: an App with a rollup_store answers a
     rollup-expressible segmentation request identically to a
@@ -390,46 +363,6 @@ def test_http_endpoint_routes_through_rollup(spark, tmp_path):
     assert routed._rollup_cache
     routed.refresh_tables()
     assert not routed._rollup_cache
-
-
-def test_streaming_rollup_maintenance_with_restart(spark, events, tmp_path):
-    """Micro-batched rollup maintenance survives a checkpoint restart
-    without double-counting: feed half the corpus, stop, restart from
-    the checkpoint (foreachBatch re-delivers the last batch; the
-    (stream_id, batch_id) ledger makes it a no-op), feed the rest —
-    final store ≡ one-shot batch rollup of everything."""
-    import os
-
-    from optiprism_spark.streaming.rollup import streaming_rollup_maintenance
-
-    src = str(tmp_path / "landing")
-    os.makedirs(src)
-    ckpt = str(tmp_path / "ckpt")
-    store = RollupStore(str(tmp_path / "rollup"), SPEC)
-    cut = F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp")
-    halves = [events.filter(cut), events.filter(~cut)]
-    schema = events.schema
-
-    halves[0].coalesce(1).write.mode("append").parquet(src)
-    q = streaming_rollup_maintenance(spark, schema, src, store, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    mid = {r[0] for r in store.read(spark).select(ROLLUP_DT_COL).collect()}
-    assert mid and max(mid) < dt.date(2024, 1, 15)
-
-    # restart from the same checkpoint; second half lands
-    halves[1].coalesce(1).write.mode("append").parquet(src)
-    q = streaming_rollup_maintenance(spark, schema, src, store, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = store.read(spark)
-    want = build_rollup(events, SPEC)
-    assert _metric_rows(got) == _metric_rows(want)
-    assert _estimates(got) == _estimates(want)
 
 
 def test_update_ledger_skips_replayed_batch(spark, events, tmp_path):
@@ -602,7 +535,7 @@ def test_multiple_declared_rollups_route_by_spec(spark, tmp_path):
 def test_declared_rollup_stays_fresh_via_maintain(spark, events, tmp_path):
     """Review finding: declared rollups were built once at POST and
     never advanced, so routed queries served stale pre-ingest data.
-    maintain_rollups is the maintenance hook that closes the loop."""
+    The maintenance tick (App.maintain) closes the loop."""
     from optiprism_spark.server import make_app
     from tests.test_server import call
 
@@ -628,7 +561,7 @@ def test_declared_rollup_stays_fresh_via_maintain(spark, events, tmp_path):
     # every declared store
     batch = events.limit(50).withColumn(
         "ts", F.lit("2024-02-10 10:00:00").cast("timestamp"))
-    assert app.maintain_rollups(batch, pid=1) == 1
+    assert app.maintain(batch, pid=1)["rollup_stores"] == 1
 
     _, after = call(app, "POST",
                     "/api/v1/projects/1/queries/event-segmentation", seg_body)
@@ -710,7 +643,7 @@ def test_result_cache_fresh_after_real_ingest_and_maintenance(spark, tmp_path):
     """r7 verdict regression: with the 60s result cache on, a routed
     query answered BEFORE an ingest cycle must not be replayed AFTER
     it. Drives the REAL path — HTTP /track → WAL buffer → two-phase
-    checkpoint (begin → durable write → commit) with maintain_rollups
+    checkpoint (begin → durable write → commit) with App.maintain
     advancing the declared store in between — then re-fires the
     byte-identical request inside the TTL and requires fresh data at
     every stage (post-maintenance pre-commit is the exact moment the
@@ -762,7 +695,7 @@ def test_result_cache_fresh_after_real_ingest_and_maintenance(spark, tmp_path):
     # the identical request must MISS the cache and see March NOW,
     # before the base-table fold even commits (the store is ahead of
     # the raw table by design — that's what routing is for)
-    assert app.maintain_rollups(batch, pid=1) == 1
+    assert app.maintain(batch, pid=1)["rollup_stores"] == 1
     _, mid = call(app, "POST", url, seg_body)
     buckets1 = next(c["data"] for c in mid["columns"]
                     if c["name"] == "bucket")

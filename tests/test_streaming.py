@@ -1,17 +1,15 @@
-"""Structured Streaming sessionization + date-partitioned ingest."""
+"""Batch sessionization + date-partitioned ingest."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from optiprism_spark.streaming.sessionize import (
     append_events,
     sessionize,
-    streaming_session_counts,
     synthesize_session_begin,
 )
 
@@ -42,120 +40,6 @@ def test_batch_sessionize_and_begin_synthesis(spark):
     assert begins.count() == 3  # two for user 1, one for user 2
 
 
-def test_streaming_session_window(spark, tmp_path):
-    src = os.path.join(str(tmp_path), "stream_src")
-    df = _events(spark)
-    df.coalesce(1).write.parquet(src)
-    out = streaming_session_counts(spark, df.schema, src)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sessions_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM sessions_out").collect()
-    finally:
-        q.stop()
-    per_user = {}
-    for r in rows:
-        per_user[r.user_id] = per_user.get(r.user_id, 0) + 1
-    assert per_user == {1: 2, 2: 1}
-    n1 = {r.n_events for r in rows if r.user_id == 1}
-    assert n1 == {2, 1}
-
-
-def test_stateful_user_profiles_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state must carry across micro-batches
-    (second file arrives after the first batch is processed)."""
-    from optiprism_spark.streaming.stateful import streaming_user_profiles
-
-    src = os.path.join(str(tmp_path), "stateful_src")
-    os.makedirs(src)
-    df = _events(spark)
-    batch1 = df.filter(F.col("event_id") <= 1)  # user 1: 2 events, 1 session
-    batch2 = df.filter(F.col("event_id") >= 2)  # user 1 new session; user 2
-    batch1.coalesce(1).write.mode("append").parquet(src)
-
-    out = streaming_user_profiles(spark, df.schema, src)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("profiles_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        batch2.coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM profiles_out").collect()
-    finally:
-        q.stop()
-    # memory sink in update mode appends each update; the LAST row per
-    # user is the current state
-    latest = {}
-    for r in rows:
-        latest[r.user_id] = r
-    assert latest[1].n_events == 3 and latest[1].session_count == 2
-    assert latest[2].n_events == 1 and latest[2].session_count == 1
-    assert latest[1].value_sum == 3.0
-
-
-def test_streaming_funnel_conversion_spans_batches(spark, tmp_path):
-    """A conversion whose steps arrive in DIFFERENT micro-batches must
-    be detected from state, not from re-scanning history."""
-    import datetime as dtm
-
-    from optiprism_spark.streaming.funnel import streaming_funnel_counts
-
-    src = os.path.join(str(tmp_path), "funnel_src")
-    os.makedirs(src)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    t = dtm.datetime(2024, 1, 1, 10, 0, 0)
-
-    def mk(rows):
-        return spark.createDataFrame(rows, schema)
-
-    # batch 1: user 1 does steps 0,1; user 2 does step 0
-    mk([
-        (0, t, 1, "signup", 1.0, "{}"),
-        (1, t + dtm.timedelta(minutes=1), 1, "view", 1.0, "{}"),
-        (2, t, 2, "signup", 1.0, "{}"),
-    ]).coalesce(1).write.mode("append").parquet(src)
-
-    out = streaming_funnel_counts(
-        spark, mk([]).schema, src,
-        step_names=["signup", "view", "purchase"], window_ms=3_600_000,
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory").queryName("sfunnel_out").start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: user 1 completes; user 2's purchase is OUT of window
-        mk([
-            (3, t + dtm.timedelta(minutes=2), 1, "purchase", 1.0, "{}"),
-            (4, t + dtm.timedelta(hours=2), 2, "view", 1.0, "{}"),
-            (5, t + dtm.timedelta(hours=2, minutes=1), 2, "purchase", 1.0, "{}"),
-        ]).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM sfunnel_out").collect()
-    finally:
-        q.stop()
-    latest = {}
-    for r in rows:
-        latest[r.user_id] = r
-    assert latest[1].completed_total == 1  # signup+view (batch 1) + purchase (batch 2)
-    # user 2: signup@10:00 expired by 12:00; view restarts nothing
-    # (view != step 0), purchase matches nothing → still step 0, no conversion
-    assert latest[2].completed_total == 0 and latest[2].cur_step == 0
-
-
 def test_append_events_partitioned_and_pruned(spark, tmp_path):
     dest = os.path.join(str(tmp_path), "events_tbl")
     df = _events(spark)
@@ -170,436 +54,3 @@ def test_append_events_partitioned_and_pruned(spark, tmp_path):
         .executedPlan().toString()
     )
     assert "PartitionFilters: [isnotnull(dt" in plan
-
-
-@pytest.mark.parametrize("splits", [[20], [10, 40], [5, 25, 45], [1, 2, 3]])
-def test_batch_streaming_funnel_differential(spark, tmp_path, splits):
-    """The SAME event stream fed to the batch machine and to the
-    incremental streaming machine (in several micro-batch splits) must
-    yield identical per-user conversion counts — the cross-batch
-    carry state is exactly what can drift (reference semantics
-    funnel.rs:630-637; the streaming machine holds the registers in
-    the state store instead)."""
-    import datetime as dtm
-
-    from optiprism_spark.dsl import (
-        EventFilterSpec, EventRef, FunnelCountMode, FunnelRequest,
-        FunnelStep, QueryTime, TimeIntervalUnit,
-    )
-    from optiprism_spark.operators.funnel import funnel_attempts
-    from optiprism_spark.streaming.funnel import streaming_funnel_counts
-
-    t0 = dtm.datetime(2024, 1, 1, 10, 0, 0)
-    steps = ["signup", "view", "purchase"]
-    rows = []
-    for i in range(60):  # global time order; users interleaved
-        for u in range(1, 6):
-            ev = (steps + ["noise"])[(i + u) % 4]
-            rows.append((i * 10 + u, t0 + dtm.timedelta(minutes=3 * i),
-                         u, ev, 1.0, "{}"))
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-    # ---- batch truth: NON_UNIQUE exact-order conversions per user
-    req = FunnelRequest(
-        time=QueryTime.between(dtm.datetime(2024, 1, 1), dtm.datetime(2024, 1, 2)),
-        interval=TimeIntervalUnit.DAY,
-        steps=[FunnelStep([EventFilterSpec(EventRef(s))]) for s in steps],
-        window_ms=10 * 60 * 1000,
-        count_mode=FunnelCountMode.NON_UNIQUE,
-    )
-    attempts = funnel_attempts(spark.createDataFrame(rows, schema), req)
-    want = {
-        r.user_id: r.n for r in
-        attempts.filter(F.col("steps_completed") == 3)
-        .groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-
-    # ---- streaming: same rows in len(splits)+1 micro-batches
-    src = os.path.join(str(tmp_path), f"diff_src_{'_'.join(map(str, splits))}")
-    os.makedirs(src)
-    bounds = [0] + [s * 5 for s in splits] + [len(rows)]
-    chunks = [rows[a:b] for a, b in zip(bounds, bounds[1:]) if a < b]
-    spark.createDataFrame(chunks[0], schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-    out = streaming_funnel_counts(
-        spark, spark.createDataFrame([], schema).schema, src,
-        step_names=steps, window_ms=10 * 60 * 1000,
-    )
-    name = f"sfunnel_diff_{abs(hash(tuple(splits))) % 10**8}"
-    q = (out.writeStream.outputMode("update")
-         .format("memory").queryName(name).start())
-    try:
-        q.processAllAvailable()
-        for chunk in chunks[1:]:
-            spark.createDataFrame(chunk, schema).coalesce(1) \
-                .write.mode("append").parquet(src)
-            q.processAllAvailable()
-        got_rows = spark.sql(f"SELECT * FROM {name}").collect()
-    finally:
-        q.stop()
-    latest = {}
-    for r in got_rows:
-        latest[r.user_id] = r.completed_total
-    got = {u: n for u, n in latest.items() if n > 0}
-    assert got == want, (got, want, splits)
-
-
-@pytest.mark.parametrize("splits", [(4,), (2, 7)])
-def test_batch_streaming_dedup_differential(spark, tmp_path, splits):
-    """The SAME document stream fed to batch first-arrival dedup and
-    to streaming dropDuplicatesWithinWatermark (in several micro-batch
-    splits) must yield the same survivor set — duplicates that span a
-    micro-batch boundary are exactly what the state store exists for."""
-    import datetime as dtm
-
-    from optiprism_spark.streaming.dedup import (
-        batch_exact_dedup_first_arrival,
-        streaming_exact_dedup,
-    )
-
-    t0 = dtm.datetime(2024, 1, 1, 10, 0, 0)
-    texts = ["alpha beta", "gamma delta", "alpha beta", "epsilon",
-             "gamma delta", "alpha beta", "zeta eta", "epsilon",
-             "theta", "zeta eta", "iota kappa", "theta"]
-    rows = [(i, t0 + dtm.timedelta(seconds=30 * i), texts[i % len(texts)])
-            for i in range(36)]  # every text repeats across boundaries
-    schema = "doc_id long, ingest_ts timestamp, text string"
-
-    docs = spark.createDataFrame(rows, schema)
-    want = {r.doc_id for r in batch_exact_dedup_first_arrival(docs).collect()}
-    # sanity: the corpus genuinely contains cross-batch duplicates
-    assert len(want) == 6 and len(rows) == 36
-
-    src = os.path.join(str(tmp_path), f"sdedup_{'_'.join(map(str, splits))}")
-    os.makedirs(src)
-    bounds = [0] + [s * 3 for s in splits] + [len(rows)]
-    chunks = [rows[a:b] for a, b in zip(bounds, bounds[1:]) if a < b]
-    spark.createDataFrame(chunks[0], schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-    out = streaming_exact_dedup(
-        spark, spark.createDataFrame([], schema).schema, src,
-        watermark="1 hour",  # all 18 minutes of data inside one horizon
-    )
-    name = f"sdedup_diff_{abs(hash(tuple(splits))) % 10**8}"
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName(name).start())
-    try:
-        q.processAllAvailable()
-        for chunk in chunks[1:]:
-            spark.createDataFrame(chunk, schema).coalesce(1) \
-                .write.mode("append").parquet(src)
-            q.processAllAvailable()
-        got = {r.doc_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
-    finally:
-        q.stop()
-    assert got == want, (sorted(got), sorted(want), splits)
-
-
-def test_streaming_funnel_checkpoint_recovery(spark, tmp_path):
-    """Stop the incremental funnel mid-corpus and restart it FROM ITS
-    CHECKPOINT: per-user state (current step, step timestamps,
-    completed count) must survive the restart via the state store, so
-    the finished run matches both an uninterrupted streaming run and
-    the batch machine. A conversion is planted to SPAN the stop
-    boundary (steps before, completion after) so a state wipe cannot
-    pass silently."""
-    import datetime as dtm
-
-    from optiprism_spark.streaming.funnel import streaming_funnel_counts
-
-    t0 = dtm.datetime(2024, 1, 1, 10, 0, 0)
-    steps = ["signup", "view", "purchase"]
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    rows = []
-    for i in range(36):
-        for u in range(1, 6):
-            ev = (steps + ["noise"])[(i + u) % 4]
-            rows.append((i * 10 + u, t0 + dtm.timedelta(minutes=3 * i),
-                         u, ev, 1.0, "{}"))
-    # user 9: signup+view land BEFORE the stop, purchase AFTER —
-    # completes only if the registers survive the checkpoint restart
-    rows.insert(80, (9001, t0 + dtm.timedelta(minutes=40), 9, "signup", 1.0, "{}"))
-    rows.insert(81, (9002, t0 + dtm.timedelta(minutes=41), 9, "view", 1.0, "{}"))
-    rows.append((9003, t0 + dtm.timedelta(minutes=120), 9, "purchase", 1.0, "{}"))
-    cut = 90
-    chunks = [rows[:cut], rows[cut:]]
-
-    def run(src, ckpt, out_dir, feed: list):
-        """Start → feed each chunk → stop; foreachBatch appends every
-        update-mode row with its batch id (checkpoint-continuous)."""
-        def write_batch(bdf, bid):
-            bdf.withColumn("__bid", F.lit(bid)).write.mode("append").parquet(out_dir)
-
-        q = (
-            streaming_funnel_counts(
-                spark, spark.createDataFrame([], schema).schema, src,
-                step_names=steps, window_ms=90 * 60 * 1000,
-            )
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(write_batch)
-            .start()
-        )
-        try:
-            for chunk in feed:
-                spark.createDataFrame(chunk, schema).coalesce(1) \
-                    .write.mode("append").parquet(src)
-                q.processAllAvailable()
-        finally:
-            q.stop()
-
-    def latest_counts(out_dir) -> dict:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.col("__bid").desc())
-        final = (
-            spark.read.parquet(out_dir)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter("__rn = 1")
-            .collect()
-        )
-        return {r.user_id: r.completed_total for r in final if r.completed_total > 0}
-
-    base = str(tmp_path)
-    # interrupted run: chunk 0, STOP, restart from checkpoint, chunk 1
-    src_a, ckpt_a, out_a = (os.path.join(base, d) for d in ("srcA", "ckptA", "outA"))
-    os.makedirs(src_a)
-    run(src_a, ckpt_a, out_a, [chunks[0]])
-    # mid-corpus state: user 9 must be parked at step 2, unconverted
-    mid = latest_counts(out_a)
-    assert 9 not in mid
-    run(src_a, ckpt_a, out_a, [chunks[1]])  # RESTART from checkpoint
-    got = latest_counts(out_a)
-
-    # uninterrupted control: same corpus, same splits, one query
-    src_b, ckpt_b, out_b = (os.path.join(base, d) for d in ("srcB", "ckptB", "outB"))
-    os.makedirs(src_b)
-    run(src_b, ckpt_b, out_b, chunks)
-    want = latest_counts(out_b)
-
-    assert got == want
-    assert got.get(9) == 1  # the boundary-spanning conversion survived
-
-
-def test_streaming_growth_ledger_differential(spark, tmp_path):
-    """The continuously-maintained ledger, after arbitrary (and
-    out-of-order) batch splits, aggregates to EXACTLY the batch
-    growth_accounting report — including the late-data reclassify
-    case (week-3 activity arriving after week 4 flips resurrected ->
-    retained and deletes the phantom churn row via re-emission)."""
-    import datetime as dtm
-
-    from optiprism_spark.dsl import QueryTime, TimeIntervalUnit
-    from optiprism_spark.operators.engagement import growth_accounting
-    from optiprism_spark.streaming.growth import streaming_growth_ledger
-
-    def e(i, day, user):
-        return (i, dtm.datetime(2024, 1, day, 10), user, "view", 0.0, "{}")
-
-    rows = [
-        e(1, 1, 1), e(2, 8, 1), e(3, 22, 1),   # u1: wk1, wk2, wk4
-        e(4, 2, 2),                             # u2: wk1 only
-        e(5, 29, 3),                            # u3: wk5 only
-        e(6, 15, 1),                            # u1 wk3 — arrives LATE
-    ]
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    df = spark.createDataFrame(rows, schema)
-    src = os.path.join(str(tmp_path), "growth_src")
-    os.makedirs(src)
-    # batch 1: everything except u1's week-3 row; batch 2: the late row
-    df.filter(F.col("event_id") <= 5).coalesce(1).write.mode(
-        "append").parquet(src)
-
-    out = streaming_growth_ledger(spark, df.schema, src, period="week")
-    q = (out.writeStream.outputMode("update")
-         .format("memory").queryName("growth_out").start())
-    try:
-        q.processAllAvailable()
-        mid = spark.sql("SELECT * FROM growth_out").collect()
-        df.filter(F.col("event_id") == 6).coalesce(1).write.mode(
-            "append").parquet(src)
-        q.processAllAvailable()
-        allrows = spark.sql("SELECT * FROM growth_out").collect()
-    finally:
-        q.stop()
-
-    # before the late row: u1's week-4 reads resurrected, week-3 churned
-    mid_u1 = {(str(r.bucket), r.kind) for r in mid if r.user_id == 1}
-    assert ("2024-01-22", "resurrected") in mid_u1
-    assert ("2024-01-15", "churned") in mid_u1
-
-    # consumer contract: max-version rows per user, churn capped at the
-    # last observed bucket, counted by (bucket, kind)
-    latest_v = {}
-    for r in allrows:
-        latest_v[r.user_id] = max(latest_v.get(r.user_id, 0), r.version)
-    # upsert by (user, bucket) keeping max-version rows — (user,
-    # bucket) is unique within one version (status and churn are
-    # mutually exclusive per bucket), so the dict dedups re-emissions
-    per_key = {(r.user_id, r.bucket): (r.bucket, r.kind)
-               for r in allrows if r.version == latest_v[r.user_id]}
-    ledger = list(per_key.values())
-    last_b = max(b for b, k in ledger if k != "churned")
-    import collections
-    got = collections.Counter(
-        (str(b), k) for b, k in ledger
-        if not (k == "churned" and b > last_b))
-
-    W = QueryTime.between(dtm.datetime(2024, 1, 1),
-                          dtm.datetime(2024, 1, 31, 23, 59, 59))
-    batch = growth_accounting(df, W, period=TimeIntervalUnit.WEEK).collect()
-    want = collections.Counter()
-    for r in batch:
-        for kind, col in (("new", "new_users"), ("retained",
-                          "retained_users"), ("resurrected",
-                          "resurrected_users"), ("churned",
-                          "churned_users")):
-            if r[col]:
-                want[(str(r.bucket), kind)] += r[col]
-    assert got == want
-    # the late row specifically: week-4 is now retained, week-3 alive
-    u1 = {(str(b), k) for (u, _), (b, k) in per_key.items() if u == 1}
-    assert ("2024-01-22", "retained") in u1
-    assert ("2024-01-15", "retained") in u1
-
-
-def test_user_ledger_properties():
-    """Property-based pin of the shared single-user ledger spec
-    (streaming/growth.user_ledger) against independent set logic:
-    status kinds from membership, churn points from the gap set,
-    and the all-consecutive / all-isolated extremes."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from optiprism_spark.streaming.growth import user_ledger
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.sets(st.integers(0, 40), min_size=1, max_size=12),
-           st.sampled_from([1, 7]))
-    def check(day_idx, step):
-        days = sorted(d * step for d in day_idx)
-        active = set(days)
-        rows = user_ledger(days, step)
-        status = {b: k for b, k in rows if k != "churned"}
-        churn = {b for b, k in rows if k == "churned"}
-        # exactly one status row per active bucket
-        assert set(status) == active
-        for b in active:
-            if not any(d < b for d in active):
-                assert status[b] == "new"
-            elif b - step in active:
-                assert status[b] == "retained"
-            else:
-                assert status[b] == "resurrected"
-        # churn points: active bucket whose successor bucket is quiet
-        assert churn == {b + step for b in active
-                         if b + step not in active}
-
-    check()
-
-
-def test_streaming_growth_ledger_month_grain(spark, tmp_path):
-    """Month grain rides its own index space (months since 1970-01):
-    consecutive calendar months read retained even across different
-    day counts and year boundaries."""
-    import datetime as dtm
-
-    from optiprism_spark.streaming.growth import streaming_growth_ledger
-
-    rows = [
-        (1, dtm.datetime(2023, 11, 20, 9), 1, "view", 0.0, "{}"),
-        (2, dtm.datetime(2023, 12, 5, 9), 1, "view", 0.0, "{}"),
-        (3, dtm.datetime(2024, 1, 30, 9), 1, "view", 0.0, "{}"),
-        (4, dtm.datetime(2024, 3, 2, 9), 1, "view", 0.0, "{}"),
-    ]
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    df = spark.createDataFrame(rows, schema)
-    src = os.path.join(str(tmp_path), "growth_month_src")
-    os.makedirs(src)
-    df.coalesce(1).write.mode("append").parquet(src)
-    out = streaming_growth_ledger(spark, df.schema, src, period="month")
-    q = (out.writeStream.outputMode("update")
-         .format("memory").queryName("growth_month_out").start())
-    try:
-        q.processAllAvailable()
-        got = {(str(r.bucket), r.kind) for r in
-               spark.sql("SELECT * FROM growth_month_out").collect()}
-    finally:
-        q.stop()
-    assert got == {
-        ("2023-11-01", "new"),
-        ("2023-12-01", "retained"),     # Nov -> Dec: 30-day month
-        ("2024-01-01", "retained"),     # Dec -> Jan: year boundary
-        ("2024-02-01", "churned"),      # quiet Feb
-        ("2024-03-01", "resurrected"),
-        ("2024-04-01", "churned"),      # trailing churn (uncapped)
-    }
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        streaming_growth_ledger(spark, df.schema, src, period="hour")
-
-
-def test_streaming_growth_checkpoint_recovery(spark, tmp_path):
-    """Stop the growth ledger mid-corpus and restart FROM ITS
-    CHECKPOINT: the per-user bucket-seen state must survive, so a
-    user whose weeks straddle the stop boundary still reads
-    retained/resurrected (a state wipe would re-classify their
-    post-restart week as 'new'). The recovered run's final ledger
-    equals an uninterrupted run's."""
-    import datetime as dtm
-
-    from optiprism_spark.streaming.growth import streaming_growth_ledger
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-    def e(i, day, user):
-        return (i, dtm.datetime(2024, 1, day, 10), user, "view", 0.0, "{}")
-
-    chunk1 = [e(1, 1, 1), e(2, 8, 1), e(3, 1, 2)]
-    # u1 week-3 lands AFTER the restart: retained only if state
-    # survived; u2 resurfaces week 4: resurrected only with state
-    chunk2 = [e(4, 15, 1), e(5, 22, 2)]
-
-    def run(src, ckpt, out_dir, feed):
-        os.makedirs(src, exist_ok=True)
-
-        def write_batch(bdf, bid):
-            bdf.write.mode("append").parquet(out_dir)
-
-        for chunk in feed:
-            spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-            q = (streaming_growth_ledger(
-                    spark, spark.createDataFrame([], schema).schema, src,
-                    period="week")
-                 .writeStream.outputMode("update")
-                 .option("checkpointLocation", ckpt)
-                 .foreachBatch(write_batch).start())
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()  # a REAL stop/restart between chunks
-        return spark.read.parquet(out_dir).collect()
-
-    def final_ledger(rows):
-        latest = {}
-        for r in rows:
-            latest[r.user_id] = max(latest.get(r.user_id, 0), r.version)
-        return {(r.user_id, str(r.bucket)): r.kind for r in rows
-                if r.version == latest[r.user_id]}
-
-    recovered = final_ledger(run(
-        str(tmp_path / "src_a"), str(tmp_path / "ck_a"),
-        str(tmp_path / "out_a"), [chunk1, chunk2]))
-    straight = final_ledger(run(
-        str(tmp_path / "src_b"), str(tmp_path / "ck_b"),
-        str(tmp_path / "out_b"), [chunk1 + chunk2]))
-    assert recovered == straight
-    assert recovered[(1, "2024-01-15")] == "retained"
-    assert recovered[(2, "2024-01-22")] == "resurrected"

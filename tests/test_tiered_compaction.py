@@ -195,30 +195,6 @@ def test_minor_fold_crash_recovery(spark, base_events, table, tmp_path):
     assert total == 19
 
 
-def test_rollup_advances_at_major_fold(spark, base_events, table, tmp_path):
-    from optiprism_spark.rollup import RollupSpec, RollupStore, build_rollup
-
-    appends, tiers = str(tmp_path / "l0"), str(tmp_path / "l1")
-    store = RollupStore(str(tmp_path / "rollup"), RollupSpec())
-    store.rebuild(spark, spark.table(table))
-    pol = TieredCompactionPolicy(l0_max_parts=1, l1_max_tiers=2,
-                                 l1_max_bytes=10**12)
-    for cycle in range(2):
-        append_events(_fresh(base_events, 10, (cycle + 1) * 10_000_000), appends)
-        res = pol.maybe_compact(spark, table, appends, tiers,
-                                rollup_store=store, n_buckets=4)
-    assert res["major_rows"] == 20
-    got = sorted(
-        tuple(r) for r in store.read(spark).drop("users_hll").collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in build_rollup(spark.table(table), RollupSpec())
-        .drop("users_hll").collect()
-    )
-    assert got == want
-
-
 def test_major_fold_skips_uncommitted_tier(spark, base_events, table, tmp_path):
     """Review finding: the major fold's file walk ingested torn
     (no _SUCCESS) tier dirs whose rows still sit in L0 — recovery

@@ -146,49 +146,6 @@ def test_http_routing_and_fallback(spark, tmp_path):
         surface="rfm", path="raw") >= 1
 
 
-def test_streaming_user_day_maintenance(spark, tmp_path):
-    """Micro-batches fold into the store through the replay ledger;
-    checkpoint recovery never double-counts, and the routed growth
-    readout over the streamed store equals raw over the union."""
-    import os
-    import shutil
-
-    from optiprism_spark.streaming.userday import (
-        streaming_user_day_maintenance)
-
-    ev = load_table(spark, SF, "events")
-    first = ev.filter(F.col("ts") < "2024-01-16")
-    rest = ev.filter(F.col("ts") >= "2024-01-16")
-
-    st = UserDayStore(str(tmp_path / "ud_stream"))
-    st.rebuild(spark, first)
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    schema = ev.schema
-
-    def run():
-        q = streaming_user_day_maintenance(
-            spark, schema, src, st, ckpt, trigger_once=True)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    rest.coalesce(1).write.mode("append").parquet(src)
-    run()
-    # replay: wiped checkpoint re-delivers batch 0 — ledger no-ops
-    shutil.rmtree(ckpt)
-    run()
-
-    raw = {tuple(r) for r in growth_accounting(
-        ev, W, TimeIntervalUnit.WEEK).collect()}
-    got = {tuple(r) for r in growth_from_user_day(
-        st.read(spark), W, TimeIntervalUnit.WEEK).collect()}
-    assert got == raw and got
-
-
 def test_retention_routed_equals_raw(spark, tmp_path):
     """Retention folds from the store through the shared matrix tail
     (bounded + unbounded), and the HTTP route serves the store with
