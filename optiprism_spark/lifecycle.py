@@ -56,19 +56,20 @@ from .schema import EVENT_ID_COL, EVENT_TIME_COL, EVENT_USER_COL
 _ERASE_MANIFEST = ".compaction_folded.json"  # shared with compaction
 
 
-def _repair_rollups(spark: SparkSession, rollup_stores, table_name: str,
-                    appends_path: str, tiers_path, days) -> int:
-    """Re-aggregate the affected days of every rollup store from the
-    post-rewrite lake view. Rollup maintenance (``RollupStore.update``)
-    is additive-only — counts and sums add, HLL sketches union — so a
-    deletion can never be merged in as a delta; without this repair a
-    routed dashboard query keeps counting erased users until a full
-    rebuild. Cost is O(affected days × stores), never O(store)."""
-    if not rollup_stores or not days:
+def _repair_day_stores(spark: SparkSession, day_stores, table_name: str,
+                       appends_path: str, tiers_path, days) -> int:
+    """Re-aggregate the affected days of every day store (rollup,
+    user-day, KMV — daystore.DayStore) from the post-rewrite lake view.
+    A fold (``DayStore.update``) is additive-only — counts and sums
+    add, HLL and KMV sketches union — so a deletion can never be merged
+    in as a delta; without this repair a routed dashboard query keeps
+    counting erased users until a full rebuild. Cost is O(affected
+    days × stores), never O(store)."""
+    if not day_stores or not days:
         return 0
     snap = events_snapshot(spark, table_name, appends_path, tiers_path)
     n = 0
-    for store in rollup_stores:
+    for store in day_stores:
         n += store.recompute_days(spark, snap, days)
     return n
 
@@ -206,18 +207,20 @@ def erase_users(
     tiers_path: Optional[str] = None,
     extra_paths: Sequence[str] = (),
     user_col: str = EVENT_USER_COL,
-    rollup_stores: Sequence = (),
+    day_stores: Sequence = (),
 ) -> dict:
     """Right-to-erasure: remove every event of ``user_ids`` from the
     bucketed base, the L0 append parts, the committed L1 tiers, and
     any ``extra_paths`` parquet files keyed by the same user column
     (e.g. a profile store). Returns per-tier removed-row counts.
 
-    ``rollup_stores``: RollupStores maintained against this lake —
-    their affected dt partitions (the days the erased users were
-    active, computed before the rewrite) are re-aggregated from the
-    post-rewrite lake, because rollup maintenance is additive-only and
-    a routed query would otherwise keep counting the erased users.
+    ``day_stores``: day stores (rollup, user-day, KMV) maintained
+    against this lake — their affected day partitions (the days the
+    erased users were active, computed before the rewrite) are
+    re-aggregated from the post-rewrite lake, because their folds are
+    additive-only and a routed query would otherwise keep counting the
+    erased users. ``rollup_days`` in the result sums the days
+    re-aggregated across every day store.
 
     The L0/tier snapshot is the file list at entry — parts landing
     mid-erasure are untouched (re-run for stragglers; the standard
@@ -227,11 +230,11 @@ def erase_users(
         return {"base": 0, "l0": 0, "tiers": 0, "extra": 0,
                 "rollup_days": 0}
     out = {"base": 0, "l0": 0, "tiers": 0, "extra": 0, "rollup_days": 0}
-    # affected rollup days BEFORE any rewrite: the distinct event dates
+    # affected store days BEFORE any rewrite: the distinct event dates
     # of the victims across the full lake view — one narrow
     # (user, ts)-projected scan, pruned to two columns
     days: list[dt.date] = []
-    if rollup_stores:
+    if day_stores:
         days = [
             r[0]
             for r in events_snapshot(spark, table_name, appends_path,
@@ -269,8 +272,8 @@ def erase_users(
     for p in (appends_path, tiers_path, *extra_paths):
         if p:
             spark.catalog.refreshByPath(p)
-    out["rollup_days"] = _repair_rollups(
-        spark, rollup_stores, table_name, appends_path, tiers_path, days)
+    out["rollup_days"] = _repair_day_stores(
+        spark, day_stores, table_name, appends_path, tiers_path, days)
     return out
 
 
@@ -308,7 +311,7 @@ def expire_base(
     older_than: dt.datetime,
     ts_col: str = EVENT_TIME_COL,
     tiers_path: Optional[str] = None,
-    rollup_stores: Sequence = (),
+    day_stores: Sequence = (),
 ) -> int:
     """Retention on the bucketed base (not date-partitioned, so a
     filtered rewrite): drops rows with ts < cutoff through the same
@@ -321,10 +324,11 @@ def expire_base(
     next major fold would fold their pre-cutoff rows back into the
     freshly-expired base, resurrecting deleted history.
 
-    ``rollup_stores``: stores maintained against this lake. Expired
-    rollup history is a partition DROP (``RollupStore.expire_before``,
-    zero bytes scanned); a mid-day cutoff additionally re-aggregates
-    the boundary day, which keeps its post-cutoff rows.
+    ``day_stores``: day stores (rollup, user-day, KMV) maintained
+    against this lake. Their expired history is a partition DROP
+    (``DayStore.expire_before``, zero bytes scanned); a mid-day cutoff
+    additionally re-aggregates the boundary day, which keeps its
+    post-cutoff rows.
 
     Returns total rows removed (base + tiers)."""
     removed = _rewrite_base_filtered(
@@ -336,12 +340,12 @@ def expire_base(
                     removed += _rewrite_file_excluding_before(
                         os.path.join(tier_dir, name), older_than, ts_col)
         spark.catalog.refreshByPath(tiers_path)
-    for store in rollup_stores:
+    for store in day_stores:
         store.expire_before(older_than.date())
         # the partition drop changed the file listing under the path —
         # stale FileStatusCache entries fail the next scan
         spark.catalog.refreshByPath(store.path)
     if older_than.time() != dt.time.min:
-        _repair_rollups(spark, rollup_stores, table_name, appends_path,
-                        tiers_path, [older_than.date()])
+        _repair_day_stores(spark, day_stores, table_name, appends_path,
+                           tiers_path, [older_than.date()])
     return removed

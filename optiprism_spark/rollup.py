@@ -13,9 +13,10 @@ production design the reference lacks:
   re-aggregable, so any coarser grain (week/month/year) and any dim
   subset folds out of the day rows with plain SUM/MIN/MAX/HLL-union —
   never re-touching raw events.
-- ``RollupStore``: the rollup persisted as dt-partitioned parquet with
-  **incremental maintenance**: an append batch is day-aggregated and
-  merged into only the affected dt partitions (partition-pruned read,
+- ``RollupStore``: the rollup persisted as dt-partitioned parquet
+  (the shared ``daystore.DayStore``) with **incremental
+  maintenance**: an append batch is day-aggregated and merged into
+  only the affected dt partitions (partition-pruned read,
   dynamic-partition-overwrite write). Advanced by the server's
   maintenance tick (server.App.maintain), which folds each ingest
   batch into every rollup store. On a production lake the per-partition swap is
@@ -42,15 +43,15 @@ count-distinct queries fall back to raw by design).
 from __future__ import annotations
 
 import datetime as dt
-import os
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dsl import (
     EventQuery,
+    EventRef,
     EventSegmentationRequest,
     PropFilter,
     PropKind,
@@ -58,14 +59,10 @@ from .dsl import (
     QueryTime,
     TimeIntervalUnit,
 )
+from .daystore import DayStore
 from .exprs import event_expression, multi_and, property_expression
 from .operators.aggregates import BUCKET_COL, DECIMAL_T, _query_alias, bucket_col
-from .schema import (
-    EVENT_NAME_COL,
-    EVENT_TIME_COL,
-    EVENT_USER_COL,
-    overwrite_partitions,
-)
+from .schema import EVENT_NAME_COL, EVENT_TIME_COL, EVENT_USER_COL
 
 ROLLUP_DT_COL = "dt"
 USERS_HLL_COL = "users_hll"
@@ -243,177 +240,24 @@ def merge_rollups(parts: Sequence[DataFrame], spec: RollupSpec = RollupSpec()) -
     return base
 
 
-class RollupStore:
-    """dt-partitioned parquet persistence + incremental maintenance.
+class RollupStore(DayStore):
+    """The rollup persisted as dt-partitioned parquet — the shared
+    day-store protocol (daystore.DayStore: incremental ``update``
+    touching only the batch's dt partitions, replay ledger,
+    ``recompute_days`` for erasure, ``expire_before`` for retention)
+    over ``build_rollup`` / ``merge_rollups``."""
 
-    ``update`` touches only the dt partitions present in the append
-    batch: day-aggregate the batch, read the matching existing
-    partitions (pruned scan), merge, rewrite those partitions under
-    dynamic-partition-overwrite. Bytes rewritten per cycle are
-    proportional to the batch's day span, never to history — the
-    write-amplification bound a 100 TB deployment needs.
-    """
+    day_col = ROLLUP_DT_COL
 
     def __init__(self, path: str, spec: RollupSpec = RollupSpec()):
         self.path = path
         self.spec = spec
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            e.startswith(f"{ROLLUP_DT_COL}=") for e in os.listdir(self.path)
-        )
+    def build(self, events: DataFrame) -> DataFrame:
+        return build_rollup(events, self.spec)
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        from .schema import memo_parquet
-
-        df = memo_parquet(spark, self.path)
-        # partitionBy surfaces dt as the LAST column; restore schema order
-        return df.select(
-            ROLLUP_DT_COL, *[c for c in df.columns if c != ROLLUP_DT_COL]
-        )
-
-    def rebuild(self, spark: SparkSession, events: DataFrame) -> None:
-        build_rollup(events, self.spec).repartition(ROLLUP_DT_COL).write.mode(
-            "overwrite"
-        ).partitionBy(ROLLUP_DT_COL).parquet(self.path)
-
-    def _ledger_path(self) -> str:
-        return os.path.join(self.path, "_applied_batches.json")
-
-    def _applied(self) -> dict:
-        try:
-            import json as _json
-
-            with open(self._ledger_path()) as f:
-                return _json.load(f)
-        except (FileNotFoundError, ValueError):
-            return {}
-
-    def update(
-        self,
-        spark: SparkSession,
-        new_events: DataFrame,
-        stream_id: Optional[str] = None,
-        batch_id: Optional[int] = None,
-    ) -> int:
-        """Merge an append batch into the store; returns #days touched.
-
-        ``stream_id``/``batch_id``: replay guard for the maintenance
-        tick (a scheduler that restarts re-delivers the last
-        uncommitted batch; merging it twice would double-count).
-        Applied ids are recorded in a ledger AFTER the partition
-        overwrite — a crash between the two reapplies one batch, which
-        ``rebuild`` repairs; on a transactional lake the overwrite and
-        the ledger write are one commit."""
-        if stream_id is not None and batch_id is not None:
-            if self._applied().get(stream_id, -1) >= batch_id:
-                return 0
-        # persisted: the day-grain aggregation otherwise re-runs for
-        # the days collect AND the merge write (and the bootstrap's
-        # distinct count) — every maintenance tick paid the batch
-        # shuffle twice
-        batch = build_rollup(new_events, self.spec).persist()
-
-        def mark_applied() -> None:
-            if stream_id is None or batch_id is None:
-                return
-            import json as _json
-
-            applied = self._applied()
-            applied[stream_id] = batch_id
-            tmp = self._ledger_path() + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump(applied, f)
-            os.replace(tmp, self._ledger_path())
-
-        try:
-            return self._apply_batch(spark, batch, mark_applied)
-        finally:
-            batch.unpersist()
-
-    def _apply_batch(self, spark, batch, mark_applied) -> int:
-        if not self.exists():
-            batch.repartition(ROLLUP_DT_COL).write.mode("overwrite").partitionBy(
-                ROLLUP_DT_COL
-            ).parquet(self.path)
-            mark_applied()
-            return batch.select(ROLLUP_DT_COL).distinct().count()
-        days = [r[0] for r in batch.select(ROLLUP_DT_COL).distinct().collect()]
-        if not days:
-            mark_applied()
-            return 0
-        existing = self.read(spark).filter(F.col(ROLLUP_DT_COL).isin(days))
-        merged = merge_rollups([existing, batch], self.spec)
-        # localCheckpoint materializes the merged partitions so the
-        # overwrite below does not read from the path it replaces; on a
-        # transactional lake this whole block is one replaceWhere commit.
-        # r17 decision (verdict item 8): no recompute path is acceptable
-        # HERE because block loss fails the write BEFORE the overwrite
-        # touches the store (read happened at checkpoint time), and the
-        # maintenance loop's mark_applied idempotence re-runs the merge
-        merged = merged.repartition(ROLLUP_DT_COL).localCheckpoint()
-        overwrite_partitions(merged, ROLLUP_DT_COL, self.path)
-        mark_applied()
-        return len(days)
-
-    def recompute_days(
-        self, spark: SparkSession, events: DataFrame, days: Sequence[dt.date]
-    ) -> int:
-        """Re-aggregate exactly the given dt partitions from ``events``
-        — the DELETION hook (user erasure / retention rewrites).
-        ``update()`` is additive by construction (counts and sums add,
-        HLL sketches union); removed rows can never be subtracted back
-        out of a sketch, so the only correct repair is re-aggregating
-        the affected days from the post-rewrite lake. Cost is
-        O(affected days), not O(store): erasing one user re-aggregates
-        only the days that user was active, and the scan of ``events``
-        is partition-prunable when the source is date-partitioned.
-
-        Days whose every raw row was removed yield no batch rows, so
-        the dynamic overwrite would leave the stale partition standing
-        — those partitions are dropped explicitly."""
-        day_list = sorted(set(days))
-        if not self.exists() or not day_list:
-            return 0
-        batch = build_rollup(
-            events.filter(
-                F.to_date(F.col(EVENT_TIME_COL)).isin(
-                    [d.isoformat() for d in day_list])),
-            self.spec,
-        ).persist()
-        try:
-            fresh = {
-                r[0] for r in batch.select(ROLLUP_DT_COL).distinct().collect()
-            }
-            if fresh:
-                overwrite_partitions(batch.repartition(ROLLUP_DT_COL),
-                                     ROLLUP_DT_COL, self.path)
-            import shutil
-
-            for d in day_list:
-                if d not in fresh:
-                    shutil.rmtree(
-                        os.path.join(
-                            self.path, f"{ROLLUP_DT_COL}={d.isoformat()}"),
-                        ignore_errors=True,
-                    )
-        finally:
-            batch.unpersist()
-        spark.catalog.refreshByPath(self.path)
-        return len(day_list)
-
-    def expire_before(self, older_than: dt.date) -> list[str]:
-        """Retention on the rollup itself: drop dt partitions strictly
-        older than the cutoff — the same zero-scan partition delete as
-        ``lifecycle.expire_partitions`` (the rollup is dt-partitioned
-        for exactly this moment). A mid-day cutoff additionally needs
-        ``recompute_days`` on the boundary day — the lifecycle wiring
-        does both."""
-        from .lifecycle import expire_partitions
-
-        return expire_partitions(
-            self.path, older_than, date_col=ROLLUP_DT_COL
-        )["partitions_dropped"]
+    def merge(self, parts: Sequence[DataFrame]) -> DataFrame:
+        return merge_rollups(parts, self.spec)
 
 
 # ------------------------------------------------------------- query rewrite
@@ -447,6 +291,28 @@ def _rollup_filter(f: PropFilter) -> "Column":
     if f.prop.kind == PropKind.JSON:
         f = PropFilter(PropertyRef.column(f.prop.name), f.op, f.values)
     return property_expression(f)
+
+
+def day_window_rows(store_df: DataFrame, time: QueryTime,
+                    event: Optional[EventRef],
+                    filters: Sequence[PropFilter]) -> DataFrame:
+    """The rows of a dt-grain store inside ``time``'s whole-day window
+    (dt partition pruning) that match ``event`` and ``filters`` on the
+    stored dim columns — the one scan every rollup and user-day routed
+    read starts from. Callers check their store's ``*_supports``
+    first."""
+    aligned = _day_aligned(time)
+    assert aligned is not None, "caller must check the store's supports"
+    start_day, end_day = aligned
+    conds: list[Column] = [
+        F.col(ROLLUP_DT_COL) >= F.lit(str(start_day)).cast("date")
+    ]
+    if end_day is not None:
+        conds.append(F.col(ROLLUP_DT_COL) <= F.lit(str(end_day)).cast("date"))
+    if event is not None:
+        conds.append(event_expression(event, EVENT_NAME_COL))
+    conds += [_rollup_filter(f) for f in filters]
+    return store_df.filter(multi_and(conds))
 
 
 def _event_routable(eq: EventQuery, spec: RollupSpec) -> bool:
@@ -538,19 +404,8 @@ def event_segmentation_from_rollup(
     the rollup table: dt-partition-pruned, orders of magnitude smaller
     than events."""
     assert rollup_supports(req, eq, spec), "caller must check rollup_supports"
-    start_day, end_day = _day_aligned(req.time)
-    conds: list[Column] = [
-        F.col(ROLLUP_DT_COL) >= F.lit(str(start_day)).cast("date")
-    ]
-    if end_day is not None:
-        conds.append(F.col(ROLLUP_DT_COL) <= F.lit(str(end_day)).cast("date"))
-    ev = event_expression(eq.event, EVENT_NAME_COL)
-    if ev is not None:
-        conds.append(ev)
-    conds += [
-        _rollup_filter(f) for f in list(req.filters) + list(eq.filters)
-    ]
-    df = rollup.filter(multi_and(conds))
+    df = day_window_rows(rollup, req.time, eq.event,
+                         list(req.filters) + list(eq.filters))
 
     breakdowns = list(req.breakdowns) + list(eq.breakdowns)
     keys = [bucket_col(req.interval, ts_col=ROLLUP_DT_COL).alias(BUCKET_COL)] + [
@@ -716,21 +571,8 @@ def _activity_day_sketches(
     filtering — the shared scan for every activity-shaped rollup read.
     The frame is at most #days-in-window rows regardless of data size;
     everything downstream operates on it, never on raw events."""
-    aligned = _day_aligned(time)
-    assert aligned is not None, "caller must check activity_supports"
-    start_day, end_day = aligned
-    conds: list[Column] = [
-        F.col(ROLLUP_DT_COL) >= F.lit(str(start_day)).cast("date")
-    ]
-    if end_day is not None:
-        conds.append(F.col(ROLLUP_DT_COL) <= F.lit(str(end_day)).cast("date"))
-    if event is not None:
-        ev = event_expression(event, EVENT_NAME_COL)
-        if ev is not None:
-            conds.append(ev)
-    conds += [_rollup_filter(f) for f in filters]
     return (
-        rollup.filter(multi_and(conds))
+        day_window_rows(rollup, time, event, filters)
         .groupBy(ROLLUP_DT_COL)
         .agg(F.hll_union_agg(F.col(USERS_HLL_COL)).alias("__sk"))
     )
@@ -1058,21 +900,10 @@ def count_series_from_rollup(
     # cannot express its dim/event/filters
     assert count_series_supports(time, dim, event, filters, spec), \
         "caller must check count_series_supports"
-    start_day, end_day = _day_aligned(time)
-    conds: list[Column] = [
-        F.col(ROLLUP_DT_COL) >= F.lit(str(start_day)).cast("date")
-    ]
-    if end_day is not None:
-        conds.append(F.col(ROLLUP_DT_COL) <= F.lit(str(end_day)).cast("date"))
-    if event is not None:
-        ev = event_expression(event, EVENT_NAME_COL)
-        if ev is not None:
-            conds.append(ev)
-    conds += [_rollup_filter(f) for f in filters]
     keys = ([F.col(dim)] if dim else []) + [
         F.col(ROLLUP_DT_COL).alias("bucket")]
     return (
-        rollup.filter(multi_and(conds))
+        day_window_rows(rollup, time, event, filters)
         .groupBy(*keys)
         .agg(F.sum(EVENTS_COUNT_COL).alias("n"))
     )

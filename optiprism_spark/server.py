@@ -116,6 +116,9 @@ _STATUS = {
 #: VALUES_LIMIT 1000), so hitting it means a route lost its limit
 MAX_RESPONSE_ROWS = 10_000
 
+#: concurrent store folds per maintenance tick (App._fold_stores)
+_FOLD_WORKERS = 3
+
 #: interactive FAIR pools (fairscheduler.xml weight 4, minShare 4):
 #: sub-second shapes where queueing is the whole latency budget
 _INTERACTIVE_POOLS = frozenset({
@@ -972,14 +975,15 @@ class App:
         4. ``sweep_sessions`` — TTL expiry + Session End injection
 
         This tick is the only path that advances the rollup, user-day,
-        KMV and ANN stores. Replay safety is per store: the rollup and
-        user-day stores honour the (stream_id, batch_id) ledger (their
-        counts are additive, so a re-delivered batch would otherwise
-        count twice), the KMV merge is a set union and so idempotent,
-        ANN appends ride the IvfStore ledger. Without ids a batch is
-        always applied. Each advance is counted into
-        optiprism_maintenance_store_advanced_total — the 'which tier
-        went stale' dashboard. Returns a summary dict."""
+        KMV and ANN stores. Replay safety is per store: every day store
+        (rollup, user-day, KMV — daystore.DayStore) honours the
+        (stream_id, batch_id) ledger (rollup and user-day counts are
+        additive, so a re-delivered batch would otherwise count
+        twice), ANN appends ride the IvfStore ledger. Without ids a
+        batch is always applied. Each store that applied the batch is
+        counted into optiprism_maintenance_store_advanced_total — the
+        'which tier went stale' dashboard; a ledger-skipped replay
+        counts nothing. Returns a summary dict."""
         out = {"quality_failures": [], "rollup_stores": 0,
                "user_day_days": 0, "kmv_days": 0, "ann_stores": 0,
                "sessions_ended": 0}
@@ -1012,71 +1016,47 @@ class App:
         return out
 
     def _fold_stores(self, new_events, pid, stream_id, batch_id) -> dict:
-        """Fold one event batch into the rollup, user-day and KMV
-        stores in parallel, one thread per store: the folds read the
-        same batch and write disjoint directories, and each is a chain
-        of small Spark jobs (touched-day collect, merge checkpoint,
-        partition overwrite) that leaves most cores idle when the folds
-        run one after another. The threads are
-        ``InheritableThread``s, so the tick's job group and scheduler
-        pool carry over. Every fold is joined before the first error
-        (in store order) is re-raised. ``_data_version`` is bumped
-        once, here, after the joins: a ``+=`` per fold thread could
-        lose an update, and a result cached between two folds would
-        then survive the second. Returns {summary key: count}."""
-        from pyspark import InheritableThread
+        """Fold one event batch into every day store of ``pid``
+        (``_day_stores``) on a pool of at most ``_FOLD_WORKERS``
+        threads: the folds read the same batch and write disjoint
+        directories, and each is a chain of small Spark jobs
+        (touched-day collect, merge checkpoint, partition overwrite)
+        that leaves most cores idle when the folds run one after
+        another. Each fold runs under ``inheritable_thread_target``,
+        so the tick's job group and scheduler pool carry over. Every
+        fold is joined before the first error (in store order) is
+        re-raised. ``_data_version`` is bumped once, here, after the
+        joins: a ``+=`` per fold thread could lose an update, and a
+        result cached between two folds would then survive the
+        second. Returns {summary key: count} — rollup stores that
+        applied the batch, and days the user-day and KMV folds
+        touched."""
+        from concurrent.futures import ThreadPoolExecutor
 
-        folds = {"rollup_stores": lambda: self._fold_rollups(
-            new_events, pid, stream_id, batch_id)}
-        uds, kmv = self.user_day_store, self.kmv_store
-        if uds is not None and uds.exists():
-            folds["user_day_days"] = lambda: uds.update(
-                self.spark, new_events, stream_id=stream_id,
-                batch_id=batch_id)
-        if kmv is not None and kmv.exists():
-            folds["kmv_days"] = lambda: kmv.update(self.spark, new_events)
-        done: dict = {}
-        errors: dict = {}
+        from pyspark import inheritable_thread_target
 
-        def run(key, fold):
-            try:
-                done[key] = fold()
-            except BaseException as e:  # re-raised by the caller
-                errors[key] = e
-
-        threads = [InheritableThread(target=run, args=(key, fold),
-                                     name=f"maintain-{key}")
-                   for key, fold in folds.items()]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        counts = {key: done.get(key, 0) for key in folds}
+        counts = {"rollup_stores": 0, "user_day_days": 0, "kmv_days": 0}
+        fold = inheritable_thread_target(self.spark)(
+            lambda store: store.update(self.spark, new_events,
+                                       stream_id=stream_id,
+                                       batch_id=batch_id))
+        with ThreadPoolExecutor(_FOLD_WORKERS,
+                                thread_name_prefix="maintain") as pool:
+            futures = [(key, pool.submit(fold, store))
+                       for key, store in self._day_stores(pid)]
+        errors = []
+        for key, f in futures:
+            if f.exception() is not None:
+                errors.append(f.exception())
+            elif f.result():
+                counts[key] += 1 if key == "rollup_stores" else f.result()
         # a failed fold may have rewritten partitions before raising
         if errors or any(counts.values()):
             self._rollup_cache.pop(pid, None)
             self._data_version += 1
-        for key in folds:
-            if key in errors:
-                raise errors[key]
+        if errors:
+            raise errors[0]
         return counts
-
-    def _fold_rollups(self, new_events, pid: int, stream_id,
-                      batch_id) -> int:
-        """Advance every declared rollup store of ``pid`` and the
-        app-level one with an append batch; ``stream_id``/``batch_id``
-        ride each store's replay ledger. No data-version bump. Returns
-        the number of stores advanced."""
-        stores = self._declared_rollup_stores(pid)
-        if self.rollup_store is not None:
-            stores.append(self.rollup_store)
-        n = 0
-        for s in stores:
-            if s.exists():
-                s.update(self.spark, new_events, stream_id=stream_id,
-                         batch_id=batch_id)
-                n += 1
-        return n
 
     # ------------------------------------------- declared ANN indexes
 
@@ -1492,7 +1472,9 @@ class App:
     def _erase_user(self, body, m, q):
         """Right-to-erasure over every lake tier (lifecycle.erase_users)
         — body ``{"userIds": [...]}``; production queues these and
-        batches them into the maintenance cadence."""
+        batches them into the maintenance cadence. Every day store
+        (declared and app-level rollups, user-day, KMV) re-aggregates
+        the victims' days; ``rollup_days`` counts them across stores."""
         from .lifecycle import erase_users
 
         lake = self._lake()
@@ -1504,15 +1486,16 @@ class App:
             self.spark, lake["table_name"], lake["appends_path"],
             ids, tiers_path=lake.get("tiers_path"),
             extra_paths=lake.get("extra_paths") or (),
-            rollup_stores=self._all_rollup_stores(),
+            day_stores=[s for _, s in self._day_stores()],
         )
         self.refresh_tables()
         return 200, out
 
     def _retention_sweep(self, body, m, q):
         """Time-based retention: partition drops on every dated store
-        (zero bytes scanned) + a filtered rewrite of the bucketed
-        base. Body ``{"olderThan": "YYYY-MM-DD[THH:MM:SS]"}``."""
+        and every day store (zero bytes scanned) + a filtered rewrite
+        of the bucketed base. Body ``{"olderThan":
+        "YYYY-MM-DD[THH:MM:SS]"}``."""
         import datetime as _dt
 
         from .lifecycle import expire_base, expire_partitions
@@ -1532,7 +1515,7 @@ class App:
         removed = expire_base(
             self.spark, lake["table_name"], lake["appends_path"], cutoff,
             tiers_path=lake.get("tiers_path"),
-            rollup_stores=self._all_rollup_stores())
+            day_stores=[s for _, s in self._day_stores()])
         self.refresh_tables()
         return 200, {"rows_removed": removed, "dated": dated}
 
@@ -1690,20 +1673,24 @@ class App:
         self._rollup_cache = {}
         self._data_version += 1
 
-    def _all_rollup_stores(self) -> list:
-        """Every existing RollupStore this server serves — the
-        app-level one plus the catalog-declared stores of EVERY
-        project (erasure and retention are lake-global admin
-        operations, not per-project queries)."""
-        stores = []
-        if self.rollup_dir is not None:
-            pids = {0}
-            pids.update(p["id"] for p in self.catalog.list("project"))
-            for pid in sorted(pids):
-                stores.extend(self._declared_rollup_stores(pid))
-        if self.rollup_store is not None:
-            stores.append(self.rollup_store)
-        return [s for s in stores if s.exists()]
+    def _day_stores(self, pid: Optional[int] = None) -> list:
+        """(summary key, store) for every existing day store
+        (daystore.DayStore) of project ``pid``: its catalog-declared
+        rollups in declaration order, then the app-level rollup,
+        user-day and KMV stores — the one list the maintenance folds,
+        rollup routing, erasure and retention walk. ``pid=None`` takes
+        the declared rollups of EVERY project (erasure and retention
+        are lake-global admin operations, not per-project queries)."""
+        pids = [pid] if pid is not None else sorted(
+            {0, *(p["id"] for p in self.catalog.list("project"))})
+        stores = [("rollup_stores", s) for p in pids
+                  for s in self._declared_rollup_stores(p)]
+        for key, s in (("rollup_stores", self.rollup_store),
+                       ("user_day_days", self.user_day_store),
+                       ("kmv_days", self.kmv_store)):
+            if s is not None:
+                stores.append((key, s))
+        return [(key, s) for key, s in stores if s.exists()]
 
     def _declared_rollup_stores(self, pid: int) -> list:
         """RollupStores for the project's catalog-declared rollups
@@ -1746,16 +1733,38 @@ class App:
         cached = self._rollup_cache.get(pid)
         if cached is not None:
             return cached
-        stores = self._declared_rollup_stores(pid)
-        if self.rollup_store is not None:
-            stores.append(self.rollup_store)
-        pairs = [
-            (s.read(self.spark), s.spec) for s in stores if s.exists()
-        ]
+        pairs = [(s.read(self.spark), s.spec)
+                 for key, s in self._day_stores(pid)
+                 if key == "rollup_stores"]
         if not pairs:
             return None
         self._rollup_cache[pid] = pairs
         return pairs
+
+    def _route_rollup(self, pid: int, supports, routed, raw):
+        """``routed(rollup_df, spec)`` from the first of the project's
+        rollups (``_rollup``) whose spec ``supports``, else ``raw()``;
+        ``supports=None`` marks a request no rollup can answer. The
+        decision lands in optiprism_query_rollup_routed_total."""
+        if supports is not None:
+            for roll, spec in self._rollup(pid) or ():
+                if supports(spec):
+                    metrics.query_rollup_routed_total().inc(path="rollup")
+                    return routed(roll, spec)
+        metrics.query_rollup_routed_total().inc(path="raw")
+        return raw()
+
+    def _route_user_day(self, surface: str, supports, routed, raw):
+        """``routed(store_df, spec)`` from the user-day store when it
+        exists and ``supports(spec)``, else ``raw()``; the decision
+        lands in optiprism_user_day_routed_total under ``surface``."""
+        store = self.user_day_store
+        if store is not None and store.exists() and supports(store.spec):
+            metrics.user_day_routed_total().inc(surface=surface,
+                                                path="store")
+            return routed(store.read(self.spark), store.spec)
+        metrics.user_day_routed_total().inc(surface=surface, path="raw")
+        return raw()
 
     def _pid(self, m) -> int:
         pid = m.get("pid", "")
@@ -1846,29 +1855,24 @@ class App:
             from .operators.estimate import estimated_retention
 
             out = estimated_retention(self._events(), rate, **kw)
-        elif (self.user_day_store is not None
-              and self.user_day_store.exists()
-              and kw["interval"] in _RETENTION_PERIOD_UNITS
-              and user_day_supports(kw["time"], kw["cohort_event"],
-                                    req_filters, self.user_day_store.spec)
-              and user_day_supports(kw["time"], kw["return_event"],
-                                    req_filters, self.user_day_store.spec)):
+        else:
             # exact routed path: cohorts/returns/sizes fold from
             # (dt, user) partials through the SHARED matrix tail
             from .userday import retention_from_user_day
 
-            metrics.user_day_routed_total().inc(
-                surface="retention", path="store")
-            out = retention_from_user_day(
-                self.user_day_store.read(self.spark),
-                kw["cohort_event"], kw["return_event"], kw["time"],
-                kw["interval"], kw["max_periods"],
-                spec=self.user_day_store.spec,
-                filters=req_filters, unbounded=kw["unbounded"])
-        else:
-            metrics.user_day_routed_total().inc(
-                surface="retention", path="raw")
-            out = retention(self._events(), **kw)
+            out = self._route_user_day(
+                "retention",
+                lambda spec: (
+                    kw["interval"] in _RETENTION_PERIOD_UNITS
+                    and user_day_supports(kw["time"], kw["cohort_event"],
+                                          req_filters, spec)
+                    and user_day_supports(kw["time"], kw["return_event"],
+                                          req_filters, spec)),
+                lambda df, spec: retention_from_user_day(
+                    df, kw["cohort_event"], kw["return_event"], kw["time"],
+                    kw["interval"], kw["max_periods"], spec=spec,
+                    filters=req_filters, unbounded=kw["unbounded"]),
+                lambda: retention(self._events(), **kw))
         return 200, (out, {"cohort_bucket", "period"})
 
     def _stickiness(self, body, m, q):
@@ -1899,15 +1903,13 @@ class App:
             api.parse_event_ref(body["event"], custom_events=ces, props=props)
             if body.get("event") else None)
         filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        for roll, spec in self._rollup(pid) or ():
-            if activity_supports(time, event, filters, spec):
-                metrics.query_rollup_routed_total().inc(path="rollup")
-                out = stickiness_from_rollup(
-                    roll, time, period, spec, event, filters)
-                return 200, (out, {"bucket"})
-        metrics.query_rollup_routed_total().inc(path="raw")
-        out = stickiness(self._events(), time, period=period,
-                         event=event, filters=filters)
+        out = self._route_rollup(
+            pid,
+            lambda spec: activity_supports(time, event, filters, spec),
+            lambda roll, spec: stickiness_from_rollup(
+                roll, time, period, spec, event, filters),
+            lambda: stickiness(self._events(), time, period=period,
+                               event=event, filters=filters))
         return 200, (out, {"bucket"})
 
     def _growth(self, body, m, q):
@@ -1934,24 +1936,16 @@ class App:
             api.parse_event_ref(body["event"], custom_events=ces, props=props)
             if body.get("event") else None)
         filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        out = None
-        if self.user_day_store is not None and self.user_day_store.exists():
-            from .userday import growth_from_user_day, user_day_supports
+        from .userday import growth_from_user_day, user_day_supports
 
-            if user_day_supports(time, event, filters,
-                                 self.user_day_store.spec):
-                metrics.user_day_routed_total().inc(
-                    surface="growth", path="store")
-                out = growth_from_user_day(
-                    self.user_day_store.read(self.spark), time,
-                    period=period,
-                    spec=self.user_day_store.spec,
-                    event=event, filters=filters)
-        if out is None:
-            metrics.user_day_routed_total().inc(
-                surface="growth", path="raw")
-            out = growth_accounting(self._events(), time, period=period,
-                                    event=event, filters=filters)
+        out = self._route_user_day(
+            "growth",
+            lambda spec: user_day_supports(time, event, filters, spec),
+            lambda df, spec: growth_from_user_day(
+                df, time, period=period, spec=spec, event=event,
+                filters=filters),
+            lambda: growth_accounting(self._events(), time, period=period,
+                                      event=event, filters=filters))
         return 200, (out, {"bucket"})
 
     def _lness(self, body, m, q):
@@ -1987,34 +1981,27 @@ class App:
             api.parse_event_ref(body["event"], custom_events=ces, props=props)
             if body.get("event") else None)
         filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        out = None
-        if self.user_day_store is not None and self.user_day_store.exists():
-            from .dsl import QueryTime
-            from .userday import lness_from_user_day, user_day_supports
+        from .dsl import QueryTime
+        from .userday import lness_from_user_day, user_day_supports
 
-            spec = self.user_day_store.spec
-            # the operator derives its own day-aligned window from the
-            # anchor, so routability is only about event/filter dims —
-            # probe supports() with the window it will build
-            window = QueryTime.between(
-                dt_mod.datetime.combine(
-                    anchor - dt_mod.timedelta(days=l_long - 1),
-                    dt_mod.time.min),
-                dt_mod.datetime.combine(
-                    anchor, dt_mod.time(23, 59, 59, 999999)))
-            if user_day_supports(window, event, filters, spec):
-                metrics.user_day_routed_total().inc(
-                    surface="lness", path="store")
-                out = lness_from_user_day(
-                    self.user_day_store.read(self.spark), anchor,
-                    l_short=l_short, l_long=l_long, spec=spec,
-                    event=event, filters=filters)
-        if out is None:
-            metrics.user_day_routed_total().inc(
-                surface="lness", path="raw")
-            out = lness_grid(self._events(), anchor,
-                             l_short=l_short, l_long=l_long,
-                             event=event, filters=filters)
+        # the operator derives its own day-aligned window from the
+        # anchor, so routability is only about event/filter dims —
+        # probe supports() with the window it will build
+        window = QueryTime.between(
+            dt_mod.datetime.combine(
+                anchor - dt_mod.timedelta(days=l_long - 1),
+                dt_mod.time.min),
+            dt_mod.datetime.combine(
+                anchor, dt_mod.time(23, 59, 59, 999999)))
+        out = self._route_user_day(
+            "lness",
+            lambda spec: user_day_supports(window, event, filters, spec),
+            lambda df, spec: lness_from_user_day(
+                df, anchor, l_short=l_short, l_long=l_long, spec=spec,
+                event=event, filters=filters),
+            lambda: lness_grid(self._events(), anchor,
+                               l_short=l_short, l_long=l_long,
+                               event=event, filters=filters))
         return 200, (out, {"l_short", "l_long"})
 
     def _rfm(self, body, m, q):
@@ -2040,28 +2027,20 @@ class App:
             if body.get("event") else None)
         filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
         value_col = body.get("valueProperty", "value")
-        out = None
-        try:
-            if (self.user_day_store is not None
-                    and self.user_day_store.exists()):
-                from .userday import rfm_from_user_day, user_day_supports
+        from .userday import rfm_from_user_day, user_day_supports
 
-                spec = self.user_day_store.spec
-                if (value_col == spec.value_col
-                        and user_day_supports(time, event, filters, spec)):
-                    metrics.user_day_routed_total().inc(
-                        surface="rfm", path="store")
-                    out = rfm_from_user_day(
-                        self.user_day_store.read(self.spark), time,
-                        n_tiles=n_tiles, spec=spec,
-                        event=event, filters=filters)
-            if out is None:
-                metrics.user_day_routed_total().inc(
-                    surface="rfm", path="raw")
-                out = rfm_scores(
+        try:
+            out = self._route_user_day(
+                "rfm",
+                lambda spec: (value_col == spec.value_col
+                              and user_day_supports(time, event, filters,
+                                                    spec)),
+                lambda df, spec: rfm_from_user_day(
+                    df, time, n_tiles=n_tiles, spec=spec, event=event,
+                    filters=filters),
+                lambda: rfm_scores(
                     self._events(), time, n_tiles=n_tiles,
-                    value_col=value_col,
-                    event=event, filters=filters)
+                    value_col=value_col, event=event, filters=filters))
         except ValueError as e:
             raise HttpError(400, str(e))
         if body.get("grid"):
@@ -2170,26 +2149,21 @@ class App:
                         for name, ev in auds.items()}
                 if body.get("sketched"):
                     out = self._sketched_set(refs, expr, time, filters)
-                elif (self.user_day_store is not None
-                      and self.user_day_store.exists()
-                      and all(user_day_supports(
-                          time, r, filters, self.user_day_store.spec)
-                          for r in refs.values())):
+                else:
                     # exact routed path (r16): membership flags fold
                     # from (dt, user, event) partials — no raw scan
                     from .userday import set_count_from_user_day
 
-                    metrics.user_day_routed_total().inc(
-                        surface="audience_set", path="store")
-                    out = set_count_from_user_day(
-                        self.user_day_store.read(self.spark), refs,
-                        expr, time, spec=self.user_day_store.spec,
-                        filters=filters)
-                else:
-                    metrics.user_day_routed_total().inc(
-                        surface="audience_set", path="raw")
-                    out = audience_set_count(
-                        self._events(), refs, expr, time, filters)
+                    out = self._route_user_day(
+                        "audience_set",
+                        lambda spec: all(
+                            user_day_supports(time, r, filters, spec)
+                            for r in refs.values()),
+                        lambda df, spec: set_count_from_user_day(
+                            df, refs, expr, time, spec=spec,
+                            filters=filters),
+                        lambda: audience_set_count(
+                            self._events(), refs, expr, time, filters))
             # malformed audience dicts (KeyError), non-dict expression
             # nodes (TypeError/AttributeError), and semantic errors
             # (ValueError) are ALL caller errors — 400, never a 500
@@ -2381,6 +2355,12 @@ class App:
         split = full_filter(base)
         pop = full_filter(base) | full_filter(actual)
 
+        def raw_pop():
+            events = self._events()
+            if prop not in events.columns:
+                raise HttpError(400, f"unknown column {prop!r}")
+            return events.filter(pop)
+
         if kind == "categorical":
             raw_max = body.get("maxCategories")
             try:
@@ -2395,19 +2375,15 @@ class App:
                 # up at plan time as a 500 — caller error, reject as
                 # 400 like the audience route's maxDims bound check
                 raise HttpError(400, "maxCategories must be >= 1")
-            for roll, spec in self._rollup(pid) or ():
-                if drift_supports(base, actual, prop, spec, "categorical"):
-                    metrics.query_rollup_routed_total().inc(path="rollup")
-                    out = categorical_psi_from_rollup(
-                        roll, spec, prop, base, actual,
-                        max_categories=max_cat)
-                    return 200, (out, {"category"})
-            metrics.query_rollup_routed_total().inc(path="raw")
-            events = self._events()
-            if prop not in events.columns:
-                raise HttpError(400, f"unknown column {prop!r}")
-            out = categorical_drift(events.filter(pop), prop, split,
-                                    max_categories=max_cat)
+            out = self._route_rollup(
+                pid,
+                lambda spec: drift_supports(base, actual, prop, spec,
+                                            "categorical"),
+                lambda roll, spec: categorical_psi_from_rollup(
+                    roll, spec, prop, base, actual,
+                    max_categories=max_cat),
+                lambda: categorical_drift(raw_pop(), prop, split,
+                                          max_categories=max_cat))
             return 200, (out, {"category"})
 
         # numeric PSI
@@ -2441,35 +2417,30 @@ class App:
             # edges depend on the baseline rows themselves
             from .operators.drift import distribution_drift_quantile
 
-            metrics.query_rollup_routed_total().inc(path="raw")
-            events = self._events()
-            if prop not in events.columns:
-                raise HttpError(400, f"unknown column {prop!r}")
-            out = distribution_drift_quantile(
-                events.filter(pop), prop, split, n_bins=int(qbins))
+            out = self._route_rollup(
+                pid, None, None, lambda: distribution_drift_quantile(
+                    raw_pop(), prop, split, n_bins=int(qbins)))
             return 200, (out, {"bucket"})
-        if not bins:
-            # DDL-edge flavour: fold from a rollup whose declared
-            # histogram matches (request edges, if given, must agree —
-            # a PSI over different edges is a different question)
-            for roll, spec in self._rollup(pid) or ():
-                if not drift_supports(base, actual, prop, spec, "numeric"):
-                    continue
-                if edges and tuple(spec.hist_edges(prop)) != edges:
-                    continue
-                metrics.query_rollup_routed_total().inc(path="rollup")
-                out = psi_from_rollup(roll, spec, prop, base, actual)
-                return 200, (out, {"bucket"})
-        metrics.query_rollup_routed_total().inc(path="raw")
-        events = self._events()
-        if prop not in events.columns:
-            raise HttpError(400, f"unknown column {prop!r}")
-        if edges:
-            out = distribution_drift_fixed(
-                events.filter(pop), prop, split, edges)
-        else:
-            out = distribution_drift(
-                events.filter(pop), prop, split, bins=int(bins or 10))
+
+        def raw_numeric():
+            if edges:
+                return distribution_drift_fixed(raw_pop(), prop, split,
+                                                edges)
+            return distribution_drift(raw_pop(), prop, split,
+                                      bins=int(bins or 10))
+
+        # DDL-edge flavour: fold from a rollup whose declared histogram
+        # matches (request edges, if given, must agree — a PSI over
+        # different edges is a different question); ``bins`` is never
+        # routed
+        out = self._route_rollup(
+            pid,
+            None if bins else lambda spec: (
+                drift_supports(base, actual, prop, spec, "numeric")
+                and (not edges or tuple(spec.hist_edges(prop)) == edges)),
+            lambda roll, spec: psi_from_rollup(roll, spec, prop, base,
+                                               actual),
+            raw_numeric)
         return 200, (out, {"bucket"})
 
     def _anomaly(self, body, m, q):
@@ -2537,23 +2508,23 @@ class App:
         if threshold <= 0:
             raise HttpError(400, "threshold must be > 0")
 
-        series = None
         if dim is not None and not isinstance(dim, str):
             raise HttpError(400, f"dim must be a string, got {dim!r}")
-        for roll, spec in self._rollup(pid) or ():
-            if count_series_supports(time, dim, event, filters, spec):
-                metrics.query_rollup_routed_total().inc(path="rollup")
-                series = count_series_from_rollup(
-                    roll, time, spec, dim=dim, event=event,
-                    filters=filters)
-                break
-        if series is None:
-            metrics.query_rollup_routed_total().inc(path="raw")
+
+        def raw_series():
             events = self._events()
             if dim is not None and dim not in events.columns:
                 raise HttpError(400, f"unknown column {dim!r}")
-            series = daily_count_series(events, time, dim=dim,
-                                        event=event, filters=filters)
+            return daily_count_series(events, time, dim=dim,
+                                      event=event, filters=filters)
+
+        series = self._route_rollup(
+            pid,
+            lambda spec: count_series_supports(time, dim, event, filters,
+                                               spec),
+            lambda roll, spec: count_series_from_rollup(
+                roll, time, spec, dim=dim, event=event, filters=filters),
+            raw_series)
 
         by = (dim,) if dim else ()
         if method == "robust":

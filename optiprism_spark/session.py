@@ -14,6 +14,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's physical memory, capped at 48g. A fixed 48g let a local JVM
+    outgrow a 15 GB host (the kernel OOM-killed it mid test suite)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "optiprism_spark",
     cpus: str | int | None = None,
@@ -113,7 +121,8 @@ def get_spark(
         builder = builder.config(k, v)
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     spark = builder.getOrCreate()
     # runtime SQLConf: re-assert even when getOrCreate returned a

@@ -23,10 +23,11 @@ Size honesty at 100 TB: (dt, user, event_type) is NOT megabytes —
 it's bounded by active-user-days (~10⁹ users × days × few dims),
 typically 30–300× smaller than raw events and free of the wide
 prop payload. The win is that the per-query scan drops to that
-bounded table with dt partition pruning, and maintenance is
-RollupStore-style: day-partitioned dynamic overwrite touching only
-the batch's days, merge = re-aggregation (counts/sums add, which is
-why the grain stores SUMS, never averages).
+bounded table with dt partition pruning, and maintenance is the
+shared DayStore fold (daystore.py, the RollupStore's too): a
+day-partitioned dynamic overwrite touching only the batch's days,
+merge = re-aggregation (counts/sums add, which is why the grain
+stores SUMS, never averages).
 
 Reference note: the reference has no pre-aggregate tier at all (it
 rescans parts per query — storage/src/db.rs:657-666); this extends
@@ -35,23 +36,18 @@ the repo's own materialized-view design to user grain.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .daystore import DayStore
 from .dsl import EventRef, PropFilter, PropKind, QueryTime, TimeIntervalUnit
-from .exprs import event_expression, multi_and
+from .exprs import event_expression
 from .operators.aggregates import DECIMAL_T, bucket_col
-from .rollup import ROLLUP_DT_COL, _day_aligned, _rollup_filter
-from .schema import (
-    EVENT_NAME_COL,
-    EVENT_TIME_COL,
-    EVENT_USER_COL,
-    overwrite_partitions,
-)
+from .rollup import ROLLUP_DT_COL, _day_aligned, day_window_rows
+from .schema import EVENT_NAME_COL, EVENT_TIME_COL, EVENT_USER_COL
 
 N_EVENTS_COL = "n_events"
 VALUE_SUM_COL = "value_sum"
@@ -105,94 +101,23 @@ def merge_user_day(parts: Sequence[DataFrame],
     )
 
 
-class UserDayStore:
-    """dt-partitioned parquet persistence + incremental maintenance —
-    the RollupStore protocol verbatim (bytes rewritten per update
-    cycle follow the batch's day span, never history; (stream_id,
-    batch_id) replay ledger; crash between overwrite and ledger
-    reapplies one batch, repaired by rebuild)."""
+class UserDayStore(DayStore):
+    """dt-partitioned parquet persistence + incremental maintenance
+    through the shared day-store protocol (daystore.DayStore — the
+    same fold, replay ledger, erasure repair and retention as the
+    RollupStore) over ``build_user_day`` / ``merge_user_day``."""
+
+    day_col = ROLLUP_DT_COL
 
     def __init__(self, path: str, spec: UserDaySpec = UserDaySpec()):
         self.path = path
         self.spec = spec
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            e.startswith(f"{ROLLUP_DT_COL}=") for e in os.listdir(self.path)
-        )
+    def build(self, events: DataFrame) -> DataFrame:
+        return build_user_day(events, self.spec)
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        from .schema import memo_parquet
-
-        df = memo_parquet(spark, self.path)
-        return df.select(
-            ROLLUP_DT_COL, *[c for c in df.columns if c != ROLLUP_DT_COL]
-        )
-
-    def rebuild(self, spark: SparkSession, events: DataFrame) -> None:
-        build_user_day(events, self.spec).repartition(
-            ROLLUP_DT_COL
-        ).write.mode("overwrite").partitionBy(ROLLUP_DT_COL).parquet(
-            self.path)
-
-    def _ledger_path(self) -> str:
-        return os.path.join(self.path, "_applied_batches.json")
-
-    def _applied(self) -> dict:
-        import json as _json
-
-        try:
-            with open(self._ledger_path()) as f:
-                return _json.load(f)
-        except (FileNotFoundError, ValueError):
-            return {}
-
-    def update(self, spark: SparkSession, new_events: DataFrame,
-               stream_id: Optional[str] = None,
-               batch_id: Optional[int] = None) -> int:
-        """Merge an append batch: day-aggregate it, merge with the
-        matching existing dt partitions (pruned scan), dynamic-
-        partition-overwrite those partitions. Returns days touched;
-        a re-delivered (stream_id, batch_id) no-ops."""
-        import json as _json
-
-        if stream_id is not None and batch_id is not None:
-            if self._applied().get(stream_id, -1) >= batch_id:
-                return 0
-        batch = build_user_day(new_events, self.spec).persist()
-
-        def mark_applied() -> None:
-            if stream_id is None or batch_id is None:
-                return
-            applied = self._applied()
-            applied[stream_id] = batch_id
-            tmp = self._ledger_path() + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump(applied, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._ledger_path())
-
-        try:
-            if not self.exists():
-                batch.repartition(ROLLUP_DT_COL).write.mode(
-                    "overwrite").partitionBy(ROLLUP_DT_COL).parquet(self.path)
-                mark_applied()
-                return batch.select(ROLLUP_DT_COL).distinct().count()
-            days = [r[0] for r in
-                    batch.select(ROLLUP_DT_COL).distinct().collect()]
-            if not days:
-                mark_applied()
-                return 0
-            existing = self.read(spark).filter(
-                F.col(ROLLUP_DT_COL).isin(days))
-            merged = merge_user_day([existing, batch], self.spec)
-            out = merged.repartition(ROLLUP_DT_COL).localCheckpoint()
-            overwrite_partitions(out, ROLLUP_DT_COL, self.path)
-            mark_applied()
-            return len(days)
-        finally:
-            batch.unpersist()
+    def merge(self, parts: Sequence[DataFrame]) -> DataFrame:
+        return merge_user_day(parts, self.spec)
 
 
 # ------------------------------------------------------------ routing
@@ -224,25 +149,6 @@ def user_day_supports(
     return True
 
 
-def _window_rows(store_df: DataFrame, time: QueryTime,
-                 event: Optional[EventRef],
-                 filters: Sequence[PropFilter]) -> DataFrame:
-    aligned = _day_aligned(time)
-    assert aligned is not None, "caller must check user_day_supports"
-    start_day, end_day = aligned
-    conds: list[Column] = [
-        F.col(ROLLUP_DT_COL) >= F.lit(str(start_day)).cast("date")
-    ]
-    if end_day is not None:
-        conds.append(F.col(ROLLUP_DT_COL) <= F.lit(str(end_day)).cast("date"))
-    if event is not None:
-        ev = event_expression(event, EVENT_NAME_COL)
-        if ev is not None:
-            conds.append(ev)
-    conds += [_rollup_filter(f) for f in filters]
-    return store_df.filter(multi_and(conds))
-
-
 def rfm_from_user_day(
     store_df: DataFrame,
     time: QueryTime,
@@ -265,7 +171,7 @@ def rfm_from_user_day(
         raise ValueError("rfm needs a bounded time window")
     from .operators.engagement import rfm_from_per_user
 
-    rows = _window_rows(store_df, time, event, filters)
+    rows = day_window_rows(store_df, time, event, filters)
     per_user = rows.groupBy(F.col(spec.group_col)).agg(
         F.datediff(
             F.lit(end.date().isoformat()).cast("date"),
@@ -292,7 +198,7 @@ def active_days_from_user_day(
     distinct dt values of their partial rows — exact, one
     (user → count distinct dt) aggregate over the pruned store scan,
     then the count-by-k histogram."""
-    rows = _window_rows(store_df, time, event, filters)
+    rows = day_window_rows(store_df, time, event, filters)
     per_user = rows.groupBy(F.col(spec.group_col)).agg(
         F.count_distinct(F.col(ROLLUP_DT_COL)).alias("active_days"))
     return per_user.groupBy("active_days").agg(
@@ -325,7 +231,7 @@ def lness_from_user_day(
     time = QueryTime.between(
         _dt.datetime.combine(lo, _dt.time.min),
         _dt.datetime.combine(anchor, _dt.time(23, 59, 59, 999999)))
-    rows = _window_rows(store_df, time, event, filters)
+    rows = day_window_rows(store_df, time, event, filters)
     day = F.col(ROLLUP_DT_COL)
     # two-phase instead of two count_distincts (mirrors
     # engagement.lness_grid): dedup the (dt, user, event_type)
@@ -372,13 +278,13 @@ def retention_from_user_day(
         raise ValueError(
             f"retention interval must be one of {_PERIOD_UNITS}")
     pb = bucket_col(interval, ts_col=ROLLUP_DT_COL)
-    c_rows = _window_rows(store_df, time, cohort_event, filters)
+    c_rows = day_window_rows(store_df, time, cohort_event, filters)
     cohorts = c_rows.groupBy(spec.group_col).agg(
         F.min(pb).alias("__cohort_b"))
     sizes = cohorts.groupBy(
         F.col("__cohort_b").alias("cohort_bucket")).agg(
         F.count(F.lit(1)).alias("cohort_size"))
-    r_rows = _window_rows(store_df, time, return_event, filters)
+    r_rows = day_window_rows(store_df, time, return_event, filters)
     returns = r_rows.select(
         spec.group_col, pb.alias("__return_b")).distinct()
     return retention_matrix(cohorts, returns, sizes, interval,
@@ -403,7 +309,7 @@ def growth_from_user_day(
         raise ValueError("growth accounting period must be day|week|month")
     from .operators.engagement import growth_ledger
 
-    rows = _window_rows(store_df, time, event, filters)
+    rows = day_window_rows(store_df, time, event, filters)
     pb = bucket_col(period, ts_col=ROLLUP_DT_COL)
     a = rows.select(
         F.col(spec.group_col).alias("__u"), pb.alias("bucket")
@@ -431,7 +337,7 @@ def active_users_from_user_day(
     if interval not in (TimeIntervalUnit.DAY, TimeIntervalUnit.WEEK,
                         TimeIntervalUnit.MONTH):
         raise ValueError("active-user interval must be day|week|month")
-    rows = _window_rows(store_df, time, event, filters)
+    rows = day_window_rows(store_df, time, event, filters)
     pb = bucket_col(interval, ts_col=ROLLUP_DT_COL)
     return rows.groupBy(pb.alias("bucket")).agg(
         F.count_distinct(F.col(spec.group_col)).alias("active_users"))
@@ -455,7 +361,7 @@ def audience_flags_from_user_day(
     for name in audiences:
         if name == spec.group_col or not name.isidentifier():
             raise ValueError(f"bad audience name {name!r}")
-    rows = _window_rows(store_df, time, None, filters)
+    rows = day_window_rows(store_df, time, None, filters)
     aggs = []
     for name, ref in audiences.items():
         pred = event_expression(ref, EVENT_NAME_COL)
@@ -513,7 +419,7 @@ def scoped_count_from_user_day(
         store_df, audiences, audience_time or time, spec, filters)
     cond = set_expr_col(expr, list(audiences))
     users = flags.filter(cond).select(spec.group_col)
-    rows = _window_rows(store_df, time, event, filters)
+    rows = day_window_rows(store_df, time, event, filters)
     pb = bucket_col(interval, ts_col=ROLLUP_DT_COL)
     return (
         rows.join(F.broadcast(users), spec.group_col, "left_semi")

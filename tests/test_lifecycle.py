@@ -232,7 +232,7 @@ def test_erase_repairs_rollup_days(spark, store, tmp_path):
         .select(F.to_date("ts")).distinct().collect()
     }
     out = erase_users(spark, TBL, appends, victims, tiers_path=tiers,
-                      rollup_stores=[st])
+                      day_stores=[st])
     assert out["rollup_days"] == len(victim_days)
 
     # the repaired store is exactly a from-scratch rebuild of the
@@ -273,7 +273,7 @@ def test_retention_expires_rollup_history(spark, store, tmp_path):
     cutoff = dt.datetime(2024, 1, 15, 12, 0)  # mid-day on purpose
 
     expire_base(spark, TBL, appends, cutoff, tiers_path=tiers,
-                rollup_stores=[st])
+                day_stores=[st])
     left = {r[0] for r in st.read(spark).select("dt").distinct().collect()}
     assert left and min(left) >= cutoff.date()
     # boundary day ≡ a fresh day-aggregate of the live lake view
@@ -400,6 +400,88 @@ def test_erase_then_cached_routed_query_e2e(spark, store, tmp_path):
             else n
         assert after.get(bucket, 0) == expect, (
             bucket, n, after.get(bucket), victim_weeks)
+
+
+def test_erase_and_retention_repair_user_day_and_kmv_stores(
+        spark, store, tmp_path):
+    """Erasure and retention reach every day store the server folds,
+    not only its rollups: after POST /admin/erase-user a user-day-
+    ROUTED /queries/rfm no longer lists the victim, and the user-day
+    and KMV stores equal a rebuild from the post-erasure lake; after
+    POST /admin/retention neither store keeps a day before the
+    cutoff, and the mid-day boundary day is re-aggregated from the
+    live lake."""
+    from optiprism_spark import metrics
+    from optiprism_spark.server import make_app
+    from optiprism_spark.streaming.audience import KmvDayStore
+    from optiprism_spark.userday import UserDayStore
+    from tests.test_server import call
+
+    appends, tiers, events = store
+    lake = events_snapshot(spark, TBL, appends, tiers)
+    userday = UserDayStore(str(tmp_path / "userday"))
+    userday.rebuild(spark, lake)
+    kmv = KmvDayStore(str(tmp_path / "kmv"), k=64)
+    kmv.update(spark, lake)
+    app = make_app(
+        spark, SF_DIR, user_day_store=userday, kmv_store=kmv,
+        lake={"table_name": TBL, "appends_path": appends,
+              "tiers_path": tiers},
+        result_cache_ttl=None,
+    )
+    rfm = {"time": {"type": "between", "from": "2024-01-01T00:00:00",
+                    "to": "2024-01-31T23:59:59.999999"}}
+
+    def rfm_users():
+        metrics.REGISTRY.reset()
+        status, payload = call(app, "POST", "/api/v1/projects/1/queries/rfm",
+                               rfm)
+        assert status == 200
+        assert metrics.user_day_routed_total().value(
+            surface="rfm", path="store") == 1
+        cols = {c["name"]: c["data"] for c in payload["columns"]}
+        return {int(u) for u in cols["user_id"]}
+
+    # the smallest id sorts first, inside any response row cap
+    victim = int(events.agg(F.min("user_id")).collect()[0][0])
+    assert victim in rfm_users()
+
+    status, out = call(app, "POST", "/api/v1/admin/erase-user",
+                       {"userIds": [victim]})
+    assert status == 200
+    assert victim not in rfm_users()
+    assert out["rollup_days"] > 0
+
+    def rows(df):
+        return sorted(str(tuple(r)) for r in df.collect())
+
+    lake = events_snapshot(spark, TBL, appends, tiers)
+    assert lake.filter(F.col("user_id") == victim).count() == 0
+    ref_userday = UserDayStore(str(tmp_path / "userday_ref"))
+    ref_userday.rebuild(spark, lake)
+    ref_kmv = KmvDayStore(str(tmp_path / "kmv_ref"), k=64)
+    ref_kmv.update(spark, lake)
+    assert rows(userday.read(spark)) == rows(ref_userday.read(spark))
+    assert rows(kmv.read(spark)) == rows(ref_kmv.read(spark))
+
+    cutoff = dt.datetime(2024, 1, 15, 12, 0)  # mid-day on purpose
+    status, _ = call(app, "POST", "/api/v1/admin/retention",
+                     {"olderThan": cutoff.isoformat()})
+    assert status == 200
+    lake = events_snapshot(spark, TBL, appends, tiers)
+    for st, day_col in ((userday, "dt"), (kmv, "day")):
+        days = {r[0] for r in
+                st.read(spark).select(day_col).distinct().collect()}
+        assert days and min(days) == cutoff.date()
+        assert not any(
+            name < f"{day_col}={cutoff.date()}"
+            for name in os.listdir(st.path)
+            if name.startswith(f"{day_col}="))
+    boundary = lake.filter(F.to_date("ts") == F.lit(cutoff.date()))
+    assert rows(userday.read(spark).filter(F.col("dt") == cutoff.date())) \
+        == rows(userday.build(boundary).select(*userday.read(spark).columns))
+    assert rows(kmv.read(spark).filter(F.col("day") == cutoff.date())) \
+        == rows(kmv.build(boundary).select(*kmv.read(spark).columns))
 
 
 _T_JAN = {"type": "between", "from": "2024-01-01T00:00:00",

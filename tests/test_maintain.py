@@ -97,16 +97,22 @@ def test_unified_tick_advances_every_store_once(spark, tmp_path):
     ud_snap = sorted(
         tuple(r) for r in userday.read(spark).collect())
     rollup_snap = sorted(str(tuple(r)) for r in rollup.read(spark).collect())
+    advanced = {store: adv.value(store=store)
+                for store in ("rollup", "user_day", "kmv")}
     out2 = app.maintain(batch, emb_batch, stream_id="tick", batch_id=1)
     assert out2["user_day_days"] == 0  # ledger no-op
+    assert out2["kmv_days"] == 0  # ledger no-op
     assert ivf.info()["count"] == ivf_count_before + 3  # ledger no-op
     assert sorted(tuple(r) for r in userday.read(spark).collect()) == \
         ud_snap
     # the rollup's counts are additive: only its ledger keeps the
     # replayed batch from counting twice
-    assert out2["rollup_stores"] == 1  # visited, but a ledger no-op
+    assert out2["rollup_stores"] == 0  # a ledger no-op is no advance
     assert sorted(str(tuple(r)) for r in rollup.read(spark).collect()) \
         == rollup_snap
+    # a replay advances no store, so the staleness metric stays put
+    assert {store: adv.value(store=store) for store in advanced} == \
+        advanced
 
 
 def test_unified_tick_reports_quality_failures(spark, tmp_path):
