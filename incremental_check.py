@@ -29,22 +29,14 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from bench import best_noop_s
+
 PASSES = 3
-
-
-def timed(df, passes: int = PASSES) -> float:
-    best = float("inf")
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
 
 
 def main() -> None:
@@ -79,7 +71,8 @@ def main() -> None:
     # slope follows the BATCH, with the store probe as the flat term.
     docs = spark.read.parquet(os.path.join(args.dir, "documents.parquet"))
     n_all = docs.count()
-    t_full = timed(lsh_near_dup_pairs(docs, threshold=0.6))
+    full = lsh_near_dup_pairs(docs, threshold=0.6)
+    t_full = best_noop_s(lambda: full, PASSES)
     unpersist_tracked()
     for frac, q in (("10pct", 0.9), ("1pct", 0.99)):
         cut = docs.approxQuantile("doc_id", [q], 0.0001)[0]
@@ -93,7 +86,7 @@ def main() -> None:
         store = spark.read.parquet(store_path)
 
         pairs, _ = lsh_incremental_pairs(batch, store, threshold=0.6)
-        t_inc = timed(pairs)
+        t_inc = best_noop_s(lambda: pairs, PASSES)
         unpersist_tracked()
         results[f"lsh_{frac}"] = {
             "corpus": n_all, "batch": n_batch,
@@ -122,12 +115,13 @@ def main() -> None:
     ivf_assign(settled_e, cent).write.mode("overwrite").parquet(assign_path)
     e_store = spark.read.parquet(assign_path)
 
-    t_full = timed(embedding_near_pairs_ivf(
-        emb, threshold=0.40, n_centroids="auto", max_bucket="auto"))
+    full = embedding_near_pairs_ivf(
+        emb, threshold=0.40, n_centroids="auto", max_bucket="auto")
+    t_full = best_noop_s(lambda: full, PASSES)
     unpersist_tracked()
     pairs_e, _ = embedding_incremental_pairs_ivf(
         batch_e, e_store, cent, threshold=0.40, max_bucket=cap)
-    t_inc = timed(pairs_e)
+    t_inc = best_noop_s(lambda: pairs_e, PASSES)
     unpersist_tracked()
     results["ivf"] = {
         "corpus": n_all_e, "batch": n_batch_e,

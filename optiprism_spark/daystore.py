@@ -24,7 +24,6 @@ once:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from typing import Optional, Sequence
@@ -32,7 +31,13 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import EVENT_TIME_COL, memo_parquet, overwrite_partitions
+from .schema import (
+    EVENT_TIME_COL,
+    memo_plan,
+    overwrite_partitions,
+    read_json,
+    write_json_durable,
+)
 
 
 class DayStore:
@@ -55,11 +60,19 @@ class DayStore:
             e.startswith(f"{self.day_col}=") for e in os.listdir(self.path))
 
     def read(self, spark: SparkSession) -> DataFrame:
-        df = memo_parquet(spark, self.path)
-        # partitionBy surfaces the day as the LAST column; restore
-        # schema order
-        return df.select(
-            self.day_col, *[c for c in df.columns if c != self.day_col])
+        """The store as a lazy frame, day column first (``partitionBy``
+        surfaces it LAST) — the one read every routed query, fold and
+        repair starts from. The frame is memoized in ``schema``'s plan
+        memo under a ``day:<day_col>`` namespace, so a repeat read
+        skips both the footer round-trip and re-analysing the
+        projection; the memo's stat fingerprint makes any fold,
+        recompute or expiry a miss, so the next read sees it."""
+        def day_first() -> DataFrame:
+            df = spark.read.parquet(self.path)
+            return df.select(
+                self.day_col, *[c for c in df.columns if c != self.day_col])
+
+        return memo_plan(spark, self.path, f"day:{self.day_col}", day_first)
 
     def rebuild(self, spark: SparkSession, events: DataFrame) -> None:
         self.build(events).repartition(self.day_col).write.mode(
@@ -69,11 +82,7 @@ class DayStore:
         return os.path.join(self.path, "_applied_batches.json")
 
     def _applied(self) -> dict:
-        try:
-            with open(self._ledger_path()) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return {}
+        return read_json(self._ledger_path(), {})
 
     def _mark_applied(self, stream_id: Optional[str],
                       batch_id: Optional[int]) -> None:
@@ -81,12 +90,7 @@ class DayStore:
             return
         applied = self._applied()
         applied[stream_id] = batch_id
-        tmp = self._ledger_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(applied, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._ledger_path())
+        write_json_durable(self._ledger_path(), applied)
 
     def update(self, spark: SparkSession, new_events: DataFrame,
                stream_id: Optional[str] = None,

@@ -405,8 +405,9 @@ def write_training_shards(
     recomputes both from the written files and flags any divergence
     (truncated copy, lost shard, non-deterministic upstream). Returns
     the manifest dict."""
-    import json
     import os
+
+    from ..schema import write_json_durable
 
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
@@ -444,12 +445,7 @@ def write_training_shards(
             for r in stats
         },
     }
-    tmp = os.path.join(path, "_MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, "_MANIFEST.json"))
+    write_json_durable(os.path.join(path, "_MANIFEST.json"), manifest)
     return manifest
 
 

@@ -53,13 +53,14 @@ routed registered queries sharing the per-call oracles.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..schema import memo_parquet, read_json, write_json_durable
 
 _POINTER = "_current.json"
 
@@ -81,23 +82,13 @@ class IvfStore:
         return os.path.join(self.path, _POINTER)
 
     def _read_pointer(self) -> Optional[dict]:
-        try:
-            with open(self._pointer_path()) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return None
+        return read_json(self._pointer_path())
 
     def _commit_pointer(self, ptr: dict) -> None:
-        """fsync'd temp-write + atomic rename: the pointer flip IS the
-        commit — a crash before it leaves the old index fully live, a
-        crash after it leaves the new one (warehouse_layout idiom)."""
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ptr, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
+        """The pointer flip IS the commit (fsync'd temp-write + atomic
+        rename): a crash before it leaves the old index fully live, a
+        crash after it leaves the new one."""
+        write_json_durable(self._pointer_path(), ptr)
 
     def exists(self) -> bool:
         return self._read_pointer() is not None
@@ -169,8 +160,6 @@ class IvfStore:
         return ptr
 
     def centroids(self, spark: SparkSession) -> DataFrame:
-        from ..schema import memo_parquet
-
         ptr = self._require()
         return memo_parquet(
             spark, os.path.join(self._gen_dir(ptr["gen"]), "centroids"))
@@ -181,8 +170,6 @@ class IvfStore:
         join must not inherit the store's file layout as its
         parallelism (same rationale as ivf_assign)."""
         from ._util import spread
-
-        from ..schema import memo_parquet
 
         ptr = self._require()
         df = memo_parquet(

@@ -278,8 +278,36 @@ def _day_aligned(time: QueryTime) -> Optional[tuple[dt.date, Optional[dt.date]]]
     return start.date(), end.date()
 
 
-def _filters_routable(filters: Sequence[PropFilter], spec: RollupSpec) -> bool:
+def _filters_routable(filters: Sequence[PropFilter], spec) -> bool:
     return all(spec.dim_matches(f.prop) for f in filters)
+
+
+def window_supports(time: QueryTime, event, filters: Sequence[PropFilter],
+                    spec) -> bool:
+    """The routability core every day-store reader shares (rollup
+    activity and count series, user-day): ``time`` is a union of whole
+    days, every property filter is a stored dim (``spec.dim_matches``)
+    and the event is none or a plain name the store can filter on.
+    Each family's ``*_supports`` adds only its own check on top."""
+    if _day_aligned(time) is None or not _filters_routable(filters, spec):
+        return False
+    return event is None or (
+        getattr(event, "custom", None) is None
+        and (event.name is None or EVENT_NAME_COL in spec.dims))
+
+
+def day_range(time: QueryTime, day_col: str = ROLLUP_DT_COL) -> str:
+    """SQL condition selecting ``time``'s whole days on ``day_col``
+    (inclusive; no upper bound when the window is open-ended) — the one
+    day-window predicate of every day-store read. Callers check the
+    window is day-aligned first."""
+    aligned = _day_aligned(time)
+    assert aligned is not None, "caller must check the store's supports"
+    start_day, end_day = aligned
+    cond = f"`{day_col}` >= DATE '{start_day.isoformat()}'"
+    if end_day is not None:
+        cond += f" AND `{day_col}` <= DATE '{end_day.isoformat()}'"
+    return f"({cond})"
 
 
 def _rollup_filter(f: PropFilter) -> "Column":
@@ -301,14 +329,7 @@ def day_window_rows(store_df: DataFrame, time: QueryTime,
     stored dim columns — the one scan every rollup and user-day routed
     read starts from. Callers check their store's ``*_supports``
     first."""
-    aligned = _day_aligned(time)
-    assert aligned is not None, "caller must check the store's supports"
-    start_day, end_day = aligned
-    conds: list[Column] = [
-        F.col(ROLLUP_DT_COL) >= F.lit(str(start_day)).cast("date")
-    ]
-    if end_day is not None:
-        conds.append(F.col(ROLLUP_DT_COL) <= F.lit(str(end_day)).cast("date"))
+    conds: list[Column] = [F.expr(day_range(time))]
     if event is not None:
         conds.append(event_expression(event, EVENT_NAME_COL))
     conds += [_rollup_filter(f) for f in filters]
@@ -546,18 +567,8 @@ def activity_supports(
     about — an org-grain rollup must not answer a user-grain
     stickiness question (mirrors ``rollup_supports``'s
     ``req.group_col == spec.group_col`` check)."""
-    if spec.group_col != group_col:
-        return False
-    if _day_aligned(time) is None:
-        return False
-    if not _filters_routable(filters, spec):
-        return False
-    if event is not None:
-        if getattr(event, "custom", None) is not None:
-            return False
-        if event.name is not None and EVENT_NAME_COL not in spec.dims:
-            return False
-    return True
+    return spec.group_col == group_col and window_supports(
+        time, event, filters, spec)
 
 
 def _activity_day_sketches(
@@ -763,13 +774,6 @@ def drift_supports(
     return False
 
 
-def _day_range_cond(time: QueryTime) -> Column:
-    d0, d1 = _day_aligned(time)
-    dtc = F.col(ROLLUP_DT_COL)
-    return (dtc >= F.lit(d0.isoformat()).cast("date")) & (
-        dtc <= F.lit(d1.isoformat()).cast("date"))
-
-
 def psi_from_rollup(
     rollup: DataFrame,
     spec: RollupSpec,
@@ -796,18 +800,12 @@ def psi_from_rollup(
 
     edges = spec.hist_edges(prop)
     n_bins = len(edges) + 1
-    in_base = _day_range_cond(base)
-    in_act = _day_range_cond(actual)
     # parsed-SQL aggregate construction (guide §7.3): 2×n_bins
     # when/sum py4j Column trees were most of this query's per-call
     # driver cost; the SQL text below builds the identical expressions
     # in one parse each.
-    b0, b1 = _day_aligned(base)
-    a0, a1 = _day_aligned(actual)
-    in_base_sql = (f"({ROLLUP_DT_COL} >= DATE '{b0.isoformat()}' AND "
-                   f"{ROLLUP_DT_COL} <= DATE '{b1.isoformat()}')")
-    in_act_sql = (f"({ROLLUP_DT_COL} >= DATE '{a0.isoformat()}' AND "
-                  f"{ROLLUP_DT_COL} <= DATE '{a1.isoformat()}')")
+    in_base_sql = day_range(base)
+    in_act_sql = day_range(actual)
     aggs: list[Column] = []
     for i in range(n_bins):
         c = spec.hist_col(prop, i)
@@ -817,7 +815,7 @@ def psi_from_rollup(
         aggs.append(F.expr(
             f"CAST(SUM(CASE WHEN {in_act_sql} THEN `{c}` ELSE 0 END) "
             f"AS BIGINT) AS __a{i}"))
-    row = rollup.filter(in_base | in_act).agg(*aggs)
+    row = rollup.filter(f"{in_base_sql} OR {in_act_sql}").agg(*aggs)
     return _psi_from_bin_sums(row, n_bins)
 
 
@@ -838,8 +836,8 @@ def categorical_psi_from_rollup(
 
     if max_categories is None:
         max_categories = MAX_CATEGORIES
-    in_base = _day_range_cond(base)
-    in_act = _day_range_cond(actual)
+    in_base = F.expr(day_range(base))
+    in_act = F.expr(day_range(actual))
     d = F.col(dim)
     hist = (
         rollup.filter((in_base | in_act) & d.isNotNull())
@@ -867,18 +865,8 @@ def count_series_supports(
     dim set. Counts are ADDITIVE in the store, so — unlike the sketch-
     backed activity readers — a routed series is EXACT, bit-equal to
     the raw scan."""
-    if _day_aligned(time) is None:
-        return False
-    if dim is not None and dim not in spec.dims:
-        return False
-    if not _filters_routable(filters, spec):
-        return False
-    if event is not None:
-        if getattr(event, "custom", None) is not None:
-            return False
-        if event.name is not None and EVENT_NAME_COL not in spec.dims:
-            return False
-    return True
+    return (dim is None or dim in spec.dims) and window_supports(
+        time, event, filters, spec)
 
 
 def count_series_from_rollup(

@@ -14,7 +14,10 @@ here take plain parquet paths and rely on Catalyst pushdown/pruning.
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -116,9 +119,10 @@ def _memo_key(spark: SparkSession, path: str, ns: str) -> "tuple | None":
     """Shared memo key: (namespace, session, realpath, stat
     fingerprint) or None when the path cannot be fingerprinted.
 
-    ``ns`` disambiguates the two memo APIs — load_table caches the
-    nanos→µs-TRANSFORMED frame while memo_parquet caches the raw
-    read; without the namespace a path read through both would
+    ``ns`` disambiguates the frames built from one path — load_table
+    caches the nanos→µs-TRANSFORMED frame, memo_parquet the raw read,
+    DayStore.read the day-first projection (``day:<day_col>``);
+    without the namespace a path read through two of them would
     silently serve the wrong variant (r16 advice).
 
     The directory fingerprint stores the (name, mtime_ns) entries
@@ -154,6 +158,27 @@ def _memo_key(spark: SparkSession, path: str, ns: str) -> "tuple | None":
         return None  # unstattable path / stopped context
 
 
+def memo_plan(spark: SparkSession, path: str, ns: str,
+              read: Callable[[], DataFrame]) -> DataFrame:
+    """The one plan memo behind ``load_table``, ``memo_parquet`` and
+    ``daystore.DayStore.read``: ``read()`` once per (namespace,
+    session, path, stat fingerprint), the frame served from
+    ``_TABLE_PLANS`` after that. ``ns`` names the variant the caller
+    builds from the path (see _memo_key); an unstattable path is read
+    every call."""
+    key = _memo_key(spark, path, ns)
+    if key is not None:
+        hit = _TABLE_PLANS.get(key)
+        if hit is not None:
+            return hit
+    df = read()
+    if key is not None:
+        if len(_TABLE_PLANS) >= _TABLE_PLANS_MAX:
+            _TABLE_PLANS.clear()  # tmp-dir fixtures churn keys; plans are cheap to rebuild
+        _TABLE_PLANS[key] = df
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table.
 
@@ -170,59 +195,61 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     metrics.store_scans_total().inc(table=name)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _memo_key(spark, path, "table")
-    if key is not None:
-        hit = _TABLE_PLANS.get(key)
-        if hit is not None:
-            return hit
-    with metrics.store_scan_time().time(table=name):
-        df = spark.read.parquet(path)
-    # TIMESTAMP(NANOS) columns arrive as long (see session.py
-    # nanosAsLong); floor-convert to µs timestamps — the same
-    # truncation DuckDB applies reading nanos into its µs timestamps.
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    for field in df.schema.fields:
-        if field.name == EVENT_TIME_COL and isinstance(field.dataType, T.LongType):
-            df = df.withColumn(
-                field.name, F.timestamp_micros(F.expr(f"{field.name} div 1000"))
-            )
-    if key is not None:
-        if len(_TABLE_PLANS) >= _TABLE_PLANS_MAX:
-            _TABLE_PLANS.clear()  # tmp-dir fixtures churn keys; plans are cheap to rebuild
-        _TABLE_PLANS[key] = df
-    return df
+    def read() -> DataFrame:
+        with metrics.store_scan_time().time(table=name):
+            df = spark.read.parquet(path)
+        # TIMESTAMP(NANOS) columns arrive as long (see session.py
+        # nanosAsLong); floor-convert to µs timestamps — the same
+        # truncation DuckDB applies reading nanos into its µs timestamps.
+        from pyspark.sql import functions as F
+
+        for field in df.schema.fields:
+            if (field.name == EVENT_TIME_COL
+                    and isinstance(field.dataType, T.LongType)):
+                df = df.withColumn(
+                    field.name,
+                    F.timestamp_micros(F.expr(f"{field.name} div 1000")))
+        return df
+
+    return memo_plan(spark, path, "table", read)
 
 
 def memo_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized lazy ``spark.read.parquet`` for STORE directories
-    (rollup / user-day / similar persisted pre-aggregates) — the same
-    contract as the table memo above: plan metadata only, never
-    data/result caching (executing the frame re-reads parquet bytes);
-    the stat fingerprint (mtime_ns, size, one-level children) makes
-    any rewrite or appended partition a cache miss. Skipping the
-    per-call footer/schema round-trip is what a real catalog does —
-    it was ~0.1 s of driver time per store read per query.
+    """Memoized lazy ``spark.read.parquet`` of a persisted store
+    directory (the IVF index generations): plan metadata only, never
+    data — executing the frame re-reads the parquet bytes, and a
+    rewrite or an appended partition changes the stat fingerprint, so
+    it misses. Skipping the per-call footer/schema round-trip was
+    ~0.1 s of driver time per store read per query. The day stores
+    memoize their day-first projection instead (``DayStore.read``,
+    namespace ``day:<day_col>``)."""
+    return memo_plan(spark, path, "raw", lambda: spark.read.parquet(path))
 
-    The key is the SESSION OBJECT, not the applicationId: one
-    application may run several sessions (``spark.newSession()``, a
-    cloned session) — a frame memoized under one would execute (and,
-    worse, write) under its confs, not the caller's. Session-scoped
-    keys make another session take one fresh read instead. Keys are
-    namespaced apart from load_table's (raw read here vs
-    nanos→µs-transformed frame there — see _memo_key)."""
-    key = _memo_key(spark, path, "raw")
-    if key is not None:
-        hit = _TABLE_PLANS.get(key)
-        if hit is not None:
-            return hit
-    df = spark.read.parquet(path)
-    if key is not None:
-        if len(_TABLE_PLANS) >= _TABLE_PLANS_MAX:
-            _TABLE_PLANS.clear()
-        _TABLE_PLANS[key] = df
-    return df
+
+def write_json_durable(path: str, obj) -> None:
+    """Commit ``obj`` as the JSON file at ``path``: write a temp file
+    unique to this process and thread, flush + fsync it, then
+    ``os.replace`` it over ``path`` — a reader sees the old document
+    or the new one, never a torn write, and two concurrent writers
+    never share a temp file. Keys are written sorted."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def read_json(path: str, default=None):
+    """The document ``write_json_durable`` committed at ``path``, or
+    ``default`` when the file is missing or unparsable."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (FileNotFoundError, ValueError):
+        return default
 
 
 def overwrite_partitions(df: DataFrame, partition_col: str,

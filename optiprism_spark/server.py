@@ -70,6 +70,7 @@ The app is framework-free WSGI: serve it with stdlib ``wsgiref`` (see
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import os
 import re
@@ -311,6 +312,14 @@ def _sampling_rate(body: dict) -> float:
     return rate
 
 
+def _check_name(name, what: str) -> None:
+    """400 unless ``name`` is a non-empty [A-Za-z0-9_-]+ string — the
+    name rule of declared rollups, ANN indexes (whose names become
+    store paths) and quality checks."""
+    if not (isinstance(name, str) and re.fullmatch(r"[A-Za-z0-9_\-]+", name)):
+        raise HttpError(400, f"{what} needs a name of [A-Za-z0-9_-]+")
+
+
 def _timed_query(qtype: str, handler: Callable) -> Callable:
     """Per-query-type counter around an explore handler, tagging it so
     the dispatch site can time plan build AND the collect together —
@@ -486,7 +495,6 @@ class App:
             if admission_limit == "default" else admission_limit)
         self._admission_lock = threading.Lock()
         self._admitted: dict[str, int] = {}
-        self._rollup_cache: dict = {}
         self.tracked: list[dict] = []
         self.identified: list[dict] = []
         # serializes buffer+WAL mutation across the multi-threaded
@@ -773,8 +781,12 @@ class App:
         self._add_crud(P + r"/reports", "report", perms=report_perms)
         self._add_crud(P + r"/bookmarks", "bookmark", perms=report_perms)
         self._add_crud(P + r"/schema/rollups", "rollup",
-                       create=self._create_rollup, put=self._put_rollup,
-                       delete=self._delete_rollup, perms=schema_perms)
+                       create=self._create_rollup,
+                       put=functools.partial(self._put_immutable, "rollup"),
+                       delete=functools.partial(
+                           self._delete_declared, "rollup",
+                           self._store_for_rollup_row),
+                       perms=schema_perms)
         # declared data-quality batteries: POST /queries/quality with
         # no inline constraints runs these as the standing gate
         self._add_crud(P + r"/schema/quality-checks", "quality_check",
@@ -785,8 +797,11 @@ class App:
         # the similarity route serves via `indexed: true, index: name`
         self._add_crud(P + r"/schema/ann-indexes", "ann_index",
                        create=self._create_ann_index,
-                       put=self._put_ann_index,
-                       delete=self._delete_ann_index,
+                       put=functools.partial(self._put_immutable,
+                                             "ann index"),
+                       delete=functools.partial(
+                           self._delete_declared, "ann_index",
+                           self._store_for_ann_row),
                        perms=schema_perms)
 
     # ----------------------------------------------------- CRUD plumbing
@@ -888,9 +903,7 @@ class App:
         store exists — _rollup() already keys on store.exists())."""
         if self.rollup_dir is None:
             raise HttpError(400, "rollup_dir not configured on this server")
-        name = body.get("name")
-        if not name or not re.fullmatch(r"[A-Za-z0-9_\-]+", name):
-            raise HttpError(400, "rollup needs a name of [A-Za-z0-9_-]+")
+        _check_name(body.get("name"), "rollup")
         events = self._events()
         for d in body.get("dims") or ():
             if d not in events.columns:
@@ -934,28 +947,31 @@ class App:
             # lists forever but never serves and blocks the name
             self.catalog.delete("rollup", row["id"], project_id=pid)
             raise
-        self._rollup_cache.pop(pid, None)
         return row
 
-    def _put_rollup(self, body: dict, rid: int, pid: int) -> dict:
-        """Rollup definitions are immutable: mutating dims/props would
-        desync the declaration from the persisted parquet (routing
-        would accept breakdowns the store was never built with).
-        Delete and re-declare instead."""
+    def _put_immutable(self, what: str, body: dict, rid: int,
+                       pid: int) -> dict:
+        """Declared rollup and ANN index definitions are immutable:
+        mutating dims/props or the quantizer config would desync the
+        declaration from the persisted store (routing would accept
+        breakdowns the store was never built with). Delete and
+        re-declare instead; retraining an index is the maintenance
+        tick's drift-triggered decision, not a PUT."""
         raise HttpError(
-            405, "rollup definitions are immutable; DELETE and re-create")
+            405, f"{what} definitions are immutable; DELETE and re-create")
 
-    def _delete_rollup(self, rid: int, pid: int) -> dict:
-        """Drop the declaration AND stop serving it immediately (the
-        read cache would otherwise keep routing to the deleted store
-        until an unrelated checkpoint cleared it)."""
+    def _delete_declared(self, kind: str, store_for, rid: int,
+                         pid: int) -> dict:
+        """Drop a declared rollup or ANN index: read its row, delete
+        the declaration, then remove the store's files. Routing walks
+        the catalog, so the store stops serving with the next
+        request."""
         import shutil
 
-        row = self.catalog.get("rollup", rid, project_id=pid)
-        store = self._store_for_rollup_row(pid, row)
-        out = self.catalog.delete("rollup", rid, project_id=pid)
-        self._rollup_cache.pop(pid, None)
-        shutil.rmtree(store.path, ignore_errors=True)
+        row = self.catalog.get(kind, rid, project_id=pid)
+        path = store_for(pid, row).path
+        out = self.catalog.delete(kind, rid, project_id=pid)
+        shutil.rmtree(path, ignore_errors=True)
         return out
 
     def maintain(self, new_events=None, new_embeddings=None, *,
@@ -1052,7 +1068,6 @@ class App:
                 counts[key] += 1 if key == "rollup_stores" else f.result()
         # a failed fold may have rewritten partitions before raising
         if errors or any(counts.values()):
-            self._rollup_cache.pop(pid, None)
             self._data_version += 1
         if errors:
             raise errors[0]
@@ -1087,8 +1102,7 @@ class App:
         if self.ivf_dir is None:
             raise HttpError(400, "ivf_dir not configured on this server")
         name = body.get("name")
-        if not name or not re.fullmatch(r"[A-Za-z0-9_\-]+", name):
-            raise HttpError(400, "ann index needs a name of [A-Za-z0-9_-]+")
+        _check_name(name, "ann index")
         nc = body.get("nCentroids", "auto")
         if nc != "auto" and not (isinstance(nc, int) and nc >= 1):
             raise HttpError(400, "nCentroids must be a positive int or "
@@ -1170,23 +1184,6 @@ class App:
             t.join(max(0.0, deadline - _time.monotonic()))
         return not any(t.is_alive() for t in threads)
 
-    def _put_ann_index(self, body: dict, rid: int, pid: int) -> dict:
-        """Index definitions are immutable (mutating the quantizer
-        config would desync the declaration from the persisted
-        generations); DELETE and re-declare. Retraining is the
-        maintenance loop's drift-triggered decision, not a PUT."""
-        raise HttpError(
-            405, "ann index definitions are immutable; DELETE and re-create")
-
-    def _delete_ann_index(self, rid: int, pid: int) -> dict:
-        import shutil
-
-        row = self.catalog.get("ann_index", rid, project_id=pid)
-        store = self._store_for_ann_row(pid, row)
-        out = self.catalog.delete("ann_index", rid, project_id=pid)
-        shutil.rmtree(store.path, ignore_errors=True)
-        return out
-
     def _resolve_ann_store(self, pid: int, name):
         """The store an `indexed: true` similarity request serves
         from: a DECLARED index when ``index: name`` is given (404 on
@@ -1246,11 +1243,12 @@ class App:
                     continue
                 st = self._store_for_ann_row(pid, row)
                 if st.exists():
-                    st.maintain(self.spark, new_embeddings,
-                                drift_threshold=row.get(
-                                    "driftThreshold", 0.02),
-                                stream_id=stream_id, batch_id=batch_id)
-                    n += 1
+                    out = st.maintain(self.spark, new_embeddings,
+                                      drift_threshold=row.get(
+                                          "driftThreshold", 0.02),
+                                      stream_id=stream_id,
+                                      batch_id=batch_id)
+                    n += 1 if (out["appended"] or out["retrained"]) else 0
         if self.ivf_store is not None:
             out = self.maintain_ivf(new_embeddings, stream_id=stream_id,
                                     batch_id=batch_id)
@@ -1670,7 +1668,6 @@ class App:
 
     def refresh_tables(self) -> None:
         self._events_cache = None
-        self._rollup_cache = {}
         self._data_version += 1
 
     def _day_stores(self, pid: Optional[int] = None) -> list:
@@ -1723,23 +1720,16 @@ class App:
             os.path.join(self.rollup_dir, f"p{pid}_{row['name']}"), spec
         )
 
-    def _rollup(self, pid: int = 0):
+    def _rollup(self, pid: int = 0) -> Optional[list]:
         """[(rollup_df, spec), ...] for run_event_segmentation (tried
         in order; first spec that supports an event-query wins), or
         None — the project's catalog-declared rollups in declaration
-        order, then the App-level store. Read frames are cached like
-        _events (analyzed plans only) and invalidated together — a
-        compaction tick that advanced a store calls refresh_tables()."""
-        cached = self._rollup_cache.get(pid)
-        if cached is not None:
-            return cached
-        pairs = [(s.read(self.spark), s.spec)
-                 for key, s in self._day_stores(pid)
-                 if key == "rollup_stores"]
-        if not pairs:
-            return None
-        self._rollup_cache[pid] = pairs
-        return pairs
+        order, then the App-level store. Each frame comes from
+        ``DayStore.read``, whose memo serves the store's current
+        version."""
+        return [(s.read(self.spark), s.spec)
+                for key, s in self._day_stores(pid)
+                if key == "rollup_stores"] or None
 
     def _route_rollup(self, pid: int, supports, routed, raw):
         """``routed(rollup_df, spec)`` from the first of the project's
@@ -2192,7 +2182,6 @@ class App:
                 400, "sketched venn needs plain event-name audiences")
         days, store = self._kmv_window_days(
             "venn", EVENT_NAME_COL, time, filters)
-        metrics.query_rollup_routed_total().inc(path="kmv")
         return audience_venn_from_day_sketches(days, a.name, b.name,
                                                k=store.k)
 
@@ -2204,7 +2193,6 @@ class App:
 
         days, store = self._kmv_window_days(
             "overlap-matrix", dim, time, filters)
-        metrics.query_rollup_routed_total().inc(path="kmv")
         return overlap_matrix_from_day_sketches(
             days, k=store.k, max_dims=max_dims)
 
@@ -2237,7 +2225,6 @@ class App:
             return {"op": e.get("op"),
                     "args": [rewrite(a) for a in e.get("args", ())]}
 
-        metrics.query_rollup_routed_total().inc(path="kmv")
         return audience_set_count_from_day_sketches(
             days, rewrite(expr), k=store.k)
 
@@ -2246,11 +2233,10 @@ class App:
         surfaces: the store must exist, sketch the requested
         dimension, carry no property filters (not in the sketch), and
         the window must be whole-day bounded (the store's grain) —
-        each constraint 400s with its reason. Returns the windowed
-        (day, dim, kmv) frame plus the store."""
-        from pyspark.sql import functions as F
-
-        from .rollup import _day_aligned
+        each constraint 400s with its reason. Counts the routed read
+        (path="kmv") and returns the windowed (day, dim, kmv) frame
+        plus the store."""
+        from .rollup import _day_aligned, day_range
 
         store = self.kmv_store
         if store is None or not store.exists():
@@ -2274,10 +2260,8 @@ class App:
                 raise HttpError(
                     400, f"sketched {what} needs a whole-day bounded "
                          "window")
-            days = days.filter(
-                (F.col("day") >= F.lit(aligned[0].isoformat()).cast("date"))
-                & (F.col("day") <= F.lit(aligned[1].isoformat()).cast("date"))
-            )
+            days = days.filter(day_range(time, store.day_col))
+        metrics.query_rollup_routed_total().inc(path="kmv")
         return days, store
 
     def _drift(self, body, m, q):
@@ -2695,10 +2679,7 @@ class App:
         every declared battery as the project's standing delivery
         gate. Specs are validated against the CURRENT events schema at
         declare time — a bad battery can never be stored."""
-        name = body.get("name")
-        if not name or not re.fullmatch(r"[A-Za-z0-9_\-]+", name):
-            raise HttpError(400, "quality check needs a name of "
-                                 "[A-Za-z0-9_-]+")
+        _check_name(body.get("name"), "quality check")
         specs = body.get("constraints")
         if not isinstance(specs, list) or not specs:
             raise HttpError(400, "constraints must be a non-empty list")
@@ -2713,10 +2694,7 @@ class App:
         a stored-bad battery would 400/500 every standing-gate run)."""
         merged = dict(self.catalog.get("quality_check", qid, project_id=pid))
         merged.update(body)
-        name = merged.get("name")
-        if not name or not re.fullmatch(r"[A-Za-z0-9_\-]+", str(name)):
-            raise HttpError(400, "quality check needs a name of "
-                                 "[A-Za-z0-9_-]+")
+        _check_name(merged.get("name"), "quality check")
         specs = merged.get("constraints")
         if not isinstance(specs, list) or not specs:
             raise HttpError(400, "constraints must be a non-empty list")
@@ -3389,34 +3367,8 @@ class App:
         raise HttpError(404, f"no route for {path}")
 
 
-def make_app(
-    spark: SparkSession,
-    sf_dir: str,
-    custom_events: Optional[dict] = None,
-    now: Optional[dt.datetime] = None,
-    catalog: Optional[Catalog] = None,
-    token_key: Optional[str] = None,
-    wal_dir: Optional[str] = None,
-    session_store: bool = False,
-    backup_dir: Optional[str] = None,
-    rollup_store=None,
-    rollup_dir: Optional[str] = None,
-    lake: Optional[dict] = None,
-    result_cache_ttl: Optional[float] = 60.0,
-    admission_limit="default",
-    kmv_store=None,
-    ivf_store=None,
-    user_day_store=None,
-    ivf_dir=None,
-) -> App:
-    return App(spark, sf_dir, custom_events=custom_events, now=now,
-               catalog=catalog, token_key=token_key, wal_dir=wal_dir,
-               session_store=session_store, backup_dir=backup_dir,
-               rollup_store=rollup_store, rollup_dir=rollup_dir, lake=lake,
-               result_cache_ttl=result_cache_ttl,
-               admission_limit=admission_limit, kmv_store=kmv_store,
-               ivf_store=ivf_store, user_day_store=user_day_store,
-               ivf_dir=ivf_dir)
+#: the app factory the deployment scripts and tests call
+make_app = App
 
 
 def serve(app: App, host: str = "127.0.0.1", port: int = 8080) -> None:

@@ -43,10 +43,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .daystore import DayStore
-from .dsl import EventRef, PropFilter, PropKind, QueryTime, TimeIntervalUnit
+from .dsl import (EventRef, PropFilter, PropKind, PropertyRef, QueryTime,
+                  TimeIntervalUnit)
 from .exprs import event_expression
 from .operators.aggregates import DECIMAL_T, bucket_col
-from .rollup import ROLLUP_DT_COL, _day_aligned, day_window_rows
+from .rollup import ROLLUP_DT_COL, day_window_rows, window_supports
 from .schema import EVENT_NAME_COL, EVENT_TIME_COL, EVENT_USER_COL
 
 N_EVENTS_COL = "n_events"
@@ -64,6 +65,10 @@ class UserDaySpec:
     dims: tuple[str, ...] = (EVENT_NAME_COL,)
     value_col: str = "value"
     group_col: str = EVENT_USER_COL
+
+    def dim_matches(self, prop: PropertyRef) -> bool:
+        """Only physical columns are stored dims (no JSON dims here)."""
+        return prop.kind == PropKind.COLUMN and prop.name in self.dims
 
 
 def build_user_day(events: DataFrame,
@@ -134,19 +139,8 @@ def user_day_supports(
     bounds, the event filter expressible on the stored dims, property
     filters inside the dim set, and the caller asking about the grain
     the store was built at."""
-    if spec.group_col != group_col:
-        return False
-    if _day_aligned(time) is None:
-        return False
-    for f in filters:
-        if f.prop.kind != PropKind.COLUMN or f.prop.name not in spec.dims:
-            return False
-    if event is not None:
-        if getattr(event, "custom", None) is not None:
-            return False
-        if event.name is not None and EVENT_NAME_COL not in spec.dims:
-            return False
-    return True
+    return spec.group_col == group_col and window_supports(
+        time, event, filters, spec)
 
 
 def rfm_from_user_day(

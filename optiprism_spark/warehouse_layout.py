@@ -80,7 +80,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .schema import load_table
+from .schema import load_table, read_json, write_json_durable
 
 #: the co-bucketed fact pair: (source table, join/bucket key)
 _FACTS = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
@@ -144,25 +144,14 @@ def _pointer_path(wh: str, tag: str) -> str:
 
 
 def _read_pointer(wh: str, tag: str) -> Optional[dict]:
-    try:
-        with open(_pointer_path(wh, tag)) as f:
-            return json.load(f)
-    except (FileNotFoundError, ValueError):
-        return None
+    return read_json(_pointer_path(wh, tag))
 
 
 def _commit_pointer(wh: str, tag: str, ptr: dict) -> None:
     """THE commit: both live table names change in one os.replace —
     a reader resolving the pair sees one snapshot or the other, never
     a mix (on a transactional lake this is the format's commit)."""
-    os.makedirs(wh, exist_ok=True)
-    path = _pointer_path(wh, tag)
-    tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}"
-    with open(tmp, "w") as f:
-        json.dump(ptr, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    write_json_durable(_pointer_path(wh, tag), ptr)
 
 
 def write_fact_bucketed(

@@ -43,6 +43,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from bench import best_noop_s
+
 PASSES = 3
 #: sessions per user — 6 weekly sessions spread activity over ~6
 #: calendar weeks so the dashboards have a real bucket axis (the
@@ -214,16 +216,6 @@ def _queries():
     }
 
 
-def _time(fn, spark, ev, store, spec, ud, passes: int) -> float:
-    best = float("inf")
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        fn(spark, ev, store, spec, ud).write.format("noop").mode(
-            "overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def _crosscheck(raw_df, routed_df, mode: str) -> dict:
     """x1 value check: routed answers must reproduce the raw path —
     exactly for additive folds, within EPS for HLL-backed actives."""
@@ -367,14 +359,11 @@ def main() -> None:
             raw_fn(spark, c1["events"], c1["store"], spec, c1["ud"]),
             routed_fn(spark, c1["events"], c1["store"], spec, c1["ud"]),
             mode)
-        r1 = _time(raw_fn, spark, c1["events"], c1["store"], spec, c1["ud"],
-                   args.passes)
-        rN = _time(raw_fn, spark, cN["events"], cN["store"], spec, cN["ud"],
-                   args.passes)
-        o1 = _time(routed_fn, spark, c1["events"], c1["store"], spec,
-                   c1["ud"], args.passes)
-        oN = _time(routed_fn, spark, cN["events"], cN["store"], spec,
-                   cN["ud"], args.passes)
+        r1, rN, o1, oN = (
+            best_noop_s(lambda: fn(spark, c["events"], c["store"], spec,
+                                   c["ud"]), args.passes)
+            for fn, c in ((raw_fn, c1), (raw_fn, cN), (routed_fn, c1),
+                          (routed_fn, cN)))
         entry = {
             "class": cls,
             "corpus": corpus,

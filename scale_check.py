@@ -34,11 +34,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
+
+from bench import best_noop_s
 
 SF01 = "/root/testdata/sf0.1"
 PASSES = 3
@@ -311,15 +312,6 @@ def events_queries():
     }
 
 
-def time_query(fn, spark, d, passes: int = PASSES) -> float:
-    best = float("inf")
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        fn(spark, d).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=10)
@@ -378,8 +370,8 @@ def main() -> None:
 
     results = {}
     for name, fn in suite.items():
-        t1 = time_query(fn, spark, d1, passes=args.passes)
-        tN = time_query(fn, spark, dN, passes=args.passes)
+        t1 = best_noop_s(lambda: fn(spark, d1), args.passes)
+        tN = best_noop_s(lambda: fn(spark, dN), args.passes)
         results[name] = {"t1": t1, f"t{args.factor}": tN,
                          "ratio": round(tN / t1, 2) if t1 > 0 else None}
         print(f"{name}: {t1}s -> {tN}s (x{results[name]['ratio']})",

@@ -35,7 +35,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -104,7 +103,7 @@ def main() -> None:
     ap.add_argument("--passes", type=int, default=PASSES)
     args = ap.parse_args()
 
-    from bench import HEADLINE
+    from bench import HEADLINE, best_noop_s
     from optiprism_spark.registry import QUERIES
     from optiprism_spark.session import get_spark
 
@@ -163,20 +162,12 @@ def main() -> None:
     QUERIES["seg_dau"](spark, SF01).write.format("noop").mode("overwrite").save()
     QUERIES["multimodal_features"](spark, SF01).write.format("noop").mode("overwrite").save()
 
-    def best(fn, d) -> float:
-        b = float("inf")
-        for _ in range(args.passes):
-            t0 = time.perf_counter()
-            fn(spark, d).write.format("noop").mode("overwrite").save()
-            b = min(b, time.perf_counter() - t0)
-        return b
-
     t01, t1, ratio = {}, {}, {}
     entries = [(n, QUERIES[n]) for n in headline]
     entries.append(("wh_revenue_by_nation_rawscan", _wh_revenue_rawscan))
     for name, fn in entries:
-        t01[name] = round(best(fn, SF01), 3)
-        t1[name] = round(best(fn, args.dir), 3)
+        t01[name] = best_noop_s(lambda: fn(spark, SF01), args.passes)
+        t1[name] = best_noop_s(lambda: fn(spark, args.dir), args.passes)
         ratio[name] = round(t1[name] / max(t01[name], 1e-3), 2)
         print(f"{name}: sf0.1 {t01[name]}s -> sf1 {t1[name]}s "
               f"(x{ratio[name]})", file=sys.stderr)

@@ -15,10 +15,11 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def spark():
     from optiprism_spark.session import get_spark
 
-    # get_spark's default driver heap (48g) lets the suite's JVM grow
-    # past the host's memory: on a 4 vCPU / 15 GB host its RSS peaked
-    # at 14.5-15.6 GB in a full run and the kernel OOM-killed it twice
-    # mid-suite. An 8g heap keeps it inside the host.
+    # pinned rather than get_spark's default (half the host's memory,
+    # capped at 48g — session.default_driver_memory), so the suite's
+    # heap is the same on every host. The old fixed 48g default let the
+    # suite's JVM outgrow a 4 vCPU / 15 GB host (RSS 14.5-15.6 GB, the
+    # kernel OOM-killed it twice mid-suite); 8g keeps it inside.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark("optiprism_spark_tests", cpus=8)
     yield s

@@ -98,11 +98,14 @@ def test_unified_tick_advances_every_store_once(spark, tmp_path):
         tuple(r) for r in userday.read(spark).collect())
     rollup_snap = sorted(str(tuple(r)) for r in rollup.read(spark).collect())
     advanced = {store: adv.value(store=store)
-                for store in ("rollup", "user_day", "kmv")}
+                for store in ("rollup", "user_day", "kmv", "ann")}
     out2 = app.maintain(batch, emb_batch, stream_id="tick", batch_id=1)
     assert out2["user_day_days"] == 0  # ledger no-op
     assert out2["kmv_days"] == 0  # ledger no-op
     assert ivf.info()["count"] == ivf_count_before + 3  # ledger no-op
+    # both ANN stores (declared 'main' + app-level) ledger-skip the
+    # replay, so neither counts as advanced
+    assert out2["ann_stores"] == 0
     assert sorted(tuple(r) for r in userday.read(spark).collect()) == \
         ud_snap
     # the rollup's counts are additive: only its ledger keeps the

@@ -304,8 +304,8 @@ def test_store_update_prunes_to_affected_partitions(spark, events, tmp_path):
 def test_http_endpoint_routes_through_rollup(spark, tmp_path):
     """The serving path: an App with a rollup_store answers a
     rollup-expressible segmentation request identically to a
-    rollup-less App, and refresh_tables() drops the cached frame after
-    a store update so new days become visible."""
+    rollup-less App, and a day folded into the store outside the app
+    is served by the very next routed request — no refresh_tables()."""
     import json as _json
 
     from optiprism_spark.server import make_app
@@ -323,7 +323,8 @@ def test_http_endpoint_routes_through_rollup(spark, tmp_path):
         }],
     }
     plain = make_app(spark, SF_DIR)
-    routed = make_app(spark, SF_DIR, rollup_store=store)
+    routed = make_app(spark, SF_DIR, rollup_store=store,
+                      result_cache_ttl=None)
     st1, want = call(plain, "POST",
                      "/api/v1/projects/1/queries/event-segmentation", body)
     st2, got = call(routed, "POST",
@@ -359,10 +360,37 @@ def test_http_endpoint_routes_through_rollup(spark, tmp_path):
         return sorted(zip(*[c["data"] for c in cols]))
 
     assert urows(got_u) == urows(want_u)
-    # the routed app cached the rollup frame; refresh clears it
-    assert routed._rollup_cache
-    routed.refresh_tables()
-    assert not routed._rollup_cache
+
+    # freshness: the test data ends 2024-01-30; fold a 2024-01-31
+    # batch in behind the app's back and the next routed request
+    # (result cache off) counts it
+    day31 = load_table(spark, SF_DIR, "events").limit(7).withColumn(
+        "ts", F.lit("2024-01-31 12:00:00").cast("timestamp"))
+    assert store.update(spark, day31) == 1
+    st5, fresh = call(routed, "POST",
+                      "/api/v1/projects/1/queries/event-segmentation", body)
+    assert st5 == 200
+    before = {b: n for n, b in rows(got)}
+    changed = {b: n for n, b in rows(fresh) if before.get(b) != n}
+    assert len(changed) == 1, changed
+    (bucket, n), = changed.items()
+    assert str(bucket).startswith("2024-01-31") and n == 7
+
+
+def test_daystore_read_is_memoized_until_update(spark, events, tmp_path):
+    """DayStore.read serves one memoized day-first frame until the
+    store changes on disk; a fold makes the next read a fresh one."""
+    store = RollupStore(str(tmp_path / "rollup"), SPEC)
+    store.rebuild(spark, events)
+    first = store.read(spark)
+    assert first.columns[0] == ROLLUP_DT_COL
+    assert store.read(spark) is first
+    day31 = events.limit(5).withColumn(
+        "ts", F.lit("2024-01-31 12:00:00").cast("timestamp"))
+    assert store.update(spark, day31) == 1
+    fresh = store.read(spark)
+    assert fresh is not first
+    assert fresh.filter(F.col(ROLLUP_DT_COL) == "2024-01-31").count() > 0
 
 
 def test_update_ledger_skips_replayed_batch(spark, events, tmp_path):
