@@ -12,9 +12,12 @@ once:
   dynamic-overwrite exactly those partitions. Bytes rewritten per
   fold follow the batch's day span, never history.
 - the ``(stream_id, batch_id)`` replay ledger, written AFTER the
-  overwrite: a crash between the two reapplies one batch, which
-  ``rebuild`` repairs; on a transactional lake the overwrite and the
-  ledger write are one commit.
+  overwrite. KNOWN GAP: a crash between the two leaves the batch's
+  days merged but unrecorded, so the restarted scheduler's replay
+  merges them again and double-counts those days. Nothing calls
+  ``rebuild`` after a restart to repair it; only a commit that writes
+  data and ledger together (a transactional lake, or one pointer file
+  holding both) closes the gap.
 - ``recompute_days``: the deletion hook. A fold is additive (counts
   and sums add, sketches union), so removed rows can never be merged
   out as a delta; erasure and retention re-aggregate the affected days
@@ -35,6 +38,7 @@ from .schema import (
     EVENT_TIME_COL,
     memo_plan,
     overwrite_partitions,
+    parquet_bytes,
     read_json,
     write_json_durable,
 )
@@ -66,11 +70,29 @@ class DayStore:
         memo under a ``day:<day_col>`` namespace, so a repeat read
         skips both the footer round-trip and re-analysing the
         projection; the memo's stat fingerprint makes any fold,
-        recompute or expiry a miss, so the next read sees it."""
+        recompute or expiry a miss, so the next read sees it.
+
+        SINGLE-PARTITION RULE: a store whose data files total no more
+        than ``spark.sql.autoBroadcastJoinThreshold`` (Spark's "small
+        enough to ship whole" line; a value <= 0 turns the rule off) is
+        served as ``coalesce(1)``: one scan task and no shuffle. The
+        coalesced child reports ``SinglePartition``, which meets every
+        clustered and all-tuples requirement, so the aggregates,
+        windows and joins above a routed read plan no ``Exchange`` —
+        at dashboard sizes (hundreds of KB) per-stage overhead, not
+        bytes, is the served cost. A day-window ``Filter`` still pushes
+        through the coalesce into the scan's ``PartitionFilters``. The
+        store is sized once per memo miss; a larger store reads with
+        the scan's own file splits."""
         def day_first() -> DataFrame:
             df = spark.read.parquet(self.path)
-            return df.select(
+            df = df.select(
                 self.day_col, *[c for c in df.columns if c != self.day_col])
+            limit = spark._jsparkSession.sessionState().conf() \
+                .autoBroadcastJoinThreshold()
+            if 0 < limit and parquet_bytes(self.path) <= limit:
+                df = df.coalesce(1)
+            return df
 
         return memo_plan(spark, self.path, f"day:{self.day_col}", day_first)
 

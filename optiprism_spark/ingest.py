@@ -46,7 +46,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schema import EVENT_ID_COL, EVENT_TIME_COL, EVENT_USER_COL
+from .schema import (
+    EVENT_ID_COL,
+    EVENT_TIME_COL,
+    EVENT_USER_COL,
+    parquet_bytes,
+)
 
 # ------------------------------------------------------------------ user agent
 
@@ -723,16 +728,7 @@ class TieredCompactionPolicy:
 
     def l1_stats(self, tiers_path: str) -> tuple[int, int]:
         tiers = _committed_tiers(tiers_path)
-        total = 0
-        for t in tiers:
-            for root, _dirs, files in os.walk(t):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        try:
-                            total += os.path.getsize(os.path.join(root, fn))
-                        except OSError:
-                            pass
-        return len(tiers), total
+        return len(tiers), sum(parquet_bytes(t) for t in tiers)
 
     def should_major(self, tiers_path: str) -> bool:
         n, size = self.l1_stats(tiers_path)

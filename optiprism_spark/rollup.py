@@ -608,32 +608,25 @@ def stickiness_from_rollup(
     the routed result hash-match the exact oracle at test scale."""
     if period not in (TimeIntervalUnit.WEEK, TimeIntervalUnit.MONTH):
         raise ValueError("stickiness period must be week or month")
-    from .operators._util import track_persist
-
     day_sk = _activity_day_sketches(rollup, time, spec, event, filters)
     pb = bucket_col(period, ts_col=ROLLUP_DT_COL).alias("bucket")
-    # both branches below (avg-DAU sum and period-union) consume the
-    # per-day sketch frame; persist it at the reduction point (#days
-    # rows) so the store scan + hll_union_agg runs once, not twice
-    per_day = track_persist(
-        day_sk.select(pb, F.hll_sketch_estimate("__sk").alias("__dau"),
-                      F.col("__sk")))
     days_in_period = (
         F.lit(7)
         if period == TimeIntervalUnit.WEEK
         else F.dayofmonth(F.last_day(F.col("bucket")))
     )
-    daily = per_day.groupBy("bucket").agg(
-        (F.sum("__dau") / days_in_period).alias("avg_dau")
+    # the avg-DAU sum and the period union come from ONE aggregate, so
+    # the per-day sketch frame is consumed once and needs no persist
+    per = day_sk.select(pb, F.col("__sk")).groupBy("bucket").agg(
+        F.sum(F.hll_sketch_estimate("__sk")).alias("__dau"),
+        F.hll_sketch_estimate(F.hll_union_agg("__sk")).alias("period_active"),
     )
-    per = per_day.groupBy("bucket").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("__sk")).alias("period_active")
-    )
-    return daily.join(per, "bucket").select(
+    avg_dau = F.col("__dau") / days_in_period
+    return per.select(
         "bucket",
-        "avg_dau",
+        avg_dau.alias("avg_dau"),
         "period_active",
-        (F.col("avg_dau") / F.col("period_active")).alias("stickiness"),
+        (avg_dau / F.col("period_active")).alias("stickiness"),
     )
 
 

@@ -227,6 +227,23 @@ def memo_parquet(spark: SparkSession, path: str) -> DataFrame:
     return memo_plan(spark, path, "raw", lambda: spark.read.parquet(path))
 
 
+def parquet_bytes(path: str) -> int:
+    """Bytes of the parquet files under ``path``. Hidden names (``.``
+    or ``_`` first: checksums, ``_temporary``, ``.spark-staging-*``)
+    are skipped, as Spark's file listing skips them; a file removed
+    while the walk runs (a concurrent fold or compaction) counts 0."""
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                try:
+                    total += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
+    return total
+
+
 def write_json_durable(path: str, obj) -> None:
     """Commit ``obj`` as the JSON file at ``path``: write a temp file
     unique to this process and thread, flush + fsync it, then

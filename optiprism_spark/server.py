@@ -312,6 +312,19 @@ def _sampling_rate(body: dict) -> float:
     return rate
 
 
+def _max_rows_per_user(body: dict) -> Optional[int]:
+    """The whale-guard cap ``maxRowsPerUser`` (funnel and paths): absent
+    means no cap (the exact answer); anything but a positive integer
+    is a client error."""
+    cap = body.get("maxRowsPerUser")
+    if cap is None:
+        return None
+    if isinstance(cap, bool) or not isinstance(cap, int) or cap < 1:
+        raise HttpError(
+            400, f"maxRowsPerUser must be a positive integer, got {cap!r}")
+    return cap
+
+
 def _check_name(name, what: str) -> None:
     """400 unless ``name`` is a non-empty [A-Za-z0-9_-]+ string — the
     name rule of declared rollups, ANN indexes (whose names become
@@ -1812,7 +1825,9 @@ class App:
         metrics.funnel_layout_routed_total().inc(
             path="bucketed" if assume else "shuffle")
         return 200, (
-            funnel_report(events, req, assume_partitioned=assume), dims)
+            funnel_report(events, req, assume_partitioned=assume,
+                          max_rows_per_user=_max_rows_per_user(body)),
+            dims)
 
     def _retention(self, body, m, q):
         """Cohort retention (beyond the reference — no retention
@@ -2718,7 +2733,6 @@ class App:
         props = self._props(pid)
         ces = self._custom_events(pid)
         within_s = body.get("withinSeconds")
-        cap = body.get("maxRowsPerUser")
         kw = dict(
             anchor=api.parse_event_ref(body["anchorEvent"],
                                        custom_events=ces, props=props),
@@ -2729,7 +2743,7 @@ class App:
                     if within_s is not None else None),
             filters=api._grouped_filters(body, api.EVENT_COLUMNS, props=props),
             exclude_events=tuple(body.get("excludeEvents") or ()),
-            max_rows_per_user=(int(cap) if cap is not None else None),
+            max_rows_per_user=_max_rows_per_user(body),
         )
         events = self._events()
         rate = _sampling_rate(body)

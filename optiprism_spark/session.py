@@ -152,8 +152,11 @@ def _prime(spark: SparkSession) -> None:
     by exactly these costs (not I/O); a real cluster pays them once
     at startup — priming moves them to startup here too, which is the
     honest place (they are session costs, not query costs). Costs
-    ~1-2 s at session build; set SPARK_GRAFT_NO_PRIME=1 to skip
-    (e.g. for startup-latency-sensitive tooling)."""
+    about 10 s at session build: ``get_spark(cpus=4)`` with a 3g heap,
+    timed in 3 fresh processes each on a 4-vCPU Intel Xeon host, took
+    17.2-19.0 s (median 17.5) primed and 6.5-8.8 s (median 7.5) with
+    SPARK_GRAFT_NO_PRIME=1. Set that variable to skip priming (e.g.
+    for startup-latency-sensitive tooling)."""
     key = id(spark)
     if key in _PRIMED or os.environ.get("SPARK_GRAFT_NO_PRIME"):
         return

@@ -978,3 +978,61 @@ def test_declared_group_grain_rollup_routes_org_uniques(spark, tmp_path):
     org_store = app._declared_rollup_stores(1)[0]
     assert org_store.spec.group_col == "org_id"
     assert rollup_supports(req, req.events[0], org_store.spec)
+
+
+# ---------------------------------------------- single-partition reads
+
+
+def test_small_store_reads_plan_no_shuffle(spark, tmp_path):
+    """A store under spark.sql.autoBroadcastJoinThreshold is read as
+    one partition: the routed stickiness, RFM and sketched-venn frames
+    above it plan no hash Exchange, and the day window still prunes
+    the scan's partitions. The smoke-data stores are a few hundred KB,
+    far under the default 10 MB."""
+    from optiprism_spark.operators.audience import (
+        audience_venn_from_day_sketches,
+    )
+    from optiprism_spark.rollup import day_range, stickiness_from_rollup
+    from optiprism_spark.streaming.audience import KmvDayStore
+    from optiprism_spark.userday import UserDayStore, rfm_from_user_day
+
+    raw_events = load_table(spark, SF_DIR, "events")
+    roll = RollupStore(str(tmp_path / "rollup"), SPEC)
+    userday = UserDayStore(str(tmp_path / "userday"))
+    kmv = KmvDayStore(str(tmp_path / "kmv"), k=64)
+    for store in (roll, userday, kmv):
+        store.rebuild(spark, raw_events)
+    frames = {
+        "stickiness": stickiness_from_rollup(
+            roll.read(spark), T_DAYS, TimeIntervalUnit.WEEK, SPEC),
+        "rfm": rfm_from_user_day(userday.read(spark), T_DAYS),
+        "venn": audience_venn_from_day_sketches(
+            kmv.read(spark).filter(day_range(T_DAYS, kmv.day_col)),
+            "signup", "purchase", k=kmv.k),
+    }
+    for name, df in frames.items():
+        plan = _plan(df)
+        assert "Exchange hashpartitioning" not in plan, (name, plan)
+        assert "PartitionFilters: [" in plan, (name, plan)
+        assert df.collect(), name
+
+
+def test_store_over_broadcast_threshold_keeps_split_read(spark, tmp_path):
+    """With the threshold off (-1) the rule never applies: a fresh
+    store path reads with the scan's own splits, so the routed
+    aggregate above it keeps its shuffle."""
+    from optiprism_spark.userday import UserDayStore, rfm_from_user_day
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        store = UserDayStore(str(tmp_path / "userday"))
+        store.rebuild(spark, load_table(spark, SF_DIR, "events"))
+        read = store.read(spark)
+        assert "Coalesce" not in _plan(read)
+        assert read.rdd.getNumPartitions() > 1
+        assert "Exchange hashpartitioning" in _plan(
+            rfm_from_user_day(read, T_DAYS))
+    finally:
+        spark.conf.set(key, old)

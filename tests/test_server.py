@@ -107,6 +107,46 @@ def test_funnel_roundtrip(app):
     assert compact == [c["data"] for c in payload["columns"]]
 
 
+def test_funnel_max_rows_per_user_guard(app, spark):
+    """maxRowsPerUser on /queries/funnel: absent, the answer is the
+    exact funnel; a cap of 1 row per user leaves no user a second step
+    to convert on; anything but a positive integer is a 400."""
+    from optiprism_spark.api import parse_funnel
+    from optiprism_spark.operators.funnel import funnel_report
+    from optiprism_spark.schema import load_table
+
+    body = {
+        "time": T_JAN,
+        "group": "user",
+        "steps": [
+            {"events": [{"eventName": "view", "eventType": "regular"}]},
+            {"events": [{"eventName": "click", "eventType": "regular"}]},
+        ],
+        "timeWindow": {"n": 7, "unit": "day"},
+        "count": "unique",
+    }
+    url = "/api/v1/projects/1/queries/funnel"
+
+    def converted(payload):
+        return sum(_col(payload, "step1_total")["data"])
+
+    status, exact = call(app, "POST", url, body)
+    assert status == 200
+    direct = funnel_report(load_table(spark, SF_DIR, "events"),
+                           parse_funnel(body)).collect()
+    assert converted(exact) == sum(r["step1_total"] for r in direct) > 0
+
+    status, capped = call(app, "POST", url, dict(body, maxRowsPerUser=1))
+    assert status == 200
+    assert converted(capped) == 0
+    assert sum(_col(capped, "step0_total")["data"]) > 0
+
+    for bad in (0, -3, 2.5, "5", True):
+        status, err = call(app, "POST", url, dict(body, maxRowsPerUser=bad))
+        assert status == 400, bad
+        assert "maxRowsPerUser" in err["error"]
+
+
 def test_event_records_search_and_get(app):
     body = {
         "time": T_JAN,
