@@ -44,6 +44,18 @@ from .schema import (
 )
 
 
+#: Largest store, in parquet bytes, that ``DayStore.read`` serves as
+#: one partition, set from a measured crossover (DAYSTORE_CUTOFF.json;
+#: local[4], 4 vCPU). The user-day store is the only one that grows
+#: with users. Four threads running the routed growth, RFM and L-ness
+#: queries over it at once, as the dashboard does, ran 13-16% faster
+#: as one task at 0.65 and 1.6 MB, within 4% at 2.3 and 3.3 MB, and
+#: 30% slower at 6.6 MB. Run alone on an idle host, growth and RFM are
+#: already slower as one task at 0.3 MB, while L-ness (a 7-day pruned
+#: scan) is faster at every size measured, up to 10 MB.
+SINGLE_PARTITION_MAX_BYTES = 2 << 20
+
+
 class DayStore:
     """Day-partitioned parquet at ``self.path``. Subclasses set
     ``day_col`` and implement ``build`` and ``merge``; ``ts_col`` is
@@ -73,24 +85,22 @@ class DayStore:
         recompute or expiry a miss, so the next read sees it.
 
         SINGLE-PARTITION RULE: a store whose data files total no more
-        than ``spark.sql.autoBroadcastJoinThreshold`` (Spark's "small
-        enough to ship whole" line; a value <= 0 turns the rule off) is
-        served as ``coalesce(1)``: one scan task and no shuffle. The
-        coalesced child reports ``SinglePartition``, which meets every
-        clustered and all-tuples requirement, so the aggregates,
-        windows and joins above a routed read plan no ``Exchange`` —
-        at dashboard sizes (hundreds of KB) per-stage overhead, not
-        bytes, is the served cost. A day-window ``Filter`` still pushes
-        through the coalesce into the scan's ``PartitionFilters``. The
-        store is sized once per memo miss; a larger store reads with
-        the scan's own file splits."""
+        than ``SINGLE_PARTITION_MAX_BYTES`` is served as
+        ``coalesce(1)``: one scan task and no shuffle. The coalesced
+        child reports ``SinglePartition``, which meets every clustered
+        and all-tuples requirement, so the aggregates, windows and
+        joins above a routed read plan no ``Exchange``. A day-window
+        ``Filter`` still pushes through the coalesce into the scan's
+        ``PartitionFilters``. A larger store reads with the scan's own
+        file splits. The store is sized on each memo miss; a store past
+        the memo's 2048-entry fingerprint limit misses on every call,
+        so it is re-walked per read — the same per-file listing
+        ``spark.read.parquet`` already pays for it."""
         def day_first() -> DataFrame:
             df = spark.read.parquet(self.path)
             df = df.select(
                 self.day_col, *[c for c in df.columns if c != self.day_col])
-            limit = spark._jsparkSession.sessionState().conf() \
-                .autoBroadcastJoinThreshold()
-            if 0 < limit and parquet_bytes(self.path) <= limit:
+            if parquet_bytes(self.path) <= SINGLE_PARTITION_MAX_BYTES:
                 df = df.coalesce(1)
             return df
 

@@ -221,9 +221,11 @@ def _crosscheck(raw_df, routed_df, mode: str) -> dict:
     exactly for additive folds, within EPS for HLL-backed actives."""
     def keyed(df):
         rows = df.collect()
+        # every grid coordinate is a key: a grid whose coordinates
+        # were values would collapse to one arbitrary row per side
         key_cols = [c for c in df.columns if c in (
             "bucket", "cohort_bucket", "event", "event_type",
-            "r_score", "f_score", "m_score")]
+            "r_score", "f_score", "m_score", "l_short", "l_long")]
         out = {}
         for r in rows:
             d = r.asDict()
@@ -256,13 +258,6 @@ def _crosscheck(raw_df, routed_df, mode: str) -> dict:
     return {"match": True, "rows": len(a), "worst_rel": round(worst, 6)}
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=10)
@@ -273,6 +268,7 @@ def main() -> None:
 
     from optiprism_spark.events_gen import generate_events
     from optiprism_spark.rollup import RollupSpec, RollupStore
+    from optiprism_spark.schema import parquet_bytes
     from optiprism_spark.session import get_spark
     from optiprism_spark.userday import UserDayStore
 
@@ -329,12 +325,13 @@ def main() -> None:
             "events": ev, "store": store, "ud": ud,
             "stats": {
                 "events_rows": ev.count(),
-                "events_bytes": _dir_bytes(os.path.join(d, "events.parquet")),
+                "events_bytes": parquet_bytes(
+                    os.path.join(d, "events.parquet")),
                 "store_rows": store.read(spark).count(),
-                "store_bytes": _dir_bytes(os.path.join(d, "rollup")),
+                "store_bytes": parquet_bytes(os.path.join(d, "rollup")),
                 "build_sec": t_build,
                 "userday_rows": ud.read(spark).count(),
-                "userday_bytes": _dir_bytes(os.path.join(d, "userday")),
+                "userday_bytes": parquet_bytes(os.path.join(d, "userday")),
                 "userday_build_sec": t_ud_build,
             },
         }

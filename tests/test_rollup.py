@@ -7,6 +7,7 @@ compaction-loop hook."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -984,11 +985,10 @@ def test_declared_group_grain_rollup_routes_org_uniques(spark, tmp_path):
 
 
 def test_small_store_reads_plan_no_shuffle(spark, tmp_path):
-    """A store under spark.sql.autoBroadcastJoinThreshold is read as
+    """A store under ``daystore.SINGLE_PARTITION_MAX_BYTES`` is read as
     one partition: the routed stickiness, RFM and sketched-venn frames
     above it plan no hash Exchange, and the day window still prunes
-    the scan's partitions. The smoke-data stores are a few hundred KB,
-    far under the default 10 MB."""
+    the scan's partitions. The smoke-data stores are far under it."""
     from optiprism_spark.operators.audience import (
         audience_venn_from_day_sketches,
     )
@@ -1003,36 +1003,38 @@ def test_small_store_reads_plan_no_shuffle(spark, tmp_path):
     for store in (roll, userday, kmv):
         store.rebuild(spark, raw_events)
     frames = {
-        "stickiness": stickiness_from_rollup(
-            roll.read(spark), T_DAYS, TimeIntervalUnit.WEEK, SPEC),
-        "rfm": rfm_from_user_day(userday.read(spark), T_DAYS),
-        "venn": audience_venn_from_day_sketches(
+        "stickiness": (roll, stickiness_from_rollup(
+            roll.read(spark), T_DAYS, TimeIntervalUnit.WEEK, SPEC)),
+        "rfm": (userday, rfm_from_user_day(userday.read(spark), T_DAYS)),
+        "venn": (kmv, audience_venn_from_day_sketches(
             kmv.read(spark).filter(day_range(T_DAYS, kmv.day_col)),
-            "signup", "purchase", k=kmv.k),
+            "signup", "purchase", k=kmv.k)),
     }
-    for name, df in frames.items():
+    for name, (store, df) in frames.items():
         plan = _plan(df)
         assert "Exchange hashpartitioning" not in plan, (name, plan)
-        assert "PartitionFilters: [" in plan, (name, plan)
+        # a non-empty partition filter on the store's day column (an
+        # unpruned scan prints "PartitionFilters: []")
+        assert re.search(
+            rf"PartitionFilters: \[[^\]]*\b{store.day_col}#", plan), (
+            name, plan)
         assert df.collect(), name
 
 
-def test_store_over_broadcast_threshold_keeps_split_read(spark, tmp_path):
-    """With the threshold off (-1) the rule never applies: a fresh
-    store path reads with the scan's own splits, so the routed
-    aggregate above it keeps its shuffle."""
+def test_store_over_cutoff_keeps_split_read(spark, tmp_path, monkeypatch):
+    """A store over ``daystore.SINGLE_PARTITION_MAX_BYTES`` reads with
+    the scan's own splits, so the routed aggregate above it keeps its
+    shuffle. The smoke store is far under the real cutoff, so the
+    cutoff is lowered to 0 bytes, for a fresh store path (the plan memo
+    keys on the path, not the cutoff)."""
+    from optiprism_spark import daystore
     from optiprism_spark.userday import UserDayStore, rfm_from_user_day
 
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        store = UserDayStore(str(tmp_path / "userday"))
-        store.rebuild(spark, load_table(spark, SF_DIR, "events"))
-        read = store.read(spark)
-        assert "Coalesce" not in _plan(read)
-        assert read.rdd.getNumPartitions() > 1
-        assert "Exchange hashpartitioning" in _plan(
-            rfm_from_user_day(read, T_DAYS))
-    finally:
-        spark.conf.set(key, old)
+    monkeypatch.setattr(daystore, "SINGLE_PARTITION_MAX_BYTES", 0)
+    store = UserDayStore(str(tmp_path / "userday"))
+    store.rebuild(spark, load_table(spark, SF_DIR, "events"))
+    read = store.read(spark)
+    assert "Coalesce" not in _plan(read)
+    assert read.rdd.getNumPartitions() > 1
+    assert "Exchange hashpartitioning" in _plan(
+        rfm_from_user_day(read, T_DAYS))

@@ -110,7 +110,8 @@ def test_funnel_roundtrip(app):
 def test_funnel_max_rows_per_user_guard(app, spark):
     """maxRowsPerUser on /queries/funnel: absent, the answer is the
     exact funnel; a cap of 1 row per user leaves no user a second step
-    to convert on; anything but a positive integer is a 400."""
+    to convert on; anything but a positive integer is a 400, on the
+    funnel and the paths route alike."""
     from optiprism_spark.api import parse_funnel
     from optiprism_spark.operators.funnel import funnel_report
     from optiprism_spark.schema import load_table
@@ -141,10 +142,17 @@ def test_funnel_max_rows_per_user_guard(app, spark):
     assert converted(capped) == 0
     assert sum(_col(capped, "step0_total")["data"]) > 0
 
-    for bad in (0, -3, 2.5, "5", True):
-        status, err = call(app, "POST", url, dict(body, maxRowsPerUser=bad))
-        assert status == 400, bad
-        assert "maxRowsPerUser" in err["error"]
+    # /queries/paths parses the field with the same helper
+    paths = ("/api/v1/projects/1/queries/paths", {
+        "time": T_JAN,
+        "anchorEvent": {"eventName": "signup", "eventType": "regular"},
+    })
+    for bad_url, bad_body in ((url, body), paths):
+        for bad in (0, -3, 2.5, "5", True):
+            status, err = call(app, "POST", bad_url,
+                               dict(bad_body, maxRowsPerUser=bad))
+            assert status == 400, (bad_url, bad)
+            assert "maxRowsPerUser" in err["error"]
 
 
 def test_event_records_search_and_get(app):
