@@ -174,10 +174,14 @@ def parse_filter(d: dict, columns=EVENT_COLUMNS, props: Optional[dict] = None) -
     if d.get("type", "property") != "property":
         raise ValueError(f"unsupported filter type {d['type']!r}")
     values = tuple(d.get("value") or ())
-    return PropFilter(
-        parse_property(d, columns, values=values, props=props),
-        _OPS[d["operation"]], values,
-    )
+    op = _OPS[d["operation"]]
+    if not values and op not in (PropOp.TRUE, PropOp.FALSE, PropOp.EMPTY,
+                                 PropOp.EXISTS):
+        # the same rule exprs.property_expression enforces at plan
+        # time, checked while the request is still being parsed
+        raise ValueError(f"{op} needs at least one value")
+    return PropFilter(parse_property(d, columns, values=values, props=props),
+                      op, values)
 
 
 def parse_event_ref(

@@ -3,8 +3,11 @@
 Routes mirror the reference router (platform/src/http/mod.rs:45-113,
 ingester/src/sources/http/mod.rs:240-256). Query plane:
 
-    POST /api/v1/projects/{pid}/queries/event-segmentation
-    POST /api/v1/projects/{pid}/queries/funnel
+    POST /api/v1/projects/{pid}/queries/{name}, name one of
+         event-segmentation  funnel       retention    paths
+         experiment          attribution  percentiles  stickiness
+         growth              rfm          lness        drift
+         audience            similarity   quality      anomaly
     POST /api/v1/projects/{pid}/event-records/search
     GET  /api/v1/projects/{pid}/event-records/{id}
     POST /api/v1/projects/{pid}/group-records/search
@@ -63,6 +66,15 @@ stateless receivers that append to object storage / a log, folded
 in by the maintenance tick (``App.maintain``), so the facade process
 never becomes the write path's bottleneck.
 
+Every query-plane route above except ingest is one ``QueryRoute`` and
+runs four phases: parse (body and project id into a request, with its
+schema checks), route (``QueryContext.route`` picks a rollup or
+user-day store, or raw events), plan (the lazy frame) and collect
+(``frame_to_response``). A parse error is a 400; an exception from
+plan or collect is an engine fault, a 500 with its traceback logged.
+An explicit ``HttpError`` keeps its status, and an operator's
+``F.raise_error`` guard (USER_RAISED_EXCEPTION) stays a 400.
+
 The app is framework-free WSGI: serve it with stdlib ``wsgiref`` (see
 ``serve``) or any production WSGI server unchanged.
 """
@@ -72,10 +84,14 @@ from __future__ import annotations
 import datetime as dt
 import functools
 import json
+import logging
+import math
 import os
 import re
 import threading
+from collections.abc import Mapping
 from decimal import Decimal
+from types import SimpleNamespace as Req
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -93,6 +109,8 @@ from .operators.records import (
 )
 from .queries.event_segmentation import run_event_segmentation
 from .schema import load_table
+
+_log = logging.getLogger(__name__)
 
 
 class HttpError(Exception):
@@ -296,35 +314,6 @@ def _ts_to_us(ts: Optional[str]) -> int:
     return int(parsed.timestamp() * 1_000_000)
 
 
-def _sampling_rate(body: dict) -> float:
-    """samplingRate in (0, 1]; anything else (a percent, a negative,
-    NaN) is a client error — silently routing 2.0 to the exact path
-    would hand back numbers the caller believes are scaled."""
-    raw = body.get("samplingRate", 1.0)
-    try:
-        rate = float(raw)
-    except (TypeError, ValueError):
-        raise HttpError(400, f"samplingRate must be a number, got {raw!r}")
-    if not 0.0 < rate <= 1.0:
-        raise HttpError(
-            400, f"samplingRate must be in (0, 1], got {raw!r} "
-                 "(a fraction, not a percent)")
-    return rate
-
-
-def _max_rows_per_user(body: dict) -> Optional[int]:
-    """The whale-guard cap ``maxRowsPerUser`` (funnel and paths): absent
-    means no cap (the exact answer); anything but a positive integer
-    is a client error."""
-    cap = body.get("maxRowsPerUser")
-    if cap is None:
-        return None
-    if isinstance(cap, bool) or not isinstance(cap, int) or cap < 1:
-        raise HttpError(
-            400, f"maxRowsPerUser must be a positive integer, got {cap!r}")
-    return cap
-
-
 def _check_name(name, what: str) -> None:
     """400 unless ``name`` is a non-empty [A-Za-z0-9_-]+ string — the
     name rule of declared rollups, ANN indexes (whose names become
@@ -333,19 +322,215 @@ def _check_name(name, what: str) -> None:
         raise HttpError(400, f"{what} needs a name of [A-Za-z0-9_-]+")
 
 
-def _timed_query(qtype: str, handler: Callable) -> Callable:
-    """Per-query-type counter around an explore handler, tagging it so
-    the dispatch site can time plan build AND the collect together —
-    handlers return LAZY DataFrames; timing only the handler would
-    report microseconds for every query (the Spark job runs inside
-    frame_to_response)."""
+def _finite(v, key: str) -> float:
+    """``float(v)``, or a 400 unless it is a finite number: NaN and
+    inf pass every ``<= 0`` guard and bound comparison, and int(nan)
+    downstream is a 500."""
+    try:
+        f = float(v)
+    except (TypeError, ValueError):
+        raise HttpError(400, f"{key} must be a number, got {v!r}")
+    if not math.isfinite(f):
+        raise HttpError(400, f"{key} must be finite, got {v!r}")
+    return f
 
-    def h(body, md, qs):
-        metrics.query_queries_total().inc(query_type=qtype)
-        return handler(body, md, qs)
 
-    h._query_type = qtype
-    return h
+def _user_raised(e: Exception) -> bool:
+    """An operator's runtime guard (``F.raise_error``, e.g.
+    srm_check's out-of-table df): a caller error that only surfaces at
+    collect time."""
+    from pyspark.errors import PySparkException
+
+    return isinstance(e, PySparkException) and (
+        e.getCondition() or "").startswith("USER_RAISED_EXCEPTION")
+
+
+def _engine_fault(e: Exception) -> HttpError:
+    """The answer to an exception a query raised after its parse
+    phase, in plan or collect: 400 for an operator's runtime guard
+    (``_user_raised``), else an engine fault — a 500, with the
+    traceback logged."""
+    if _user_raised(e):
+        return HttpError(400, str(e))
+    _log.error("query engine fault", exc_info=e)
+    first = (str(e).strip().splitlines() or [""])[0]  # the log has the rest
+    return HttpError(500, f"engine fault: {type(e).__name__}: {first}")
+
+
+class _LazyMap(Mapping):
+    """A catalog map read on first lookup, so a request that names no
+    custom event or JSON property makes no catalog round trip."""
+
+    def __init__(self, load: Callable[[], dict]):
+        self._load = load
+
+    @functools.cached_property
+    def _m(self) -> dict:
+        return self._load()
+
+    def __getitem__(self, key):
+        return self._m[key]
+
+    def __iter__(self):
+        return iter(self._m)
+
+    def __len__(self):
+        return len(self._m)
+
+
+class QueryContext:
+    """One query request's state, built once by its ``QueryRoute``:
+    the project id (strict, like the CRUD routes'), the catalog's
+    property dtypes and custom events (read on first use), the events
+    snapshot (resolved on first use), the body readers the routes
+    share, and ``route``, the store-routing seam."""
+
+    def __init__(self, app: "App", body: dict, md: dict):
+        self.app, self.body, self.md = app, body, md
+        try:
+            self.pid = int(md["pid"])
+        except ValueError:
+            raise HttpError(
+                400, f"project id must be an integer, got {md['pid']!r}")
+        self.props = _LazyMap(
+            lambda: app.catalog.properties_dtypes(self.pid))
+        self.custom_events = _LazyMap(lambda: {
+            **app.catalog.custom_events_map(self.pid),
+            **(app.custom_events or {})})
+
+    @functools.cached_property
+    def resolved(self) -> "tuple[DataFrame, bool]":
+        return self.app._events_resolved()  # (events, partitioned)
+
+    @property
+    def events(self) -> DataFrame:
+        return self.resolved[0]
+
+    def check_columns(self, cols) -> None:
+        """400 on the first of ``cols`` the events frame lacks."""
+        for c in cols:
+            if c not in self.events.columns:
+                raise HttpError(400, f"unknown column {c!r}")
+
+    # ---- body readers
+
+    def time(self, key: str = "time", required: bool = True):
+        """The QueryTime under ``key``; None if absent and optional."""
+        if not required and not self.body.get(key):
+            return None
+        return api.parse_time(self.body[key], self.app.now)
+
+    def event_ref(self, d: dict):
+        return api.parse_event_ref(d, custom_events=self.custom_events,
+                                   props=self.props)
+
+    def event(self, key: str = "event"):
+        """The optional event reference (None: every event)."""
+        d = self.body.get(key)
+        return self.event_ref(d) if d else None
+
+    def prop(self, d: dict):
+        return api.parse_property(d, props=self.props)
+
+    def filters(self) -> tuple:
+        return api._grouped_filters(self.body, api.EVENT_COLUMNS,
+                                    props=self.props)
+
+    def period(self, allowed: tuple, default: str = "week"):
+        from .dsl import TimeIntervalUnit
+
+        raw = self.body.get("period", default)
+        if raw not in allowed:
+            raise HttpError(400, f"period must be {', '.join(allowed[:-1])} "
+                                 f"or {allowed[-1]}")
+        return TimeIntervalUnit(raw)
+
+    def sampling_rate(self) -> float:
+        """samplingRate in (0, 1]; anything else (a percent, a
+        negative, NaN) is a client error: silently routing 2.0 to the
+        exact path would hand back numbers the caller believes are
+        scaled."""
+        raw = self.body.get("samplingRate", 1.0)
+        if not 0.0 < _finite(raw, "samplingRate") <= 1.0:
+            raise HttpError(
+                400, f"samplingRate must be in (0, 1], got {raw!r} "
+                     "(a fraction, not a percent)")
+        return float(raw)
+
+    def max_rows_per_user(self) -> Optional[int]:
+        """The whale-guard cap ``maxRowsPerUser`` (funnel and paths):
+        absent means no cap (the exact answer); anything but a positive
+        integer is a client error."""
+        cap = self.body.get("maxRowsPerUser")
+        if cap is None:
+            return None
+        if isinstance(cap, bool) or not isinstance(cap, int) or cap < 1:
+            raise HttpError(
+                400, f"maxRowsPerUser must be a positive integer, got {cap!r}")
+        return cap
+
+    # ---- store routing
+
+    def route(self, kind: str, supports, from_store, raw):
+        """``from_store(store_df, spec)`` over the first candidate
+        store whose spec ``supports``, else ``raw()``. ``kind``
+        "rollup" tries the project's rollups (``App._day_stores``
+        order) and counts into
+        optiprism_query_rollup_routed_total{path=rollup|raw};
+        "user_day:<surface>" tries the user-day store and counts into
+        optiprism_user_day_routed_total{surface, path=store|raw}.
+        ``supports=None`` marks a request no store can answer."""
+        app = self.app
+        if kind == "rollup":
+            stores = [s for key, s in app._day_stores(self.pid)
+                      if key == "rollup_stores"] if supports else []
+            hit, count = "rollup", lambda path: (
+                metrics.query_rollup_routed_total().inc(path=path))
+        else:
+            surface, s = kind.split(":", 1)[1], app.user_day_store
+            stores = [s] if s is not None and s.exists() else []
+            hit, count = "store", lambda path: (
+                metrics.user_day_routed_total().inc(surface=surface,
+                                                    path=path))
+        for store in stores:
+            if supports(store.spec):
+                count(hit)
+                return from_store(store.read(app.spark), store.spec)
+        count("raw")
+        return raw()
+
+
+class QueryRoute:
+    """One query route's callable ``(body, md, qs) -> (200, (frame,
+    dims))``: counts the request, builds its ``QueryContext``, then
+    runs ``parse(body, ctx) -> req`` and ``plan(req, ctx) -> (frame,
+    dims)``. Any exception raised while parsing is a 400; one raised
+    by the plan is an engine fault (``_engine_fault``). The dispatcher
+    collects the lazy frame and maps a collect failure the same way.
+    An explicit HttpError keeps its status in every phase."""
+
+    def __init__(self, app: "App", qtype: str, parse: Callable,
+                 plan: Callable):
+        self.app, self._query_type = app, qtype
+        self.parse, self.plan = parse, plan
+
+    def __call__(self, body, md, qs):
+        metrics.query_queries_total().inc(query_type=self._query_type)
+        if not isinstance(body, dict):
+            raise HttpError(400, "request body must be a JSON object")
+        try:
+            ctx = QueryContext(self.app, body, md)
+            req = self.parse(body, ctx)
+        except HttpError:
+            raise
+        except Exception as e:
+            raise HttpError(400, f"{type(e).__name__}: {e}") from e
+        try:
+            return 200, self.plan(req, ctx)
+        except HttpError:
+            raise
+        except Exception as e:
+            raise _engine_fault(e) from e
 
 
 class _ResultCache:
@@ -632,57 +817,43 @@ class App:
             ("PUT", re.compile(r"^/api/v1/profile/email$"), self._profile_email, None),
             ("PUT", re.compile(r"^/api/v1/profile/password$"),
              self._profile_password, None),
-            # ---- queries (ExploreReports, reference funnel.rs:55 etc) ----
-            ("POST", re.compile(P + r"/queries/event-segmentation$"),
-             _timed_query("event_segmentation", self._event_segmentation),
-             explore),
-            ("POST", re.compile(P + r"/queries/funnel$"),
-             _timed_query("funnel", self._funnel), explore),
-            ("POST", re.compile(P + r"/queries/retention$"),
-             _timed_query("retention", self._retention), explore),
-            ("POST", re.compile(P + r"/queries/paths$"),
-             _timed_query("paths", self._paths), explore),
-            ("POST", re.compile(P + r"/queries/experiment$"),
-             _timed_query("experiment", self._experiment), explore),
-            ("POST", re.compile(P + r"/queries/attribution$"),
-             _timed_query("attribution", self._attribution), explore),
-            ("POST", re.compile(P + r"/queries/percentiles$"),
-             _timed_query("percentiles", self._percentiles), explore),
-            ("POST", re.compile(P + r"/queries/stickiness$"),
-             _timed_query("stickiness", self._stickiness), explore),
-            ("POST", re.compile(P + r"/queries/growth$"),
-             _timed_query("growth", self._growth), explore),
-            ("POST", re.compile(P + r"/queries/rfm$"),
-             _timed_query("rfm", self._rfm), explore),
-            ("POST", re.compile(P + r"/queries/lness$"),
-             _timed_query("lness", self._lness), explore),
-            ("POST", re.compile(P + r"/queries/drift$"),
-             _timed_query("drift", self._drift), explore),
-            ("POST", re.compile(P + r"/queries/audience$"),
-             _timed_query("audience", self._audience), explore),
-            ("POST", re.compile(P + r"/queries/similarity$"),
-             _timed_query("similarity", self._similarity), explore),
-            ("POST", re.compile(P + r"/queries/quality$"),
-             _timed_query("quality", self._quality), explore),
-            ("POST", re.compile(P + r"/queries/anomaly$"),
-             _timed_query("anomaly", self._anomaly), explore),
-            ("POST", re.compile(P + r"/event-records/search$"),
-             _timed_query("event_records_search", self._event_records_search),
-             explore),
-            ("GET", re.compile(P + r"/event-records/(?P<id>\d+)$"),
-             _timed_query("event_record", self._event_record_by_id), explore),
-            ("POST", re.compile(P + r"/group-records/search$"),
-             _timed_query("group_records_search", self._group_records_search),
-             explore),
-            ("GET", re.compile(P + r"/group-records/(?P<group>[^/]+)/(?P<id>\d+)$"),
-             _timed_query("group_record", self._group_record_by_id), explore),
-            ("POST", re.compile(P + r"/property-values$"),
-             _timed_query("property_values", self._property_values), explore),
             # ---- ingest (token-in-path auth, as the reference ingester) ----
             ("POST", re.compile(r"^/api/v1/ingest/(?P<token>[^/]+)/track$"),
              self._track, None),
             ("POST", re.compile(r"^/api/v1/ingest/(?P<token>[^/]+)/identify$"),
              self._identify, None),
+        ]
+        # ---- queries (ExploreReports, reference funnel.rs:55 etc):
+        # one QueryRoute per query type, over _parse_<qtype> and
+        # _plan_<qtype>
+        self._routes += [
+            (method, re.compile(P + path + "$"),
+             QueryRoute(self, qtype, getattr(self, "_parse_" + qtype),
+                        getattr(self, "_plan_" + qtype)), explore)
+            for method, path, qtype in (
+                ("POST", "/queries/event-segmentation", "event_segmentation"),
+                ("POST", "/queries/funnel", "funnel"),
+                ("POST", "/queries/retention", "retention"),
+                ("POST", "/queries/paths", "paths"),
+                ("POST", "/queries/experiment", "experiment"),
+                ("POST", "/queries/attribution", "attribution"),
+                ("POST", "/queries/percentiles", "percentiles"),
+                ("POST", "/queries/stickiness", "stickiness"),
+                ("POST", "/queries/growth", "growth"),
+                ("POST", "/queries/rfm", "rfm"),
+                ("POST", "/queries/lness", "lness"),
+                ("POST", "/queries/drift", "drift"),
+                ("POST", "/queries/audience", "audience"),
+                ("POST", "/queries/similarity", "similarity"),
+                ("POST", "/queries/quality", "quality"),
+                ("POST", "/queries/anomaly", "anomaly"),
+                ("POST", "/event-records/search", "event_records_search"),
+                ("GET", r"/event-records/(?P<id>\d+)", "event_record"),
+                ("POST", "/group-records/search", "group_records_search"),
+                ("GET", r"/group-records/(?P<group>[^/]+)/(?P<id>\d+)",
+                 "group_record"),
+                ("POST", "/property-values", "property_values"),
+            )
         ]
         # ---- server plane: ManageServer (reference backups.rs:28) ----
         manage_server = root(rbac.MANAGE_SERVER)
@@ -1288,7 +1459,7 @@ class App:
             self._data_version += 1
         return out
 
-    def _similarity(self, body, m, q):
+    def _parse_similarity(self, body, ctx):
         """Vector similarity over the embeddings table (beyond the
         reference — it ships no vector search). Body::
 
@@ -1302,21 +1473,21 @@ class App:
         IvfStore — probe-only per query: the DECLARED index named by
         ``index`` (POST /schema/ann-indexes), or the app-level store
         when no name is given; 409 when neither exists (same contract
-        as audience's sketched knob)."""
-        from pyspark.sql import functions as F
+        as audience's sketched knob). The sizing knobs are "auto"
+        (the default) or positive integers."""
+        from .operators.sizing import validate_ann_params
 
-        from .operators import similarity as sim
-        from .schema import load_table
-
-        pid = self._pid(m)
-        typ = body.get("type")
-        method = body.get("method", "ivf")
-        indexed = bool(body.get("indexed"))
-        if typ not in ("topk", "near-pairs"):
+        typ, method = body.get("type"), body.get("method", "ivf")
+        methods = {"topk": ("brute", "lsh", "ivf"),
+                   "near-pairs": ("brute", "lsh", "banded", "ivf")}
+        if typ not in methods:
             raise HttpError(400, "type must be topk or near-pairs")
+        if method not in methods[typ]:
+            raise HttpError(400, f"unknown {typ} method {method!r}")
+        indexed = bool(body.get("indexed"))
         if indexed and method != "ivf":
             raise HttpError(400, "indexed similarity requires method=ivf")
-        store = (self._resolve_ann_store(pid, body.get("index"))
+        store = (self._resolve_ann_store(ctx.pid, body.get("index"))
                  if indexed else None)
         if indexed and store is None:
             raise HttpError(
@@ -1328,52 +1499,63 @@ class App:
             raise HttpError(
                 409, "the configured ANN store has no built index on "
                      "disk — rebuild it or drop indexed: true")
+
+        def knob(key):
+            v = body.get(key, "auto")
+            if v != "auto" and (isinstance(v, bool) or not isinstance(v, int)
+                                or v < 1):
+                raise ValueError(
+                    f"{key} must be 'auto' or a positive integer, got {v!r}")
+            return v
+
+        r = Req(typ=typ, method=method, store=store, planes=knob("planes"),
+                n_centroids=knob("nCentroids"), nprobe=knob("nprobe"),
+                bands=knob("bands"), rows_per_band=knob("rowsPerBand"),
+                max_bucket=knob("maxBucket"))
+        validate_ann_params(**{k: getattr(r, k) for k in (
+            "planes", "n_centroids", "nprobe") if getattr(r, k) != "auto"})
+        if typ == "topk":
+            if not body.get("queryIds"):
+                raise ValueError("topk requires queryIds")
+            r.qids = [int(i) for i in body["queryIds"]]
+            r.k = int(body.get("k", 5))
+            validate_ann_params(k=r.k)
+        else:
+            r.threshold = float(body.get("threshold", 0.9))
+        return r
+
+    def _plan_similarity(self, r, ctx):
+        from pyspark.sql import functions as F
+
+        from .operators import similarity as sim
+
         emb = load_table(self.spark, self.sf_dir, "embeddings")
-        try:
-            if typ == "topk":
-                qids = body.get("queryIds")
-                if not qids:
-                    raise ValueError("topk requires queryIds")
-                queries = emb.filter(
-                    F.col("vec_id").isin([int(i) for i in qids]))
-                k = int(body.get("k", 5))
-                if method == "brute":
-                    out = sim.cosine_topk(emb, queries, k=k)
-                elif method == "lsh":
-                    out = sim.cosine_topk_lsh(
-                        emb, queries, k=k, planes=body.get("planes", "auto"))
-                elif method == "ivf":
-                    out = sim.cosine_topk_ivf(
-                        emb, queries, k=k,
-                        n_centroids=body.get("nCentroids", "auto"),
-                        nprobe=body.get("nprobe", "auto"), store=store)
-                else:
-                    raise ValueError(f"unknown topk method {method!r}")
+        if r.typ == "topk":
+            queries = emb.filter(F.col("vec_id").isin(r.qids))
+            if r.method == "brute":
+                out = sim.cosine_topk(emb, queries, k=r.k)
+            elif r.method == "lsh":
+                out = sim.cosine_topk_lsh(emb, queries, k=r.k,
+                                          planes=r.planes)
             else:
-                threshold = float(body.get("threshold", 0.9))
-                if method == "brute":
-                    out = sim.embedding_near_pairs(
-                        emb, threshold=threshold, exact=True)
-                elif method == "lsh":
-                    out = sim.embedding_near_pairs(
-                        emb, threshold=threshold,
-                        planes=body.get("planes", "auto"))
-                elif method == "banded":
-                    out = sim.embedding_near_pairs_banded(
-                        emb, threshold=threshold,
-                        bands=body.get("bands", "auto"),
-                        rows_per_band=body.get("rowsPerBand", "auto"))
-                elif method == "ivf":
-                    out = sim.embedding_near_pairs_ivf(
-                        emb, threshold=threshold,
-                        n_centroids=body.get("nCentroids", "auto"),
-                        max_bucket=body.get("maxBucket", "auto"),
-                        store=store)
-                else:
-                    raise ValueError(f"unknown near-pairs method {method!r}")
-        except (ValueError, TypeError) as e:
-            raise HttpError(400, f"bad similarity request: {e}")
-        return 200, (out, set())
+                out = sim.cosine_topk_ivf(
+                    emb, queries, k=r.k, n_centroids=r.n_centroids,
+                    nprobe=r.nprobe, store=r.store)
+        elif r.method == "brute":
+            out = sim.embedding_near_pairs(emb, threshold=r.threshold,
+                                           exact=True)
+        elif r.method == "lsh":
+            out = sim.embedding_near_pairs(emb, threshold=r.threshold,
+                                           planes=r.planes)
+        elif r.method == "banded":
+            out = sim.embedding_near_pairs_banded(
+                emb, threshold=r.threshold, bands=r.bands,
+                rows_per_band=r.rows_per_band)
+        else:
+            out = sim.embedding_near_pairs_ivf(
+                emb, threshold=r.threshold, n_centroids=r.n_centroids,
+                max_bucket=r.max_bucket, store=r.store)
+        return out, set()
 
     def gate_quality(self, new_events, pid: int = 0) -> list[dict]:
         """Run the project's DECLARED quality batteries over an ingest
@@ -1404,7 +1586,7 @@ class App:
         """Link a property to an event (reference events.rs
         attach_property — the catalog edge the UI uses to offer
         per-event property pickers)."""
-        pid, prop_id = self._pid(m), int(m["prop_id"])
+        pid, prop_id = int(m["pid"]), int(m["prop_id"])
         self.catalog.get("event_property", prop_id, project_id=pid)  # must exist
         ev = self.catalog.get("event", int(m["id"]), project_id=pid)
         ids = list(dict.fromkeys((ev.get("propertyIds") or []) + [prop_id]))
@@ -1412,7 +1594,7 @@ class App:
             "event", ev["id"], {"propertyIds": ids}, project_id=pid)
 
     def _detach_property(self, body, m, q):
-        pid = self._pid(m)
+        pid = int(m["pid"])
         ev = self.catalog.get("event", int(m["id"]), project_id=pid)
         ids = [i for i in (ev.get("propertyIds") or []) if i != int(m["prop_id"])]
         return 200, self.catalog.update(
@@ -1744,143 +1926,119 @@ class App:
                 for key, s in self._day_stores(pid)
                 if key == "rollup_stores"] or None
 
-    def _route_rollup(self, pid: int, supports, routed, raw):
-        """``routed(rollup_df, spec)`` from the first of the project's
-        rollups (``_rollup``) whose spec ``supports``, else ``raw()``;
-        ``supports=None`` marks a request no rollup can answer. The
-        decision lands in optiprism_query_rollup_routed_total."""
-        if supports is not None:
-            for roll, spec in self._rollup(pid) or ():
-                if supports(spec):
-                    metrics.query_rollup_routed_total().inc(path="rollup")
-                    return routed(roll, spec)
-        metrics.query_rollup_routed_total().inc(path="raw")
-        return raw()
+    def _parse_event_segmentation(self, body, ctx):
+        from .operators.windows import offset_in_buckets
 
-    def _route_user_day(self, surface: str, supports, routed, raw):
-        """``routed(store_df, spec)`` from the user-day store when it
-        exists and ``supports(spec)``, else ``raw()``; the decision
-        lands in optiprism_user_day_routed_total under ``surface``."""
-        store = self.user_day_store
-        if store is not None and store.exists() and supports(store.spec):
-            metrics.user_day_routed_total().inc(surface=surface,
-                                                path="store")
-            return routed(store.read(self.spark), store.spec)
-        metrics.user_day_routed_total().inc(surface=surface, path="raw")
-        return raw()
-
-    def _pid(self, m) -> int:
-        pid = m.get("pid", "")
-        return int(pid) if pid.isdigit() else 0
-
-    def _custom_events(self, pid: int) -> dict:
-        out = self.catalog.custom_events_map(pid)
-        out.update(self.custom_events or {})
-        return out or {}
-
-    def _props(self, pid: int) -> dict:
-        return self.catalog.properties_dtypes(pid)
-
-    def _event_segmentation(self, body, m, q):
-        pid = self._pid(m)
         req = api.parse_event_segmentation(
-            body, now=self.now, custom_events=self._custom_events(pid),
-            props=self._props(pid),
-        )
+            body, now=self.now, custom_events=ctx.custom_events,
+            props=ctx.props)
+        for e in req.events:
+            if all(q.kind == "formula" for q in e.queries):
+                raise ValueError(
+                    "each event needs a metric query (a formula alone "
+                    "has nothing to reference)")
+        if req.compare is not None:
+            offset_in_buckets(req.compare.offset, req.compare.unit.value,
+                              req.interval.value)
+        for seg in req.segments:
+            if not seg.conditions or not all(seg.conditions):
+                raise ValueError(f"segment {seg.name!r} has an empty "
+                                 "condition group")
         dims = {"bucket", "event", "segment"}
         dims.update(b.name for b in req.breakdowns)
         for e in req.events:
             dims.update(b.name for b in e.breakdowns)
-        rate = _sampling_rate(body)
-        if rate < 1.0:
+        return Req(req=req, dims=dims, rate=ctx.sampling_rate())
+
+    def _plan_event_segmentation(self, r, ctx):
+        if r.rate < 1.0:
             # estimation mode: user-coherent sample, additive metrics
             # Horvitz-Thompson scaled (operators/estimate.py); the
             # rollup is bypassed — it holds exact pre-aggregates, not
             # per-user state, so it cannot answer a sampled request
             from .operators.estimate import estimated_event_segmentation
 
-            return 200, (
-                estimated_event_segmentation(self._events(), req, rate),
-                dims,
-            )
-        return 200, (
-            run_event_segmentation(self._events(), req, rollup=self._rollup(pid)),
-            dims,
-        )
+            return (estimated_event_segmentation(ctx.events, r.req, r.rate),
+                    r.dims)
+        return (run_event_segmentation(ctx.events, r.req,
+                                       rollup=self._rollup(ctx.pid)),
+                r.dims)
 
-    def _funnel(self, body, m, q):
-        pid = self._pid(m)
+    def _parse_funnel(self, body, ctx):
+        from .dsl import StepOrder
+
         req = api.parse_funnel(
-            body, now=self.now, custom_events=self._custom_events(pid),
-            props=self._props(pid),
-        )
+            body, now=self.now, custom_events=ctx.custom_events,
+            props=ctx.props)
+        if not req.steps:
+            raise ValueError("funnel needs at least one step")
+        for idx, st in enumerate(req.steps):
+            if st.order == StepOrder.ANY and not st.any_ranges:
+                raise ValueError(f"step {idx}: an 'any' order needs steps")
         dims = {"bucket", "step"}
         dims.update(b.name for b in req.breakdowns)
+        return Req(req=req, dims=dims, cap=ctx.max_rows_per_user())
+
+    def _plan_funnel(self, r, ctx):
         # routed layout: a fully-compacted lake serves the bucketed
         # base table, so the funnel's one shuffle (repartition by
         # user) is elided — the write-time layout already delivers
         # per-user partitions. Same discipline as the warehouse
         # fact routing; the decision is counted for operators.
-        events, assume = self._events_resolved()
+        events, assume = ctx.resolved
         metrics.funnel_layout_routed_total().inc(
             path="bucketed" if assume else "shuffle")
-        return 200, (
-            funnel_report(events, req, assume_partitioned=assume,
-                          max_rows_per_user=_max_rows_per_user(body)),
-            dims)
+        return (funnel_report(events, r.req, assume_partitioned=assume,
+                              max_rows_per_user=r.cap), r.dims)
 
-    def _retention(self, body, m, q):
+    def _parse_retention(self, body, ctx):
         """Cohort retention (beyond the reference — no retention
         operator exists there). Body: ``{time, intervalUnit,
         cohortEvent, returnEvent, maxPeriods?, unbounded?, filters?}``
-        with the same event/filter dicts as the other query routes."""
-        pid = self._pid(m)
+        with the same event/filter dicts as the other query routes.
+        The interval must be day, week or month: the user-day store's
+        dt column is date-grained, and the raw operator refuses
+        sub-day periods too."""
         from .dsl import TimeIntervalUnit
-        from .operators.retention import _PERIOD_UNITS as \
-            _RETENTION_PERIOD_UNITS
-        from .operators.retention import retention
-        from .userday import user_day_supports
+        from .operators.retention import _PERIOD_UNITS
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        req_filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        kw = dict(
-            cohort_event=api.parse_event_ref(body["cohortEvent"],
-                                             custom_events=ces, props=props),
-            return_event=api.parse_event_ref(body["returnEvent"],
-                                             custom_events=ces, props=props),
-            time=api.parse_time(body["time"], self.now),
-            interval=TimeIntervalUnit(body.get("intervalUnit", "week")),
+        interval = TimeIntervalUnit(body.get("intervalUnit", "week"))
+        if interval not in _PERIOD_UNITS:
+            raise ValueError(
+                f"retention interval must be one of {_PERIOD_UNITS}")
+        return Req(rate=ctx.sampling_rate(), kw=dict(
+            cohort_event=ctx.event_ref(body["cohortEvent"]),
+            return_event=ctx.event_ref(body["returnEvent"]),
+            time=ctx.time(), interval=interval,
             max_periods=int(body.get("maxPeriods", 12)),
             unbounded=bool(body.get("unbounded", False)),
-            filters=req_filters,
-        )
-        rate = _sampling_rate(body)
-        if rate < 1.0:
+            filters=ctx.filters()))
+
+    def _plan_retention(self, r, ctx):
+        from .operators.retention import retention
+        from .userday import retention_from_user_day, user_day_supports
+
+        kw = r.kw
+        if r.rate < 1.0:
             from .operators.estimate import estimated_retention
 
-            out = estimated_retention(self._events(), rate, **kw)
+            out = estimated_retention(ctx.events, r.rate, **kw)
         else:
             # exact routed path: cohorts/returns/sizes fold from
             # (dt, user) partials through the SHARED matrix tail
-            from .userday import retention_from_user_day
-
-            out = self._route_user_day(
-                "retention",
-                lambda spec: (
-                    kw["interval"] in _RETENTION_PERIOD_UNITS
-                    and user_day_supports(kw["time"], kw["cohort_event"],
-                                          req_filters, spec)
-                    and user_day_supports(kw["time"], kw["return_event"],
-                                          req_filters, spec)),
+            out = ctx.route(
+                "user_day:retention",
+                lambda spec: all(
+                    user_day_supports(kw["time"], kw[e], kw["filters"], spec)
+                    for e in ("cohort_event", "return_event")),
                 lambda df, spec: retention_from_user_day(
                     df, kw["cohort_event"], kw["return_event"], kw["time"],
                     kw["interval"], kw["max_periods"], spec=spec,
-                    filters=req_filters, unbounded=kw["unbounded"]),
-                lambda: retention(self._events(), **kw))
-        return 200, (out, {"cohort_bucket", "period"})
+                    filters=kw["filters"], unbounded=kw["unbounded"]),
+                lambda: retention(ctx.events, **kw))
+        return out, {"cohort_bucket", "period"}
 
-    def _stickiness(self, body, m, q):
+    def _parse_stickiness(self, body, ctx):
         """Engagement stickiness (DAU/WAU or DAU/MAU trend — beyond
         the reference, whose DAU/WAU/MAU stop at chart series). Body:
         ``{time, period? (week|month), event?, filters?}``.
@@ -1888,89 +2046,56 @@ class App:
         the request is rollup-expressible (``activity_supports``: the
         most-refreshed engagement surface is the first rollup client;
         sketch estimates, ± ~1% at scale) and falls back to the exact
-        raw scan otherwise; the routing decision lands in
-        optiprism_query_rollup_routed_total like segmentation's."""
-        pid = self._pid(m)
-        from .dsl import TimeIntervalUnit
+        raw scan otherwise."""
+        return Req(time=ctx.time(), period=ctx.period(("week", "month")),
+                   event=ctx.event(), filters=ctx.filters())
+
+    def _plan_stickiness(self, r, ctx):
         from .operators.engagement import stickiness
         from .rollup import activity_supports, stickiness_from_rollup
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        time = api.parse_time(body["time"], self.now)
-        try:
-            period = TimeIntervalUnit(body.get("period", "week"))
-        except ValueError:
-            raise HttpError(400, "period must be week or month")
-        if period not in (TimeIntervalUnit.WEEK, TimeIntervalUnit.MONTH):
-            raise HttpError(400, "period must be week or month")
-        event = (
-            api.parse_event_ref(body["event"], custom_events=ces, props=props)
-            if body.get("event") else None)
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        out = self._route_rollup(
-            pid,
-            lambda spec: activity_supports(time, event, filters, spec),
+        return ctx.route(
+            "rollup",
+            lambda spec: activity_supports(r.time, r.event, r.filters, spec),
             lambda roll, spec: stickiness_from_rollup(
-                roll, time, period, spec, event, filters),
-            lambda: stickiness(self._events(), time, period=period,
-                               event=event, filters=filters))
-        return 200, (out, {"bucket"})
+                roll, r.time, r.period, spec, r.event, r.filters),
+            lambda: stickiness(ctx.events, r.time, period=r.period,
+                               event=r.event, filters=r.filters)), {"bucket"}
 
-    def _growth(self, body, m, q):
+    def _parse_growth(self, body, ctx):
         """Growth-accounting ledger (beyond the reference): per-bucket
         new / retained / resurrected / churned / active user counts.
         Body: ``{time, period? (day|week|month), event?, filters?}``.
         One distinct + one user-partitioned window — the standard
         weekly growth chart in a single declarative plan."""
-        pid = self._pid(m)
-        from .dsl import TimeIntervalUnit
-        from .operators.engagement import growth_accounting
+        return Req(time=ctx.time(),
+                   period=ctx.period(("day", "week", "month")),
+                   event=ctx.event(), filters=ctx.filters())
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        time = api.parse_time(body["time"], self.now)
-        try:
-            period = TimeIntervalUnit(body.get("period", "week"))
-        except ValueError:
-            raise HttpError(400, "period must be day, week or month")
-        if period not in (TimeIntervalUnit.DAY, TimeIntervalUnit.WEEK,
-                          TimeIntervalUnit.MONTH):
-            raise HttpError(400, "period must be day, week or month")
-        event = (
-            api.parse_event_ref(body["event"], custom_events=ces, props=props)
-            if body.get("event") else None)
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
+    def _plan_growth(self, r, ctx):
+        from .operators.engagement import growth_accounting
         from .userday import growth_from_user_day, user_day_supports
 
-        out = self._route_user_day(
-            "growth",
-            lambda spec: user_day_supports(time, event, filters, spec),
+        return ctx.route(
+            "user_day:growth",
+            lambda spec: user_day_supports(r.time, r.event, r.filters, spec),
             lambda df, spec: growth_from_user_day(
-                df, time, period=period, spec=spec, event=event,
-                filters=filters),
-            lambda: growth_accounting(self._events(), time, period=period,
-                                      event=event, filters=filters))
-        return 200, (out, {"bucket"})
+                df, r.time, period=r.period, spec=spec, event=r.event,
+                filters=r.filters),
+            lambda: growth_accounting(ctx.events, r.time, period=r.period,
+                                      event=r.event, filters=r.filters)
+        ), {"bucket"}
 
-    def _lness(self, body, m, q):
+    def _parse_lness(self, body, ctx):
         """L7/L28 habit-strength grid (beyond the reference): users
         by (distinct active days in the trailing ``lShort``, trailing
         ``lLong``) windows ending at ``anchor`` inclusive. Body:
         ``{anchor (YYYY-MM-DD), lShort?, lLong?, event?, filters?}``.
         Served from the user-day store when the request stays inside
         its dims (both counts are counts over persisted dt values),
-        raw events otherwise — same routing contract as /queries/rfm
-        and /queries/growth, decision recorded in metrics."""
-        pid = self._pid(m)
-        import datetime as dt_mod
-
-        from .operators.engagement import lness_grid
-
-        props = self._props(pid)
-        ces = self._custom_events(pid)
+        raw events otherwise."""
         try:
-            anchor = dt_mod.date.fromisoformat(body["anchor"])
+            anchor = dt.date.fromisoformat(body["anchor"])
         except KeyError:
             raise HttpError(400, "anchor is required (YYYY-MM-DD)")
         except (TypeError, ValueError):
@@ -1982,83 +2107,79 @@ class App:
             raise HttpError(400, "lShort/lLong must be integers")
         if not (1 <= l_short < l_long <= 366):
             raise HttpError(400, "need 1 <= lShort < lLong <= 366")
-        event = (
-            api.parse_event_ref(body["event"], custom_events=ces, props=props)
-            if body.get("event") else None)
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
+        return Req(anchor=anchor, l_short=l_short, l_long=l_long,
+                   event=ctx.event(), filters=ctx.filters())
+
+    def _plan_lness(self, r, ctx):
         from .dsl import QueryTime
+        from .operators.engagement import lness_grid
         from .userday import lness_from_user_day, user_day_supports
 
         # the operator derives its own day-aligned window from the
         # anchor, so routability is only about event/filter dims —
         # probe supports() with the window it will build
         window = QueryTime.between(
-            dt_mod.datetime.combine(
-                anchor - dt_mod.timedelta(days=l_long - 1),
-                dt_mod.time.min),
-            dt_mod.datetime.combine(
-                anchor, dt_mod.time(23, 59, 59, 999999)))
-        out = self._route_user_day(
-            "lness",
-            lambda spec: user_day_supports(window, event, filters, spec),
-            lambda df, spec: lness_from_user_day(
-                df, anchor, l_short=l_short, l_long=l_long, spec=spec,
-                event=event, filters=filters),
-            lambda: lness_grid(self._events(), anchor,
-                               l_short=l_short, l_long=l_long,
-                               event=event, filters=filters))
-        return 200, (out, {"l_short", "l_long"})
+            dt.datetime.combine(
+                r.anchor - dt.timedelta(days=r.l_long - 1), dt.time.min),
+            dt.datetime.combine(r.anchor, dt.time(23, 59, 59, 999999)))
+        kw = dict(l_short=r.l_short, l_long=r.l_long, event=r.event,
+                  filters=r.filters)
+        return ctx.route(
+            "user_day:lness",
+            lambda spec: user_day_supports(window, r.event, r.filters, spec),
+            lambda df, spec: lness_from_user_day(df, r.anchor, spec=spec,
+                                                 **kw),
+            lambda: lness_grid(ctx.events, r.anchor, **kw)
+        ), {"l_short", "l_long"}
 
-    def _rfm(self, body, m, q):
+    def _parse_rfm(self, body, ctx):
         """RFM scoring (beyond the reference). Body: ``{time,
         nTiles?, valueProperty?, event?, filters?, grid?}``; with
         ``grid: true`` returns the (r, f, m) segment grid (counts +
         total spend) instead of the per-user frame (per-user output
-        is row-capped like the records routes)."""
-        pid = self._pid(m)
+        is row-capped like the records routes). The window must be
+        bounded."""
+        time = ctx.time()
+        if time.range()[1] is None:
+            raise HttpError(400, "rfm needs a bounded time window")
+        n_tiles = int(body.get("nTiles", 5))
+        if not 2 <= n_tiles <= 10:
+            raise HttpError(400, "nTiles must be in [2, 10]")
+        value_col = body.get("valueProperty", "value")
+        if value_col != "value":
+            ctx.check_columns([value_col])
+        return Req(time=time, n_tiles=n_tiles, value_col=value_col,
+                   event=ctx.event(), filters=ctx.filters(),
+                   grid=bool(body.get("grid")))
+
+    def _plan_rfm(self, r, ctx):
         from pyspark.sql import functions as F
 
         from .operators.aggregates import DECIMAL_T
         from .operators.engagement import rfm_scores
-
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        time = api.parse_time(body["time"], self.now)
-        n_tiles = int(body.get("nTiles", 5))
-        if not 2 <= n_tiles <= 10:
-            raise HttpError(400, "nTiles must be in [2, 10]")
-        event = (
-            api.parse_event_ref(body["event"], custom_events=ces, props=props)
-            if body.get("event") else None)
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        value_col = body.get("valueProperty", "value")
         from .userday import rfm_from_user_day, user_day_supports
 
-        try:
-            out = self._route_user_day(
-                "rfm",
-                lambda spec: (value_col == spec.value_col
-                              and user_day_supports(time, event, filters,
-                                                    spec)),
-                lambda df, spec: rfm_from_user_day(
-                    df, time, n_tiles=n_tiles, spec=spec, event=event,
-                    filters=filters),
-                lambda: rfm_scores(
-                    self._events(), time, n_tiles=n_tiles,
-                    value_col=value_col, event=event, filters=filters))
-        except ValueError as e:
-            raise HttpError(400, str(e))
-        if body.get("grid"):
+        out = ctx.route(
+            "user_day:rfm",
+            lambda spec: (r.value_col == spec.value_col
+                          and user_day_supports(r.time, r.event, r.filters,
+                                                spec)),
+            lambda df, spec: rfm_from_user_day(
+                df, r.time, n_tiles=r.n_tiles, spec=spec, event=r.event,
+                filters=r.filters),
+            lambda: rfm_scores(
+                ctx.events, r.time, n_tiles=r.n_tiles,
+                value_col=r.value_col, event=r.event, filters=r.filters))
+        if r.grid:
             grid = out.groupBy("r_score", "f_score", "m_score").agg(
                 F.count(F.lit(1)).alias("n_users"),
                 F.sum(F.col("monetary").cast(DECIMAL_T)).cast("double")
                 .alias("total_monetary"),
             )
-            return 200, (grid, {"r_score", "f_score", "m_score"})
-        return 200, (out.orderBy("user_id").limit(MAX_RESPONSE_ROWS),
-                     {"user_id"})
+            return grid, {"r_score", "f_score", "m_score"}
+        return out.orderBy("user_id").limit(MAX_RESPONSE_ROWS), {"user_id"}
 
-    def _audience(self, body, m, q):
+    def _parse_audience(self, body, ctx):
         """Audience set algebra (beyond the reference — its segments
         answer one cohort at a time; overlap/intersection questions
         have no operator there). Body:
@@ -2073,46 +2194,33 @@ class App:
           {ref}|{op: and|or|not, args}, time, filters?}`` → distinct
           users satisfying the boolean combination (the same
           JSON-serializable AST operators/audience.set_expr_col
-          compiles)."""
-        pid = self._pid(m)
-        from .operators.audience import (
-            audience_set_count,
-            audience_venn,
-            overlap_matrix,
-        )
-        from .userday import user_day_supports
+          compiles).
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
+        ``sketched: true`` is the EXPLICIT estimate mode (double
+        columns, like the sampling mode's opt-in): any of the three is
+        answered from the maintained KMV day sketches, exact below the
+        store's K and ±1/sqrt(K) beyond, with no raw scan. It needs
+        plain event-name audiences (sketches are keyed by the dim
+        value) and the constraints ``_kmv_window_days`` checks; each
+        mismatch 400s with its reason — a silent raw fallback would
+        change the result dtype under the caller. An event name absent
+        from the window's sketches reads as zero (a sketch cannot tell
+        "no users" from "never tracked")."""
+        from .operators.audience import set_expr_col
+        from .schema import EVENT_USER_COL
+
         kind = body.get("type")
-        time = api.parse_time(body["time"], self.now) if body.get(
-            "time") else None
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-
+        r = Req(kind=kind, time=ctx.time(required=False),
+                filters=ctx.filters(), sketched=bool(body.get("sketched")))
         if kind == "venn":
             try:
-                a = api.parse_event_ref(body["a"], custom_events=ces,
-                                        props=props)
-                b = api.parse_event_ref(body["b"], custom_events=ces,
-                                        props=props)
+                r.a, r.b = ctx.event_ref(body["a"]), ctx.event_ref(body["b"])
             except KeyError as e:
                 raise HttpError(400, f"venn requires {e.args[0]}")
-            if body.get("sketched"):
-                # EXPLICIT estimate mode (double columns, like the
-                # sampling mode's opt-in): answered from maintained
-                # day-grain KMV sketches, no raw scan. Unsupported
-                # shapes fail loudly — a silent raw fallback would
-                # change the result dtype under the caller.
-                return 200, (self._sketched_venn(a, b, time, filters),
-                             set())
-            out = audience_venn(self._events(), a, b, time, filters)
-            return 200, (out, set())
-
-        if kind == "overlap-matrix":
-            dim = body.get("dimension", "event_type")
-            events = self._events()
-            if dim not in events.columns:
-                raise HttpError(400, f"unknown dimension: {dim}")
+            refs = (r.a, r.b)
+        elif kind == "overlap-matrix":
+            r.dim = body.get("dimension", "event_type")
+            ctx.check_columns([r.dim])
             # route ceiling < operator default: C(K,2) pair rows must
             # fit MAX_RESPONSE_ROWS (C(141,2)=9,870 ≤ 10,000; the
             # operator's 200 would 500 the response serializer on
@@ -2120,128 +2228,77 @@ class App:
             route_cap = 141
             raw_md = body.get("maxDims", route_cap)
             try:
-                max_dims = int(raw_md)
+                r.max_dims = int(raw_md)
             except (TypeError, ValueError):
                 raise HttpError(400, f"maxDims must be an integer, got "
                                      f"{raw_md!r}")
-            if not 2 <= max_dims <= route_cap:
+            if not 2 <= r.max_dims <= route_cap:
                 raise HttpError(
                     400, f"maxDims must be in [2, {route_cap}] over HTTP "
                          "(response row cap); use the library operator "
                          "for wider matrices")
-            if body.get("sketched"):
-                # same explicit estimate-mode opt-in as venn: served
-                # from the KMV day store (double columns, no raw
-                # scan) — the matrix is the family's most expensive
-                # surface, and at production scale this is a store
-                # fold instead of a full event scan
-                return 200, (self._sketched_matrix(dim, time, filters,
-                                                   max_dims),
-                             {"dim_a", "dim_b"})
-            out = overlap_matrix(
-                events, time, dim_col=dim, filters=filters,
-                max_dims=max_dims)
-            return 200, (out, {"dim_a", "dim_b"})
-
-        if kind == "set":
-            auds = body.get("audiences")
-            expr = body.get("expression")
-            if not auds or not isinstance(auds, dict) or expr is None:
+            refs = ()
+        elif kind == "set":
+            auds, r.expr = body.get("audiences"), body.get("expression")
+            if not auds or not isinstance(auds, dict) or r.expr is None:
                 raise HttpError(400, "set requires audiences and expression")
-            try:
-                refs = {name: api.parse_event_ref(ev, custom_events=ces,
-                                                  props=props)
-                        for name, ev in auds.items()}
-                if body.get("sketched"):
-                    out = self._sketched_set(refs, expr, time, filters)
-                else:
-                    # exact routed path (r16): membership flags fold
-                    # from (dt, user, event) partials — no raw scan
-                    from .userday import set_count_from_user_day
-
-                    out = self._route_user_day(
-                        "audience_set",
-                        lambda spec: all(
-                            user_day_supports(time, r, filters, spec)
-                            for r in refs.values()),
-                        lambda df, spec: set_count_from_user_day(
-                            df, refs, expr, time, spec=spec,
-                            filters=filters),
-                        lambda: audience_set_count(
-                            self._events(), refs, expr, time, filters))
-            # malformed audience dicts (KeyError), non-dict expression
-            # nodes (TypeError/AttributeError), and semantic errors
-            # (ValueError) are ALL caller errors — 400, never a 500
-            except (ValueError, KeyError, TypeError, AttributeError) as e:
-                raise HttpError(400, f"bad set request: {e}")
-            return 200, (out, set())
-
-        raise HttpError(400, "type must be venn, overlap-matrix or set")
-
-    def _sketched_venn(self, a, b, time, filters):
-        """Venn from the maintained KMV day-sketch store: exact below
-        the store's K, ±1/sqrt(K) beyond — the no-raw-scan path for
-        the recurring overlap dashboards. Requires plain event-name
-        audiences (sketches are keyed by the dim value), no property
-        filters (not in the sketch), and a whole-day bounded window
-        (the store's grain); each constraint 400s with its reason.
-        An event name absent from the window's sketches legitimately
-        reads as zero (a sketch cannot distinguish "no users" from
-        "never tracked") — only SHAPE mismatches fail loudly."""
-        from .operators.audience import audience_venn_from_day_sketches
-        from .schema import EVENT_NAME_COL
-
-        if a.custom is not None or b.custom is not None or (
-                a.name is None or b.name is None):
+            r.refs = {name: ctx.event_ref(ev) for name, ev in auds.items()}
+            for name in () if r.sketched else r.refs:
+                # exact paths name a flag column after each audience
+                if not name.isidentifier() or name == EVENT_USER_COL:
+                    raise ValueError(f"bad audience name {name!r}")
+            set_expr_col(r.expr, list(r.refs))  # the AST's shape check
+            refs = r.refs.values()
+        else:
+            raise HttpError(400, "type must be venn, overlap-matrix or set")
+        if r.sketched and any(ref.custom is not None or ref.name is None
+                              for ref in refs):
             raise HttpError(
-                400, "sketched venn needs plain event-name audiences")
-        days, store = self._kmv_window_days(
-            "venn", EVENT_NAME_COL, time, filters)
-        return audience_venn_from_day_sketches(days, a.name, b.name,
-                                               k=store.k)
+                400, f"sketched {kind} needs plain event-name audiences")
+        return r
 
-    def _sketched_matrix(self, dim, time, filters, max_dims):
-        """The K×K overlap matrix from the KMV day-sketch store —
-        same constraints and failure modes as _sketched_venn, same
-        estimate contract (exact below the store's K)."""
-        from .operators.audience import overlap_matrix_from_day_sketches
-
-        days, store = self._kmv_window_days(
-            "overlap-matrix", dim, time, filters)
-        return overlap_matrix_from_day_sketches(
-            days, k=store.k, max_dims=max_dims)
-
-    def _sketched_set(self, refs, expr, time, filters):
-        """Boolean set-expression counts from the KMV day store —
-        the estimate-mode opt-in for arbitrary and/or/not audience
-        combinations (common-theta membership evaluation,
-        operators/audience.audience_set_count_from_day_sketches).
-        Audience names are rewritten to their event names, the store's
-        sketch key."""
-        from .operators.audience import audience_set_count_from_day_sketches
+    def _plan_audience(self, r, ctx):
+        from .operators import audience as A
         from .schema import EVENT_NAME_COL
+        from .userday import set_count_from_user_day, user_day_supports
 
-        for ref in refs.values():
-            if ref.custom is not None or ref.name is None:
-                raise HttpError(
-                    400, "sketched set needs plain event-name audiences")
-        days, store = self._kmv_window_days(
-            "set", EVENT_NAME_COL, time, filters)
+        dims = {"dim_a", "dim_b"} if r.kind == "overlap-matrix" else set()
+        if r.sketched:
+            days, store = self._kmv_window_days(
+                r.kind, r.dim if r.kind == "overlap-matrix"
+                else EVENT_NAME_COL, r.time, r.filters)
+            if r.kind == "venn":
+                return A.audience_venn_from_day_sketches(
+                    days, r.a.name, r.b.name, k=store.k), dims
+            if r.kind == "overlap-matrix":
+                return A.overlap_matrix_from_day_sketches(
+                    days, k=store.k, max_dims=r.max_dims), dims
 
-        def rewrite(e):
-            if not isinstance(e, dict):
-                raise ValueError(f"expression nodes must be objects, "
-                                 f"got {e!r}")
-            if "ref" in e:
-                name = e["ref"]
-                if name not in refs:
-                    raise ValueError(f"unknown audience {name!r}")
-                return {"ref": refs[name].name}
-            return {"op": e.get("op"),
-                    "args": [rewrite(a) for a in e.get("args", ())]}
+            def rewrite(e):  # audience names → event names (sketch keys)
+                if "ref" in e:
+                    return {"ref": r.refs[e["ref"]].name}
+                return {"op": e.get("op"),
+                        "args": [rewrite(a) for a in e.get("args", ())]}
 
-        return audience_set_count_from_day_sketches(
-            days, rewrite(expr), k=store.k)
+            return A.audience_set_count_from_day_sketches(
+                days, rewrite(r.expr), k=store.k), dims
+        if r.kind == "venn":
+            return A.audience_venn(ctx.events, r.a, r.b, r.time,
+                                   r.filters), dims
+        if r.kind == "overlap-matrix":
+            return A.overlap_matrix(ctx.events, r.time, dim_col=r.dim,
+                                    filters=r.filters,
+                                    max_dims=r.max_dims), dims
+        # exact routed path (r16): membership flags fold from
+        # (dt, user, event) partials — no raw scan
+        return ctx.route(
+            "user_day:audience_set",
+            lambda spec: all(user_day_supports(r.time, ref, r.filters, spec)
+                             for ref in r.refs.values()),
+            lambda df, spec: set_count_from_user_day(
+                df, r.refs, r.expr, r.time, spec=spec, filters=r.filters),
+            lambda: A.audience_set_count(ctx.events, r.refs, r.expr, r.time,
+                                         r.filters)), dims
 
     def _kmv_window_days(self, what, dim, time, filters):
         """Shared KMV-store resolution for the sketched audience
@@ -2279,7 +2336,7 @@ class App:
         metrics.query_rollup_routed_total().inc(path="kmv")
         return days, store
 
-    def _drift(self, body, m, q):
+    def _parse_drift(self, body, ctx):
         """Data-quality / drift queries (beyond the reference) — the
         recurring snapshot check a training pipeline schedules between
         deliveries, served with the same RBAC / result-cache /
@@ -2298,14 +2355,88 @@ class App:
           maxCategories?}`` → event-mix PSI; routes through the
           rollup's per-day per-dim counts when the property is a dim.
 
-        Routing decisions land in optiprism_query_rollup_routed_total
-        like segmentation's; both periods must be disjoint."""
-        pid = self._pid(m)
+        Both periods must be bounded and disjoint."""
+        from .operators.drift import MAX_CATEGORIES
+
+        kind = body.get("type")
+        if kind == "profile":
+            cols = body.get("columns")
+            if not cols:
+                raise HttpError(400, "profile requires columns")
+            by = list(body.get("by") or ())
+            missing = [c for c in list(cols) + by
+                       if c not in ctx.events.columns]
+            if missing:
+                raise HttpError(400, f"unknown columns: {missing}")
+            return Req(kind=kind, cols=list(cols), by=by,
+                       time=ctx.time(required=False),
+                       approx=bool(body.get("approxDistinct")))
+        if kind not in ("numeric", "categorical"):
+            raise HttpError(
+                400, "type must be profile, numeric or categorical")
+        r = Req(kind=kind, prop=body.get("property"))
+        if not r.prop:
+            raise HttpError(400, f"{kind} drift requires property")
+        try:
+            r.base, r.actual = ctx.time("baseline"), ctx.time("actual")
+        except KeyError as e:
+            raise HttpError(400, f"missing {e.args[0]} time range")
+        b0, b1 = r.base.range()
+        a0, a1 = r.actual.range()
+        if (b1 is None or a1 is None or not
+                (b1 < a0 or a1 < b0)):
+            raise HttpError(
+                400, "baseline and actual must be bounded and disjoint")
+
+        if kind == "categorical":
+            raw_max = body.get("maxCategories")
+            try:
+                r.max_cat = (MAX_CATEGORIES if raw_max is None
+                             else int(raw_max))
+            except (TypeError, ValueError):
+                raise HttpError(
+                    400, f"maxCategories must be an integer, got "
+                    f"{raw_max!r}")
+            if r.max_cat < 1:
+                # a negative limit flows into hist.limit(-N) and blows
+                # up at plan time — caller error, reject as 400 like
+                # the audience route's maxDims bound check
+                raise HttpError(400, "maxCategories must be >= 1")
+            return r
+
+        # numeric PSI
+        try:
+            r.edges = tuple(float(x) for x in (body.get("edges") or ()))
+        except (TypeError, ValueError):
+            raise HttpError(
+                400, "edges must be numbers, got "
+                f"{body.get('edges')!r}")
+        if r.edges and list(r.edges) != sorted(set(r.edges)):
+            # same check as the rollup DDL's histogramProps validator:
+            # unsorted/duplicate edges make the fixed-bin conditions
+            # overlap and the PSI silently wrong under HTTP 200
+            raise HttpError(400, "edges must be strictly increasing")
+        r.bins, r.qbins = body.get("bins"), body.get("quantileBins")
+        if sum(map(bool, (r.edges, r.bins, r.qbins))) > 1:
+            raise HttpError(
+                400, "give edges OR bins OR quantileBins, not several")
+        for label, raw in (("bins", r.bins), ("quantileBins", r.qbins)):
+            if raw is not None:
+                try:
+                    if int(raw) < 2:
+                        raise HttpError(400, f"{label} must be >= 2")
+                except (TypeError, ValueError):
+                    raise HttpError(
+                        400, f"{label} must be an integer, got {raw!r}")
+        return r
+
+    def _plan_drift(self, r, ctx):
+        from .exprs import full_filter
         from .operators.drift import (
-            MAX_CATEGORIES,
             categorical_drift,
             distribution_drift,
             distribution_drift_fixed,
+            distribution_drift_quantile,
             table_profile,
         )
         from .rollup import (
@@ -2314,135 +2445,63 @@ class App:
             psi_from_rollup,
         )
 
-        from .exprs import full_filter
-
-        kind = body.get("type")
-        if kind == "profile":
-            cols = body.get("columns")
-            if not cols:
-                raise HttpError(400, "profile requires columns")
-            events = self._events()
-            if body.get("time"):
-                time = api.parse_time(body["time"], self.now)
-                events = events.filter(full_filter(time))
-            missing = [c for c in list(cols) + list(body.get("by") or ())
-                       if c not in events.columns]
-            if missing:
-                raise HttpError(400, f"unknown columns: {missing}")
-            out = table_profile(
-                events, list(cols), by=list(body.get("by") or ()) or None,
-                approx_distinct=bool(body.get("approxDistinct")))
-            return 200, (out, set(body.get("by") or ()))
-
-        if kind not in ("numeric", "categorical"):
-            raise HttpError(
-                400, "type must be profile, numeric or categorical")
-        prop = body.get("property")
-        if not prop:
-            raise HttpError(400, f"{kind} drift requires property")
-        try:
-            base = api.parse_time(body["baseline"], self.now)
-            actual = api.parse_time(body["actual"], self.now)
-        except KeyError as e:
-            raise HttpError(400, f"missing {e.args[0]} time range")
-        b0, b1 = base.range()
-        a0, a1 = actual.range()
-        if (b1 is None or a1 is None or not
-                (b1 < a0 or a1 < b0)):
-            raise HttpError(
-                400, "baseline and actual must be bounded and disjoint")
-        split = full_filter(base)
-        pop = full_filter(base) | full_filter(actual)
+        if r.kind == "profile":
+            events = ctx.events
+            if r.time is not None:
+                events = events.filter(full_filter(r.time))
+            return table_profile(events, r.cols, by=r.by or None,
+                                 approx_distinct=r.approx), set(r.by)
+        split = full_filter(r.base)
+        pop = full_filter(r.base) | full_filter(r.actual)
 
         def raw_pop():
-            events = self._events()
-            if prop not in events.columns:
-                raise HttpError(400, f"unknown column {prop!r}")
-            return events.filter(pop)
+            # a rollup may carry a JSON dim of this name, so the
+            # column check waits for the raw path
+            ctx.check_columns([r.prop])
+            return ctx.events.filter(pop)
 
-        if kind == "categorical":
-            raw_max = body.get("maxCategories")
-            try:
-                max_cat = (MAX_CATEGORIES if raw_max is None
-                           else int(raw_max))
-            except (TypeError, ValueError):
-                raise HttpError(
-                    400, f"maxCategories must be an integer, got "
-                    f"{raw_max!r}")
-            if max_cat < 1:
-                # a negative limit flows into hist.limit(-N) and blows
-                # up at plan time as a 500 — caller error, reject as
-                # 400 like the audience route's maxDims bound check
-                raise HttpError(400, "maxCategories must be >= 1")
-            out = self._route_rollup(
-                pid,
-                lambda spec: drift_supports(base, actual, prop, spec,
+        if r.kind == "categorical":
+            return ctx.route(
+                "rollup",
+                lambda spec: drift_supports(r.base, r.actual, r.prop, spec,
                                             "categorical"),
                 lambda roll, spec: categorical_psi_from_rollup(
-                    roll, spec, prop, base, actual,
-                    max_categories=max_cat),
-                lambda: categorical_drift(raw_pop(), prop, split,
-                                          max_categories=max_cat))
-            return 200, (out, {"category"})
-
-        # numeric PSI
-        try:
-            edges = tuple(float(x) for x in (body.get("edges") or ()))
-        except (TypeError, ValueError):
-            raise HttpError(
-                400, "edges must be numbers, got "
-                f"{body.get('edges')!r}")
-        if edges and list(edges) != sorted(set(edges)):
-            # same check as the rollup DDL's histogramProps validator:
-            # unsorted/duplicate edges make the fixed-bin conditions
-            # overlap and the PSI silently wrong under HTTP 200
-            raise HttpError(400, "edges must be strictly increasing")
-        bins = body.get("bins")
-        qbins = body.get("quantileBins")
-        if sum(map(bool, (edges, bins, qbins))) > 1:
-            raise HttpError(
-                400, "give edges OR bins OR quantileBins, not several")
-        for label, raw in (("bins", bins), ("quantileBins", qbins)):
-            if raw is not None:
-                try:
-                    if int(raw) < 2:
-                        raise HttpError(400, f"{label} must be >= 2")
-                except (TypeError, ValueError):
-                    raise HttpError(
-                        400, f"{label} must be an integer, got {raw!r}")
-        if qbins:
+                    roll, spec, r.prop, r.base, r.actual,
+                    max_categories=r.max_cat),
+                lambda: categorical_drift(raw_pop(), r.prop, split,
+                                          max_categories=r.max_cat)
+            ), {"category"}
+        if r.qbins:
             # equi-depth flavour: baseline-quantile edges (each bin
             # ~1/n of the baseline mass) — never rollup-routed, the
             # edges depend on the baseline rows themselves
-            from .operators.drift import distribution_drift_quantile
-
-            out = self._route_rollup(
-                pid, None, None, lambda: distribution_drift_quantile(
-                    raw_pop(), prop, split, n_bins=int(qbins)))
-            return 200, (out, {"bucket"})
+            return ctx.route(
+                "rollup", None, None, lambda: distribution_drift_quantile(
+                    raw_pop(), r.prop, split, n_bins=int(r.qbins))
+            ), {"bucket"}
 
         def raw_numeric():
-            if edges:
-                return distribution_drift_fixed(raw_pop(), prop, split,
-                                                edges)
-            return distribution_drift(raw_pop(), prop, split,
-                                      bins=int(bins or 10))
+            if r.edges:
+                return distribution_drift_fixed(raw_pop(), r.prop, split,
+                                                r.edges)
+            return distribution_drift(raw_pop(), r.prop, split,
+                                      bins=int(r.bins or 10))
 
         # DDL-edge flavour: fold from a rollup whose declared histogram
         # matches (request edges, if given, must agree — a PSI over
         # different edges is a different question); ``bins`` is never
         # routed
-        out = self._route_rollup(
-            pid,
-            None if bins else lambda spec: (
-                drift_supports(base, actual, prop, spec, "numeric")
-                and (not edges or tuple(spec.hist_edges(prop)) == edges)),
-            lambda roll, spec: psi_from_rollup(roll, spec, prop, base,
-                                               actual),
-            raw_numeric)
-        return 200, (out, {"bucket"})
+        return ctx.route(
+            "rollup",
+            None if r.bins else lambda spec: (
+                drift_supports(r.base, r.actual, r.prop, spec, "numeric")
+                and (not r.edges
+                     or tuple(spec.hist_edges(r.prop)) == r.edges)),
+            lambda roll, spec: psi_from_rollup(roll, spec, r.prop, r.base,
+                                               r.actual),
+            raw_numeric), {"bucket"}
 
-    def _anomaly(self, body, m, q):
+    def _parse_anomaly(self, body, ctx):
         """Metric anomaly sweep (beyond the reference) — the alerting
         surface every dashboard grows: daily event-count series with
         spike flags. Body:
@@ -2462,10 +2521,31 @@ class App:
         the request is rollup-expressible (`count_series_supports`;
         counts are additive, so the routed series is EXACT — bit-equal
         to raw, unlike the sketch-backed stickiness route) and falls
-        back to one partial-aggregated raw scan; decisions land in
-        optiprism_query_rollup_routed_total. ``dim`` gives every dim
-        value its own independent baseline (`by=`)."""
-        pid = self._pid(m)
+        back to one partial-aggregated raw scan. ``dim`` gives every
+        dim value its own independent baseline (`by=`)."""
+        if "time" not in body:
+            raise HttpError(400, "anomaly requires time")
+        r = Req(time=ctx.time(), method=body.get("method", "trailing"))
+        if r.method not in ("trailing", "robust"):
+            raise HttpError(400, "method must be trailing or robust")
+        r.dim, r.event, r.filters = body.get("dim"), ctx.event(), ctx.filters()
+
+        def num(key, default):
+            return _finite(body.get(key, default), key)
+
+        r.threshold = num("threshold", 3.0 if r.method == "trailing" else 3.5)
+        if r.threshold <= 0:
+            raise HttpError(400, "threshold must be > 0")
+        if r.dim is not None and not isinstance(r.dim, str):
+            raise HttpError(400, f"dim must be a string, got {r.dim!r}")
+        if r.method == "trailing":
+            r.window = int(num("window", 7))
+            r.min_periods = int(num("minPeriods", 3))
+            if r.window < 1 or r.min_periods < 1:
+                raise HttpError(400, "window and minPeriods must be >= 1")
+        return r
+
+    def _plan_anomaly(self, r, ctx):
         from .operators.alerts import (
             anomaly_flags,
             daily_count_series,
@@ -2473,74 +2553,33 @@ class App:
         )
         from .rollup import count_series_from_rollup, count_series_supports
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        if "time" not in body:
-            raise HttpError(400, "anomaly requires time")
-        time = api.parse_time(body["time"], self.now)
-        method = body.get("method", "trailing")
-        if method not in ("trailing", "robust"):
-            raise HttpError(400, "method must be trailing or robust")
-        dim = body.get("dim")
-        event = (
-            api.parse_event_ref(body["event"], custom_events=ces,
-                                props=props)
-            if body.get("event") else None)
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-
-        def num(key, default):
-            import math as _math
-
-            raw = body.get(key, default)
-            try:
-                v = float(raw)
-            except (TypeError, ValueError):
-                raise HttpError(400, f"{key} must be a number, got {raw!r}")
-            if not _math.isfinite(v):
-                # NaN/inf pass a `<= 0` guard and silently disable
-                # flagging under HTTP 200 (r13 review finding) —
-                # reject like any other caller error
-                raise HttpError(400, f"{key} must be finite, got {raw!r}")
-            return v
-
-        threshold = num("threshold", 3.0 if method == "trailing" else 3.5)
-        if threshold <= 0:
-            raise HttpError(400, "threshold must be > 0")
-
-        if dim is not None and not isinstance(dim, str):
-            raise HttpError(400, f"dim must be a string, got {dim!r}")
-
         def raw_series():
-            events = self._events()
-            if dim is not None and dim not in events.columns:
-                raise HttpError(400, f"unknown column {dim!r}")
-            return daily_count_series(events, time, dim=dim,
-                                      event=event, filters=filters)
+            # a rollup may carry a JSON dim of this name, so the
+            # column check waits for the raw path
+            if r.dim is not None:
+                ctx.check_columns([r.dim])
+            return daily_count_series(ctx.events, r.time, dim=r.dim,
+                                      event=r.event, filters=r.filters)
 
-        series = self._route_rollup(
-            pid,
-            lambda spec: count_series_supports(time, dim, event, filters,
-                                               spec),
+        series = ctx.route(
+            "rollup",
+            lambda spec: count_series_supports(r.time, r.dim, r.event,
+                                               r.filters, spec),
             lambda roll, spec: count_series_from_rollup(
-                roll, time, spec, dim=dim, event=event, filters=filters),
+                roll, r.time, spec, dim=r.dim, event=r.event,
+                filters=r.filters),
             raw_series)
-
-        by = (dim,) if dim else ()
-        if method == "robust":
-            out = robust_anomaly_flags(series, "n", threshold=threshold,
+        by = (r.dim,) if r.dim else ()
+        if r.method == "robust":
+            out = robust_anomaly_flags(series, "n", threshold=r.threshold,
                                        by=by)
         else:
-            window = int(num("window", 7))
-            min_periods = int(num("minPeriods", 3))
-            if window < 1 or min_periods < 1:
-                raise HttpError(400, "window and minPeriods must be >= 1")
-            out = anomaly_flags(series, "n", window=window,
-                                z_threshold=threshold,
-                                min_periods=min_periods, by=by)
-        dims = {"bucket"} | ({dim} if dim else set())
-        return 200, (out, dims)
+            out = anomaly_flags(series, "n", window=r.window,
+                                z_threshold=r.threshold,
+                                min_periods=r.min_periods, by=by)
+        return out, {"bucket"} | ({r.dim} if r.dim else set())
 
-    def _quality(self, body, m, q):
+    def _parse_quality(self, body, ctx):
         """Declarative data-quality constraint battery (beyond the
         reference) — the delivery gate a pipeline runs before trusting
         a snapshot, over the project's event stream. Body:
@@ -2562,16 +2601,12 @@ class App:
         (operators/quality_checks.validate) — adding a constraint
         never adds a scan. Caller errors (unknown column, bad
         threshold, unknown type) fail loudly as 400."""
-        from .exprs import full_filter
-        from .operators import quality_checks as Q
-
-        pid = self._pid(m)
         specs = body.get("constraints")
         if specs is None:
             # no inline battery: run the project's DECLARED batteries
             # (schema/quality-checks DDL), concatenated in declaration
             # order — still ONE scan, the batteries merge into one agg
-            specs = [c for row in self.catalog.list("quality_check", pid)
+            specs = [c for row in self.catalog.list("quality_check", ctx.pid)
                      for c in row["constraints"]]
             if not specs:
                 raise HttpError(
@@ -2579,12 +2614,17 @@ class App:
                          "(POST schema/quality-checks first)")
         if not isinstance(specs, list) or not specs:
             raise HttpError(400, "constraints must be a non-empty list")
-        events = self._events()
-        if body.get("time"):
-            time = api.parse_time(body["time"], self.now)
-            events = events.filter(full_filter(time))
-        built = self._parse_quality_specs(specs, events)
-        return 200, (Q.validate(events, built), {"constraint", "target"})
+        return Req(time=ctx.time(required=False),
+                   built=self._parse_quality_specs(specs, ctx.events))
+
+    def _plan_quality(self, r, ctx):
+        from .exprs import full_filter
+        from .operators import quality_checks as Q
+
+        events = ctx.events
+        if r.time is not None:
+            events = events.filter(full_filter(r.time))
+        return Q.validate(events, r.built), {"constraint", "target"}
 
     def _parse_quality_specs(self, specs: list, events) -> list:
         """JSON constraint specs → quality_checks constraint dicts,
@@ -2600,22 +2640,10 @@ class App:
             return c
 
         def num(spec, key, default=None, required=False):
-            import math as _math
-
             v = spec.get(key, default)
-            if v is None:
-                if required:
-                    raise HttpError(400, f"{spec.get('type')} requires {key}")
-                return None
-            try:
-                f = float(v)
-            except (TypeError, ValueError):
-                raise HttpError(400, f"{key} must be a number, got {v!r}")
-            if not _math.isfinite(f):
-                # int(nan/inf) downstream raises as a 500; and a NaN
-                # threshold silently passes every bound comparison
-                raise HttpError(400, f"{key} must be finite, got {v!r}")
-            return f
+            if v is None and required:
+                raise HttpError(400, f"{spec.get('type')} requires {key}")
+            return None if v is None else _finite(v, key)
 
         built = []
         for spec in specs:
@@ -2716,7 +2744,7 @@ class App:
         self._parse_quality_specs(specs, self._events())
         return self.catalog.update("quality_check", qid, body, project_id=pid)
 
-    def _paths(self, body, m, q):
+    def _parse_paths(self, body, ctx):
         """Path / journey exploration (beyond the reference — no path
         operator exists there). Body: ``{time, anchorEvent, steps?,
         direction?, withinSeconds?, topK?, dropoff?, filters?,
@@ -2725,50 +2753,54 @@ class App:
         per-step event distribution instead of top-k full paths.
         ``maxRowsPerUser`` enables the whale guard (lossy for over-cap
         users; surfaces in /metrics as guard=path_cap)."""
-        import datetime as _dt
+        from .operators.paths import _MAX_STEPS
 
-        pid = self._pid(m)
-        from .operators.paths import event_paths, path_dropoff
-
-        props = self._props(pid)
-        ces = self._custom_events(pid)
         within_s = body.get("withinSeconds")
         kw = dict(
-            anchor=api.parse_event_ref(body["anchorEvent"],
-                                       custom_events=ces, props=props),
-            time=api.parse_time(body["time"], self.now),
+            anchor=ctx.event_ref(body["anchorEvent"]),
+            time=ctx.time(),
             steps=int(body.get("steps", 4)),
             direction=body.get("direction", "forward"),
-            within=(_dt.timedelta(seconds=int(within_s))
+            within=(dt.timedelta(seconds=int(within_s))
                     if within_s is not None else None),
-            filters=api._grouped_filters(body, api.EVENT_COLUMNS, props=props),
+            filters=ctx.filters(),
             exclude_events=tuple(body.get("excludeEvents") or ()),
-            max_rows_per_user=_max_rows_per_user(body),
+            max_rows_per_user=ctx.max_rows_per_user(),
         )
-        events = self._events()
-        rate = _sampling_rate(body)
-        if rate < 1.0:
+        if not 2 <= kw["steps"] <= _MAX_STEPS:
+            raise ValueError(f"steps must be in [2, {_MAX_STEPS}]")
+        if kw["direction"] not in ("forward", "backward"):
+            raise ValueError("direction must be forward or backward")
+        return Req(kw=kw, rate=ctx.sampling_rate(),
+                   dropoff=bool(body.get("dropoff")),
+                   top_k=int(body.get("topK", 50)))
+
+    def _plan_paths(self, r, ctx):
+        from pyspark.sql import functions as F
+
+        from .operators.paths import event_paths, path_dropoff
+
+        events = ctx.events
+        if r.rate < 1.0:
             # user-coherent sample: journeys stay whole; the top-k
             # ORDER is invariant under uniform scaling, so scaled
             # counts are population estimates over the same path set
-            from pyspark.sql import functions as _F
-
             from .operators.estimate import user_sample
 
-            events = user_sample(events, rate)
-        if body.get("dropoff"):
-            out = path_dropoff(events, **kw)
+            events = user_sample(events, r.rate)
+        if r.dropoff:
+            out = path_dropoff(events, **r.kw)
             dims = {"step", "next_event"}
         else:
-            out = event_paths(events, top_k=int(body.get("topK", 50)), **kw)
+            out = event_paths(events, top_k=r.top_k, **r.kw)
             dims = {"path"}
-        if rate < 1.0:
-            inv = 1.0 / rate
+        if r.rate < 1.0:
+            inv = 1.0 / r.rate
             for c in ("n_starts", "n_users"):
-                out = out.withColumn(c, (_F.col(c) * _F.lit(inv)).cast("double"))
-        return 200, (out, dims)
+                out = out.withColumn(c, (F.col(c) * F.lit(inv)).cast("double"))
+        return out, dims
 
-    def _experiment(self, body, m, q):
+    def _parse_experiment(self, body, ctx):
         """A/B experiment readout (beyond the reference). Body:
         ``{time, exposureEvent, conversionEvent, variantProperty,
         control, filters?}`` — variantProperty is a standard property
@@ -2776,204 +2808,173 @@ class App:
         ``{type: "srm", time, exposureEvent, variantProperty,
         expected?}`` runs the sample-ratio-mismatch health gate
         instead (chi-square vs the allocation at α=0.001; expected
-        maps variant → share, default equal split).
+        maps variant → share, default equal split; declared shares
+        must be positive, at least two, and sum to 1).
         ``{type: "ci", ...}`` (same body as the readout, minus
         ``control``) returns per-arm conversion rates with the 95%
         Wilson score interval — the error bars the readout's lift
         numbers are drawn with."""
-        pid = self._pid(m)
         from .exprs import prop_col
-        from .operators.experiment import experiment_report
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        if body.get("type") == "srm":
-            from .operators.experiment import srm_check
-
+        r = Req(kind=body.get("type"), kw=dict(
+            variant_col=prop_col(ctx.prop(body["variantProperty"])),
+            exposure_event=ctx.event_ref(body["exposureEvent"]),
+            time=ctx.time(), filters=ctx.filters()))
+        if r.kind == "srm":
             exp = body.get("expected")
-            if exp is not None and not (
-                isinstance(exp, dict)
-                and all(isinstance(v, (int, float)) for v in exp.values())
-            ):
-                raise HttpError(400, "expected must map variant to share")
-            try:
-                out = srm_check(
-                    self._events(),
-                    variant_col=prop_col(api.parse_property(
-                        body["variantProperty"], props=props)),
-                    exposure_event=api.parse_event_ref(
-                        body["exposureEvent"], custom_events=ces,
-                        props=props),
-                    time=api.parse_time(body["time"], self.now),
-                    expected=({str(k): float(v) for k, v in exp.items()}
-                              if exp is not None else None),
-                    filters=api._grouped_filters(
-                        body, api.EVENT_COLUMNS, props=props),
-                )
-            except ValueError as e:
-                raise HttpError(400, str(e))
-            return 200, (out, {"variant"})
-        if body.get("type") == "ci":
-            from .operators.experiment import conversion_wilson_ci
+            if exp is not None:
+                if not (isinstance(exp, dict) and all(
+                        isinstance(v, (int, float)) for v in exp.values())):
+                    raise HttpError(400, "expected must map variant to share")
+                if (len(exp) < 2 or any(v <= 0 for v in exp.values())
+                        or abs(sum(exp.values()) - 1.0) > 1e-9):
+                    raise HttpError(
+                        400, "expected needs >= 2 positive shares that "
+                             f"sum to 1, got {exp}")
+                r.kw["expected"] = {str(k): float(v) for k, v in exp.items()}
+            return r
+        r.kw["conversion_event"] = ctx.event_ref(body["conversionEvent"])
+        if r.kind != "ci":
+            r.kw["control"] = str(body["control"])
+        return r
 
-            out = conversion_wilson_ci(
-                self._events(),
-                variant_col=prop_col(api.parse_property(
-                    body["variantProperty"], props=props)),
-                exposure_event=api.parse_event_ref(
-                    body["exposureEvent"], custom_events=ces, props=props),
-                conversion_event=api.parse_event_ref(
-                    body["conversionEvent"], custom_events=ces, props=props),
-                time=api.parse_time(body["time"], self.now),
-                filters=api._grouped_filters(
-                    body, api.EVENT_COLUMNS, props=props),
-            )
-            return 200, (out, {"variant"})
-        out = experiment_report(
-            self._events(),
-            variant_col=prop_col(
-                api.parse_property(body["variantProperty"], props=props)),
-            exposure_event=api.parse_event_ref(body["exposureEvent"],
-                                               custom_events=ces, props=props),
-            conversion_event=api.parse_event_ref(body["conversionEvent"],
-                                                 custom_events=ces, props=props),
-            time=api.parse_time(body["time"], self.now),
-            control=str(body["control"]),
-            filters=api._grouped_filters(body, api.EVENT_COLUMNS, props=props),
-        )
-        return 200, (out, {"variant"})
+    def _plan_experiment(self, r, ctx):
+        from .operators import experiment as X
 
-    def _attribution(self, body, m, q):
+        op = {"srm": X.srm_check, "ci": X.conversion_wilson_ci}.get(
+            r.kind, X.experiment_report)
+        return op(ctx.events, **r.kw), {"variant"}
+
+    def _parse_attribution(self, body, ctx):
         """Revenue/conversion attribution (beyond the reference).
         Body: ``{time, touchEvent, conversionEvent, channelProperty,
         model?, lookbackDays?, halfLifeDays?, filters?,
         maxTouchesPerUser?}``; model in first_touch | last_touch |
         linear | time_decay | position (halfLifeDays parameterizes
-        time_decay, default 1). ``maxTouchesPerUser``
+        time_decay, default 1, and must be positive). ``maxTouchesPerUser``
         enables the whale guard (documented lossy approximation for
         over-cap users; keys_capped/max_key_rows land in /metrics as
         optiprism_whale_guard_* labeled guard=attr_touch_cap)."""
-        import datetime as _dt
-
-        pid = self._pid(m)
         from .exprs import prop_col
+        from .operators.attribution import _MODELS
+
+        cap = body.get("maxTouchesPerUser")
+        kw = dict(
+            channel_col=prop_col(ctx.prop(body["channelProperty"])),
+            touch_event=ctx.event_ref(body["touchEvent"]),
+            conversion_event=ctx.event_ref(body["conversionEvent"]),
+            time=ctx.time(),
+            model=body.get("model", "last_touch"),
+            lookback=dt.timedelta(days=float(body.get("lookbackDays", 30))),
+            filters=ctx.filters(),
+            max_touches_per_user=(int(cap) if cap is not None else None),
+            half_life=dt.timedelta(days=float(body.get("halfLifeDays", 1))),
+        )
+        if kw["model"] not in _MODELS:
+            raise HttpError(400, f"model must be one of {_MODELS}")
+        if kw["model"] == "time_decay" and kw["half_life"] <= dt.timedelta(0):
+            raise HttpError(400, "halfLifeDays must be positive")
+        return kw
+
+    def _plan_attribution(self, kw, ctx):
         from .operators.attribution import attribution_report
 
-        props = self._props(pid)
-        ces = self._custom_events(pid)
-        cap = body.get("maxTouchesPerUser")
-        out = attribution_report(
-            self._events(),
-            channel_col=prop_col(
-                api.parse_property(body["channelProperty"], props=props)),
-            touch_event=api.parse_event_ref(body["touchEvent"],
-                                            custom_events=ces, props=props),
-            conversion_event=api.parse_event_ref(body["conversionEvent"],
-                                                 custom_events=ces, props=props),
-            time=api.parse_time(body["time"], self.now),
-            model=body.get("model", "last_touch"),
-            lookback=_dt.timedelta(days=float(body.get("lookbackDays", 30))),
-            filters=api._grouped_filters(body, api.EVENT_COLUMNS, props=props),
-            max_touches_per_user=(int(cap) if cap is not None else None),
-            half_life=_dt.timedelta(days=float(body.get("halfLifeDays", 1))),
-        )
-        return 200, (out, {"channel"})
+        return attribution_report(ctx.events, **kw), {"channel"}
 
-    def _percentiles(self, body, m, q):
+    def _parse_percentiles(self, body, ctx):
         """Percentile estimates from a catalog-declared rollup. Body:
         ``{rollup, property, qs?, dims?, method?}``; method
         "histogram" (default — rollup.percentile_estimate, bin-width
         error, needs the property in histogramProps) or "sketch"
         (qsketch.sketch_percentile_estimate, rank-bounded error with
         no DDL bin edges, needs it in sketchProps)."""
-        pid = self._pid(m)
+        name = body.get("rollup")
+        rows = [row for row in self.catalog.list("rollup", ctx.pid)
+                if row.get("name") == name]
+        if not rows:
+            raise HttpError(404, f"no rollup named {name!r}")
+        r = Req(store=self._store_for_rollup_row(ctx.pid, rows[0]),
+                prop=body.get("property"),
+                method=body.get("method", "histogram"),
+                dims=tuple(body.get("dims") or ()))
+        spec = r.store.spec
+        bad = [d for d in r.dims if d not in spec.all_dim_names]
+        if bad:
+            raise HttpError(400, f"not rollup dims: {bad}")
+        r.qs = tuple(float(x) for x in (body.get("qs") or (0.5, 0.9)))
+        if not all(0.0 < x < 1.0 for x in r.qs):
+            raise HttpError(400, "qs must be in (0, 1)")
+        declared = {"sketch": ("sketch", spec.sketch_props),
+                    "histogram": ("histogram", dict(spec.histogram_props))}
+        if r.method not in declared:
+            raise HttpError(400, f"unknown method {r.method!r}")
+        what, props = declared[r.method]
+        if r.prop not in props:
+            raise HttpError(
+                400, f"rollup {name!r} declares no {what} for {r.prop!r}")
+        return r
+
+    def _plan_percentiles(self, r, ctx):
         from .operators.qsketch import sketch_percentile_estimate
         from .rollup import percentile_estimate
 
-        name = body.get("rollup")
-        rows = [r for r in self.catalog.list("rollup", pid)
-                if r.get("name") == name]
-        if not rows:
-            raise HttpError(404, f"no rollup named {name!r}")
-        store = self._store_for_rollup_row(pid, rows[0])
-        prop = body.get("property")
-        method = body.get("method", "histogram")
-        dims = tuple(body.get("dims") or ())
-        bad = [d for d in dims if d not in store.spec.all_dim_names]
-        if bad:
-            raise HttpError(400, f"not rollup dims: {bad}")
-        qs = tuple(float(x) for x in (body.get("qs") or (0.5, 0.9)))
-        if not all(0.0 < x < 1.0 for x in qs):
-            raise HttpError(400, "qs must be in (0, 1)")
-        if method == "sketch":
-            if prop not in store.spec.sketch_props:
-                raise HttpError(
-                    400, f"rollup {name!r} declares no sketch for {prop!r}")
-            out = sketch_percentile_estimate(
-                store.read(self.spark), store.spec, prop, qs, dims=dims)
-        elif method == "histogram":
-            if prop not in dict(store.spec.histogram_props):
-                raise HttpError(
-                    400, f"rollup {name!r} declares no histogram for {prop!r}")
-            out = percentile_estimate(
-                store.read(self.spark), store.spec, prop, qs, dims=dims)
-        else:
-            raise HttpError(400, f"unknown method {method!r}")
-        return 200, (out, set(dims))
+        op = (sketch_percentile_estimate if r.method == "sketch"
+              else percentile_estimate)
+        return op(r.store.read(self.spark), r.store.spec, r.prop, r.qs,
+                  dims=r.dims), set(r.dims)
 
-    def _event_records_search(self, body, m, q):
-        pid = self._pid(m)
-        props = self._props(pid)
-        specs = tuple(
-            api.EventFilterSpec(
-                api.parse_event_ref(e, custom_events=self._custom_events(pid),
-                                    props=props),
-                tuple(api.parse_filter(f, props=props) for f in e.get("filters") or ()),
-            )
-            for e in body.get("events") or ()
-        )
-        time = api.parse_time(body["time"], self.now) if body.get("time") else None
-        filters = api._grouped_filters(body, api.EVENT_COLUMNS, props=props)
-        return 200, event_records_search(
-            self._events(), time=time, event_specs=specs, filters=filters
-        )
+    def _parse_event_records_search(self, body, ctx):
+        return Req(
+            event_specs=tuple(
+                api.EventFilterSpec(
+                    ctx.event_ref(e),
+                    tuple(api.parse_filter(f, props=ctx.props)
+                          for f in e.get("filters") or ()))
+                for e in body.get("events") or ()),
+            time=ctx.time(required=False), filters=ctx.filters())
 
-    def _event_record_by_id(self, body, m, q):
-        return 200, event_record_by_id(self._events(), int(m["id"]))
+    def _plan_event_records_search(self, r, ctx):
+        return event_records_search(ctx.events, **vars(r)), None
 
-    def _group_records_search(self, body, m, q):
+    def _parse_event_record(self, body, ctx):
+        return int(ctx.md["id"])
+
+    def _plan_event_record(self, rid, ctx):
+        return event_record_by_id(ctx.events, rid), None
+
+    def _parse_group_records_search(self, body, ctx):
         sort = body.get("sort") or {}
         group = body.get("group", 0)
         if group not in api.GROUP_COLS:
             raise HttpError(404, f"unknown group {group!r}")
         entity_col = api.GROUP_COLS[group]
-        prop = sort.get("propertyName", entity_col)
-        ascending = sort.get("direction", "asc") != "desc"
-        pid = self._pid(m)
-        return 200, group_records_search(
-            self._events(), sort_prop=prop, ascending=ascending,
-            user_col=entity_col,
-            time=api.parse_time(body["time"], self.now)
-            if body.get("time") else None,
-            filters=tuple(
-                api.parse_filter(f, props=self._props(pid))
-                for f in body.get("filters") or ()),
-        )
+        return Req(
+            sort_prop=sort.get("propertyName", entity_col),
+            ascending=sort.get("direction", "asc") != "desc",
+            user_col=entity_col, time=ctx.time(required=False),
+            filters=tuple(api.parse_filter(f, props=ctx.props)
+                          for f in body.get("filters") or ()))
 
-    def _group_record_by_id(self, body, m, q):
-        group = m["group"]
+    def _plan_group_records_search(self, r, ctx):
+        return group_records_search(ctx.events, **vars(r)), None
+
+    def _parse_group_record(self, body, ctx):
+        group = ctx.md["group"]
         key = int(group) if group.isdigit() else group
         if key not in api.GROUP_COLS:
             raise HttpError(404, f"unknown group {group!r}")
-        return 200, group_record_by_id(
-            self._events(), int(m["id"]), user_col=api.GROUP_COLS[key]
-        )
+        return Req(rid=int(ctx.md["id"]), user_col=api.GROUP_COLS[key])
 
-    def _property_values(self, body, m, q):
-        prop = api.parse_property(body, props=self._props(self._pid(m)))
-        return 200, property_values(
-            self._events(), prop, filter_like=body.get("like")
-        )
+    def _plan_group_record(self, r, ctx):
+        return group_record_by_id(ctx.events, r.rid,
+                                  user_col=r.user_col), None
+
+    def _parse_property_values(self, body, ctx):
+        return Req(prop=ctx.prop(body), filter_like=body.get("like"))
+
+    def _plan_property_values(self, r, ctx):
+        return property_values(ctx.events, r.prop,
+                               filter_like=r.filter_like), None
 
     def _project_of_token(self, token: str) -> int:
         """Resolve an ingest token to its project id — the reference's
@@ -3227,14 +3228,7 @@ class App:
             # reference's serde rejection path
             status, payload = 400, {"error": f"{type(e).__name__}: {e}"}
         except Exception as e:
-            # operator-raised runtime guards (F.raise_error — e.g.
-            # srm_check's out-of-table df) are CALLER errors that only
-            # surface at collect time; everything else re-raises
-            from pyspark.errors import PySparkException
-
-            cls = (e.getCondition() or "" if isinstance(
-                e, PySparkException) else "")
-            if not cls.startswith("USER_RAISED_EXCEPTION"):
+            if not _user_raised(e):
                 raise
             status, payload = 400, {"error": str(e)}
         metrics.http_requests_total().inc(method=method, status=str(status))
@@ -3361,10 +3355,14 @@ class App:
                     if isinstance(result, tuple):
                         result, dims = result
                     if isinstance(result, DataFrame):
-                        compact = "format=jsonCompact" in query
-                        result = frame_to_response(
-                            result, compact=compact, dimensions=dims
-                        )
+                        try:
+                            result = frame_to_response(
+                                result, dimensions=dims,
+                                compact="format=jsonCompact" in query)
+                        except HttpError:
+                            raise
+                        except Exception as e:  # a query's collect phase
+                            raise _engine_fault(e) from e
                     if cache is not None and status == 200:
                         metrics.query_result_cache_total().inc(
                             query_type=qtype, outcome="miss")

@@ -8,6 +8,7 @@ merge determinism, validation, and plan shape."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -497,7 +498,10 @@ def test_kmv_store_read_prunes_day_partitions(spark, tmp_path):
     pruned = store.read(spark).filter(
         (F.col("day") >= "2024-01-03") & (F.col("day") <= "2024-01-03"))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
+    # a non-empty partition filter on the day column (an unpruned
+    # scan prints "PartitionFilters: []")
+    assert re.search(rf"PartitionFilters: \[[^\]]*\b{store.day_col}#",
+                     plan), plan
     # the pruned scan reads exactly the one day
     assert pruned.count() == 1
 
