@@ -1,47 +1,39 @@
 """One day-partitioned parquet store — the storage protocol shared by
 the rollup (rollup.py), user-day (userday.py) and KMV day-sketch
-(streaming/audience.py) stores.
+(streaming/audience.py) stores, over snapshot.py's pointer commit
+(one ``<day_col>=<day>`` file group per day).
 
 A subclass supplies its day column (``day_col``), ``build(events)``
 (one aggregate of raw events at day grain) and ``merge(parts)`` (the
 re-aggregation of same-schema partials). Everything else lives here
 once:
 
-- ``update``: build the batch aggregate, collect the days it touches,
-  merge it with the stored partitions of those days (pruned scan),
-  dynamic-overwrite exactly those partitions. Bytes rewritten per
-  fold follow the batch's day span, never history.
-- the ``(stream_id, batch_id)`` replay ledger, written AFTER the
-  overwrite. KNOWN GAP: a crash between the two leaves the batch's
-  days merged but unrecorded, so the restarted scheduler's replay
-  merges them again and double-counts those days. Nothing calls
-  ``rebuild`` after a restart to repair it; only a commit that writes
-  data and ledger together (a transactional lake, or one pointer file
-  holding both) closes the gap.
+- ``update``: build the batch aggregate, merge it with the stored
+  files of the days it touches (pruned scan) and commit those days'
+  new files with the batch's ``(stream_id, batch_id)`` in one flip —
+  bytes per fold follow the batch's day span, and a replayed batch
+  lands exactly once whichever side of the flip a crash hit.
 - ``recompute_days``: the deletion hook. A fold is additive (counts
   and sums add, sketches union), so removed rows can never be merged
   out as a delta; erasure and retention re-aggregate the affected days
   from the post-rewrite lake instead.
-- ``expire_before``: retention as a zero-scan partition drop.
+- ``expire_before``: retention as a zero-scan drop of days from the
+  pointer.
+
+A concurrent read keeps scanning the snapshot it loaded, so no commit
+fails or tears it.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
+import datetime as dt
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import (
-    EVENT_TIME_COL,
-    memo_plan,
-    overwrite_partitions,
-    parquet_bytes,
-    read_json,
-    write_json_durable,
-)
+from . import snapshot
+from .schema import EVENT_TIME_COL, memo_plan
 
 
 #: Largest store, in parquet bytes, that ``DayStore.read`` serves as
@@ -54,6 +46,10 @@ from .schema import (
 #: already slower as one task at 0.3 MB, while L-ness (a 7-day pruned
 #: scan) is faster at every size measured, up to 10 MB.
 SINGLE_PARTITION_MAX_BYTES = 2 << 20
+
+
+def _iso(day) -> str:
+    return day.isoformat() if hasattr(day, "isoformat") else str(day)
 
 
 class DayStore:
@@ -72,128 +68,124 @@ class DayStore:
         raise NotImplementedError
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            e.startswith(f"{self.day_col}=") for e in os.listdir(self.path))
+        """Whether the store's pointer names any file."""
+        return bool((snapshot.load(self.path) or {}).get("files"))
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The store as a lazy frame, day column first (``partitionBy``
         surfaces it LAST) — the one read every routed query, fold and
-        repair starts from. The frame is memoized in ``schema``'s plan
-        memo under a ``day:<day_col>`` namespace, so a repeat read
-        skips both the footer round-trip and re-analysing the
-        projection; the memo's stat fingerprint makes any fold,
-        recompute or expiry a miss, so the next read sees it.
+        repair starts from. It scans exactly the pointer's files, with
+        ``basePath`` so partition discovery still yields the day column
+        for ``PartitionFilters``, and is memoized in ``schema``'s plan
+        memo per pointer version: a repeat read skips the footer
+        round-trip and re-analysis, and a commit is a miss.
 
-        SINGLE-PARTITION RULE: a store whose data files total no more
-        than ``SINGLE_PARTITION_MAX_BYTES`` is served as
-        ``coalesce(1)``: one scan task and no shuffle. The coalesced
+        SINGLE-PARTITION RULE: a store whose files total no more than
+        ``SINGLE_PARTITION_MAX_BYTES`` (the pointer's sizes) is served
+        as ``coalesce(1)``: one scan task and no shuffle. The coalesced
         child reports ``SinglePartition``, which meets every clustered
         and all-tuples requirement, so the aggregates, windows and
         joins above a routed read plan no ``Exchange``. A day-window
         ``Filter`` still pushes through the coalesce into the scan's
         ``PartitionFilters``. A larger store reads with the scan's own
-        file splits. The store is sized on each memo miss; a store past
-        the memo's 2048-entry fingerprint limit misses on every call,
-        so it is re-walked per read — the same per-file listing
-        ``spark.read.parquet`` already pays for it."""
+        file splits."""
+        ptr = snapshot.load(self.path)
+        if not (ptr or {}).get("files"):
+            raise FileNotFoundError(f"no day store at {self.path}")
+        return self._read(spark, ptr)
+
+    def _read(self, spark: SparkSession, ptr: dict) -> DataFrame:
         def day_first() -> DataFrame:
-            df = spark.read.parquet(self.path)
+            df = spark.read.option("basePath", self.path).parquet(
+                *snapshot.paths(self.path, ptr["files"]))
             df = df.select(
                 self.day_col, *[c for c in df.columns if c != self.day_col])
-            if parquet_bytes(self.path) <= SINGLE_PARTITION_MAX_BYTES:
+            if snapshot.nbytes(ptr) <= SINGLE_PARTITION_MAX_BYTES:
                 df = df.coalesce(1)
             return df
 
-        return memo_plan(spark, self.path, f"day:{self.day_col}", day_first)
+        return memo_plan(spark, snapshot.pointer_path(self.path),
+                         f"day:{self.day_col}@{ptr['version']}", day_first)
+
+    def _put(self, files: dict, days: Sequence, frame: DataFrame) -> dict:
+        """``files`` with the given days replaced by ``frame``'s rows,
+        written as new files; a day ``frame`` holds no rows for leaves
+        the map."""
+        drop = {f"{self.day_col}={_iso(d)}" for d in days}
+        out = {g: fs for g, fs in files.items() if g not in drop}
+        out.update(snapshot.write(frame.repartition(self.day_col),
+                                  self.path, partition_col=self.day_col))
+        return out
 
     def rebuild(self, spark: SparkSession, events: DataFrame) -> None:
-        self.build(events).repartition(self.day_col).write.mode(
-            "overwrite").partitionBy(self.day_col).parquet(self.path)
-
-    def _ledger_path(self) -> str:
-        return os.path.join(self.path, "_applied_batches.json")
-
-    def _applied(self) -> dict:
-        return read_json(self._ledger_path(), {})
-
-    def _mark_applied(self, stream_id: Optional[str],
-                      batch_id: Optional[int]) -> None:
-        if stream_id is None or batch_id is None:
-            return
-        applied = self._applied()
-        applied[stream_id] = batch_id
-        write_json_durable(self._ledger_path(), applied)
+        """Replace every day with ``events``' aggregate in one commit.
+        The ledger carries over: the batches it records are inside the
+        events a rebuild reads, so their replays must keep no-opping."""
+        with snapshot.writer(self.path):
+            base = snapshot.load(self.path)
+            snapshot.commit(self.path, base, self._put(
+                {}, (), self.build(events)))
 
     def update(self, spark: SparkSession, new_events: DataFrame,
                stream_id: Optional[str] = None,
                batch_id: Optional[int] = None) -> int:
         """Fold an append batch in; returns the days touched. A
-        re-delivered ``(stream_id, batch_id)`` (a restarted scheduler
-        replays its last uncommitted batch) returns 0 untouched —
+        re-delivered ``(stream_id, batch_id)`` returns 0 untouched —
         merging it twice would double-count. Without ids the batch is
         always applied."""
-        if stream_id is not None and batch_id is not None:
-            if self._applied().get(stream_id, -1) >= batch_id:
+        with snapshot.writer(self.path):
+            base = snapshot.load(self.path)
+            if snapshot.applied(base, stream_id, batch_id):
                 return 0
-        # persisted: the batch aggregate feeds both the touched-day
-        # collect and the merge write
-        batch = self.build(new_events).persist()
-        try:
-            days = [r[0] for r in
-                    batch.select(self.day_col).distinct().collect()]
-            if days:
-                out = batch.repartition(self.day_col)
-                if self.exists():
-                    existing = self.read(spark).filter(
-                        F.col(self.day_col).isin(days))
-                    # localCheckpoint materializes the merged partitions
-                    # so the overwrite does not read from the path it
-                    # replaces; block loss fails the write BEFORE the
-                    # overwrite touches the store, and the ledger
-                    # re-runs the merge
-                    out = self.merge([existing, batch]).repartition(
-                        self.day_col).localCheckpoint()
-                overwrite_partitions(out, self.day_col, self.path)
-            self._mark_applied(stream_id, batch_id)
-            return len(days)
-        finally:
-            batch.unpersist()
+            files = (base or {}).get("files", {})
+            # persisted: the batch aggregate feeds both the touched-day
+            # collect and the merge write
+            batch = self.build(new_events).persist()
+            try:
+                days = [r[0] for r in
+                        batch.select(self.day_col).distinct().collect()]
+                if days:
+                    out = batch
+                    if files:  # superseded files outlive this write
+                        out = self.merge([self._read(spark, base).filter(
+                            F.col(self.day_col).isin(days)), batch])
+                    files = self._put(files, days, out)
+                snapshot.commit(self.path, base, files, stream_id, batch_id)
+                return len(days)
+            finally:
+                batch.unpersist()
 
     def recompute_days(self, spark: SparkSession, events: DataFrame,
                        days: Sequence) -> int:
         """Re-aggregate exactly the given days from ``events`` (the
         post-rewrite lake) — the erasure and retention hook. Cost is
-        O(affected days), not O(store). Days whose every raw row was
-        removed yield no rows, so a dynamic overwrite would leave the
-        stale partition standing — those are dropped explicitly."""
-        day_list = sorted({d.isoformat() if hasattr(d, "isoformat")
-                           else str(d) for d in days})
-        if not self.exists() or not day_list:
-            return 0
-        fresh = self.build(events.filter(
-            F.to_date(F.col(self.ts_col)).isin(day_list))).persist()
-        try:
-            have = {r[0].isoformat() for r in
-                    fresh.select(self.day_col).distinct().collect()}
-            if have:
-                overwrite_partitions(fresh.repartition(self.day_col),
-                                     self.day_col, self.path)
-            for gone in set(day_list) - have:
-                shutil.rmtree(os.path.join(self.path,
-                                           f"{self.day_col}={gone}"),
-                              ignore_errors=True)
-        finally:
-            fresh.unpersist()
-        spark.catalog.refreshByPath(self.path)
+        O(affected days), not O(store). A day whose every raw row was
+        removed yields no rows and leaves the pointer."""
+        day_list = sorted({_iso(d) for d in days})
+        with snapshot.writer(self.path):
+            base = snapshot.load(self.path)
+            if not (base or {}).get("files") or not day_list:
+                return 0
+            fresh = self.build(events.filter(
+                F.to_date(F.col(self.ts_col)).isin(day_list)))
+            snapshot.commit(self.path, base,
+                            self._put(base["files"], day_list, fresh))
         return len(day_list)
 
-    def expire_before(self, older_than) -> list[str]:
-        """Retention on the store itself: drop day partitions strictly
-        older than the cutoff — the same zero-scan partition delete as
-        ``lifecycle.expire_partitions``. A mid-day cutoff additionally
-        needs ``recompute_days`` on the boundary day; the lifecycle
-        wiring does both."""
-        from .lifecycle import expire_partitions
-
-        return expire_partitions(
-            self.path, older_than, date_col=self.day_col)["partitions_dropped"]
+    def expire_before(self, older_than: dt.date) -> list[str]:
+        """Retention on the store itself: drop the days strictly older
+        than the cutoff from the pointer — zero bytes scanned. Returns
+        the dropped ``<day_col>=<day>`` groups. A mid-day cutoff
+        additionally needs ``recompute_days`` on the boundary day; the
+        lifecycle wiring does both."""
+        with snapshot.writer(self.path):
+            base = snapshot.load(self.path)
+            files = (base or {}).get("files", {})
+            # ISO days order as strings; Spark's null-day partition
+            # (__HIVE_DEFAULT_PARTITION__) sorts after them and stays
+            gone = sorted(g for g in files
+                          if g.split("=", 1)[1] < older_than.isoformat())
+            if gone:
+                snapshot.commit(self.path, base, {
+                    g: fs for g, fs in files.items() if g not in gone})
+        return gone

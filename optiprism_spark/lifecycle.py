@@ -325,10 +325,10 @@ def expire_base(
     freshly-expired base, resurrecting deleted history.
 
     ``day_stores``: day stores (rollup, user-day, KMV) maintained
-    against this lake. Their expired history is a partition DROP
-    (``DayStore.expire_before``, zero bytes scanned); a mid-day cutoff
-    additionally re-aggregates the boundary day, which keeps its
-    post-cutoff rows.
+    against this lake. Their expired days leave the store's pointer in
+    one commit (``DayStore.expire_before``, zero bytes scanned), so no
+    reader's file listing goes stale; a mid-day cutoff additionally
+    re-aggregates the boundary day, which keeps its post-cutoff rows.
 
     Returns total rows removed (base + tiers)."""
     removed = _rewrite_base_filtered(
@@ -342,9 +342,6 @@ def expire_base(
         spark.catalog.refreshByPath(tiers_path)
     for store in day_stores:
         store.expire_before(older_than.date())
-        # the partition drop changed the file listing under the path —
-        # stale FileStatusCache entries fail the next scan
-        spark.catalog.refreshByPath(store.path)
     if older_than.time() != dt.time.min:
         _repair_day_stores(spark, day_stores, table_name, appends_path,
                            tiers_path, [older_than.date()])

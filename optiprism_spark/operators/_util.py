@@ -4,6 +4,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+
+class CallerError(ValueError):
+    """A request that only the data can show to be wrong: an unmatched
+    control variant, observed variants outside an allocation, ANN sizes
+    that cannot work. The server answers it 400 whether it is raised
+    while the plan is built or at collect; library callers still catch
+    ``ValueError``."""
+
 #: frames persisted by operators (LSH base signatures, IVF assignment)
 #: so long-lived sessions can free executor storage memory explicitly
 #: instead of waiting for the driver-GC ContextCleaner sweep

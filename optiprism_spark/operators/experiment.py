@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..dsl import EventRef, PropFilter, QueryTime
 from ..exprs import full_filter
 from ..schema import EVENT_ID_COL, EVENT_TIME_COL, EVENT_USER_COL
+from ._util import CallerError
 
 
 def _variant_conversions(
@@ -165,7 +166,7 @@ def experiment_report(
     # control name was wrong — fail loudly instead (one bounded job
     # over the user-grain aggregate; a readout query, not a pipeline)
     if not ctrl.head(1):
-        raise ValueError(
+        raise CallerError(
             f"control variant {control!r} matched no exposures")
     # two-proportion pooled z: p = (x1+x2)/(n1+n2),
     # z = (cvr - ccvr) / sqrt(p (1-p) (1/n1 + 1/n2)) — expression
@@ -290,7 +291,7 @@ def srm_check(
         # by definition — but a silent NULL would drop it from the
         # statistic; fail loudly (bounded job over k rows)
         if counts.filter(F.col("__share").isNull()).head(1):
-            raise ValueError(
+            raise CallerError(
                 "observed variants missing from expected allocation")
         counts = counts.withColumn(
             "n_users", F.coalesce(F.col("n_users"), F.lit(0))

@@ -1,16 +1,7 @@
-"""Durable IVF index store — the ANN family's maintained artifact.
-
-The reference ships no vector search at all; this repo's IVF
-similarity operators (operators/similarity.py) are beyond-reference,
-and until round 15 they re-trained the coarse quantizer and
-re-assigned the whole corpus PER CALL — fine for a one-shot batch
-job, a non-starter for a standing search surface at 100 TB (SF1_r14
-measured the per-call build as the family's whole scale cost:
-1.08 s → 8.11 s at 10× data, all of it index construction, none of
-it probe). Every other expensive family here already serves from a
-maintained store (RollupStore day aggregates, KmvDayStore audience
-sketches, the co-bucketed warehouse layout); this module gives the
-ANN family the same tier.
+"""Durable IVF index store — the ANN family's maintained artifact, so
+a standing similarity surface never re-trains the coarse quantizer and
+re-assigns the corpus per call (SF1_r14: the per-call build was the
+family's whole scale cost, 1.08 s → 8.11 s at 10× data).
 
 What is persisted (the inverted file, split in two):
 - ``centroids``: the coarse quantizer — (centroid_id, cv double[]).
@@ -21,53 +12,40 @@ What is persisted (the inverted file, split in two):
   folded in AFTER the last (re)build, which is what the drift
   trigger compares against the build-time population.
 
-Commit protocol (warehouse_layout's single-pointer pattern): each
-(re)build writes a fresh ``gen_<N>/`` directory and then atomically
-replaces ONE pointer file (``_current.json``) naming it — a reader
-resolves the pointer and sees one complete generation or the other,
-never a half-written mix; superseded generations are retired after
-the commit. Appends go into the CURRENT generation's assignment
-directory (parquet append) with a (stream_id, batch_id) replay
-ledger in the pointer, mirroring RollupStore.update: a crash between
-the data append and the ledger commit re-applies one batch on
-replay, which ``rebuild`` repairs — on a transactional lake both are
-one commit.
+Commit protocol: snapshot.py's pointer names the centroid and
+assignment files with the index metadata and the replay ledger. A
+(re)build flips it to a new quantizer and assignment, an append to the
+old files plus the batch's (data and ledger in one flip), an erasure
+to the surviving assignment beside the same quantizer files.
 
-Maintenance policy (the judge-endorsed design): appends NEVER
-retrain — new vectors are assigned against the frozen quantizer, so
-per-batch cost follows the batch. Retraining happens only when
-``embedding_centroid_drift`` (operators/drift.py) between the
-build-time population and the appended rows crosses a declared
-threshold — the corpus has actually moved, so the inverted lists are
-going stale. ``maintain()`` packages append + drift-check + optional
-retrain as one tick; the server's maintenance tick (App.maintain →
-maintain_ann_indexes / maintain_ivf) is its only caller.
+Maintenance policy: appends NEVER retrain — new vectors are assigned
+against the frozen quantizer, so per-batch cost follows the batch.
+Retraining happens only when ``embedding_centroid_drift``
+(operators/drift.py) between the build-time population and the
+appended rows crosses a declared threshold. ``maintain()`` packages
+append + drift-check + optional retrain as one tick; the server's
+maintenance tick (App.maintain) is its only caller.
 
 Query routing: `similarity.cosine_topk_ivf` and
 `similarity.embedding_near_pairs_ivf` accept ``store=`` and read the
-persisted frames instead of rebuilding — bit-identical results to
-the per-call path by construction (the assignment is the SAME
-doubles, round-tripped losslessly through parquet), proven by the
-routed registered queries sharing the per-call oracles.
+persisted frames — bit-identical to the per-call path (the assignment
+is the SAME doubles, round-tripped losslessly through parquet).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import memo_parquet, read_json, write_json_durable
-
-_POINTER = "_current.json"
+from .. import snapshot
+from ..schema import memo_plan
 
 
 class IvfStore:
     """Persisted IVF-Flat index: coarse centroids + corpus assignment
-    under a generation/pointer commit protocol, with append + drift-
+    under the pointer commit of ``snapshot``, with append + drift-
     triggered-retrain maintenance. See module docstring."""
 
     def __init__(self, path: str, id_col: str = "vec_id",
@@ -76,47 +54,41 @@ class IvfStore:
         self.id_col = id_col
         self.vec_col = vec_col
 
-    # ------------------------------------------------- pointer protocol
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, _POINTER)
-
-    def _read_pointer(self) -> Optional[dict]:
-        return read_json(self._pointer_path())
-
-    def _commit_pointer(self, ptr: dict) -> None:
-        """The pointer flip IS the commit (fsync'd temp-write + atomic
-        rename): a crash before it leaves the old index fully live, a
-        crash after it leaves the new one."""
-        write_json_durable(self._pointer_path(), ptr)
-
     def exists(self) -> bool:
-        return self._read_pointer() is not None
+        return snapshot.load(self.path) is not None
 
     def _require(self) -> dict:
-        ptr = self._read_pointer()
+        ptr = snapshot.load(self.path)
         if ptr is None:
             raise FileNotFoundError(
                 f"no IVF index at {self.path} — call rebuild() first")
         return ptr
 
-    def _gen_dir(self, gen: int) -> str:
-        return os.path.join(self.path, f"gen_{gen}")
-
     def info(self) -> dict:
         """Pointer metadata (gen, n_centroids, method, count, dim,
         applied ledger) — the store's catalog row."""
-        return dict(self._require())
+        ptr = self._require()
+        return {**ptr["meta"], "applied": ptr["applied"]}
+
+    def _frame(self, spark: SparkSession, ptr: dict, group: str
+               ) -> DataFrame:
+        """One component (``centroids`` or ``assignment``) of the
+        pointer's snapshot, memoized by pointer version."""
+        return memo_plan(
+            spark, snapshot.pointer_path(self.path),
+            f"ivf:{group}@{ptr['version']}",
+            lambda: spark.read.parquet(
+                *snapshot.paths(self.path, ptr["files"], [group])))
 
     # ------------------------------------------------------- build/read
 
     def rebuild(self, spark: SparkSession, embeddings: DataFrame,
                 n_centroids="auto", method: str = "sample") -> dict:
         """(Re)train the quantizer and re-assign the full corpus into
-        a NEW generation, then flip the pointer. ``n_centroids="auto"``
-        sizes ~sqrt(N) (sizing.ivf_params). The replay ledger carries
-        over: batches folded before a retrain are INSIDE the rebuilt
-        corpus, so their ids must keep no-opping."""
+        new files, then flip the pointer to them (the next ``gen``).
+        ``n_centroids="auto"`` sizes ~sqrt(N) (sizing.ivf_params). The
+        replay ledger carries over: batches folded before a retrain are
+        INSIDE the rebuilt corpus, so their ids must keep no-opping."""
         from .similarity import _coarse_centroids, ivf_assign
         from .sizing import ivf_params, validate_ann_params
 
@@ -124,45 +96,35 @@ class IvfStore:
         if n_centroids == "auto":
             n_centroids = ivf_params(n)["n_centroids"]
         validate_ann_params(n_centroids=n_centroids)
-        old = self._read_pointer()
-        gen = (old["gen"] + 1) if old else 1
-        gd = self._gen_dir(gen)
-        cent = _coarse_centroids(
-            embeddings, n_centroids, self.id_col, self.vec_col, method)
-        cent.write.mode("overwrite").parquet(os.path.join(gd, "centroids"))
-        # assign against the PERSISTED quantizer (not the lineage that
-        # derived it): one corpus pass, and exactly the frame append()
-        # will extend later
-        cent_r = spark.read.parquet(os.path.join(gd, "centroids"))
-        assigned = ivf_assign(
-            embeddings, cent_r, self.id_col, self.vec_col
-        ).withColumn("appended", F.lit(False))
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(gd, "assignment"))
-        dim_row = embeddings.select(
-            F.size(F.col(self.vec_col)).alias("d")).head()
-        ptr = {
-            "gen": gen,
-            "n_centroids": int(n_centroids),
-            "method": method,
-            "count": int(n),
-            "dim": int(dim_row["d"]) if dim_row else 0,
-            "applied": (old or {}).get("applied", {}),
-        }
-        self._commit_pointer(ptr)
-        # retire superseded generations AFTER the flip — the pointer
-        # no longer names them (single-process semantics; on a shared
-        # lake this is the table-format's snapshot expiry)
-        for d in os.listdir(self.path):
-            if d.startswith("gen_") and d != f"gen_{gen}":
-                shutil.rmtree(os.path.join(self.path, d),
-                              ignore_errors=True)
-        return ptr
+        with snapshot.writer(self.path):
+            old = snapshot.load(self.path)
+            cent = _coarse_centroids(
+                embeddings, n_centroids, self.id_col, self.vec_col, method)
+            files = snapshot.write(cent, self.path, group="centroids")
+            # assign against the PERSISTED quantizer (not the lineage
+            # that derived it): one corpus pass, and exactly the frame
+            # append() will extend later
+            cent_r = spark.read.parquet(
+                *snapshot.paths(self.path, files, ["centroids"]))
+            assigned = ivf_assign(
+                embeddings, cent_r, self.id_col, self.vec_col
+            ).withColumn("appended", F.lit(False))
+            files.update(snapshot.write(assigned, self.path,
+                                        group="assignment"))
+            dim_row = embeddings.select(
+                F.size(F.col(self.vec_col)).alias("d")).head()
+            meta = {
+                "gen": (old["meta"]["gen"] + 1) if old else 1,
+                "n_centroids": int(n_centroids),
+                "method": method,
+                "count": int(n),
+                "dim": int(dim_row["d"]) if dim_row else 0,
+            }
+            snapshot.commit(self.path, old, files, meta=meta)
+        return self.info()
 
     def centroids(self, spark: SparkSession) -> DataFrame:
-        ptr = self._require()
-        return memo_parquet(
-            spark, os.path.join(self._gen_dir(ptr["gen"]), "centroids"))
+        return self._frame(spark, self._require(), "centroids")
 
     def assignment(self, spark: SparkSession) -> DataFrame:
         """The inverted file: (id, v double[], n, centroid_id,
@@ -171,10 +133,7 @@ class IvfStore:
         parallelism (same rationale as ivf_assign)."""
         from ._util import spread
 
-        ptr = self._require()
-        df = memo_parquet(
-            spark, os.path.join(self._gen_dir(ptr["gen"]), "assignment"))
-        return spread(df)
+        return spread(self._frame(spark, self._require(), "assignment"))
 
     # ----------------------------------------------------- maintenance
 
@@ -182,29 +141,30 @@ class IvfStore:
                stream_id: Optional[str] = None,
                batch_id: Optional[int] = None) -> int:
         """Fold an ingest batch into the CURRENT index: assign against
-        the frozen quantizer, parquet-append, advance the replay
-        ledger. Returns rows appended (0 for a re-delivered batch).
-        Never retrains — that's maintain()'s drift decision."""
+        the frozen quantizer, write the rows as new assignment files
+        and commit them with the replay ledger. Returns rows appended
+        (0 for a re-delivered batch). Never retrains — that's
+        maintain()'s drift decision."""
         from .similarity import ivf_assign
 
-        ptr = self._require()
-        if stream_id is not None and batch_id is not None:
-            if ptr["applied"].get(stream_id, -1) >= batch_id:
+        with snapshot.writer(self.path):
+            ptr = self._require()
+            if snapshot.applied(ptr, stream_id, batch_id):
                 return 0
-        n_new = new_embeddings.count()
-        if n_new:
-            cent = self.centroids(spark)
-            rows = ivf_assign(
-                new_embeddings, cent, self.id_col, self.vec_col
-            ).withColumn("appended", F.lit(True))
-            rows.write.mode("append").parquet(
-                os.path.join(self._gen_dir(ptr["gen"]), "assignment"))
-        ptr["count"] = int(ptr["count"]) + int(n_new)
-        if stream_id is not None and batch_id is not None:
-            ptr["applied"][stream_id] = batch_id
-        self._commit_pointer(ptr)
+            n_new = new_embeddings.count()
+            files = dict(ptr["files"])
+            if n_new:
+                rows = ivf_assign(
+                    new_embeddings, self._frame(spark, ptr, "centroids"),
+                    self.id_col, self.vec_col,
+                ).withColumn("appended", F.lit(True))
+                new = snapshot.write(rows, self.path, group="assignment")
+                files["assignment"] = {**files["assignment"],
+                                       **new["assignment"]}
+            meta = {**ptr["meta"], "count": ptr["meta"]["count"] + n_new}
+            snapshot.commit(self.path, ptr, files, stream_id, batch_id,
+                            meta=meta)
         return int(n_new)
-
     def drift(self, spark: SparkSession) -> DataFrame:
         """Build-time population vs appended rows, through
         `drift.embedding_centroid_drift` (ONE groupBy over the
@@ -212,10 +172,9 @@ class IvfStore:
         frame when nothing was appended since the last build."""
         from .drift import embedding_centroid_drift
 
-        ptr = self._require()
         return embedding_centroid_drift(
             self.assignment(spark), F.col("appended"),
-            vec_col="v", dim=int(ptr["dim"]))
+            vec_col="v", dim=int(self.info()["dim"]))
 
     def maintain(self, spark: SparkSession, new_embeddings: DataFrame,
                  drift_threshold: float = 0.02,
@@ -231,12 +190,11 @@ class IvfStore:
         cos = None if row is None else row["centroid_cosine"]
         retrain = cos is not None and cos < 1.0 - drift_threshold
         if retrain:
-            ptr = self._require()
             corpus = self.assignment(spark).select(
                 F.col(self.id_col),
                 F.col("v").alias(self.vec_col))
             self.rebuild(spark, corpus, n_centroids="auto",
-                         method=ptr["method"])
+                         method=self.info()["method"])
         return {"appended": appended, "centroid_cosine": cos,
                 "retrained": retrain}
 
@@ -266,29 +224,23 @@ class IvfStore:
 
     def erase(self, spark: SparkSession, ids) -> int:
         """User/document erasure: rewrite the assignment WITHOUT the
-        given vector ids into a fresh generation (parquet can't
-        delete in place; the pointer flip keeps readers consistent).
-        Returns rows erased. The quantizer is kept — erasure must not
+        given vector ids as new files and flip the pointer to them (the
+        next ``gen``; parquet can't delete in place). Returns rows
+        erased. The quantizer's files are kept — erasure must not
         silently change every surviving bucket id."""
-        ptr = self._require()
         ids = list(ids)
         if not ids:
             return 0
-        cur = self.assignment(spark)
-        keep = cur.filter(~F.col(self.id_col).isin(ids))
-        gone = int(cur.count()) - int(keep.count())
-        if gone == 0:
-            return 0
-        gen = ptr["gen"] + 1
-        gd = self._gen_dir(gen)
-        self.centroids(spark).write.mode("overwrite").parquet(
-            os.path.join(gd, "centroids"))
-        keep.write.mode("overwrite").parquet(os.path.join(gd, "assignment"))
-        ptr["gen"] = gen
-        ptr["count"] = int(ptr["count"]) - gone
-        self._commit_pointer(ptr)
-        for d in os.listdir(self.path):
-            if d.startswith("gen_") and d != f"gen_{gen}":
-                shutil.rmtree(os.path.join(self.path, d),
-                              ignore_errors=True)
+        with snapshot.writer(self.path):
+            ptr = self._require()
+            cur = self._frame(spark, ptr, "assignment")
+            keep = cur.filter(~F.col(self.id_col).isin(ids))
+            gone = int(cur.count()) - int(keep.count())
+            if gone == 0:
+                return 0
+            files = {"centroids": ptr["files"]["centroids"],
+                     **snapshot.write(keep, self.path, group="assignment")}
+            meta = {**ptr["meta"], "gen": ptr["meta"]["gen"] + 1,
+                    "count": ptr["meta"]["count"] - gone}
+            snapshot.commit(self.path, ptr, files, meta=meta)
         return gone

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import math
 
+from ._util import CallerError
+
 #: exact-percentile ceiling for the shared edge recipe
 #: (operators/edges.percentile_edges): F.percentile's FINAL aggregate
 #: buffers every input value on one reduce task — 5·10⁷ doubles is
@@ -116,18 +118,18 @@ def validate_ann_params(
     """Shared input validation for the ANN operators — fail loudly on
     sizes that silently destroy recall or blow up the join."""
     if n_centroids is not None and n_centroids < 1:
-        raise ValueError(f"n_centroids must be >= 1, got {n_centroids}")
+        raise CallerError(f"n_centroids must be >= 1, got {n_centroids}")
     if nprobe is not None:
         if nprobe < 1:
-            raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+            raise CallerError(f"nprobe must be >= 1, got {nprobe}")
         if n_centroids is not None and nprobe > n_centroids:
-            raise ValueError(
+            raise CallerError(
                 f"nprobe={nprobe} > n_centroids={n_centroids}: probing more "
                 "lists than exist is an exact scan in disguise"
             )
     if planes is not None and not 1 <= planes <= 30:
-        raise ValueError(
+        raise CallerError(
             f"planes must be in [1, 30] (2^planes buckets), got {planes}"
         )
     if k is not None and k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+        raise CallerError(f"k must be >= 1, got {k}")

@@ -120,10 +120,11 @@ def _memo_key(spark: SparkSession, path: str, ns: str) -> "tuple | None":
     fingerprint) or None when the path cannot be fingerprinted.
 
     ``ns`` disambiguates the frames built from one path — load_table
-    caches the nanos→µs-TRANSFORMED frame, memo_parquet the raw read,
-    DayStore.read the day-first projection (``day:<day_col>``);
-    without the namespace a path read through two of them would
-    silently serve the wrong variant (r16 advice).
+    caches the nanos→µs-TRANSFORMED frame; a store keys its frames on
+    its pointer file, with the pointer version in the namespace
+    (``day:<day_col>@<version>``, ``ivf:<component>@<version>``);
+    without the namespace a path read two ways would silently serve
+    the wrong variant (r16 advice).
 
     The directory fingerprint stores the (name, mtime_ns) entries
     tuple ITSELF, not hash(tuple(...)) — a 64-bit in-process hash
@@ -132,9 +133,8 @@ def _memo_key(spark: SparkSession, path: str, ns: str) -> "tuple | None":
     statted; a write that only touches files two levels deep without
     bumping its partition directory's mtime is not detected. POSIX
     directory mtime bumps on child create/delete/rename — the way
-    parquet writers land files — so partitioned stores (the intended
-    users) are covered; deeper custom layouts should not rely on
-    this memo."""
+    parquet writers land files — so a date-partitioned table is
+    covered; deeper custom layouts should not rely on this memo."""
     try:
         st = os.stat(path)
         fingerprint: tuple = (st.st_mtime_ns, st.st_size)
@@ -160,9 +160,9 @@ def _memo_key(spark: SparkSession, path: str, ns: str) -> "tuple | None":
 
 def memo_plan(spark: SparkSession, path: str, ns: str,
               read: Callable[[], DataFrame]) -> DataFrame:
-    """The one plan memo behind ``load_table``, ``memo_parquet`` and
-    ``daystore.DayStore.read``: ``read()`` once per (namespace,
-    session, path, stat fingerprint), the frame served from
+    """The one plan memo behind ``load_table`` and the store reads
+    (``daystore.DayStore.read``, ``IvfStore``): ``read()`` once per
+    (namespace, session, path, stat fingerprint), the frame served from
     ``_TABLE_PLANS`` after that. ``ns`` names the variant the caller
     builds from the path (see _memo_key); an unstattable path is read
     every call."""
@@ -215,18 +215,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return memo_plan(spark, path, "table", read)
 
 
-def memo_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized lazy ``spark.read.parquet`` of a persisted store
-    directory (the IVF index generations): plan metadata only, never
-    data — executing the frame re-reads the parquet bytes, and a
-    rewrite or an appended partition changes the stat fingerprint, so
-    it misses. Skipping the per-call footer/schema round-trip was
-    ~0.1 s of driver time per store read per query. The day stores
-    memoize their day-first projection instead (``DayStore.read``,
-    namespace ``day:<day_col>``)."""
-    return memo_plan(spark, path, "raw", lambda: spark.read.parquet(path))
-
-
 def parquet_bytes(path: str) -> int:
     """Bytes of the parquet files under ``path``. Hidden names (``.``
     or ``_`` first: checksums, ``_temporary``, ``.spark-staging-*``)
@@ -267,23 +255,6 @@ def read_json(path: str, default=None):
             return json.load(f)
     except (FileNotFoundError, ValueError):
         return default
-
-
-def overwrite_partitions(df: DataFrame, partition_col: str,
-                         path: str) -> None:
-    """Write ``df`` to the parquet store at ``path``, partitioned by
-    ``partition_col``, replacing only the partitions ``df`` holds rows
-    for (a dynamic partition overwrite) — the fold/recompute write of
-    every dt-partitioned store.
-
-    The mode rides on this one writer, never on the session-wide
-    ``spark.sql.sources.partitionOverwriteMode``: flipping the session
-    conf races with every other writer of the session, which could
-    inherit ``dynamic`` (a static rebuild that leaves stale partitions
-    standing) or lose it (a fold that wipes the unmerged partitions)."""
-    (df.write.mode("overwrite")
-       .option("partitionOverwriteMode", "dynamic")
-       .partitionBy(partition_col).parquet(path))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

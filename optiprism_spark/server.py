@@ -72,8 +72,9 @@ schema checks), route (``QueryContext.route`` picks a rollup or
 user-day store, or raw events), plan (the lazy frame) and collect
 (``frame_to_response``). A parse error is a 400; an exception from
 plan or collect is an engine fault, a 500 with its traceback logged.
-An explicit ``HttpError`` keeps its status, and an operator's
-``F.raise_error`` guard (USER_RAISED_EXCEPTION) stays a 400.
+An explicit ``HttpError`` keeps its status, and a caller error only
+the data shows stays a 400: an operator's ``CallerError`` or its
+``F.raise_error`` guard (USER_RAISED_EXCEPTION).
 
 The app is framework-free WSGI: serve it with stdlib ``wsgiref`` (see
 ``serve``) or any production WSGI server unchanged.
@@ -99,6 +100,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import api, auth as auth_mod, metrics, rbac
 from .catalog import Catalog, CatalogError, Conflict, NotFound
 from .rbac import Forbidden
+from .operators._util import CallerError
 from .operators.funnel import funnel_report
 from .operators.records import (
     event_record_by_id,
@@ -336,19 +338,21 @@ def _finite(v, key: str) -> float:
 
 
 def _user_raised(e: Exception) -> bool:
-    """An operator's runtime guard (``F.raise_error``, e.g.
-    srm_check's out-of-table df): a caller error that only surfaces at
-    collect time."""
+    """A caller error that only the data shows: an operator's
+    ``CallerError`` (raised while the plan is built, e.g. an unmatched
+    control variant) or its runtime guard (``F.raise_error``, e.g.
+    srm_check's out-of-table df), which surfaces at collect time."""
     from pyspark.errors import PySparkException
 
-    return isinstance(e, PySparkException) and (
-        e.getCondition() or "").startswith("USER_RAISED_EXCEPTION")
+    return isinstance(e, CallerError) or (
+        isinstance(e, PySparkException)
+        and (e.getCondition() or "").startswith("USER_RAISED_EXCEPTION"))
 
 
 def _engine_fault(e: Exception) -> HttpError:
     """The answer to an exception a query raised after its parse
-    phase, in plan or collect: 400 for an operator's runtime guard
-    (``_user_raised``), else an engine fault — a 500, with the
+    phase, in plan or collect: 400 for a caller error only the data
+    shows (``_user_raised``), else an engine fault — a 500, with the
     traceback logged."""
     if _user_raised(e):
         return HttpError(400, str(e))
@@ -1220,7 +1224,7 @@ class App:
         (``_day_stores``) on a pool of at most ``_FOLD_WORKERS``
         threads: the folds read the same batch and write disjoint
         directories, and each is a chain of small Spark jobs
-        (touched-day collect, merge checkpoint, partition overwrite)
+        (touched-day collect, merge write, pointer commit)
         that leaves most cores idle when the folds run one after
         another. Each fold runs under ``inheritable_thread_target``,
         so the tick's job group and scheduler pool carry over. Every
@@ -1250,7 +1254,7 @@ class App:
                 errors.append(f.exception())
             elif f.result():
                 counts[key] += 1 if key == "rollup_stores" else f.result()
-        # a failed fold may have rewritten partitions before raising
+        # a failed fold may have committed before raising
         if errors or any(counts.values()):
             self._data_version += 1
         if errors:

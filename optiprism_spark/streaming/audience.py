@@ -31,10 +31,10 @@ from ..schema import EVENT_TIME_COL, EVENT_USER_COL
 
 class KmvDayStore(DayStore):
     """Persisted (day, dim, kmv) sketches, partitioned by day so a
-    micro-batch rewrites only the day partitions it touches (dynamic
-    partition overwrite — one replaceWhere commit on a transactional
-    lake). Storage, fold, ledger and erasure repair are the shared
-    day-store protocol (daystore.DayStore)."""
+    micro-batch rewrites only the day partitions it touches, committed
+    with its replay-ledger entry in one pointer flip. Storage, fold,
+    ledger and erasure repair are the shared day-store protocol
+    (daystore.DayStore over snapshot.py)."""
 
     day_col = "day"
 

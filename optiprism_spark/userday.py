@@ -25,7 +25,7 @@ typically 30–300× smaller than raw events and free of the wide
 prop payload. The win is that the per-query scan drops to that
 bounded table with dt partition pruning, and maintenance is the
 shared DayStore fold (daystore.py, the RollupStore's too): a
-day-partitioned dynamic overwrite touching only the batch's days,
+pointer commit rewriting only the batch's days,
 merge = re-aggregation (counts/sums add, which is why the grain
 stores SUMS, never averages).
 

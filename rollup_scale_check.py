@@ -266,6 +266,7 @@ def main() -> None:
     ap.add_argument("--passes", type=int, default=PASSES)
     args = ap.parse_args()
 
+    from optiprism_spark import snapshot
     from optiprism_spark.events_gen import generate_events
     from optiprism_spark.rollup import RollupSpec, RollupStore
     from optiprism_spark.schema import parquet_bytes
@@ -328,10 +329,10 @@ def main() -> None:
                 "events_bytes": parquet_bytes(
                     os.path.join(d, "events.parquet")),
                 "store_rows": store.read(spark).count(),
-                "store_bytes": parquet_bytes(os.path.join(d, "rollup")),
+                "store_bytes": snapshot.nbytes(snapshot.load(store.path)),
                 "build_sec": t_build,
                 "userday_rows": ud.read(spark).count(),
-                "userday_bytes": parquet_bytes(os.path.join(d, "userday")),
+                "userday_bytes": snapshot.nbytes(snapshot.load(ud.path)),
                 "userday_build_sec": t_ud_build,
             },
         }

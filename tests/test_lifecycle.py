@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from optiprism_spark import snapshot
 from optiprism_spark.ingest import (
     _append_part_files,
     _committed_tiers,
@@ -258,7 +259,7 @@ def test_recompute_days_drops_emptied_partition(spark, tmp_path):
     survivors = two.filter(F.to_date("ts") != F.lit(days[0]))
     assert st.recompute_days(spark, survivors, days) == 2
     assert {r[0] for r in st.read(spark).select("dt").distinct().collect()} == {days[1]}
-    assert not os.path.isdir(str(tmp_path / "rollup" / f"dt={days[0]}"))
+    assert sorted(snapshot.load(st.path)["files"]) == [f"dt={days[1]}"]
 
 
 def test_retention_expires_rollup_history(spark, store, tmp_path):
@@ -473,15 +474,66 @@ def test_erase_and_retention_repair_user_day_and_kmv_stores(
         days = {r[0] for r in
                 st.read(spark).select(day_col).distinct().collect()}
         assert days and min(days) == cutoff.date()
-        assert not any(
-            name < f"{day_col}={cutoff.date()}"
-            for name in os.listdir(st.path)
-            if name.startswith(f"{day_col}="))
+        assert min(snapshot.load(st.path)["files"]) \
+            == f"{day_col}={cutoff.date()}"
     boundary = lake.filter(F.to_date("ts") == F.lit(cutoff.date()))
     assert rows(userday.read(spark).filter(F.col("dt") == cutoff.date())) \
         == rows(userday.build(boundary).select(*userday.read(spark).columns))
     assert rows(kmv.read(spark).filter(F.col("day") == cutoff.date())) \
         == rows(kmv.build(boundary).select(*kmv.read(spark).columns))
+
+
+def test_erased_user_leaves_day_store_files_after_next_tick(
+        spark, store, tmp_path, monkeypatch):
+    """Superseded store files are kept for readers, but not forever:
+    with the retirement window at 0, once the tick after an erasure
+    has run no parquet file under the user-day or KMV store path holds
+    the erased user (the user-day row, or the user's KMV hash)."""
+    import pyarrow.parquet as pq
+
+    from optiprism_spark.operators.audience import _kmv_hash
+    from optiprism_spark.server import make_app
+    from optiprism_spark.streaming.audience import KmvDayStore
+    from optiprism_spark.userday import UserDayStore
+    from tests.test_server import call
+
+    appends, tiers, events = store
+    lake = events_snapshot(spark, TBL, appends, tiers)
+    userday = UserDayStore(str(tmp_path / "userday"))
+    userday.rebuild(spark, lake)
+    kmv = KmvDayStore(str(tmp_path / "kmv"), k=64)
+    kmv.update(spark, lake)
+    app = make_app(
+        spark, SF_DIR, user_day_store=userday, kmv_store=kmv,
+        lake={"table_name": TBL, "appends_path": appends,
+              "tiers_path": tiers},
+        result_cache_ttl=None,
+    )
+    victim = int(events.agg(F.min("user_id")).first()[0])
+    victim_hash = lake.filter(F.col("user_id") == victim).select(
+        _kmv_hash(F.col("user_id"), kmv.seed)).first()[0]
+
+    def on_disk():
+        """(user-day files holding the victim, KMV files holding its hash)"""
+        def files(st):
+            return [os.path.join(r, f) for r, _d, fs in os.walk(st.path)
+                    for f in fs if f.endswith(".parquet")]
+
+        return (
+            sum(victim in pq.read_table(f, columns=["user_id"])
+                .column(0).to_pylist() for f in files(userday)),
+            sum(any(victim_hash in (h or []) for h in
+                    pq.read_table(f, columns=["kmv"]).column(0).to_pylist())
+                for f in files(kmv)))
+
+    assert all(on_disk())
+    monkeypatch.setattr(snapshot, "RETIRE_AFTER_S", 0.0)
+    status, _ = call(app, "POST", "/api/v1/admin/erase-user",
+                     {"userIds": [victim]})
+    assert status == 200
+    app.maintain(events.filter(F.col("user_id") != victim).limit(5),
+                 stream_id="tick", batch_id=1)
+    assert on_disk() == (0, 0)
 
 
 _T_JAN = {"type": "between", "from": "2024-01-01T00:00:00",

@@ -128,3 +128,37 @@ def test_collect_fault_is_500(app, spark, monkeypatch):
                            {"time": T_JAN})
     assert status == 500 and "error" in payload
     assert _http_500s() == before + 1
+
+
+_VIEW = {"eventName": "view", "eventType": "regular"}
+
+#: caller errors only the data can show, one per operator site that
+#: raises ``CallerError`` while the plan is built
+CALLER_ERRORS = {
+    "unmatched_control": ("/queries/experiment", {
+        "time": T_JAN, "exposureEvent": _VIEW,
+        "conversionEvent": {"eventName": "purchase",
+                            "eventType": "regular"},
+        "variantProperty": {"propertyName": "k", "dtype": "int64"},
+        "control": "-1",
+    }, "matched no exposures"),
+    "srm_variant_outside_allocation": ("/queries/experiment", {
+        "type": "srm", "time": T_JAN, "exposureEvent": _VIEW,
+        "variantProperty": {"propertyName": "event_type"},
+        "expected": {"click": 0.5, "purchase": 0.5},
+    }, "missing from expected allocation"),
+    "nprobe_above_auto_lists": ("/queries/similarity", {
+        "type": "topk", "method": "ivf", "queryIds": [1],
+        "nprobe": 1_000_000,
+    }, "n_centroids"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CALLER_ERRORS))
+def test_data_dependent_caller_error_is_400(app, case):
+    path, body, message = CALLER_ERRORS[case]
+    before = _http_500s()
+    status, payload = call(app, "POST", P + path, body)
+    assert status == 400, payload
+    assert message in payload["error"]
+    assert _http_500s() == before

@@ -280,26 +280,21 @@ def test_store_incremental_update_equals_recompute(spark, events, tmp_path):
 
 
 def test_store_update_prunes_to_affected_partitions(spark, events, tmp_path):
-    """The pre-overwrite read must scan only the batch's dt partitions
-    — bytes per maintenance cycle ∝ batch day span, not history."""
+    """A fold rewrites only the batch's days: the batch's day gets new
+    files and every other day keeps its file list — bytes per
+    maintenance cycle ∝ batch day span, not history."""
+    from optiprism_spark import snapshot
+
     store = RollupStore(str(tmp_path / "rollup"), SPEC)
     store.rebuild(spark, events)
     one_day = events.filter(F.to_date("ts") == F.lit("2024-01-10").cast("date"))
-    import os
-
-    before = {
-        d: os.path.getmtime(os.path.join(store.path, d))
-        for d in os.listdir(store.path)
-        if d.startswith(f"{ROLLUP_DT_COL}=")
-    }
+    before = snapshot.load(store.path)["files"]
     assert store.update(spark, one_day) == 1
-    after = {
-        d: os.path.getmtime(os.path.join(store.path, d))
-        for d in os.listdir(store.path)
-        if d.startswith(f"{ROLLUP_DT_COL}=")
-    }
-    rewritten = {d for d in before if after[d] != before[d]}
-    assert rewritten == {f"{ROLLUP_DT_COL}=2024-01-10"}
+    after = snapshot.load(store.path)["files"]
+    day = f"{ROLLUP_DT_COL}=2024-01-10"
+    assert after.keys() == before.keys()
+    assert {d for d in before if after[d] != before[d]} == {day}
+    assert not set(after[day]) & set(before[day])
 
 
 def test_http_endpoint_routes_through_rollup(spark, tmp_path):

@@ -1,7 +1,7 @@
 """Table/store plan-memo key hygiene (r16 advice items):
-load_table caches the nanos→µs-TRANSFORMED frame while memo_parquet
-caches the raw read — the same path read through both APIs must not
-serve the other's variant; and the directory fingerprint must embed
+load_table caches the nanos→µs-TRANSFORMED frame while a raw
+``memo_plan`` read caches the untransformed one — the same path read
+both ways must not serve the other's variant; and the directory fingerprint must embed
 the child-entries tuple itself (hash() collisions would serve a
 stale plan silently)."""
 
@@ -30,7 +30,7 @@ def _write_nanos_events(path: str) -> None:
 
 
 def test_memo_namespaces_keep_variants_apart(spark, tmp_path):
-    from optiprism_spark.schema import load_table, memo_parquet
+    from optiprism_spark.schema import load_table, memo_plan
 
     path = os.path.join(str(tmp_path), "events.parquet")
     _write_nanos_events(path)
@@ -40,7 +40,8 @@ def test_memo_namespaces_keep_variants_apart(spark, tmp_path):
 
     # raw read of the SAME path (same stat fingerprint): must get the
     # un-transformed long column, not the memoized table variant
-    via_raw = memo_parquet(spark, path)
+    via_raw = memo_plan(spark, path, "raw",
+                        lambda: spark.read.parquet(path))
     assert isinstance(via_raw.schema["ts"].dataType, T.LongType)
 
     # and the reverse order must not poison load_table either
