@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import snapshot
-from .schema import EVENT_TIME_COL, memo_plan
+from .schema import EVENT_TIME_COL
 
 
 #: Largest store, in parquet bytes, that ``DayStore.read`` serves as
@@ -69,16 +69,14 @@ class DayStore:
 
     def exists(self) -> bool:
         """Whether the store's pointer names any file."""
-        return bool((snapshot.load(self.path) or {}).get("files"))
+        return bool(snapshot.load(self.path)["files"])
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The store as a lazy frame, day column first (``partitionBy``
         surfaces it LAST) — the one read every routed query, fold and
-        repair starts from. It scans exactly the pointer's files, with
-        ``basePath`` so partition discovery still yields the day column
-        for ``PartitionFilters``, and is memoized in ``schema``'s plan
-        memo per pointer version: a repeat read skips the footer
-        round-trip and re-analysis, and a commit is a miss.
+        repair starts from. It scans exactly the pointer's files
+        (``snapshot.frame``: the day column stays a partition column
+        for ``PartitionFilters``, memoized per pointer version).
 
         SINGLE-PARTITION RULE: a store whose files total no more than
         ``SINGLE_PARTITION_MAX_BYTES`` (the pointer's sizes) is served
@@ -90,22 +88,20 @@ class DayStore:
         ``PartitionFilters``. A larger store reads with the scan's own
         file splits."""
         ptr = snapshot.load(self.path)
-        if not (ptr or {}).get("files"):
+        if not ptr["files"]:
             raise FileNotFoundError(f"no day store at {self.path}")
         return self._read(spark, ptr)
 
     def _read(self, spark: SparkSession, ptr: dict) -> DataFrame:
-        def day_first() -> DataFrame:
-            df = spark.read.option("basePath", self.path).parquet(
-                *snapshot.paths(self.path, ptr["files"]))
+        def day_first(df: DataFrame) -> DataFrame:
             df = df.select(
                 self.day_col, *[c for c in df.columns if c != self.day_col])
             if snapshot.nbytes(ptr) <= SINGLE_PARTITION_MAX_BYTES:
                 df = df.coalesce(1)
             return df
 
-        return memo_plan(spark, snapshot.pointer_path(self.path),
-                         f"day:{self.day_col}@{ptr['version']}", day_first)
+        return snapshot.frame(spark, self.path, ptr, f"day:{self.day_col}",
+                              shape=day_first)
 
     def _put(self, files: dict, days: Sequence, frame: DataFrame) -> dict:
         """``files`` with the given days replaced by ``frame``'s rows,
@@ -137,7 +133,7 @@ class DayStore:
             base = snapshot.load(self.path)
             if snapshot.applied(base, stream_id, batch_id):
                 return 0
-            files = (base or {}).get("files", {})
+            files = base["files"]
             # persisted: the batch aggregate feeds both the touched-day
             # collect and the merge write
             batch = self.build(new_events).persist()
@@ -164,7 +160,7 @@ class DayStore:
         day_list = sorted({_iso(d) for d in days})
         with snapshot.writer(self.path):
             base = snapshot.load(self.path)
-            if not (base or {}).get("files") or not day_list:
+            if not base["files"] or not day_list:
                 return 0
             fresh = self.build(events.filter(
                 F.to_date(F.col(self.ts_col)).isin(day_list)))
@@ -180,7 +176,7 @@ class DayStore:
         lifecycle wiring does both."""
         with snapshot.writer(self.path):
             base = snapshot.load(self.path)
-            files = (base or {}).get("files", {})
+            files = base["files"]
             # ISO days order as strings; Spark's null-day partition
             # (__HIVE_DEFAULT_PARTITION__) sorts after them and stays
             gone = sorted(g for g in files

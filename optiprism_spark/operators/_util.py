@@ -12,6 +12,7 @@ class CallerError(ValueError):
     while the plan is built or at collect; library callers still catch
     ``ValueError``."""
 
+
 #: frames persisted by operators (LSH base signatures, IVF assignment)
 #: so long-lived sessions can free executor storage memory explicitly
 #: instead of waiting for the driver-GC ContextCleaner sweep

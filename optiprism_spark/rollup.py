@@ -16,12 +16,13 @@ production design the reference lacks:
 - ``RollupStore``: the rollup persisted as dt-partitioned parquet
   (the shared ``daystore.DayStore``) with **incremental
   maintenance**: an append batch is day-aggregated and merged into
-  only the affected dt partitions (partition-pruned read, new files
-  for those days committed with the replay ledger in one pointer
-  flip). Advanced by the server's maintenance tick
-  (server.App.maintain), which folds each ingest batch into every
-  rollup store: one shuffle on (dt, dims), writes proportional to
-  affected days — not history.
+  only the affected dt partitions (partition-pruned read,
+  new files committed in one pointer flip). Advanced by the server's
+  maintenance tick (server.App.maintain), which folds each ingest
+  batch into every rollup store. On a production lake the per-partition swap is
+  a transactional commit (Delta/Iceberg ``replaceWhere``); the plan
+  shape (one shuffle on (dt, dims), writes proportional to affected
+  days — not history) is identical.
 - ``rollup_supports`` + ``event_segmentation_from_rollup``: the
   query-rewrite seam. ``queries.event_segmentation.
   run_event_segmentation(rollup=...)`` routes a request to the rollup

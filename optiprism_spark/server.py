@@ -1177,6 +1177,7 @@ class App:
         3. ``maintain_ann_indexes`` — declared + app-level ANN stores
            (also finishes orphaned ``building`` rows — crash recovery)
         4. ``sweep_sessions`` — TTL expiry + Session End injection
+        5. ``_sweep_stores`` — every tick, with or without a batch
 
         This tick is the only path that advances the rollup, user-day,
         KMV and ANN stores. Replay safety is per store: every day store
@@ -1217,7 +1218,25 @@ class App:
         if out["sessions_ended"]:
             metrics.maintenance_store_advanced_total().inc(
                 store="sessions")
+        self._sweep_stores()
         return out
+
+    def _sweep_stores(self) -> None:
+        """Delete the files every day store and ANN index of every
+        project retired ``snapshot.RETIRE_AFTER_S`` ago, so erased or
+        expired rows leave the disk within that plus one tick even in
+        a store no later batch commits to."""
+        from . import snapshot
+
+        paths = [s.path for _, s in self._day_stores()]
+        if self.ivf_dir is not None:
+            paths += [self._store_for_ann_row(p, row).path
+                      for p in self._project_ids()
+                      for row in self.catalog.list("ann_index", p)]
+        if self.ivf_store is not None:
+            paths.append(self.ivf_store.path)
+        for path in paths:
+            snapshot.sweep(path)
 
     def _fold_stores(self, new_events, pid, stream_id, batch_id) -> dict:
         """Fold one event batch into every day store of ``pid``
@@ -1877,8 +1896,7 @@ class App:
         rollup routing, erasure and retention walk. ``pid=None`` takes
         the declared rollups of EVERY project (erasure and retention
         are lake-global admin operations, not per-project queries)."""
-        pids = [pid] if pid is not None else sorted(
-            {0, *(p["id"] for p in self.catalog.list("project"))})
+        pids = [pid] if pid is not None else self._project_ids()
         stores = [("rollup_stores", s) for p in pids
                   for s in self._declared_rollup_stores(p)]
         for key, s in (("rollup_stores", self.rollup_store),
@@ -1887,6 +1905,9 @@ class App:
             if s is not None:
                 stores.append((key, s))
         return [(key, s) for key, s in stores if s.exists()]
+
+    def _project_ids(self) -> list:
+        return sorted({0, *(p["id"] for p in self.catalog.list("project"))})
 
     def _declared_rollup_stores(self, pid: int) -> list:
         """RollupStores for the project's catalog-declared rollups

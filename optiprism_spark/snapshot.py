@@ -4,14 +4,15 @@
 A store directory holds immutable parquet files and ONE pointer JSON,
 the store's whole state: the live files, grouped by their directory (a
 ``<day_col>=<day>`` partition, or ``centroids`` and ``assignment``),
-with their sizes, the ``(stream_id, batch_id)`` replay ledger and store
-metadata. A commit writes files under names no earlier commit used,
-then flips the pointer with one fsync'd ``os.replace``, so data and
-ledger land together: a crash before the flip leaves the batch
-unapplied and unrecorded, one after it leaves both. A reader scans
-exactly the files of the pointer it loaded; a file the pointer stops
-naming is deleted once retired for ``RETIRE_AFTER_S``. No pointer
-means no store; nothing reads an older layout.
+with their sizes, the ``(stream_id, batch_id)`` replay ledger, the
+files retired from it with their retirement times, and store metadata.
+A commit writes files under names no earlier commit used, then flips
+the pointer with one fsync'd ``os.replace``, so data and ledger land
+together: a crash before the flip leaves the batch unapplied and
+unrecorded, one after it leaves both. A reader scans exactly the files
+of the pointer it loaded; a retired file is deleted once retired for
+``RETIRE_AFTER_S``, by the next commit or ``sweep``. No pointer means
+no store; nothing reads an older layout.
 """
 
 from __future__ import annotations
@@ -22,11 +23,11 @@ import shutil
 import threading
 import time
 import uuid
-from typing import Iterable, Optional
+from typing import Callable, Iterable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-from .schema import read_json, write_json_durable
+from .schema import memo_plan, read_json, write_json_durable
 
 POINTER = "_snapshot.json"
 
@@ -52,16 +53,18 @@ def pointer_path(path: str) -> str:
     return os.path.join(path, POINTER)
 
 
-def load(path: str) -> Optional[dict]:
-    """The committed pointer of the store at ``path``, or None."""
-    return read_json(pointer_path(path))
+def load(path: str) -> dict:
+    """The committed pointer of the store at ``path``; without one, the
+    empty pointer of version 0 that a first commit starts from."""
+    return read_json(pointer_path(path)) or {
+        "version": 0, "files": {}, "applied": {}, "retired": {},
+        "meta": {}}
 
 
-def applied(ptr: Optional[dict], stream_id: Optional[str],
+def applied(ptr: dict, stream_id: Optional[str],
             batch_id: Optional[int]) -> bool:
     """Whether the ledger holds this batch; one without ids never is."""
-    return (ptr is not None and stream_id is not None
-            and batch_id is not None
+    return (stream_id is not None and batch_id is not None
             and ptr["applied"].get(stream_id, -1) >= batch_id)
 
 
@@ -72,9 +75,24 @@ def paths(path: str, files: dict, groups: Iterable[str] = ()) -> list[str]:
             for rel in sorted(files.get(g, {}))]
 
 
-def nbytes(ptr: Optional[dict]) -> int:
-    """Bytes of the pointer's live files (0 without a pointer)."""
-    return sum(size for files in (ptr or {}).get("files", {}).values()
+def frame(spark: SparkSession, path: str, ptr: dict, ns: str,
+          groups: Iterable[str] = (),
+          shape: Callable[[DataFrame], DataFrame] = lambda df: df
+          ) -> DataFrame:
+    """The pointer's files (of ``groups`` only, when given) as one
+    frame, through ``shape``, memoized in ``schema``'s plan memo per
+    pointer version: a repeat read skips the footer round-trip and
+    re-analysis, and a commit is a miss. ``basePath`` keeps a
+    ``<col>=<value>`` directory as a partition column."""
+    return memo_plan(
+        spark, pointer_path(path), f"{ns}@{ptr['version']}",
+        lambda: shape(spark.read.option("basePath", path).parquet(
+            *paths(path, ptr["files"], groups))))
+
+
+def nbytes(ptr: dict) -> int:
+    """Bytes of the pointer's live files."""
+    return sum(size for files in ptr["files"].values()
                for size in files.values())
 
 
@@ -103,53 +121,73 @@ def write(df: DataFrame, path: str, partition_col: Optional[str] = None,
     return out
 
 
-def commit(path: str, base: Optional[dict], files: dict,
+def commit(path: str, base: dict, files: dict,
            stream_id: Optional[str] = None, batch_id: Optional[int] = None,
            meta: Optional[dict] = None) -> dict:
-    """Flip the pointer from ``base`` (the one the writer read; None for
-    a new store) to ``files``, with the batch in the ledger and ``meta``
-    (default: base's), then sweep. A file ``base`` names and ``files``
-    does not is retired: its mtime is set to now before the flip.
-    Returns the new pointer."""
-    base = base or {"version": 0, "files": {}, "applied": {}, "meta": {}}
+    """Flip the pointer from ``base`` (the one the writer read) to
+    ``files``, with the batch in the ledger and ``meta`` (default:
+    base's), then sweep. A file ``base`` names and ``files`` does not
+    is retired now; a retirement older than ``RETIRE_AFTER_S`` leaves
+    the pointer, its file is swept. Returns the new pointer."""
+    now = time.time()
     live = {rel for fs in files.values() for rel in fs}
-    for fs in base["files"].values():
-        for rel in fs.keys() - live:
-            os.utime(os.path.join(path, rel))
+    retired = {rel: t for rel, t in base["retired"].items()
+               if now - t < RETIRE_AFTER_S}
+    retired.update((rel, now) for fs in base["files"].values()
+                   for rel in fs.keys() - live)
     ledger = dict(base["applied"])
     if stream_id is not None and batch_id is not None:
         ledger[stream_id] = batch_id
     ptr = {"version": base["version"] + 1,
            "files": {g: fs for g, fs in files.items() if fs},
-           "applied": ledger,
+           "applied": ledger, "retired": retired,
            "meta": base["meta"] if meta is None else meta}
     write_json_durable(pointer_path(path), ptr)
     _sweep(path, ptr)
     return ptr
 
 
+def sweep(path: str) -> None:
+    """Delete what is due under the store at ``path`` (see ``_sweep``)
+    without a commit, so a retired file leaves the disk even when no
+    later commit comes. A store whose writer is busy is skipped: its
+    commit sweeps."""
+    lock = writer(path)
+    if not lock.acquire(blocking=False):
+        return
+    try:
+        ptr = load(path)
+        if ptr["version"]:
+            _sweep(path, ptr)
+    finally:
+        lock.release()
+
+
 def _sweep(path: str, ptr: dict) -> None:
-    """Delete every file under ``path`` the pointer does not name, and
-    every empty directory, once its mtime is ``RETIRE_AFTER_S`` old:
-    one rule for retired files and a crashed commit's staging and part
-    files alike, which spares what a writer in another process is
-    still landing."""
+    """Delete every file under ``path`` the pointer does not name once
+    ``RETIRE_AFTER_S`` has passed since its retirement (in the pointer)
+    or, for a file no pointer ever named (a crashed commit's staging
+    and part files), since its mtime, which spares what a writer in
+    another process is still landing; then every empty directory as
+    old."""
     keep = {rel for fs in ptr["files"].values() for rel in fs} | {POINTER}
     now = time.time()
 
-    def old(p: str) -> bool:
-        return now - os.path.getmtime(p) >= RETIRE_AFTER_S
+    def due(p: str) -> bool:
+        rel = os.path.relpath(p, path)
+        return now - ptr["retired"].get(rel, os.path.getmtime(p)) \
+            >= RETIRE_AFTER_S
 
     for root, _dirs, names in os.walk(path, topdown=False):
         for name in names:
             full = os.path.join(root, name)
             try:
-                if os.path.relpath(full, path) not in keep and old(full):
+                if os.path.relpath(full, path) not in keep and due(full):
                     os.remove(full)
             except OSError:
                 pass
         try:
-            if root != path and old(root):
+            if root != path and due(root):
                 os.rmdir(root)  # only succeeds when empty
         except OSError:
             pass

@@ -486,9 +486,11 @@ def test_erase_and_retention_repair_user_day_and_kmv_stores(
 def test_erased_user_leaves_day_store_files_after_next_tick(
         spark, store, tmp_path, monkeypatch):
     """Superseded store files are kept for readers, but not forever:
-    with the retirement window at 0, once the tick after an erasure
-    has run no parquet file under the user-day or KMV store path holds
-    the erased user (the user-day row, or the user's KMV hash)."""
+    right after an erasure the retired files still hold the erased
+    user (the user-day row, or the user's KMV hash); once the
+    retirement window has run out (monkeypatched to 0), the next
+    maintenance tick deletes them even though it carries no batch and
+    commits to no store."""
     import pyarrow.parquet as pq
 
     from optiprism_spark.operators.audience import _kmv_hash
@@ -527,12 +529,15 @@ def test_erased_user_leaves_day_store_files_after_next_tick(
                 for f in files(kmv)))
 
     assert all(on_disk())
-    monkeypatch.setattr(snapshot, "RETIRE_AFTER_S", 0.0)
     status, _ = call(app, "POST", "/api/v1/admin/erase-user",
                      {"userIds": [victim]})
     assert status == 200
-    app.maintain(events.filter(F.col("user_id") != victim).limit(5),
-                 stream_id="tick", batch_id=1)
+    assert all(on_disk())  # retired, within the window
+    versions = [snapshot.load(st.path)["version"] for st in (userday, kmv)]
+    monkeypatch.setattr(snapshot, "RETIRE_AFTER_S", 0.0)
+    app.maintain()
+    assert [snapshot.load(st.path)["version"]
+            for st in (userday, kmv)] == versions
     assert on_disk() == (0, 0)
 
 

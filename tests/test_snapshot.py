@@ -7,6 +7,7 @@ rebuild."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import threading
 import time
 
@@ -139,6 +140,57 @@ def test_concurrent_writers_of_one_store_lose_no_fold(spark, tmp_path):
     assert not any(t.is_alive() for t in threads) and not errors, errors
     total = store.read(spark).agg(F.sum("events_count")).first()[0]
     assert total == base + 6 * n_day
+
+
+def test_retired_files_keep_their_mtime_and_go_once_due(
+        tmp_path, monkeypatch):
+    """A commit records the files it retires, with the time, in the
+    pointer and leaves their mtimes alone. ``sweep`` deletes what is
+    due without a commit: a retired file once ``RETIRE_AFTER_S`` has
+    passed since its retirement, a file no pointer named once as old
+    by mtime. It skips a store whose writer another thread holds."""
+    from optiprism_spark import snapshot
+
+    path = str(tmp_path / "store")
+
+    def put(rel, mtime=1.0):
+        full = os.path.join(path, rel)
+        os.makedirs(os.path.dirname(full), exist_ok=True)
+        with open(full, "wb") as f:
+            f.write(b"x")
+        os.utime(full, (mtime, mtime))
+        return {rel: 1}
+
+    def on_disk():
+        return sorted(os.listdir(os.path.join(path, "g")))
+
+    v1 = snapshot.commit(path, snapshot.load(path), {"g": put("g/a")})
+    v2 = snapshot.commit(path, v1, {"g": put("g/b")})
+    assert list(v2["retired"]) == ["g/a"]
+    assert os.path.getmtime(os.path.join(path, "g/a")) == 1.0
+    put("g/old-orphan")
+    put("g/new-orphan", time.time())
+    snapshot.sweep(path)
+    assert on_disk() == ["a", "b", "new-orphan"]
+
+    monkeypatch.setattr(snapshot, "RETIRE_AFTER_S", 0.0)
+    held, done = threading.Event(), threading.Event()
+
+    def hold():
+        with snapshot.writer(path):
+            held.set()
+            done.wait(10)
+
+    t = threading.Thread(target=hold)
+    t.start()
+    held.wait(10)
+    snapshot.sweep(path)
+    assert on_disk() == ["a", "b", "new-orphan"]
+    done.set()
+    t.join()
+    snapshot.sweep(path)
+    assert on_disk() == ["b"]
+    assert snapshot.load(path)["version"] == 2
 
 
 def _day_store(kind: str, path: str):
