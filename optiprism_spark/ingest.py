@@ -40,18 +40,16 @@ job.
 from __future__ import annotations
 
 import os
+import threading
+import uuid
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schema import (
-    EVENT_ID_COL,
-    EVENT_TIME_COL,
-    EVENT_USER_COL,
-    parquet_bytes,
-)
+from . import snapshot
+from .schema import EVENT_ID_COL, EVENT_TIME_COL, EVENT_USER_COL
 
 # ------------------------------------------------------------------ user agent
 
@@ -377,20 +375,27 @@ def write_events_bucketed(
     saveAsTable feature); the bucket count is the funnel's max
     parallelism, so size it to the cluster (reading combines each
     bucket's files into one task)."""
-    (
+    _bucketed(df, n_buckets, bucket_col, sort_cols).mode(mode) \
+        .saveAsTable(table_name)
+
+
+def _bucketed(df: DataFrame, n_buckets: int, bucket_col: str,
+              sort_cols: Sequence[str]):
+    """``df``'s writer for the bucketed layout: one shuffle on the
+    bucket column, sorted within each bucket."""
+    return (
         df.repartition(n_buckets, F.col(bucket_col))
         .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .bucketBy(n_buckets, bucket_col)
+        .write.bucketBy(n_buckets, bucket_col)
         .sortBy(*sort_cols)
-        .saveAsTable(table_name)
     )
 
 
 def _append_part_files(appends_path: str) -> list[str]:
     """Leaf parquet files currently in the appends dir (the L0 part
     listing — one walk on the driver; an object store swaps this for
-    one LIST call).
+    one LIST call). Folded parts stay here until retired; ``_live_l0``
+    drops them.
 
     ``_temporary`` subtrees are pruned: a Spark write job that is
     still running keeps its task files under
@@ -401,20 +406,8 @@ def _append_part_files(appends_path: str) -> list[str]:
     are part of the snapshot."""
     out: list[str] = []
     for root, dirs, files in os.walk(appends_path):
-        # besides in-flight _temporary trees: an UNCOMMITTED tier dir
-        # (no _SUCCESS) is a torn minor fold whose rows still sit in
-        # L0 — folding it would ingest them twice once recovery
-        # re-folds the intact L0 (the should_major/_committed_tiers
-        # gating must hold for the fold's own file walk too)
-        dirs[:] = [
-            d for d in dirs
-            if d != "_temporary"
-            and not d.startswith(".")
-            and not (
-                d.startswith(_TIER_PREFIX)
-                and not os.path.exists(os.path.join(root, d, "_SUCCESS"))
-            )
-        ]
+        dirs[:] = [d for d in dirs
+                   if d != "_temporary" and not d.startswith(".")]
         out.extend(
             os.path.join(root, f) for f in files
             if f.endswith(".parquet") and not f.startswith(".")
@@ -422,213 +415,209 @@ def _append_part_files(appends_path: str) -> list[str]:
     return sorted(out)
 
 
-_COMPACT_MANIFEST = ".compaction_folded.json"
+# ------------------------------------------------------------ the lake
+#
+# The events lake is a snapshot.py store whose pointer lives in
+# ``tiers_path``. It names the live base directory (group
+# ``meta["base"]``, bucket count ``meta["buckets"]``), the live tier
+# files (every other group) and, among its retired files, the L0 parts
+# already folded. Every write (minor fold, major fold, erasure,
+# retention) writes new files, then flips the pointer once under
+# ``snapshot.writer(tiers_path)``, so a frame planned before it still
+# reads its own files. The caller's catalog table keeps its name and
+# bucket spec; its location is derived state, set to the pointer's base
+# by ``_point``. The base directory is adopted from the catalog by the
+# first write that replaces it; until then the catalog table is the
+# base.
+
+#: Held across a pointer flip and the re-point that follows it, and by
+#: a reader from loading the pointer to resolving the catalog table, so
+#: a reader never pairs one pointer's tiers with another's base.
+_POINTING = threading.Lock()
 
 
-def _recover_compaction(spark, table_name: str, appends_path: str) -> None:
-    """Finish (or discard) a compaction cycle interrupted by a crash.
+def _catalog_table(spark: SparkSession, table_name: str):
+    """The catalog's metadata of ``table_name`` (location, bucket
+    spec): one driver-side lookup, no SQL command."""
+    state = spark._jsparkSession.sessionState()
+    return state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(table_name))
 
-    The swap (DROP old -> RENAME staging) is not atomic in a Hive-ish
-    catalog; the recovery protocol derives what happened from table
-    existence plus the folded-files marker:
 
-    - no marker: any leftover staging table is a stale fold from a
-      crash before the marker write — drop it, nothing was committed.
-    - marker + BOTH tables: crash before the DROP — the staged fold is
-      stale (appends may have grown); discard staging + marker.
-    - marker + staging only: crash between DROP and RENAME — complete
-      the rename, then the marker's files are folded: delete them.
-    - marker + main only: crash after the swap, before the append
-      cleanup — delete the marker's files.
+def _point(spark: SparkSession, table_name: str, tiers_path: str,
+           ptr: dict) -> DataFrame:
+    """The catalog table at the pointer's base, re-pointed first when
+    its location differs (a kill between flip and re-point, or a table
+    adopted by an earlier process). Caller holds ``_POINTING``."""
+    base = ptr["meta"].get("base")
+    if base:
+        want = os.path.abspath(os.path.join(tiers_path, base))
+        if _catalog_table(spark, table_name).location().getPath() != want:
+            spark.sql(f"ALTER TABLE {table_name} SET LOCATION {_sql_str(want)}")
+    return spark.table(table_name)
 
-    Net effect with compact_appends_into_bucketed: every append file
-    is folded exactly once and the table always exists after recovery.
-    """
-    staging = f"{table_name}__compact_staging"
-    manifest = os.path.join(appends_path, _COMPACT_MANIFEST)
-    staging_exists = spark.catalog.tableExists(staging)
-    if not os.path.exists(manifest):
-        if staging_exists and spark.catalog.tableExists(table_name):
-            spark.sql(f"DROP TABLE {staging}")
-        return
-    import json as _json
 
-    with open(manifest) as f:
-        info = _json.load(f)
-    main_exists = spark.catalog.tableExists(table_name)
-    if main_exists and staging_exists:
-        spark.sql(f"DROP TABLE {staging}")
-        os.remove(manifest)
-        return
-    if not main_exists and staging_exists:
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
-    for f_path in info.get("files", ()):
-        try:
-            os.remove(f_path)
-        except FileNotFoundError:
-            pass
-    os.remove(manifest)
+def _tiers(ptr: dict) -> dict:
+    """The pointer's tier groups: every group but the base."""
+    return {g: fs for g, fs in ptr["files"].items()
+            if g != ptr["meta"].get("base")}
+
+
+def _tier_paths(tiers_path: str, ptr: dict) -> list[str]:
+    return snapshot.paths(tiers_path, _tiers(ptr))
+
+
+def _live_l0(appends_path: str, tiers_path: str, ptr: dict) -> list[str]:
+    """The L0 parts the pointer has not folded."""
+    return [p for p in _append_part_files(appends_path)
+            if os.path.relpath(p, tiers_path) not in ptr["retired"]]
+
+
+def _read_parts(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Tier and L0 part files as one frame, without L0's ``dt``."""
+    df = spark.read.parquet(*paths)
+    return df.drop("dt") if "dt" in df.columns else df
+
+
+def _lake_view(spark: SparkSession, table_name: str, appends_path: str,
+               tiers_path: str) -> tuple[DataFrame, bool]:
+    """(base ∪ live tiers ∪ live L0 as of one pointer, whether that is
+    the base alone): a fully folded lake is the bucketed base table,
+    every user's rows in one partition."""
+    with _POINTING:
+        ptr = snapshot.load(tiers_path)
+        df = _point(spark, table_name, tiers_path, ptr)
+    pending = _tier_paths(tiers_path, ptr) + _live_l0(
+        appends_path, tiers_path, ptr)
+    if pending:
+        df = df.unionByName(_read_parts(spark, pending).select(*df.columns))
+    return df, not pending
+
+
+def _open(spark: SparkSession, table_name: str, tiers_path: str) -> dict:
+    """The lake pointer for a write that replaces the base, with the
+    catalog table's directory adopted as base on first use. Caller
+    holds ``snapshot.writer(tiers_path)``."""
+    ptr = snapshot.load(tiers_path)
+    if ptr["meta"].get("base"):
+        return ptr
+    meta = _catalog_table(spark, table_name)
+    rel = os.path.relpath(meta.location().getPath(), tiers_path)
+    return dict(ptr, files={**ptr["files"], **_base_group(tiers_path, rel)},
+                meta={"base": rel,
+                      "buckets": meta.bucketSpec().get().numBuckets()})
+
+
+def _base_group(tiers_path: str, rel: str) -> dict:
+    """``{rel: {file: bytes}}`` of every file in base directory ``rel``,
+    Spark's ``_SUCCESS`` and checksum files too: a retired base leaves
+    an empty directory, where a table of the same name can be created
+    again."""
+    path = os.path.normpath(os.path.join(tiers_path, rel))
+    return {rel: {os.path.join(rel, f): os.path.getsize(os.path.join(path, f))
+                  for f in sorted(os.listdir(path))
+                  if os.path.isfile(os.path.join(path, f))}}
+
+
+def _write_base(spark: SparkSession, table_name: str, tiers_path: str,
+                df: DataFrame, ptr: dict, bucket_col: str,
+                sort_cols: Sequence[str]) -> tuple[dict, dict]:
+    """``df`` as a new base directory of the lake, bucketed like the
+    catalog table. Spark writes a bucketed layout only through
+    ``saveAsTable``, so a transient external table lands the files
+    and is dropped (its files stay). Returns the new base's
+    ``{group: files}`` and the pointer meta naming it."""
+    rel = f"base-{uuid.uuid4().hex}"
+    vehicle = f"{table_name}__{rel.replace('-', '_')}"
+    try:
+        _bucketed(df, ptr["meta"]["buckets"], bucket_col, sort_cols) \
+            .option("path", os.path.join(tiers_path, rel)) \
+            .saveAsTable(vehicle)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {vehicle}")
+    return _base_group(tiers_path, rel), dict(ptr["meta"], base=rel)
+
+
+def _commit(spark: SparkSession, table_name: Optional[str],
+            tiers_path: str, ptr: dict, files: dict, folded: list[str],
+            meta: Optional[dict] = None) -> None:
+    """Flip the lake pointer from ``ptr`` to ``files``, retiring what
+    ``ptr`` named and ``files`` drops plus the L0 parts ``folded``
+    (read as if ``ptr`` had named them), then re-point the catalog
+    table when the base moved."""
+    read = dict(ptr, files={**ptr["files"], "l0": {
+        os.path.relpath(p, tiers_path): 0 for p in folded}})
+    with _POINTING:
+        new = snapshot.commit(tiers_path, read, files, meta=meta)
+        if table_name:
+            _point(spark, table_name, tiers_path, new)
 
 
 def compact_appends_into_bucketed(
     spark,
     table_name: str,
     appends_path: str,
-    n_buckets: int = 32,
+    tiers_path: str,
     bucket_col: str = EVENT_USER_COL,
     sort_cols: Sequence[str] = (EVENT_USER_COL, EVENT_TIME_COL, EVENT_ID_COL),
-    clear_appends: bool = True,
 ) -> int:
-    """Fold date-partitioned appends into the bucketed table — the
-    maintenance loop that keeps ``funnel_attempts(assume_partitioned=
-    True)`` valid under continuous ingest. Fresh events land
-    date-partitioned (streaming/sessionize.append_events: cheap,
-    partition-pruned); the bucketed layout is what elides the funnel
-    shuffle. This job reads both, unions, and rewrites the bucketed
-    table — the reference's LSM compaction invariant (parts are merged
-    back into sorted runs, storage/src/parquet/parquet_merger.rs:
-    403-714) re-expressed as a lake rewrite.
+    """Major fold: the live tiers and L0 parts into a new bucketed base
+    — the maintenance loop that keeps ``funnel_attempts(
+    assume_partitioned=True)`` valid under continuous ingest. Fresh
+    events land date-partitioned (streaming/sessionize.append_events:
+    cheap, partition-pruned); the bucketed layout is what elides the
+    funnel shuffle. This job reads base ∪ tiers ∪ L0 and writes them as
+    a new base directory with the catalog table's bucket count — the
+    reference's LSM compaction invariant (parts are merged back into
+    sorted runs, storage/src/parquet/parquet_merger.rs:403-714)
+    re-expressed as a lake rewrite.
 
-    The rewrite goes through a staging table + rename because Spark
-    cannot overwrite a table it is reading from — the same
-    write-new-parts-then-swap move the reference merger makes. On a
-    production lake the swap is a transactional-format commit (Delta/
-    Iceberg rewrite) and the union is incremental per bucket; the
-    plan shape (one shuffle on the bucket column, then a sorted
-    bucketed write) is identical.
+    The new base lands beside the old one; one pointer flip makes it
+    live and retires the old base, the folded tiers and the folded L0
+    parts together, and the catalog table is re-pointed at it (a
+    transactional-format lake makes the same move as a Delta/Iceberg
+    rewrite commit). A frame planned before the flip still reads the
+    retired files, which stay for ``snapshot.RETIRE_AFTER_S``.
 
-    Sustained-ingest safety: the appends are read from a SNAPSHOT of
-    the part files listed at entry, and (with ``clear_appends``, the
-    default for a maintenance loop) exactly those files are deleted
-    after the swap — append files landing while the rewrite runs are
-    neither folded nor deleted, so no row is ever lost or folded
-    twice across repeated cycles (the reference merger likewise only
-    merges the parts it selected, table.rs compactor loop).
+    Sustained-ingest safety: the L0 parts are the snapshot listed under
+    the writer lock; a part landing while the rewrite runs is neither
+    folded nor retired, so no row is ever lost or folded twice across
+    repeated cycles (the reference merger likewise only merges the
+    parts it selected, table.rs compactor loop).
 
     The fold moves rows between lake layouts only; the materialized
     stores (rollup, user-day, KMV) advance in ``server.App.maintain``,
     which the maintenance tick calls with the same batch.
 
-    Returns the number of appended rows folded in.
+    Returns the number of tier and L0 rows folded in.
     """
-    _recover_compaction(spark, table_name, appends_path)
-    part_files = _append_part_files(appends_path)
-    if not part_files:
-        return 0
-    bucketed = spark.table(table_name)
-    appends = spark.read.parquet(*part_files)
-    if "dt" in appends.columns and "dt" not in bucketed.columns:
-        appends = appends.drop("dt")
-    # ONE scan of the append set: the count materializes the cache the
-    # union write then reads, instead of re-reading every part file
-    appends = appends.select(*bucketed.columns).persist()
-    n = appends.count()
-    if n == 0:
-        appends.unpersist()
-        return 0
     from . import metrics
 
-    staging = f"{table_name}__compact_staging"
-    manifest = os.path.join(appends_path, _COMPACT_MANIFEST)
-    try:
-        with metrics.store_compaction_time().time():
-            spark.sql(f"DROP TABLE IF EXISTS {staging}")
-            write_events_bucketed(
-                bucketed.unionByName(appends), staging,
-                n_buckets=n_buckets, bucket_col=bucket_col, sort_cols=sort_cols,
-            )
-            if clear_appends:
-                # crash-recovery marker: written AFTER the staged fold
-                # and BEFORE the swap, listing exactly the folded
-                # files. _recover_compaction reads table existence +
-                # this marker to finish (or discard) an interrupted
-                # cycle without losing the table or folding twice.
-                import json as _json
-
-                with open(manifest, "w") as f:
-                    _json.dump({"staging": staging, "files": part_files}, f)
-            spark.sql(f"DROP TABLE {table_name}")
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
-    finally:
-        appends.unpersist()
-    metrics.store_compactions_total().inc()
-    if clear_appends:
-        for f in part_files:
-            try:
-                os.remove(f)
-            except FileNotFoundError:
-                pass
+    with snapshot.writer(tiers_path):
+        ptr = _open(spark, table_name, tiers_path)
+        with _POINTING:
+            base = _point(spark, table_name, tiers_path, ptr)
+        l0 = _live_l0(appends_path, tiers_path, ptr)
+        pending = _tier_paths(tiers_path, ptr) + l0
+        if not pending:
+            return 0
+        # ONE scan of the pending set: the count materializes the cache
+        # the union write then reads, instead of re-reading every part
+        rows = _read_parts(spark, pending).select(*base.columns).persist()
         try:
-            os.remove(manifest)
-        except FileNotFoundError:
-            pass
-        # prune now-empty dt= partition dirs (cosmetic)
-        for root, dirs, files in list(os.walk(appends_path, topdown=False)):
-            if root != appends_path and not dirs and not files:
-                try:
-                    os.rmdir(root)
-                except OSError:
-                    pass
+            n = rows.count()
+            with metrics.store_compaction_time().time():
+                files, meta = _write_base(
+                    spark, table_name, tiers_path, base.unionByName(rows),
+                    ptr, bucket_col, sort_cols)
+        finally:
+            rows.unpersist()
+        _commit(spark, table_name, tiers_path, ptr, files, l0, meta)
+    metrics.store_compactions_total().inc()
     return n
 
 
 # ------------------------------------------------------ two-tier compaction
-
-_MINOR_MANIFEST = ".minor_fold.json"
-_TIER_PREFIX = "tier_"
-
-
-def _committed_tiers(tiers_path: str) -> list[str]:
-    """Tier directories whose Spark write committed (``_SUCCESS``
-    present) — the only tiers a major fold may read."""
-    if not os.path.isdir(tiers_path):
-        return []
-    return sorted(
-        os.path.join(tiers_path, d)
-        for d in os.listdir(tiers_path)
-        if d.startswith(_TIER_PREFIX)
-        and os.path.exists(os.path.join(tiers_path, d, "_SUCCESS"))
-    )
-
-
-def _recover_minor_fold(tiers_path: str) -> None:
-    """Finish or discard a minor fold interrupted by a crash. The
-    manifest is written BEFORE the tier write (it lists the L0
-    snapshot + the tier path), so recovery is decidable:
-
-    - manifest + committed tier: crash before L0 cleanup — delete the
-      listed files (fold happened exactly once).
-    - manifest + missing/uncommitted tier: crash mid-write — drop the
-      partial tier, keep L0 (nothing folded).
-    - uncommitted tier without manifest: unreachable garbage — drop.
-    """
-    import json as _json
-    import shutil
-
-    manifest = os.path.join(tiers_path, _MINOR_MANIFEST)
-    if os.path.exists(manifest):
-        with open(manifest) as f:
-            info = _json.load(f)
-        tier = info["tier"]
-        if os.path.exists(os.path.join(tier, "_SUCCESS")):
-            for fp in info["files"]:
-                try:
-                    os.remove(fp)
-                except FileNotFoundError:
-                    pass
-        elif os.path.isdir(tier):
-            shutil.rmtree(tier)
-        os.remove(manifest)
-    if os.path.isdir(tiers_path):
-        for d in os.listdir(tiers_path):
-            p = os.path.join(tiers_path, d)
-            if (
-                d.startswith(_TIER_PREFIX)
-                and os.path.isdir(p)
-                and not os.path.exists(os.path.join(p, "_SUCCESS"))
-            ):
-                shutil.rmtree(p)
-
 
 def minor_compact_appends(
     spark,
@@ -637,64 +626,94 @@ def minor_compact_appends(
     sort_cols: Sequence[str] = (EVENT_USER_COL, EVENT_TIME_COL, EVENT_ID_COL),
     n_files: int = 4,
 ) -> int:
-    """Minor fold: the L0 append snapshot → ONE sorted L1 tier,
-    WITHOUT touching the bucketed base — the reference's per-level
-    merge (storage/src/table.rs:44-63: l0 parts merge into a level-1
-    run; only level overflow cascades further). Cost ∝ L0 bytes, so
+    """Minor fold: the live L0 parts → ONE sorted L1 tier, WITHOUT
+    touching the bucketed base — the reference's per-level merge
+    (storage/src/table.rs:44-63: l0 parts merge into a level-1 run;
+    only level overflow cascades further). Cost ∝ L0 bytes, so
     sustained ingest stops paying a full base rewrite per trigger —
-    that write amplification moves to the (rarer) major fold.
+    that write amplification moves to the (rarer) major fold. The tier
+    and the retirement of the folded parts land in one pointer flip.
 
     Returns rows folded into the new tier (0 = empty L0)."""
-    import json as _json
+    from . import metrics
 
-    _recover_minor_fold(tiers_path)
-    part_files = _append_part_files(appends_path)
-    if not part_files:
-        return 0
-    os.makedirs(tiers_path, exist_ok=True)
-    existing = [
-        d for d in os.listdir(tiers_path) if d.startswith(_TIER_PREFIX)
-    ]
-    seq = 1 + max(
-        (int(d[len(_TIER_PREFIX):]) for d in existing), default=-1
-    )
-    tier = os.path.join(tiers_path, f"{_TIER_PREFIX}{seq:06d}")
-    manifest = os.path.join(tiers_path, _MINOR_MANIFEST)
-    with open(manifest, "w") as f:
-        _json.dump({"tier": tier, "files": part_files}, f)
-    df = spark.read.parquet(*part_files)
-    if "dt" in df.columns:
-        df = df.drop("dt")
-    # ONE scan of the L0 set: the count materializes the cache the
-    # tier write then reads (same rationale as the major fold's
-    # persist — without it every minor tick pays the L0 read twice)
-    df = df.persist()
-    try:
-        n = df.count()
-        from . import metrics
-
-        with metrics.store_compaction_time().time():
-            (
-                df.repartition(n_files, F.col(EVENT_USER_COL))
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("errorifexists")
-                .parquet(tier)
-            )
-    finally:
-        df.unpersist()
-    for fp in part_files:
+    with snapshot.writer(tiers_path):
+        ptr = snapshot.load(tiers_path)
+        l0 = _live_l0(appends_path, tiers_path, ptr)
+        if not l0:
+            return 0
+        # ONE scan of the L0 set: the count materializes the cache the
+        # tier write then reads
+        df = _read_parts(spark, l0).persist()
         try:
-            os.remove(fp)
-        except FileNotFoundError:
-            pass
-    os.remove(manifest)
-    for root, dirs, files in list(os.walk(appends_path, topdown=False)):
-        if root != appends_path and not dirs and not files:
-            try:
-                os.rmdir(root)
-            except OSError:
-                pass
+            n = df.count()
+            with metrics.store_compaction_time().time():
+                tier = _write_tier(df, tiers_path, sort_cols, n_files)
+        finally:
+            df.unpersist()
+        _commit(spark, None, tiers_path, ptr, {**ptr["files"], **tier}, l0)
     return n
+
+
+def _write_tier(df: DataFrame, tiers_path: str,
+                sort_cols: Sequence[str] = (EVENT_USER_COL, EVENT_TIME_COL,
+                                            EVENT_ID_COL),
+                n_files: int = 4) -> dict:
+    """``df`` as one new sorted tier of the lake: ``{group: files}``."""
+    return snapshot.write(
+        df.repartition(n_files, F.col(EVENT_USER_COL))
+        .sortWithinPartitions(*sort_cols),
+        tiers_path, group=f"tier-{uuid.uuid4().hex}")
+
+
+def _removed(df: DataFrame, keep: Column) -> int:
+    """Rows of ``df`` that ``filter(keep)`` drops, in one narrow pass."""
+    total, kept = df.agg(F.count(F.lit(1)), F.count(F.when(keep, 1))).first()
+    return total - kept
+
+
+def filter_lake(
+    spark: SparkSession,
+    table_name: str,
+    appends_path: str,
+    tiers_path: str,
+    keep: Column,
+    bucket_col: str = EVENT_USER_COL,
+    sort_cols: Sequence[str] = (EVENT_USER_COL, EVENT_TIME_COL, EVENT_ID_COL),
+) -> dict:
+    """Keep only the lake rows ``keep`` passes, in one pointer flip — the
+    write behind erasure and retention (lifecycle.py): a new base
+    directory of the base's kept rows, and one new tier of the kept
+    rows of the live tiers and L0 parts, which retire. A part that
+    loses no row is left as it is. Returns rows removed from each:
+    ``{"base", "l0", "tiers"}``."""
+    with snapshot.writer(tiers_path):
+        ptr = _open(spark, table_name, tiers_path)
+        with _POINTING:
+            base = _point(spark, table_name, tiers_path, ptr)
+        tiers = _tier_paths(tiers_path, ptr)
+        l0 = _live_l0(appends_path, tiers_path, ptr)
+        removed = {"base": _removed(base, keep), "l0": 0, "tiers": 0}
+        for key, paths in (("tiers", tiers), ("l0", l0)):
+            if paths:
+                removed[key] = _removed(_read_parts(spark, paths), keep)
+        meta, folded = ptr["meta"], []
+        tier_files = _tiers(ptr)
+        base_files = {g: fs for g, fs in ptr["files"].items()
+                      if g not in tier_files}
+        if removed["base"]:
+            base_files, meta = _write_base(
+                spark, table_name, tiers_path, base.filter(keep), ptr,
+                bucket_col, sort_cols)
+        if removed["tiers"] or removed["l0"]:
+            tier_files = _write_tier(
+                _read_parts(spark, tiers + l0).filter(keep), tiers_path,
+                sort_cols)
+            folded = l0
+        if any(removed.values()):
+            _commit(spark, table_name, tiers_path, ptr,
+                    {**base_files, **tier_files}, folded, meta)
+    return removed
 
 
 class TieredCompactionPolicy:
@@ -711,8 +730,10 @@ class TieredCompactionPolicy:
       L0+L1 size, not base size.
 
     Queries needing unfolded freshness read
-    ``events_snapshot(...)`` (base ∪ tiers ∪ appends). Single
-    maintenance thread assumed, like the reference's compactor loop.
+    ``events_snapshot(...)`` (base ∪ tiers ∪ appends). Each fold holds
+    the lake's writer lock (``snapshot.writer(tiers_path)``) from
+    reading the pointer to flipping it, so folds, erasure and
+    retention of one lake run one at a time in a process.
     """
 
     def __init__(
@@ -727,8 +748,8 @@ class TieredCompactionPolicy:
         self.l1_max_bytes = l1_max_bytes
 
     def l1_stats(self, tiers_path: str) -> tuple[int, int]:
-        tiers = _committed_tiers(tiers_path)
-        return len(tiers), sum(parquet_bytes(t) for t in tiers)
+        tiers = _tiers(snapshot.load(tiers_path))
+        return len(tiers), sum(sum(fs.values()) for fs in tiers.values())
 
     def should_major(self, tiers_path: str) -> bool:
         n, size = self.l1_stats(tiers_path)
@@ -743,58 +764,31 @@ class TieredCompactionPolicy:
         **kw,
     ) -> dict:
         """One maintenance tick: minor fold if L0 trips, then major
-        fold if L1 trips (compact_appends_into_bucketed over the tiers
-        dir — same manifest/recovery protocol)."""
+        fold if L1 trips."""
         minor = major = 0
-        if self.l0.should_compact(appends_path):
+        if self.l0.should_compact(appends_path, tiers_path):
             minor = minor_compact_appends(spark, appends_path, tiers_path)
         if self.should_major(tiers_path):
             major = compact_appends_into_bucketed(
-                spark, table_name, tiers_path, **kw
-            )
-            # the fold deleted the tier PARQUET files; drop the now
-            # data-less tier dirs (their _SUCCESS markers would
-            # otherwise keep counting toward the l1_max_tiers trigger)
-            import shutil
-
-            for t in _committed_tiers(tiers_path):
-                if not any(
-                    fn.endswith(".parquet")
-                    for _r, _d, fns in os.walk(t)
-                    for fn in fns
-                ):
-                    shutil.rmtree(t)
+                spark, table_name, appends_path, tiers_path, **kw)
         return {"minor_rows": minor, "major_rows": major}
 
 
 def events_snapshot(spark, table_name: str, appends_path: str,
-                    tiers_path: Optional[str] = None) -> DataFrame:
-    """Freshness view: base ∪ committed tiers ∪ L0 appends — what a
-    query sees between folds (the reference likewise scans parts
-    across all levels, storage/src/db.rs:657-666)."""
-    df = spark.table(table_name)
-    sources: list[str] = []
-    if tiers_path:
-        sources.extend(_committed_tiers(tiers_path))
-    sources.extend(_append_part_files(appends_path))
-    if sources:
-        extra = spark.read.parquet(*sources)
-        if "dt" in extra.columns and "dt" not in df.columns:
-            extra = extra.drop("dt")
-        df = df.unionByName(extra.select(*df.columns))
-    return df
+                    tiers_path: str) -> DataFrame:
+    """Freshness view: base ∪ live tiers ∪ live L0 appends as of one
+    pointer — what a query sees between folds (the reference likewise
+    scans parts across all levels, storage/src/db.rs:657-666)."""
+    return _lake_view(spark, table_name, appends_path, tiers_path)[0]
 
 
 class CompactionPolicy:
-    """When to run the fold — the reference's size-tiered trigger
-    (storage/src/table.rs:24-63: ``l0_max_parts`` fresh parts force an
-    L0 merge; levels grow by ``level_size_multiplier``) collapsed to
-    the two tiers a lake layout actually has: the date-partitioned
-    appends dir is L0, the bucketed table is the merged sorted run.
-    A compaction rewrites the whole bucketed table, so the policy's
-    job is amortization: fold when enough L0 parts or bytes have
-    accumulated, never per-append (write amplification) and never
-    so rarely that the funnel's shuffle-free read loses freshness.
+    """When to run the minor fold — the reference's size-tiered
+    trigger (storage/src/table.rs:24-63: ``l0_max_parts`` fresh parts
+    force an L0 merge) over the date-partitioned appends dir, L0. The
+    policy's job is amortization: fold when enough live L0 parts or
+    bytes have accumulated, never per-append (write amplification) and
+    never so rarely that reads pay for many small parts.
     """
 
     def __init__(self, l0_max_parts: int = 4,
@@ -802,31 +796,25 @@ class CompactionPolicy:
         self.l0_max_parts = l0_max_parts
         self.l0_max_bytes = l0_max_bytes
 
-    def l0_stats(self, appends_path: str) -> tuple[int, int]:
+    def l0_stats(self, appends_path: str,
+                 tiers_path: str) -> tuple[int, int]:
+        """(parts, bytes) of the L0 parts the lake pointer has not
+        folded."""
         parts, total = 0, 0
-        for f in _append_part_files(appends_path):
+        for f in _live_l0(appends_path, tiers_path,
+                          snapshot.load(tiers_path)):
             try:
                 sz = os.path.getsize(f)
-            except OSError:  # deleted by a concurrent compaction tick
+            except OSError:  # expired by a concurrent retention sweep
                 continue  # excluded from BOTH count and size — a
                 # gone file must not trip the l0_max_parts trigger
             parts += 1
             total += sz
         return parts, total
 
-    def should_compact(self, appends_path: str) -> bool:
-        parts, size = self.l0_stats(appends_path)
+    def should_compact(self, appends_path: str, tiers_path: str) -> bool:
+        parts, size = self.l0_stats(appends_path, tiers_path)
         return parts >= self.l0_max_parts or size >= self.l0_max_bytes
-
-    def maybe_compact(self, spark, table_name: str, appends_path: str,
-                      **kw) -> int:
-        """One tick of the maintenance loop: fold iff the trigger
-        fires. Returns rows folded (0 = below threshold or no data).
-        Call from a scheduler at the reference's compactor cadence."""
-        if not self.should_compact(appends_path):
-            return 0
-        return compact_appends_into_bucketed(
-            spark, table_name, appends_path, **kw)
 
 
 def tracked_to_events(

@@ -8,30 +8,34 @@ events lake that never expires old data grows without bound.
 
 Design, per store tier:
 
-- **bucketed base** (the big one): a staged filtered rewrite through
-  the SAME staging-table + manifest + swap protocol compaction uses
-  (`ingest._recover_compaction` finishes or discards an interrupted
-  cycle), so a crash can never lose the table — at worst the erasure
-  simply has not happened yet and is retried. At 100 TB this is why
-  erasure is BATCHED: the standard GDPR design queues requests and
-  folds them into the next maintenance rewrite (the 30-day SLA exists
-  precisely because erasure rides the compaction cadence, not the
-  request path).
-- **L0 append parts / L1 tier files / side stores** (small by
-  construction — the compaction loop keeps them bounded): per-file
-  filter-and-replace with pyarrow, `os.replace` making each file
+- **events lake** (bucketed base, L1 tiers, L0 appends): erasure and
+  retention are one filtered fold through the lake's pointer commit
+  (ingest.py over snapshot.py). The base is rewritten as a new
+  bucketed directory of the rows ``keep`` passes, and the live tiers
+  plus the L0 snapshot become one new tier of their kept rows; one
+  pointer flip makes both live and retires every file they replace,
+  and the catalog table is re-pointed at the new base. A crash before
+  the flip leaves the lake as it was (the operation is simply
+  retried); a query planned before it keeps reading the retired files
+  for ``snapshot.RETIRE_AFTER_S``, after which the maintenance tick's
+  sweep deletes them. At 100 TB this is why erasure is BATCHED: the
+  standard GDPR design queues requests and folds them into the next
+  maintenance rewrite (the 30-day SLA exists precisely because
+  erasure rides the compaction cadence, not the request path).
+- **side stores** (``extra_paths``, e.g. a profile store): per-file
+  filter-and-replace with pyarrow, ``os.replace`` making each file
   swap atomic; a crash mid-file leaves only a dot-prefixed temp that
-  every part lister already skips. Driver-side per-file work is fine
-  at this tier's size; an object-store deployment distributes the
-  same loop with a mapPartitions over the file list.
+  every part lister already skips.
 - **date-partitioned stores** (appends, compacted layout): retention
   is a partition DROP — directory deletes decided by the dt= value,
   no data scanned at all. This is the reason the ingest layout is
   date-partitioned in the first place.
+- **day stores** (rollup, user-day, KMV): the affected days are
+  re-aggregated (erasure) or leave the store's pointer (retention).
 
-Single-writer assumption: lifecycle ops run inside the same
-maintenance loop as compaction (they share its staging name and
-manifest), never concurrently with it.
+Lake operations hold the lake's writer lock
+(``snapshot.writer(tiers_path)``) like the folds, so they run one at a
+time with them in a process.
 """
 
 from __future__ import annotations
@@ -39,25 +43,18 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .ingest import (
-    _append_part_files,
-    _committed_tiers,
-    _recover_compaction,
-    events_snapshot,
-    write_events_bucketed,
-)
-from .schema import EVENT_ID_COL, EVENT_TIME_COL, EVENT_USER_COL
-
-_ERASE_MANIFEST = ".compaction_folded.json"  # shared with compaction
+from .ingest import events_snapshot, filter_lake
+from .exprs import _ts_lit
+from .schema import EVENT_TIME_COL, EVENT_USER_COL
 
 
 def _repair_day_stores(spark: SparkSession, day_stores, table_name: str,
-                       appends_path: str, tiers_path, days) -> int:
+                       appends_path: str, tiers_path: str, days) -> int:
     """Re-aggregate the affected days of every day store (rollup,
     user-day, KMV — daystore.DayStore) from the post-rewrite lake view.
     A fold (``DayStore.update``) is additive-only — counts and sums
@@ -72,58 +69,6 @@ def _repair_day_stores(spark: SparkSession, day_stores, table_name: str,
     for store in day_stores:
         n += store.recompute_days(spark, snap, days)
     return n
-
-
-def _table_num_buckets(spark: SparkSession, table_name: str, default: int = 32) -> int:
-    """Bucket count of a metastore table (DESCRIBE FORMATTED) — the
-    rewrite must preserve it or assume_partitioned readers break."""
-    for row in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect():
-        if (row.col_name or "").strip() == "Num Buckets":
-            try:
-                return int(row.data_type.strip())
-            except (TypeError, ValueError):
-                break
-    return default
-
-
-def _rewrite_base_filtered(
-    spark: SparkSession,
-    table_name: str,
-    appends_path: str,
-    keep,
-    bucket_col: str = EVENT_USER_COL,
-    sort_cols: Sequence[str] = (EVENT_USER_COL, EVENT_TIME_COL, EVENT_ID_COL),
-) -> int:
-    """Crash-safe staged rewrite of the bucketed base keeping only
-    rows matching ``keep``; returns rows removed."""
-    import json as _json
-
-    _recover_compaction(spark, table_name, appends_path)
-    base = spark.table(table_name)
-    # one narrow pass computes total and kept together — at the scale
-    # this module targets, separate before/after counts would double
-    # the rewrite's scan cost just to report a number
-    counts = base.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(keep, F.lit(1)).otherwise(F.lit(0))).alias("kept"),
-    ).collect()[0]
-    removed = int(counts["total"] or 0) - int(counts["kept"] or 0)
-    staging = f"{table_name}__compact_staging"
-    manifest = os.path.join(appends_path, _ERASE_MANIFEST)
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    write_events_bucketed(
-        base.filter(keep), staging,
-        n_buckets=_table_num_buckets(spark, table_name),
-        bucket_col=bucket_col, sort_cols=sort_cols,
-    )
-    # empty files list: the protocol's swap/recovery semantics apply,
-    # there is just no L0 cleanup tied to this rewrite
-    with open(manifest, "w") as f:
-        _json.dump({"staging": staging, "files": []}, f)
-    spark.sql(f"DROP TABLE {table_name}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
-    os.remove(manifest)
-    return removed
 
 
 def _rewrite_file_filtered(path: str, keep_mask_fn) -> int:
@@ -181,38 +126,21 @@ def _rewrite_file_excluding_users(path: str, user_ids, user_col: str) -> int:
     return _rewrite_file_filtered(path, keep)
 
 
-def _rewrite_file_excluding_before(path: str, cutoff: dt.datetime,
-                                   ts_col: str) -> int:
-    """Per-file retention: drop rows with ts < cutoff. Null-ts rows
-    are kept (they have no age). The naive cutoff is interpreted as
-    UTC — the engine convention every table is stamped with."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def keep(table):
-        if ts_col not in table.column_names:
-            return None
-        col = table[ts_col]
-        scalar = pa.scalar(cutoff).cast(col.type)
-        return pc.fill_null(pc.greater_equal(col, scalar), True)
-
-    return _rewrite_file_filtered(path, keep)
-
-
 def erase_users(
     spark: SparkSession,
     table_name: str,
     appends_path: str,
     user_ids: Sequence[int],
-    tiers_path: Optional[str] = None,
+    tiers_path: str,
     extra_paths: Sequence[str] = (),
     user_col: str = EVENT_USER_COL,
     day_stores: Sequence = (),
 ) -> dict:
     """Right-to-erasure: remove every event of ``user_ids`` from the
-    bucketed base, the L0 append parts, the committed L1 tiers, and
-    any ``extra_paths`` parquet files keyed by the same user column
-    (e.g. a profile store). Returns per-tier removed-row counts.
+    events lake (bucketed base, L1 tiers, L0 append parts — one
+    filtered fold) and from any ``extra_paths`` parquet files keyed by
+    the same user column (e.g. a profile store). Returns per-tier
+    removed-row counts.
 
     ``day_stores``: day stores (rollup, user-day, KMV) maintained
     against this lake — their affected day partitions (the days the
@@ -222,14 +150,13 @@ def erase_users(
     erased users. ``rollup_days`` in the result sums the days
     re-aggregated across every day store.
 
-    The L0/tier snapshot is the file list at entry — parts landing
+    The L0 snapshot is the part list at entry — parts landing
     mid-erasure are untouched (re-run for stragglers; the standard
     queue-and-batch flow re-sweeps anyway)."""
     ids = sorted(set(user_ids))
-    if not ids:
-        return {"base": 0, "l0": 0, "tiers": 0, "extra": 0,
-                "rollup_days": 0}
     out = {"base": 0, "l0": 0, "tiers": 0, "extra": 0, "rollup_days": 0}
+    if not ids:
+        return out
     # affected store days BEFORE any rewrite: the distinct event dates
     # of the victims across the full lake view — one narrow
     # (user, ts)-projected scan, pruned to two columns
@@ -244,18 +171,9 @@ def erase_users(
             .distinct()
             .collect()
         ]
-    out["base"] = _rewrite_base_filtered(
-        spark, table_name, appends_path,
-        ~F.col(user_col).isin(ids), bucket_col=user_col,
-    )
-    for part in _append_part_files(appends_path):
-        out["l0"] += _rewrite_file_excluding_users(part, ids, user_col)
-    if tiers_path:
-        for tier_dir in _committed_tiers(tiers_path):
-            for name in sorted(os.listdir(tier_dir)):
-                if name.endswith(".parquet") and not name.startswith("."):
-                    out["tiers"] += _rewrite_file_excluding_users(
-                        os.path.join(tier_dir, name), ids, user_col)
+    out.update(filter_lake(
+        spark, table_name, appends_path, tiers_path,
+        ~F.col(user_col).isin(ids), bucket_col=user_col))
     for p in extra_paths:
         if os.path.isdir(p):
             for root, dirs, files in os.walk(p):
@@ -266,12 +184,6 @@ def erase_users(
                             os.path.join(root, name), ids, user_col)
         elif os.path.exists(p):
             out["extra"] += _rewrite_file_excluding_users(p, ids, user_col)
-    # drop Spark's cached leaf-file statuses for the rewritten paths —
-    # the in-place os.replace changed file lengths, and a stale
-    # FileStatusCache entry fails the next scan with FAILED_READ_FILE
-    for p in (appends_path, tiers_path, *extra_paths):
-        if p:
-            spark.catalog.refreshByPath(p)
     out["rollup_days"] = _repair_day_stores(
         spark, day_stores, table_name, appends_path, tiers_path, days)
     return out
@@ -310,19 +222,17 @@ def expire_base(
     appends_path: str,
     older_than: dt.datetime,
     ts_col: str = EVENT_TIME_COL,
-    tiers_path: Optional[str] = None,
+    *,
+    tiers_path: str,
     day_stores: Sequence = (),
 ) -> int:
-    """Retention on the bucketed base (not date-partitioned, so a
-    filtered rewrite): drops rows with ts < cutoff through the same
-    crash-safe staged swap as erasure. Run at the compaction cadence
-    — on a transactional lake this and the fold are one commit.
-
-    ``tiers_path``: ALSO sweep the committed L1 tiers (per-file
-    atomic rewrite, like erasure). Tiers are user-sorted, not dated,
-    so a partition drop can't reach them — and without this sweep the
-    next major fold would fold their pre-cutoff rows back into the
-    freshly-expired base, resurrecting deleted history.
+    """Retention on the events lake (its base is not date-partitioned,
+    so a filtered fold): drops rows with ts < cutoff from the base, the
+    L1 tiers and the L0 parts in one pointer flip, like erasure. Tiers
+    are user-sorted, not dated, so a partition drop can't reach them —
+    and a fold that skipped them would let the next major fold bring
+    their pre-cutoff rows back into the expired base. Run at the
+    compaction cadence.
 
     ``day_stores``: day stores (rollup, user-day, KMV) maintained
     against this lake. Their expired days leave the store's pointer in
@@ -330,16 +240,10 @@ def expire_base(
     reader's file listing goes stale; a mid-day cutoff additionally
     re-aggregates the boundary day, which keeps its post-cutoff rows.
 
-    Returns total rows removed (base + tiers)."""
-    removed = _rewrite_base_filtered(
-        spark, table_name, appends_path, F.col(ts_col) >= F.lit(older_than))
-    if tiers_path:
-        for tier_dir in _committed_tiers(tiers_path):
-            for name in sorted(os.listdir(tier_dir)):
-                if name.endswith(".parquet") and not name.startswith("."):
-                    removed += _rewrite_file_excluding_before(
-                        os.path.join(tier_dir, name), older_than, ts_col)
-        spark.catalog.refreshByPath(tiers_path)
+    Returns total rows removed."""
+    removed = sum(filter_lake(
+        spark, table_name, appends_path, tiers_path,
+        F.col(ts_col) >= _ts_lit(older_than)).values())
     for store in day_stores:
         store.expire_before(older_than.date())
     if older_than.time() != dt.time.min:

@@ -156,7 +156,11 @@ def experiment_report(
     per_variant = _variant_conversions(
         events, variant_col, exposure_event, conversion_event, time,
         filters, group_col)
-    ctrl = per_variant.filter(F.col("variant") == control).select(
+    # the control as the variant's type: a name that does not parse
+    # as that type (``"nope"`` against an int property) is NULL and
+    # matches nothing, instead of failing the job on the ANSI cast
+    control_v = F.lit(control).try_cast(per_variant.schema["variant"].dataType)
+    ctrl = per_variant.filter(F.col("variant") == control_v).select(
         F.col("n_users").alias("__cn"),
         F.col("n_converted").alias("__cx"),
         F.col("cvr").alias("__ccvr"),
@@ -177,7 +181,7 @@ def experiment_report(
     se = F.sqrt(
         p * (F.lit(1.0) - p)
         * (F.lit(1.0) / F.col("n_users") + F.lit(1.0) / F.col("__cn")))
-    not_ctrl = F.col("variant") != F.lit(control)
+    not_ctrl = F.col("variant") != control_v
     return (
         per_variant.join(F.broadcast(ctrl))
         .select(

@@ -667,10 +667,11 @@ class App:
         self._ann_builds: dict = {}
         self._ann_lock = threading.Lock()
         #: lake layout for the admin lifecycle plane (user erasure /
-        #: retention): {"table_name", "appends_path", "tiers_path"?,
-        #: "extra_paths"?, "dated_paths"?}. None disables the routes
-        #: (they answer 409) — the maintenance deployment that owns
-        #: the bucketed table opts in.
+        #: retention): {"table_name", "appends_path", "tiers_path",
+        #: "extra_paths"?, "dated_paths"?}; ``tiers_path`` holds the
+        #: lake's pointer (ingest.py), so it is required. None
+        #: disables the routes (they answer 409) — the maintenance
+        #: deployment that owns the bucketed table opts in.
         self.lake = lake
         #: serving-layer result cache (None = disabled): replays the
         #: serialized response of an identical query route request at
@@ -1222,13 +1223,15 @@ class App:
         return out
 
     def _sweep_stores(self) -> None:
-        """Delete the files every day store and ANN index of every
-        project retired ``snapshot.RETIRE_AFTER_S`` ago, so erased or
-        expired rows leave the disk within that plus one tick even in
-        a store no later batch commits to."""
+        """Delete the files the events lake, every day store and every
+        ANN index of every project retired ``snapshot.RETIRE_AFTER_S``
+        ago, so erased or expired rows leave the disk within that plus
+        one tick even in a store no later batch commits to."""
         from . import snapshot
 
         paths = [s.path for _, s in self._day_stores()]
+        if self.lake:
+            paths.append(self.lake["tiers_path"])
         if self.ivf_dir is not None:
             paths += [self._store_for_ann_row(p, row).path
                       for p in self._project_ids()
@@ -1700,7 +1703,7 @@ class App:
             raise HttpError(400, "userIds must be a list of ints")
         out = erase_users(
             self.spark, lake["table_name"], lake["appends_path"],
-            ids, tiers_path=lake.get("tiers_path"),
+            ids, tiers_path=lake["tiers_path"],
             extra_paths=lake.get("extra_paths") or (),
             day_stores=[s for _, s in self._day_stores()],
         )
@@ -1730,7 +1733,7 @@ class App:
         ]
         removed = expire_base(
             self.spark, lake["table_name"], lake["appends_path"], cutoff,
-            tiers_path=lake.get("tiers_path"),
+            tiers_path=lake["tiers_path"],
             day_stores=[s for _, s in self._day_stores()])
         self.refresh_tables()
         return 200, {"rows_removed": removed, "dated": dated}
@@ -1855,29 +1858,20 @@ class App:
         if cached is None:
             partitioned = False
             if self.lake:
-                from .ingest import (
-                    _append_part_files,
-                    _committed_tiers,
-                    events_snapshot,
-                )
+                from .ingest import _lake_view
 
-                df = events_snapshot(
+                # fully-folded lake (no live L0 part, no tier): the
+                # view IS the bucketed base table, whose write layout
+                # (write_events_bucketed, bucketBy user) puts every
+                # user's rows in one partition — sequence operators
+                # may elide their per-user shuffle (funnel_attempts
+                # assume_partitioned). Any pending part breaks the
+                # invariant, so the flag comes from the same pointer
+                # as the frame and both are replaced together by
+                # refresh_tables().
+                df, partitioned = _lake_view(
                     self.spark, self.lake["table_name"],
-                    self.lake["appends_path"],
-                    self.lake.get("tiers_path"))
-                # fully-compacted lake (no L0 parts, no tiers): the
-                # snapshot IS the bucketed base table, whose write
-                # layout (write_events_bucketed, bucketBy user) puts
-                # every user's rows in one partition — sequence
-                # operators may elide their per-user shuffle
-                # (funnel_attempts assume_partitioned). Any pending
-                # append breaks the invariant, so the flag travels
-                # WITH the frame it describes and both are replaced
-                # together by refresh_tables().
-                tiers = self.lake.get("tiers_path")
-                partitioned = not (
-                    _append_part_files(self.lake["appends_path"])
-                    or (tiers and _committed_tiers(tiers)))
+                    self.lake["appends_path"], self.lake["tiers_path"])
             else:
                 df = load_table(self.spark, self.sf_dir, "events")
             cached = (df, partitioned)

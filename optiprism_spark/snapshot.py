@@ -1,5 +1,6 @@
 """One pointer commit for every maintained store: the day stores
-(daystore.py) and the IVF index (operators/ivf_store.py).
+(daystore.py), the IVF index (operators/ivf_store.py) and the events
+lake (ingest.py).
 
 A store directory holds immutable parquet files and ONE pointer JSON,
 the store's whole state: the live files, grouped by their directory (a
@@ -128,11 +129,13 @@ def commit(path: str, base: dict, files: dict,
     ``files``, with the batch in the ledger and ``meta`` (default:
     base's), then sweep. A file ``base`` names and ``files`` does not
     is retired now; a retirement older than ``RETIRE_AFTER_S`` leaves
-    the pointer, its file is swept. Returns the new pointer."""
+    the pointer once its file is gone (the lake tells folded L0 parts
+    by their retirement). Returns the new pointer."""
     now = time.time()
     live = {rel for fs in files.values() for rel in fs}
     retired = {rel: t for rel, t in base["retired"].items()
-               if now - t < RETIRE_AFTER_S}
+               if now - t < RETIRE_AFTER_S
+               or os.path.exists(os.path.join(path, rel))}
     retired.update((rel, now) for fs in base["files"].values()
                    for rel in fs.keys() - live)
     ledger = dict(base["applied"])
@@ -164,14 +167,20 @@ def sweep(path: str) -> None:
 
 
 def _sweep(path: str, ptr: dict) -> None:
-    """Delete every file under ``path`` the pointer does not name once
-    ``RETIRE_AFTER_S`` has passed since its retirement (in the pointer)
-    or, for a file no pointer ever named (a crashed commit's staging
-    and part files), since its mtime, which spares what a writer in
-    another process is still landing; then every empty directory as
-    old."""
+    """Delete every file the pointer retired ``RETIRE_AFTER_S`` ago,
+    wherever it lies (the lake retires L0 parts and an adopted base
+    outside its directory); then every file under ``path`` no pointer
+    ever named (a crashed commit's staging and part files) once as old
+    by mtime, which spares what a writer in another process is still
+    landing; then every empty directory as old."""
     keep = {rel for fs in ptr["files"].values() for rel in fs} | {POINTER}
     now = time.time()
+    for rel, t in ptr["retired"].items():
+        if now - t >= RETIRE_AFTER_S:
+            try:
+                os.remove(os.path.join(path, rel))
+            except OSError:
+                pass
 
     def due(p: str) -> bool:
         rel = os.path.relpath(p, path)

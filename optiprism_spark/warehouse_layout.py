@@ -71,7 +71,6 @@ exactly like the events table's bucketed layout.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 import threading
@@ -269,10 +268,8 @@ def _sweep_dead_pointers(spark: SparkSession, wh: str) -> None:
     for fn in os.listdir(wh):
         if not (fn.startswith(".wh_current_") and fn.endswith(".json")):
             continue
-        try:
-            with open(os.path.join(wh, fn)) as f:
-                ptr = json.load(f)
-        except (OSError, ValueError):
+        ptr = read_json(os.path.join(wh, fn))
+        if ptr is None:
             continue
         if os.path.isdir(ptr.get("sf_dir", "")):
             continue

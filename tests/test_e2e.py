@@ -203,7 +203,10 @@ def test_product_loop_end_to_end(spark, tmp_path):
     # ---- compaction: fold the flushed batch into the bucketed table
     # and check the shuffle-free funnel sees the same conversions
     from optiprism_spark.api import parse_funnel
-    from optiprism_spark.ingest import CompactionPolicy, write_events_bucketed
+    from optiprism_spark.ingest import (
+        TieredCompactionPolicy,
+        write_events_bucketed,
+    )
     from optiprism_spark.operators.funnel import funnel_attempts
     from optiprism_spark.streaming.sessionize import append_events
 
@@ -216,9 +219,11 @@ def test_product_loop_end_to_end(spark, tmp_path):
         write_events_bucketed(events.limit(0), tbl, n_buckets=4)
         appends = str(tmp_path / "appends")
         append_events(events, appends)
-        pol = CompactionPolicy(l0_max_parts=1)
-        assert pol.maybe_compact(spark, tbl, appends, n_buckets=4) == \
-            events.count()
+        pol = TieredCompactionPolicy(l0_max_parts=1, l1_max_tiers=1)
+        folded = pol.maybe_compact(spark, tbl, appends,
+                                   str(tmp_path / "tiers"))
+        assert folded == {"minor_rows": events.count(),
+                          "major_rows": events.count()}
         req = parse_funnel(fun_body)
         fast = funnel_attempts(spark.table(tbl), req, assume_partitioned=True)
         plan = fast._jdf.queryExecution().executedPlan().toString()
@@ -230,4 +235,3 @@ def test_product_loop_end_to_end(spark, tmp_path):
         assert totals and totals[0] == 2
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}__compact_staging")

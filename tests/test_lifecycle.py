@@ -1,6 +1,6 @@
 """Data-lifecycle ops: user erasure across every store tier (base,
-L0, tiers, side stores), crash-safety via the shared staging
-protocol, and partition-drop / filtered-rewrite retention."""
+L0, tiers, side stores) as one filtered fold of the lake's pointer
+commit, and partition-drop / filtered-fold retention."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from optiprism_spark import snapshot
 from optiprism_spark.ingest import (
-    _append_part_files,
-    _committed_tiers,
+    _live_l0,
+    _tier_paths,
     events_snapshot,
     minor_compact_appends,
     write_events_bucketed,
@@ -52,14 +52,14 @@ def store(spark, tmp_path):
         append_events(tier_src, appends)
         minor_compact_appends(spark, appends, tiers)  # L0 -> committed tier
         append_events(l0, appends)                    # fresh L0 on top
-        assert _append_part_files(appends) and _committed_tiers(tiers)
+        ptr = snapshot.load(tiers)
+        assert _live_l0(appends, tiers, ptr) and _tier_paths(tiers, ptr)
     except BaseException:
         events.unpersist()
         raise
     yield appends, tiers, events
     events.unpersist()
     drop_table_clean(spark, TBL)
-    drop_table_clean(spark, f"{TBL}__compact_staging")
 
 
 def test_erase_users_all_tiers(spark, store, tmp_path):
@@ -110,28 +110,6 @@ def test_erase_preserves_bucket_layout(spark, store):
     assert "hashpartitioning(user_id" not in plan, plan
 
 
-def test_erase_crash_recovery_completes_swap(spark, store):
-    """Crash between DROP and RENAME: the shared recovery protocol
-    finishes the swap on the next maintenance entry — the table is
-    never lost."""
-    import json
-
-    appends, tiers, events = store
-    staging = f"{TBL}__compact_staging"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    write_events_bucketed(
-        spark.table(TBL).filter(F.col("user_id") != -1), staging, n_buckets=4)
-    with open(os.path.join(appends, ".compaction_folded.json"), "w") as f:
-        json.dump({"staging": staging, "files": []}, f)
-    spark.sql(f"DROP TABLE {TBL}")  # crash happens here
-
-    from optiprism_spark.ingest import _recover_compaction
-
-    _recover_compaction(spark, TBL, appends)
-    assert spark.catalog.tableExists(TBL)
-    assert not spark.catalog.tableExists(staging)
-
-
 def test_expire_partitions_drops_only_old(spark, tmp_path):
     events = load_table(spark, SF_DIR, "events")
     path = str(tmp_path / "dated")
@@ -152,7 +130,7 @@ def test_expire_partitions_drops_only_old(spark, tmp_path):
 def test_expire_base_filters_by_time(spark, store):
     appends, tiers, events = store
     cutoff = dt.datetime(2024, 1, 15)
-    removed = expire_base(spark, TBL, appends, cutoff)
+    removed = expire_base(spark, TBL, appends, cutoff, tiers_path=tiers)
     base = spark.table(TBL)
     assert base.filter(F.col("ts") < F.lit(cutoff)).count() == 0
     assert removed > 0 and base.count() > 0
@@ -324,20 +302,20 @@ def test_retention_sweeps_tiers_no_resurrection(spark, store):
 
     appends, tiers, events = store
     cutoff = dt.datetime(2024, 1, 15)
-    old_in_tier = (
-        spark.read.parquet(*_committed_tiers(tiers))
-        .filter(F.col("ts") < F.lit(cutoff)).count())
+
+    def tiers_now():
+        return spark.read.parquet(*_tier_paths(tiers, snapshot.load(tiers)))
+
+    old_in_tier = tiers_now().filter(F.col("ts") < F.lit(cutoff)).count()
     assert old_in_tier > 0
 
     removed = expire_base(spark, TBL, appends, cutoff, tiers_path=tiers)
-    assert spark.read.parquet(*_committed_tiers(tiers)).filter(
-        F.col("ts") < F.lit(cutoff)).count() == 0
+    assert tiers_now().filter(F.col("ts") < F.lit(cutoff)).count() == 0
     assert removed > old_in_tier  # base rows + tier rows both counted
 
     # the fold that previously resurrected: major-fold the swept tier
-    # into the expired base (the tiers dir is the fold's source, as in
-    # TieredCompactionPolicy.maybe_compact)
-    compact_appends_into_bucketed(spark, TBL, tiers, n_buckets=4)
+    # into the expired base
+    compact_appends_into_bucketed(spark, TBL, appends, tiers)
     assert spark.table(TBL).filter(F.col("ts") < F.lit(cutoff)).count() == 0
 
 
@@ -541,6 +519,46 @@ def test_erased_user_leaves_day_store_files_after_next_tick(
     assert on_disk() == (0, 0)
 
 
+def test_erased_user_leaves_lake_files_after_next_tick(
+        spark, store, monkeypatch):
+    """The lake twin of the day-store test above: after an erasure the
+    retired base, tier and L0 files still hold the erased user for
+    readers planned before it; once the retirement window has run out
+    (monkeypatched to 0), the next maintenance tick deletes them, so
+    no parquet file of the lake's base, tiers or appends holds the
+    user any more."""
+    import pyarrow.parquet as pq
+
+    from optiprism_spark.server import make_app
+    from tests.test_server import call
+
+    appends, tiers, events = store
+    adopted = spark.sql(f"DESCRIBE FORMATTED {TBL}").filter(
+        F.col("col_name") == "Location").first()[1].removeprefix("file:")
+    app = make_app(spark, SF_DIR, result_cache_ttl=None, lake={
+        "table_name": TBL, "appends_path": appends, "tiers_path": tiers})
+    victim = int(events.agg(F.min("user_id")).first()[0])
+
+    def holding():
+        return [os.path.join(r, f)
+                for d in (adopted, tiers, appends)
+                for r, _d, fs in os.walk(d) for f in fs
+                if f.endswith(".parquet") and victim in pq.read_table(
+                    os.path.join(r, f), columns=["user_id"])
+                .column(0).to_pylist()]
+
+    assert holding()
+    status, _ = call(app, "POST", "/api/v1/admin/erase-user",
+                     {"userIds": [victim]})
+    assert status == 200
+    assert holding()  # retired, within the window
+    monkeypatch.setattr(snapshot, "RETIRE_AFTER_S", 0.0)
+    app.maintain()
+    assert holding() == []
+    assert events_snapshot(spark, TBL, appends, tiers).count() == \
+        events.filter(F.col("user_id") != victim).count()
+
+
 _T_JAN = {"type": "between", "from": "2024-01-01T00:00:00",
           "to": "2024-01-31T23:59:59.999999"}
 
@@ -634,8 +652,6 @@ def test_funnel_routes_bucketed_on_compacted_lake(spark, store, tmp_path):
     (assume_partitioned) — same discipline as the warehouse fact
     routing. Any pending L0 part or tier keeps the conservative
     shuffle path. Both paths must answer identically."""
-    import shutil as _sh
-
     from optiprism_spark import metrics
     from optiprism_spark.ingest import compact_appends_into_bucketed
     from optiprism_spark.server import make_app
@@ -663,16 +679,9 @@ def test_funnel_routes_bucketed_on_compacted_lake(spark, store, tmp_path):
     assert status == 200
     assert pending._events_resolved()[1] is False  # L0 + tier pending
 
-    # fold everything into the bucketed base (tier first, then L0),
-    # and drop the data-less tier dirs the way the compaction policy
-    # does after a major fold
-    compact_appends_into_bucketed(spark, TBL, tiers, n_buckets=4)
-    compact_appends_into_bucketed(spark, TBL, appends, n_buckets=4)
-    for t in os.listdir(tiers):
-        full = os.path.join(tiers, t)
-        if not any(fn.endswith(".parquet")
-                   for _r, _d, fns in os.walk(full) for fn in fns):
-            _sh.rmtree(full)
+    # fold the tier and L0 into the bucketed base; the folded parts
+    # stay on disk, retired, for readers planned before the fold
+    compact_appends_into_bucketed(spark, TBL, appends, tiers)
 
     compacted = make_app(spark, SF_DIR, lake=lake, result_cache_ttl=None)
     status, after = call(compacted, "POST", path, body)

@@ -162,7 +162,8 @@ def test_compaction_series(spark, tmp_path):
     appends = str(tmp_path / "appends")
     append_events(events.limit(50), appends)
     assert "optiprism_store_inserts_total 1" in metrics.REGISTRY.render()
-    n = compact_appends_into_bucketed(spark, tbl, appends, n_buckets=4)
+    n = compact_appends_into_bucketed(spark, tbl, appends,
+                                      str(tmp_path / "tiers"))
     assert n == 50
     text = metrics.REGISTRY.render()
     assert "optiprism_store_compactions_total 1" in text

@@ -350,7 +350,8 @@ def test_funnel_bucketed_table_elides_shuffle(spark, tmp_path):
         appends_path = str(tmp_path / "appends")
         append_events(fresh, appends_path)
         n = compact_appends_into_bucketed(
-            spark, "events_bucketed_test", appends_path, n_buckets=4)
+            spark, "events_bucketed_test", appends_path,
+            str(tmp_path / "tiers"))
         assert n == 40
 
         bucketed2 = spark.table("events_bucketed_test")
@@ -362,7 +363,6 @@ def test_funnel_bucketed_table_elides_shuffle(spark, tmp_path):
         assert sorted(map(key, fast2.collect())) == sorted(map(key, slow2.collect()))
     finally:
         spark.sql("DROP TABLE IF EXISTS events_bucketed_test")
-        spark.sql("DROP TABLE IF EXISTS events_bucketed_test__compact_staging")
 
 
 def test_lsh_incremental_store_probe_is_broadcast(spark):

@@ -142,6 +142,13 @@ CALLER_ERRORS = {
         "variantProperty": {"propertyName": "k", "dtype": "int64"},
         "control": "-1",
     }, "matched no exposures"),
+    "control_not_of_variant_type": ("/queries/experiment", {
+        "time": T_JAN, "exposureEvent": _VIEW,
+        "conversionEvent": {"eventName": "purchase",
+                            "eventType": "regular"},
+        "variantProperty": {"propertyName": "k", "dtype": "int64"},
+        "control": "nope",
+    }, "matched no exposures"),
     "srm_variant_outside_allocation": ("/queries/experiment", {
         "type": "srm", "time": T_JAN, "exposureEvent": _VIEW,
         "variantProperty": {"propertyName": "event_type"},

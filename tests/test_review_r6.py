@@ -1,10 +1,8 @@
 """Regression tests for the round-6 self-review findings: concurrency
 holes in exactly the seams whose docstrings promise concurrency safety.
 
-1. The compaction part-file snapshot must never list files under a
-   Spark ``_temporary`` dir — an in-flight write's task files would be
-   folded (possibly half-written), then folded AGAIN at their final
-   committed path on the next cycle.
+1. (The L0 listing's ``_temporary`` pruning is tested in
+   test_tiered_compaction.py.)
 2. A /track acked while commit_checkpoint is mid-flight must survive
    in both buffer and WAL: the ingest lock serializes the buffer slice
    + journal rewrite against concurrent appends.
@@ -16,27 +14,9 @@ holes in exactly the seams whose docstrings promise concurrency safety.
 
 from __future__ import annotations
 
-import os
 import threading
 
 import pytest
-
-
-def test_append_listing_skips_temporary_dirs(tmp_path):
-    from optiprism_spark.ingest import _append_part_files
-
-    d = str(tmp_path / "appends")
-    os.makedirs(os.path.join(d, "dt=2024-01-01"))
-    os.makedirs(os.path.join(
-        d, "_temporary", "0", "_temporary", "attempt_1", "dt=2024-01-01"))
-    committed = os.path.join(d, "dt=2024-01-01", "part-000.parquet")
-    open(committed, "wb").write(b"x")
-    open(os.path.join(
-        d, "_temporary", "0", "_temporary", "attempt_1", "dt=2024-01-01",
-        "part-000.parquet"), "wb").write(b"half")
-    open(os.path.join(d, "dt=2024-01-01", ".part-000.parquet.crc"),
-         "wb").write(b"c")
-    assert _append_part_files(d) == [committed]
 
 
 def test_checkpoint_commit_does_not_drop_concurrent_track(spark, tmp_path):
@@ -198,56 +178,3 @@ def test_session_begin_sorts_before_first_event(spark):
     assert [r.event_type for r in out] == [EVENT_SESSION_BEGIN, "view"]
     assert len({r.event_id for r in out}) == 2
     assert out[0].event_id == -6
-
-
-def test_compaction_recovery_protocol(spark, tmp_path):
-    """Each crash window of the DROP->RENAME swap recovers to 'table
-    exists, every append folded exactly once'."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F2
-
-    from optiprism_spark.ingest import (
-        _COMPACT_MANIFEST,
-        _recover_compaction,
-        write_events_bucketed,
-    )
-
-    appends = str(tmp_path / "appends")
-    os.makedirs(appends)
-    part = os.path.join(appends, "part-0.parquet")
-    open(part, "wb").write(b"x")
-
-    def mk(name, n):
-        df = spark.range(n).select(
-            F2.col("id").alias("user_id"),
-            F2.current_timestamp().alias("ts"),
-            F2.col("id").alias("event_id"))
-        write_events_bucketed(df, name, n_buckets=2)
-
-    # window A: crash between DROP and RENAME (main missing, staging
-    # present, manifest present) -> rename completed, files deleted
-    spark.sql("DROP TABLE IF EXISTS rec_t"); spark.sql("DROP TABLE IF EXISTS rec_t__compact_staging")
-    mk("rec_t__compact_staging", 4)
-    json.dump({"files": [part]}, open(os.path.join(appends, _COMPACT_MANIFEST), "w"))
-    _recover_compaction(spark, "rec_t", appends)
-    assert spark.table("rec_t").count() == 4
-    assert not os.path.exists(part)
-    assert not os.path.exists(os.path.join(appends, _COMPACT_MANIFEST))
-
-    # window B: crash BEFORE the drop (both tables, manifest present)
-    # -> staging+manifest discarded, files kept (not yet folded)
-    open(part, "wb").write(b"x")
-    mk("rec_t__compact_staging", 9)
-    json.dump({"files": [part]}, open(os.path.join(appends, _COMPACT_MANIFEST), "w"))
-    _recover_compaction(spark, "rec_t", appends)
-    assert spark.table("rec_t").count() == 4
-    assert os.path.exists(part)
-    assert not spark.catalog.tableExists("rec_t__compact_staging")
-
-    # window C: crash after swap, before cleanup (main only + manifest)
-    json.dump({"files": [part]}, open(os.path.join(appends, _COMPACT_MANIFEST), "w"))
-    _recover_compaction(spark, "rec_t", appends)
-    assert not os.path.exists(part)
-    spark.sql("DROP TABLE rec_t")

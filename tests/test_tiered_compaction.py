@@ -1,8 +1,9 @@
-"""Two-tier (minor/major) compaction: bounded write amplification
-under sustained ingest (base rewritten only at major folds), crash
-recovery of interrupted minor folds, freshness via events_snapshot,
-rollup advancement at the major fold, and the funnel plan staying
-Exchange-free after every major."""
+"""Two-tier (minor/major) compaction over the lake's pointer commit:
+bounded write amplification under sustained ingest (base rewritten
+only at major folds), freshness via events_snapshot, the funnel plan
+staying Exchange-free after every major, reads planned before a lake
+write still collecting after it, and a kill on either side of the
+pointer flip re-running to exactly the uncrashed lake."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from optiprism_spark import snapshot
 from optiprism_spark.api import (
     EventFilterSpec,
     EventRef,
@@ -21,16 +23,23 @@ from optiprism_spark.api import (
     TimeIntervalUnit,
 )
 from optiprism_spark.ingest import (
+    CompactionPolicy,
     TieredCompactionPolicy,
     _append_part_files,
-    _committed_tiers,
+    _live_l0,
+    _tier_paths,
+    compact_appends_into_bucketed,
     events_snapshot,
     minor_compact_appends,
     write_events_bucketed,
 )
+from optiprism_spark.lifecycle import erase_users, expire_base
 from optiprism_spark.operators.funnel import funnel_attempts
 from optiprism_spark.schema import load_table
 from optiprism_spark.streaming.sessionize import append_events
+
+from .conftest import drop_table_clean
+from .test_snapshot import _Killed, _kill_at_flip
 
 SF_DIR = "/root/testdata/sf0.001"
 TBL = "events_tiered_test"
@@ -49,13 +58,10 @@ def base_events(spark):
 
 @pytest.fixture
 def table(spark, base_events):
-    from .conftest import drop_table_clean
-
     drop_table_clean(spark, TBL)
     write_events_bucketed(base_events, TBL, n_buckets=4)
     yield TBL
-    spark.sql(f"DROP TABLE IF EXISTS {TBL}")
-    spark.sql(f"DROP TABLE IF EXISTS {TBL}__compact_staging")
+    drop_table_clean(spark, TBL)
 
 
 def _fresh(events, n, id_offset):
@@ -78,6 +84,27 @@ def _base_files(spark, tbl):
     )
 
 
+def _tiers(tiers):
+    return _tier_paths(tiers, snapshot.load(tiers))
+
+
+def test_append_listing_skips_temporary_dirs(tmp_path):
+    from optiprism_spark.ingest import _append_part_files
+
+    d = str(tmp_path / "appends")
+    os.makedirs(os.path.join(d, "dt=2024-01-01"))
+    os.makedirs(os.path.join(
+        d, "_temporary", "0", "_temporary", "attempt_1", "dt=2024-01-01"))
+    committed = os.path.join(d, "dt=2024-01-01", "part-000.parquet")
+    open(committed, "wb").write(b"x")
+    open(os.path.join(
+        d, "_temporary", "0", "_temporary", "attempt_1", "dt=2024-01-01",
+        "part-000.parquet"), "wb").write(b"half")
+    open(os.path.join(d, "dt=2024-01-01", ".part-000.parquet.crc"),
+         "wb").write(b"c")
+    assert _append_part_files(d) == [committed]
+
+
 def test_minor_fold_moves_l0_without_touching_base(
         spark, base_events, table, tmp_path):
     appends, tiers = str(tmp_path / "l0"), str(tmp_path / "l1")
@@ -85,11 +112,11 @@ def test_minor_fold_moves_l0_without_touching_base(
     before = _base_files(spark, table)
     n = minor_compact_appends(spark, appends, tiers)
     assert n == 20
-    assert _append_part_files(appends) == []
-    assert len(_committed_tiers(tiers)) == 1
+    assert _live_l0(appends, tiers, snapshot.load(tiers)) == []
+    assert TieredCompactionPolicy().l1_stats(tiers)[0] == 1
     assert _base_files(spark, table) == before  # base untouched
     # tier rows are readable and complete
-    assert spark.read.parquet(_committed_tiers(tiers)[0]).count() == 20
+    assert spark.read.parquet(*_tiers(tiers)).count() == 20
     # snapshot view sees base + tier
     snap = events_snapshot(spark, table, appends, tiers)
     assert snap.count() == base_events.count() + 20
@@ -111,13 +138,13 @@ def test_sustained_ingest_bounds_write_amplification(
         fresh = _fresh(base_events, 10, (cycle + 1) * 10_000_000)
         append_events(fresh, appends)
         all_events = all_events.unionByName(fresh)
-        res = pol.maybe_compact(spark, table, appends, tiers, n_buckets=4)
+        res = pol.maybe_compact(spark, table, appends, tiers)
         assert res["minor_rows"] == 10
         cur_base = _base_files(spark, table)
         if res["major_rows"] > 0:
             majors += 1
             assert res["major_rows"] == 30  # the 3 accumulated tiers
-            assert _committed_tiers(tiers) == []
+            assert _tiers(tiers) == []
         else:
             assert cur_base == prev_base, f"cycle {cycle}: base rewritten on minor"
         prev_base = cur_base
@@ -128,97 +155,218 @@ def test_sustained_ingest_bounds_write_amplification(
     assert majors == 2
 
 
+_FUNNEL = FunnelRequest(
+    time=QueryTime.between(
+        dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 31, 23, 59, 59)),
+    interval=TimeIntervalUnit.DAY,
+    steps=[
+        FunnelStep([EventFilterSpec(EventRef("view"))]),
+        FunnelStep([EventFilterSpec(EventRef("purchase"))]),
+    ],
+    window_ms=7 * 86_400_000,
+)
+
+
 def test_funnel_plan_exchange_free_after_major(
         spark, base_events, table, tmp_path):
     appends, tiers = str(tmp_path / "l0"), str(tmp_path / "l1")
     pol = TieredCompactionPolicy(l0_max_parts=1, l1_max_tiers=1,
                                  l1_max_bytes=10**12)
     append_events(_fresh(base_events, 15, 10_000_000), appends)
-    res = pol.maybe_compact(spark, table, appends, tiers, n_buckets=4)
+    res = pol.maybe_compact(spark, table, appends, tiers)
     assert res["minor_rows"] == 15 and res["major_rows"] == 15
-    req = FunnelRequest(
-        time=QueryTime.between(
-            dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 31, 23, 59, 59)),
-        interval=TimeIntervalUnit.DAY,
-        steps=[
-            FunnelStep([EventFilterSpec(EventRef("view"))]),
-            FunnelStep([EventFilterSpec(EventRef("purchase"))]),
-        ],
-        window_ms=7 * 86_400_000,
-    )
-    fast = funnel_attempts(spark.table(table), req, assume_partitioned=True)
+    fast = funnel_attempts(spark.table(table), _FUNNEL,
+                           assume_partitioned=True)
     assert "Exchange" not in _plan(fast)
     assert spark.table(table).count() == base_events.count() + 15
 
 
-def test_minor_fold_crash_recovery(spark, base_events, table, tmp_path):
-    """Manifest-before-write protocol: a crash mid-tier-write leaves a
-    manifest + uncommitted tier — recovery drops the partial tier and
-    keeps L0; a crash before L0 cleanup leaves a committed tier —
-    recovery deletes exactly the listed files. Either way the next
-    fold sees each row exactly once."""
-    import json, shutil
+def test_only_live_l0_parts_count(spark, base_events, table, tmp_path,
+                                  monkeypatch):
+    """Folded L0 parts stay on disk for earlier readers, retired in
+    the lake's pointer: the L0 trigger, the served frame's partitioned
+    flag and the next fold skip them, and once due the sweep deletes
+    them and the adopted base though both lie outside the pointer's
+    directory."""
+    from optiprism_spark.server import make_app
 
     appends, tiers = str(tmp_path / "l0"), str(tmp_path / "l1")
     append_events(_fresh(base_events, 12, 10_000_000), appends)
-    snapshot = _append_part_files(appends)
+    pol = CompactionPolicy(l0_max_parts=1)
+    assert pol.should_compact(appends, tiers)
+    adopted = _base_files(spark, table)
+    compact_appends_into_bucketed(spark, table, appends, tiers)
+    folded = _append_part_files(appends)
+    assert folded  # retired, still on disk
+    assert pol.l0_stats(appends, tiers) == (0, 0)
+    assert not pol.should_compact(appends, tiers)
+    app = make_app(spark, SF_DIR, result_cache_ttl=None, lake={
+        "table_name": table, "appends_path": appends, "tiers_path": tiers})
+    assert app._events_resolved()[1] is True
+    assert compact_appends_into_bucketed(spark, table, appends, tiers) == 0
 
-    # crash A: manifest written, tier half-written (no _SUCCESS)
-    os.makedirs(tiers, exist_ok=True)
-    fake_tier = os.path.join(tiers, "tier_000000")
-    os.makedirs(fake_tier)
-    with open(os.path.join(fake_tier, "part-0.parquet"), "wb") as f:
-        f.write(b"garbage")
-    with open(os.path.join(tiers, ".minor_fold.json"), "w") as f:
-        json.dump({"tier": fake_tier, "files": snapshot}, f)
-    n = minor_compact_appends(spark, appends, tiers)  # runs recovery first
-    assert n == 12  # L0 survived crash A and folded exactly once
-    committed = _committed_tiers(tiers)
-    assert len(committed) == 1
-    assert spark.read.parquet(committed[0]).count() == 12
-
-    # crash B: committed tier, manifest present, L0 files not deleted
-    append_events(_fresh(base_events, 7, 20_000_000), appends)
-    snapshot_b = _append_part_files(appends)
-    n2 = minor_compact_appends(spark, appends, tiers)
-    assert n2 == 7
-    tier_b = _committed_tiers(tiers)[-1]
-    # simulate: re-create the manifest as if cleanup never ran, with
-    # one stale (already deleted) and no existing files
-    with open(os.path.join(tiers, ".minor_fold.json"), "w") as f:
-        json.dump({"tier": tier_b, "files": snapshot_b}, f)
-    n3 = minor_compact_appends(spark, appends, tiers)  # recovery: no-op deletes
-    assert n3 == 0  # L0 empty; nothing re-folded
-    total = sum(
-        spark.read.parquet(t).count() for t in _committed_tiers(tiers)
-    )
-    assert total == 19
+    monkeypatch.setattr(snapshot, "RETIRE_AFTER_S", 0.0)
+    snapshot.sweep(tiers)
+    assert _append_part_files(appends) == []
+    assert not any(os.path.exists(p) for p in folded)
+    assert adopted and not set(adopted) & set(_base_files(spark, table))
+    assert spark.table(table).count() == base_events.count() + 12
 
 
-def test_major_fold_skips_uncommitted_tier(spark, base_events, table, tmp_path):
-    """Review finding: the major fold's file walk ingested torn
-    (no _SUCCESS) tier dirs whose rows still sit in L0 — recovery
-    would then re-fold the same rows, duplicating them. The walk now
-    applies the same commit gating as should_major."""
-    import shutil
+def test_reads_stay_exact_while_the_lake_folds(
+        spark, base_events, table, tmp_path):
+    """Two reader threads plan and count ``events_snapshot`` while
+    one-file batches land and the tiered policy folds them (a minor
+    fold every batch, a major every other): each read counts the base
+    plus a whole prefix of the landed batches. A read that paired one
+    pointer's tiers with another pointer's base would count a folded
+    tier twice or not at all."""
+    import sys
+    import threading
 
-    from optiprism_spark.ingest import compact_appends_into_bucketed
+    appends, tiers = str(tmp_path / "l0"), str(tmp_path / "l1")
+    pol = TieredCompactionPolicy(l0_max_parts=1, l1_max_tiers=2)
+    day = base_events.filter(F.to_date("ts") == F.lit("2024-01-20"))
+    n0, batches = base_events.count(), 6
+    allowed = {n0 + 10 * k for k in range(batches + 1)}
+    stop = threading.Event()
+    seen, errors = [], []
 
-    appends = str(tmp_path / "appends")
-    tiers = str(tmp_path / "tiers")
-    fresh = _fresh(base_events, 60, 10_000_000)
-    append_events(fresh, appends)
-    # fold L0 into a tier, then TEAR it: drop _SUCCESS and put the
-    # rows back in L0 (the crash-window state: tier written, L0 not
-    # yet cleared, commit marker never placed)
+    def reader():
+        try:
+            while not stop.is_set():
+                seen.append(events_snapshot(spark, table, appends,
+                                            tiers).count())
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    threads = [threading.Thread(target=reader) for _ in range(2)]
+    try:
+        for t in threads:
+            t.start()
+        for k in range(batches):
+            append_events(_fresh(day, 10, (k + 1) * 10_000_000), appends)
+            pol.maybe_compact(spark, table, appends, tiers)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(120)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert seen and set(seen) <= allowed, sorted(set(seen) - allowed)
+    assert events_snapshot(spark, table, appends, tiers).count() == \
+        n0 + 10 * batches
+
+
+# ------------------------------------------- lake writes and their readers
+
+
+def _lake(spark, events, name, root):
+    """A lake of ``events``: the bucketed base, one tier and L0 parts
+    on top, so every lake write has each kind of file to replace."""
+    base = events.filter(F.col("event_id") % 5 != 0)
+    tier = events.filter((F.col("event_id") % 10) == 5)
+    l0 = events.filter((F.col("event_id") % 10) == 0)
+    drop_table_clean(spark, name)
+    write_events_bucketed(base, name, n_buckets=4)
+    appends, tiers = str(root / "appends"), str(root / "tiers")
+    append_events(tier, appends)
     minor_compact_appends(spark, appends, tiers)
-    tier_dir = _committed_tiers(tiers)[0]
-    os.remove(os.path.join(tier_dir, "_SUCCESS"))
-    append_events(fresh, appends)
+    append_events(l0, appends)
+    return appends, tiers
 
-    before = spark.table(table).count()
-    folded = compact_appends_into_bucketed(
-        spark, table, appends, n_buckets=4)
-    assert folded == 60  # the L0 copy only, never the torn tier's
-    assert spark.table(table).count() == before + 60
-    shutil.rmtree(tiers, ignore_errors=True)
+
+def _victims(events):
+    return [r[0] for r in events.select("user_id").distinct()
+            .orderBy("user_id").limit(3).collect()]
+
+
+_CUTOFF = dt.datetime(2024, 1, 15)
+
+#: each lake write, and the filter its rows keep
+_WRITES = {
+    "minor": (lambda spark, t, a, l, ev: minor_compact_appends(spark, a, l),
+              lambda ev: F.lit(True)),
+    "major": (lambda spark, t, a, l, ev:
+              compact_appends_into_bucketed(spark, t, a, l),
+              lambda ev: F.lit(True)),
+    "erase": (lambda spark, t, a, l, ev:
+              erase_users(spark, t, a, _victims(ev), tiers_path=l),
+              lambda ev: ~F.col("user_id").isin(_victims(ev))),
+    "expire": (lambda spark, t, a, l, ev:
+               expire_base(spark, t, a, _CUTOFF, tiers_path=l),
+               lambda ev: F.col("ts") >= F.lit("2024-01-15")),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_WRITES))
+def test_reads_planned_before_a_lake_write_collect_after_it(
+        spark, base_events, tmp_path, write):
+    """A frame planned before a lake write reads the files of the
+    pointer it was planned on, which the write retires but leaves on
+    disk: it collects after the write with the pre-write count. A
+    frame planned after it sees the post-write rows."""
+    from optiprism_spark.server import make_app
+
+    run, keep = _WRITES[write]
+    appends, tiers = _lake(spark, base_events, TBL, tmp_path)
+    try:
+        app = make_app(spark, SF_DIR, result_cache_ttl=None, lake={
+            "table_name": TBL, "appends_path": appends,
+            "tiers_path": tiers})
+        snap = events_snapshot(spark, TBL, appends, tiers)
+        raw = app._events()
+        before = base_events.count()
+        after = base_events.filter(keep(base_events)).count()
+        assert after < before or write in ("minor", "major")
+        run(spark, TBL, appends, tiers, base_events)
+        assert snap.count() == before
+        assert raw.count() == before
+        assert events_snapshot(spark, TBL, appends, tiers).count() == after
+    finally:
+        drop_table_clean(spark, TBL)
+
+
+def _rows(df):
+    return sorted(str(tuple(r)) for r in df.collect())
+
+
+@pytest.mark.parametrize("phase", ["before", "after"])
+@pytest.mark.parametrize("write", ["erase", "major", "minor"])
+def test_lake_write_killed_at_the_flip_reruns_to_the_uncrashed_lake(
+        spark, base_events, tmp_path, monkeypatch, write, phase):
+    """Killed just before or just after the pointer lands, a re-run of
+    the same write leaves the lake equal to one that never crashed:
+    the same rows (each folded exactly once), the table still there
+    with its bucket count, and a bucketed paths plan without a
+    shuffle on the user."""
+    from optiprism_spark.dsl import EventRef as Ref, QueryTime as Time
+    from optiprism_spark.operators.paths import event_paths
+
+    run = _WRITES[write][0]
+    ref_tbl = f"{TBL}_ref"
+    ref = _lake(spark, base_events, ref_tbl, tmp_path / "ref")
+    appends, tiers = _lake(spark, base_events, TBL, tmp_path / "lake")
+    try:
+        run(spark, ref_tbl, *ref, base_events)
+        _kill_at_flip(monkeypatch, phase)
+        with pytest.raises(_Killed):
+            run(spark, TBL, appends, tiers, base_events)
+        run(spark, TBL, appends, tiers, base_events)
+
+        assert spark.catalog.tableExists(TBL)
+        assert _rows(events_snapshot(spark, TBL, appends, tiers)) == \
+            _rows(events_snapshot(spark, ref_tbl, *ref))
+        desc = {(r.col_name or "").strip(): (r.data_type or "").strip()
+                for r in spark.sql(f"DESCRIBE FORMATTED {TBL}").collect()}
+        assert desc["Num Buckets"] == "4"
+        plan = _plan(event_paths(
+            spark.table(TBL), Ref("signup"),
+            Time.between(dt.datetime(2024, 1, 1), dt.datetime(2024, 12, 31)),
+            steps=3))
+        assert "hashpartitioning(user_id" not in plan, plan
+    finally:
+        drop_table_clean(spark, TBL)
+        drop_table_clean(spark, ref_tbl)
